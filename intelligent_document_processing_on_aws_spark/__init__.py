@@ -20,4 +20,6 @@ All per-row logic runs in Arrow-batched pandas UDFs / mapInPandas — no
 row-at-a-time Python (no BatchEvalPython nodes in any physical plan).
 """
 
+from . import _zipcache  # noqa: F401  (per-task zip re-reads in workers)
+
 __version__ = "0.1.0"

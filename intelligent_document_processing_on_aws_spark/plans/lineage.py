@@ -40,8 +40,8 @@ LINEAGE_SCHEMA = T.StructType(
 
 
 def partition_counters(result: DataFrame) -> DataFrame:
-    """Per-partition row/error counters computed inside the same pass
-    (mapInPandas with TaskContext — no extra shuffle)."""
+    """Per-partition row/error counters: one row per partition of
+    ``result``, from a second mapInPandas pass over it (no shuffle)."""
     from pyspark import TaskContext
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# where Python imports this package from: the checkout, or the zip the
+# package was loaded from under spark-submit --py-files
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -43,6 +47,12 @@ def get_spark(app: str = "idp-spark", master: str | None = None,
     from .kernels.blasctl import limit_blas_threads
 
     limit_blas_threads(1)
+    # Python workers import the package from any working directory: a JVM
+    # started from here inherits this PYTHONPATH, and local-mode workers
+    # merge it into their path. Cluster executors keep their own settings.
+    path = os.environ.get("PYTHONPATH")
+    if IMPORT_ROOT not in (path or "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = IMPORT_ROOT + (os.pathsep + path if path else "")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -80,3 +80,31 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
         f"hive_partitioning=1)"
     ).fetchone()[0]
     assert n_out == 150 and bad == 0
+
+
+def test_job_runs_outside_repo_root(tmp_path):
+    """`python /abs/path/jobs/extract.py` from another directory with no
+    PYTHONPATH: the job script's own sys.path entry serves its process and
+    the session's worker PYTHONPATH serves the Python workers."""
+    src = pq.read_table(os.path.join(REPO, "fixtures_data", "t1_pages.parquet"))
+    in_path = str(tmp_path / "pages.parquet")
+    pq.write_table(src.slice(0, 150), in_path)
+    out_dir = str(tmp_path / "out")
+
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "extract.py"),
+         "--master", "local[4]", "--input", in_path, "--output", out_dir,
+         "--salt-partitions", "4"],
+        capture_output=True, text=True, timeout=420, env=env,
+        cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+    assert json.loads(line)["rows"] == 150
+    n_out = duckdb.connect().execute(
+        f"SELECT count(*) FROM read_parquet('{out_dir}/*/*.parquet', "
+        f"hive_partitioning=1)"
+    ).fetchone()[0]
+    assert n_out == 150

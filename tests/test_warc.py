@@ -37,9 +37,9 @@ def test_plain_and_gzip_layouts():
     assert recs[0][0]["warc-type"] == "response"
     assert recs[0][1] == b"hello"
     # single-member gzip of the whole file
-    assert len(list(iter_warc_records(gzip.compress(SIMPLE * 3)))) == 3
+    assert len(list(iter_warc_records(gzip.compress(SIMPLE * 3, mtime=0)))) == 3
     # per-record members (Common Crawl layout)
-    cc = b"".join(gzip.compress(SIMPLE) for _ in range(3))
+    cc = b"".join(gzip.compress(SIMPLE, mtime=0) for _ in range(3))
     assert len(list(iter_warc_records(cc))) == 3
 
 
@@ -61,7 +61,7 @@ def test_header_continuation_and_version():
     SIMPLE[:20],                                    # unterminated header
     SIMPLE.replace(b"Content-Length: 5", b"Content-Length: 99"),
     SIMPLE[:-4],                                    # missing terminator
-    gzip.compress(SIMPLE)[:-6],                     # truncated gzip member
+    gzip.compress(SIMPLE, mtime=0)[:-6],            # truncated gzip member
 ])
 def test_malformed_raises(bad):
     with pytest.raises(WarcError):
@@ -71,8 +71,8 @@ def test_malformed_raises(bad):
 def test_lenient_isolates_damage_per_member():
     """A corrupt middle member yields one error tuple; records before AND
     after still parse — the production dirty-crawl contract."""
-    corrupt = gzip.compress(SIMPLE.replace(b"WARC/1.0", b"WARC/bad"))
-    data = gzip.compress(SIMPLE) + corrupt + gzip.compress(SIMPLE)
+    corrupt = gzip.compress(SIMPLE.replace(b"WARC/1.0", b"WARC/bad"), mtime=0)
+    data = gzip.compress(SIMPLE, mtime=0) + corrupt + gzip.compress(SIMPLE, mtime=0)
     out = list(iter_warc_records_lenient(data))
     assert len(out) == 3
     assert out[0][2] is None and out[2][2] is None
@@ -80,7 +80,7 @@ def test_lenient_isolates_damage_per_member():
     assert "bad WARC version line" in out[1][2]
     # truncated tail: one error tuple, then stop
     out = list(iter_warc_records_lenient(
-        gzip.compress(SIMPLE) + gzip.compress(SIMPLE)[:-6]))
+        gzip.compress(SIMPLE, mtime=0) + gzip.compress(SIMPLE, mtime=0)[:-6]))
     assert out[0][2] is None
     assert out[1][2] and "truncated gzip member" in out[1][2]
 
@@ -94,7 +94,7 @@ def test_http_response_wire_forms():
     assert (status, payload) == (200, raw)
     # gzip content-encoding
     body = (b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n"
-            + gzip.compress(raw))
+            + gzip.compress(raw, mtime=0))
     assert parse_http_response(body)[2] == raw
     # deflate (zlib-wrapped and raw)
     import zlib
