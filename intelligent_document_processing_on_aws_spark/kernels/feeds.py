@@ -43,8 +43,10 @@ _ROOT_RE = re.compile(r"<\s*(?:[A-Za-z0-9._-]+:)?(rss|feed)[\s>]")
 _ITEM_RE = re.compile(
     # open tag may carry attributes (Atom xml:lang, gd:etag, RDF
     # rdf:about ...) — the bare-tag-only spelling silently dropped such
-    # entries without counting them in n_skipped
-    r"<\s*(?:[A-Za-z0-9._-]+:)?(item|entry)(?:\s[^>]*)?>(.*?)"
+    # entries without counting them in n_skipped. A '/' before '>' is a
+    # self-closing tag with no body, not an open tag: taking it as one
+    # would swallow the text up to the next real entry's close tag
+    r"<\s*(?:[A-Za-z0-9._-]+:)?(item|entry)(?:\s[^>]*)?(?<!/)>(.*?)"
     r"<\s*/\s*(?:[A-Za-z0-9._-]+:)?\1\s*>",
     re.S | re.I,
 )

@@ -52,7 +52,8 @@ _ROOT_RE = re.compile(r"<\s*(?:[A-Za-z0-9._-]+:)?(urlset|sitemapindex)[\s>]")
 _URL_BLOCK_RE = re.compile(
     # open tag may carry attributes — same fix as feeds._ITEM_RE, so
     # attribute-carrying blocks are parsed instead of silently dropped
-    r"<\s*(?:[A-Za-z0-9._-]+:)?(url|sitemap)(?:\s[^>]*)?>(.*?)"
+    # (and self-closing ones are not taken for open tags)
+    r"<\s*(?:[A-Za-z0-9._-]+:)?(url|sitemap)(?:\s[^>]*)?(?<!/)>(.*?)"
     r"<\s*/\s*(?:[A-Za-z0-9._-]+:)?\1\s*>",
     re.S | re.I,
 )

@@ -146,6 +146,25 @@ def evaluate_attributes(
     joined = joined.withColumn("method", F.coalesce("method", F.lit("EXACT")))
     joined = joined.withColumn("threshold", F.coalesce("threshold", F.lit(0.8)))
 
+    exp, act = F.col("expected"), F.col("actual")
+    ne, na = norm_exact(exp), norm_exact(act)
+    nne, nna = norm_numeric(exp), norm_numeric(act)
+    exact_eq = ne == na
+    # NUMERIC_EXACT: numeric equality; if either side unparseable -> exact
+    # string fallback (comparator.py:104-126)
+    numeric_eq = F.when(
+        nne.isNotNull() & nna.isNotNull(), nne == nna
+    ).otherwise(exact_eq)
+    # FUZZY: normalized levenshtein similarity (comparator.py:290-369)
+    max_len = F.greatest(F.length(ne), F.length(na))
+    sim = F.when(ne == na, F.lit(1.0)).when(
+        (F.length(ne) == 0) | (F.length(na) == 0), F.lit(0.0)
+    ).otherwise(1.0 - F.levenshtein(ne, na) / max_len)
+
+    # SEMANTIC without a vector table: FUZZY throughout (no vector columns
+    # in the plan); with one, cosine over the supplied vectors, trimmed to
+    # the shorter one (comparator.py:372-404) — native fold, no Python
+    sem_score = sim
     if embeddings is not None:
         # enforce one vector per text, or duplicate rows would fan out
         # matches and double-count tp/fp/fn (ADVICE r3). The JOIN KEY is
@@ -179,42 +198,20 @@ def evaluate_attributes(
             )
             .drop("__e_key", "__e_text", "__a_key", "__a_text")
         )
-    else:
-        joined = joined.withColumn(
-            "e_vec", F.lit(None).cast("array<double>")
-        ).withColumn("a_vec", F.lit(None).cast("array<double>"))
-
-    exp, act = F.col("expected"), F.col("actual")
-    ne, na = norm_exact(exp), norm_exact(act)
-    nne, nna = norm_numeric(exp), norm_numeric(act)
-    exact_eq = ne == na
-    # NUMERIC_EXACT: numeric equality; if either side unparseable -> exact
-    # string fallback (comparator.py:104-126)
-    numeric_eq = F.when(
-        nne.isNotNull() & nna.isNotNull(), nne == nna
-    ).otherwise(exact_eq)
-    # FUZZY: normalized levenshtein similarity (comparator.py:290-369)
-    max_len = F.greatest(F.length(ne), F.length(na))
-    sim = F.when(ne == na, F.lit(1.0)).when(
-        (F.length(ne) == 0) | (F.length(na) == 0), F.lit(0.0)
-    ).otherwise(1.0 - F.levenshtein(ne, na) / max_len)
-
-    # SEMANTIC: cosine over supplied vectors, trimmed to the shorter one
-    # (comparator.py:372-404); native fold — no Python in the hot path
-    tv1 = F.expr("slice(e_vec, 1, least(size(e_vec), size(a_vec)))")
-    tv2 = F.expr("slice(a_vec, 1, least(size(e_vec), size(a_vec)))")
-    dot = F.aggregate(
-        F.zip_with(tv1, tv2, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    mag1 = F.sqrt(F.aggregate(tv1, F.lit(0.0), lambda acc, x: acc + x * x))
-    mag2 = F.sqrt(F.aggregate(tv2, F.lit(0.0), lambda acc, x: acc + x * x))
-    cos = F.when((mag1 == 0.0) | (mag2 == 0.0), F.lit(0.0)).otherwise(
-        dot / (mag1 * mag2)
-    )
-    # vectors present and non-empty -> cosine; else FUZZY fallback
-    # (reference's failed-embedding path, comparator.py:458-462)
-    sem_ok = (F.size("e_vec") > 0) & (F.size("a_vec") > 0)
-    sem_score = F.when(sem_ok, cos).otherwise(sim)
+        tv1 = F.expr("slice(e_vec, 1, least(size(e_vec), size(a_vec)))")
+        tv2 = F.expr("slice(a_vec, 1, least(size(e_vec), size(a_vec)))")
+        dot = F.aggregate(
+            F.zip_with(tv1, tv2, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        )
+        mag1 = F.sqrt(F.aggregate(tv1, F.lit(0.0), lambda acc, x: acc + x * x))
+        mag2 = F.sqrt(F.aggregate(tv2, F.lit(0.0), lambda acc, x: acc + x * x))
+        cos = F.when((mag1 == 0.0) | (mag2 == 0.0), F.lit(0.0)).otherwise(
+            dot / (mag1 * mag2)
+        )
+        # vectors present and non-empty -> cosine; else FUZZY fallback
+        # (reference's failed-embedding path, comparator.py:458-462)
+        sem_ok = (F.size("e_vec") > 0) & (F.size("a_vec") > 0)
+        sem_score = F.when(sem_ok, cos).otherwise(sim)
 
     method = F.col("method")
     matched = (

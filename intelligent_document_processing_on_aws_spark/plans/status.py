@@ -5,18 +5,20 @@ QUEUED -> RUNNING -> OCR -> CLASSIFYING -> EXTRACTING -> ASSESSING ->
 POSTPROCESSING/HITL -> SUMMARIZING -> EVALUATING -> COMPLETED | FAILED)
 persisted by the docs service to DynamoDB or AppSync
 (docs_service.py:30-120). Here the store is a warehouse table of
-append-only transitions (doc_id, status, seq) — each pipeline stage
-appends the ids it finished, and the latest status per document is a
-window over the monotone stage sequence (FAILED sorts above COMPLETED so
-a failure is never masked). Appends are id-projections only: at 100 TB
-each transition write is a column-pruned scan of ids, no payload bytes.
+append-only transitions (doc_id, status, seq). A run records all of its
+transitions in one append at the end — each stage contributes the ids it
+finished — and the latest status per document is a window over the
+monotone stage sequence (FAILED sorts above COMPLETED so a failure is
+never masked). Transitions are id-projections only: at 100 TB the write
+is a column-pruned scan of ids, no payload bytes.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 STATUS_ORDER = (
@@ -30,17 +32,26 @@ STATUS_TABLE = "document_status"
 
 
 def append_status(
-    ids: DataFrame, status: str, warehouse: str, id_col: str = "doc_id"
-) -> None:
-    """Record one transition per distinct id (docs_service update analog)."""
-    if status not in _SEQ:
-        raise ValueError(f"unknown status: {status}")
-    (
-        ids.select(F.col(id_col).alias("doc_id")).distinct()
-        .withColumn("status", F.lit(status))
-        .withColumn("seq", F.lit(_SEQ[status]))
+    transitions: list[tuple[DataFrame, str]], warehouse: str,
+    id_col: str = "doc_id",
+) -> dict[str, int]:
+    """Record a run's transitions, one row per distinct (id, status), as a
+    single append (docs_service update analog). Every status is checked
+    before anything is written. Returns the rows written per status, taken
+    from an observation on that write."""
+    for _, status in transitions:
+        if status not in _SEQ:
+            raise ValueError(f"unknown status: {status}")
+    rows = reduce(DataFrame.unionAll, (
+        ids.select(F.col(id_col).alias("doc_id"),
+                   F.lit(status).alias("status"), F.lit(_SEQ[status]).alias("seq"))
+        for ids, status in transitions
+    )).distinct()
+    written = Observation()
+    statuses = sorted({status for _, status in transitions}, key=_SEQ.get)
+    rows.observe(written, *[F.count_if(F.col("status") == s).alias(s) for s in statuses]) \
         .write.mode("append").parquet(os.path.join(warehouse, STATUS_TABLE))
-    )
+    return dict(written.get)
 
 
 def latest_status_df(transitions: DataFrame) -> DataFrame:

@@ -3,7 +3,8 @@ Spark-shaped):
 
 pages -> classify+section -> attribute extraction -> assessment (confidence
 alerts) -> summarization -> [optional evaluation vs expected] -> reporting
-warehouse (per-class section tables, metrics, alerts, summaries).
+warehouse (per-class section tables, metrics, alerts, summaries) -> the
+run's document status transitions, appended once at the end.
 
 Usage:
   python jobs/pipeline.py --pages fixtures_data/packet_pages.parquet \
@@ -21,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame, Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from intelligent_document_processing_on_aws_spark.config import eval_config_rows  # noqa: E402
@@ -36,11 +38,13 @@ from intelligent_document_processing_on_aws_spark.operators.classify import (  #
 )
 from intelligent_document_processing_on_aws_spark.operators.evaluation import (  # noqa: E402
     evaluate_attributes,
+    evaluation_report,
     flatten_attributes,
     metrics_rollup,
 )
 from intelligent_document_processing_on_aws_spark.operators.summarize import (  # noqa: E402
     assemble_document_markdown,
+    format_document_summaries,
     summarize_sections,
 )
 from intelligent_document_processing_on_aws_spark.session import get_spark  # noqa: E402
@@ -48,6 +52,13 @@ from intelligent_document_processing_on_aws_spark.sources.catalog import (  # no
     list_warehouse_tables,
     write_document_sections,
 )
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """df with a row count attached; the count is read from the returned
+    observation once an action has run df's plan (no extra Spark job)."""
+    rows = Observation()
+    return df.observe(rows, F.count(F.lit(1)).alias("rows")), rows
 
 
 def main() -> int:
@@ -68,93 +79,97 @@ def main() -> int:
         status_counts,
     )
 
-    pages = spark.read.parquet(args.pages)
-    doc_ids = pages.select(F.col("doc_id")).distinct()
-    doc_ids.persist()
-    append_status(doc_ids, "QUEUED", wh)
-    sections = classify_and_section(pages)
-    sections.persist()
-    counts["sections"] = sections.count()
-    append_status(doc_ids, "CLASSIFYING", wh)
+    # Each stage's output is persisted and computed once, by the first
+    # write that needs it; every count is observed on a write (or on a
+    # persisted stage) instead of being read back. The statuses of the
+    # whole run are one append at the end.
+    persisted = []
 
-    attrs = extract_section_attributes(sections)
-    attrs.persist()
-    counts["attributed_sections"] = attrs.count()
+    def persist(df: DataFrame) -> DataFrame:
+        persisted.append(df.persist())
+        return df
+
+    pages = spark.read.parquet(args.pages)
+    doc_ids = pages.select("doc_id")
+    sections, n_sections = _observed(classify_and_section(pages))
+    sections = persist(sections)
+    attrs, n_attrs = _observed(extract_section_attributes(sections))
+    attrs = persist(attrs)
     write_document_sections(attrs, wh, mode="overwrite")
-    append_status(attrs, "EXTRACTING", wh)
+    counts["sections"] = n_sections.get["rows"]
+    counts["attributed_sections"] = n_attrs.get["rows"]
 
     cfg = spark.createDataFrame(eval_config_rows())
-    flat_actual = flatten_attributes(attrs)
-    assessed = assess_attributes(flat_actual, sections, cfg)
-    alerts = threshold_alerts(assessed)
+    flat_actual = persist(flatten_attributes(attrs))
+    assessed = persist(assess_attributes(flat_actual, sections, cfg))
+    alerts, n_alerts = _observed(threshold_alerts(assessed))
     alerts.write.mode("overwrite").parquet(os.path.join(wh, "confidence_alerts"))
-    counts["alerts"] = spark.read.parquet(os.path.join(wh, "confidence_alerts")).count()
-    append_status(assessed, "ASSESSING", wh)
+    counts["alerts"] = n_alerts.get["rows"]
 
-    section_summaries = summarize_sections(sections)
-    summaries = assemble_document_markdown(section_summaries)
+    section_summaries = persist(summarize_sections(sections))
     # reference-parity combined summary (markdown_formatter.py semantics:
     # duplicate-title removal, citation prefixing, TOC/anchors/navigation)
-    from intelligent_document_processing_on_aws_spark.operators.summarize import (
-        format_document_summaries,
-    )
-
     format_document_summaries(section_summaries).write.mode("overwrite").parquet(
         os.path.join(wh, "document_summaries_md")
     )
+    summaries, n_summaries = _observed(assemble_document_markdown(section_summaries))
     summaries.write.mode("overwrite").parquet(os.path.join(wh, "document_summaries"))
-    counts["summaries"] = summaries.count()
-    append_status(summaries, "SUMMARIZING", wh)
+    counts["summaries"] = n_summaries.get["rows"]
 
+    transitions = [
+        (doc_ids, "QUEUED"),
+        (doc_ids, "CLASSIFYING"),
+        (attrs, "EXTRACTING"),
+        (assessed, "ASSESSING"),
+        (section_summaries, "SUMMARIZING"),
+    ]
     if args.expected:
-        from intelligent_document_processing_on_aws_spark.operators.evaluation import (
-            evaluation_report,
-        )
-
         expected = spark.read.parquet(args.expected)
-        counted = evaluate_attributes(expected, flat_actual, cfg)
-        by_class = metrics_rollup(counted, "classification")
-        by_class.withColumn("date", F.lit("2025-01-01")).write.mode(
-            "overwrite"
-        ).partitionBy("date").parquet(os.path.join(wh, "evaluation_metrics_by_class"))
-        # overall metrics land in the warehouse like the by-class table
-        # (no driver round-trip of the result); the job summary reads the
-        # single aggregated row back from the committed table
-        metrics_rollup(counted).withColumn("date", F.lit("2025-01-01")).write.mode(
-            "overwrite"
-        ).partitionBy("date").parquet(os.path.join(wh, "evaluation_metrics_overall"))
+        counted = persist(evaluate_attributes(expected, flat_actual, cfg))
+        metrics_rollup(counted, "classification").withColumn(
+            "date", F.lit("2025-01-01")
+        ).write.mode("overwrite").partitionBy("date").parquet(
+            os.path.join(wh, "evaluation_metrics_by_class"))
+        # the overall rollup is one row: collect it once for the summary
+        # and write the table from that row
+        overall_df = metrics_rollup(counted)
+        overall = overall_df.collect()[0]
+        spark.createDataFrame([overall], overall_df.schema).withColumn(
+            "date", F.lit("2025-01-01")
+        ).write.mode("overwrite").partitionBy("date").parquet(
+            os.path.join(wh, "evaluation_metrics_overall"))
         # the report's Confidence columns consume the UPSTREAM assessment
         # (the reference reads explainability_info from the stored result)
-        evaluation_report(
+        reports, n_reports = _observed(evaluation_report(
             counted,
             assessed.select("doc_id", "section_id", "attr_path",
                             "confidence", "confidence_threshold"),
-        ).write.mode("overwrite").parquet(os.path.join(wh, "evaluation_reports"))
-        counts["eval_reports"] = spark.read.parquet(
-            os.path.join(wh, "evaluation_reports")
-        ).count()
-        overall = spark.read.parquet(
-            os.path.join(wh, "evaluation_metrics_overall")
-        ).collect()[0]
+        ))
+        reports.write.mode("overwrite").parquet(os.path.join(wh, "evaluation_reports"))
+        counts["eval_reports"] = n_reports.get["rows"]
         counts["eval_f1"] = round(overall.f1_score, 4)
         counts["eval_accuracy"] = round(overall.accuracy, 4)
-        append_status(counted, "EVALUATING", wh)
+        transitions.append((counted, "EVALUATING"))
 
     # terminal status from the FINAL stage's actual output: a doc that
     # dropped out mid-pipeline (no attributed sections) must read FAILED,
     # not COMPLETED — this is what makes plans/status.py's
     # FAILED-outranks-COMPLETED window live in the shipped job
-    finished_ids = attrs.select("doc_id").distinct()
-    append_status(finished_ids, "COMPLETED", wh)
-    failed_ids = doc_ids.join(finished_ids, "doc_id", "left_anti")
-    append_status(failed_ids, "FAILED", wh)
-    counts["failed_docs"] = failed_ids.count()
+    finished_ids = attrs.select("doc_id")
+    transitions += [
+        (finished_ids, "COMPLETED"),
+        (doc_ids.join(finished_ids, "doc_id", "left_anti"), "FAILED"),
+    ]
+    written = append_status(transitions, wh)
+    counts["failed_docs"] = written["FAILED"]
     print(json.dumps({
         "warehouse_tables": list_warehouse_tables(spark, wh),
         "counts": counts,
         "status": status_counts(spark, wh),
         "sec": round(time.time() - t0, 2),
     }))
+    for df in persisted:
+        df.unpersist()
     spark.stop()
     return 0
 

@@ -330,3 +330,31 @@ def test_duplicate_embedding_rows_do_not_fanout(spark, fixtures_dir):
     d = {tuple(r[c] for c in key): tuple(r[c] for c in cols[3:])
          for r in dup.select(cols).collect()}
     assert b == d and len(b) > 500
+
+
+def test_semantic_without_embeddings_scores_as_fuzzy(spark, fixtures_dir):
+    """With no vector table, SEMANTIC-configured paths take the FUZZY
+    fallback on every row (the reference's failed-embedding path), and
+    the plan carries no vector columns."""
+    expected = _flat(spark, fixtures_dir, "flat_expected")
+    actual = _flat(spark, fixtures_dir, "flat_actual")
+
+    def evaluated(method):
+        cfg = spark.createDataFrame(
+            [{**r, "method": method} for r in eval_config_rows()])
+        return evaluate_attributes(expected, actual, cfg)
+
+    semantic = evaluated("SEMANTIC")
+    assert "e_vec" not in semantic._jdf.queryExecution().analyzed().toString()
+    key = ["doc_id", "section_id", "attr_path"]
+    cols = ["score", "tp", "fp", "fn", "tn", "fp1", "fp2"]
+
+    def by_key(df):
+        return {tuple(r[c] for c in key): tuple(r[c] for c in cols)
+                for r in df.select(key + cols).collect()}
+
+    sem, fuzzy = by_key(semantic), by_key(evaluated("FUZZY"))
+    assert sem == fuzzy and len(sem) > 3000
+    # the fixtures reach partial scores and every count branch
+    assert any(0 < v[0] < 1 for v in sem.values())
+    assert all(sum(v[i] for v in sem.values()) > 0 for i in range(1, 7))

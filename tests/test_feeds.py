@@ -141,3 +141,15 @@ def test_attribute_carrying_entries_are_parsed():
     r = parse_feed(xml)
     assert [e.link for e in r.entries] == ["http://x/1", "http://x/2"]
     assert r.n_skipped == 0
+
+
+def test_self_closing_entry_is_not_an_open_tag():
+    """An attribute-carrying self-closing `<item .../>` has no body; taken
+    as an open tag it swallowed the channel title into the next entry
+    and lost the feed title."""
+    r = parse_feed(_rss(
+        '<item rdf:about="x"/><title>Channel</title>'
+        "<item><title>Real</title><link>http://a/real</link></item>"
+    ))
+    assert r.feed_title == "Channel"
+    assert [(e.title, e.link) for e in r.entries] == [("Real", "http://a/real")]

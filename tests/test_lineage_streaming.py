@@ -293,28 +293,78 @@ def test_document_status_lifecycle(spark, tmp_path):
 
     wh = str(tmp_path / "wh")
     ids = lambda *v: spark.createDataFrame([(x,) for x in v], "doc_id long")  # noqa: E731
-    append_status(ids(1, 2, 3), "QUEUED", wh)
-    append_status(ids(1, 2, 3), "CLASSIFYING", wh)
-    append_status(ids(1, 2), "EXTRACTING", wh)
-    append_status(ids(1), "COMPLETED", wh)
-    append_status(ids(2), "FAILED", wh)
+    append_status([
+        (ids(1, 2, 3), "QUEUED"),
+        (ids(1, 2, 3), "CLASSIFYING"),
+        (ids(1, 2), "EXTRACTING"),
+        (ids(1), "COMPLETED"),
+        (ids(2), "FAILED"),
+    ], wh)
 
     latest = {r.doc_id: r.status for r in latest_status(spark, wh).collect()}
     assert latest == {1: "COMPLETED", 2: "FAILED", 3: "CLASSIFYING"}
     assert status_counts(spark, wh) == {"COMPLETED": 1, "FAILED": 1,
                                         "CLASSIFYING": 1}
     # FAILED outranks COMPLETED (a failure is never masked)
-    append_status(ids(1), "FAILED", wh)
+    append_status([(ids(1), "FAILED")], wh)
     assert {r.doc_id: r.status for r in
             latest_status(spark, wh).collect()}[1] == "FAILED"
     # duplicate appends are idempotent for latest_status
-    append_status(ids(3), "CLASSIFYING", wh)
+    append_status([(ids(3), "CLASSIFYING")], wh)
     assert {r.doc_id: r.status for r in
             latest_status(spark, wh).collect()}[3] == "CLASSIFYING"
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        append_status(ids(1), "NOT_A_STATUS", wh)
+        append_status([(ids(1), "NOT_A_STATUS")], wh)
+
+
+def test_append_status_is_one_write_with_observed_counts(spark, tmp_path):
+    """A run's transitions land in one append: one row per distinct
+    (doc_id, status), and the returned per-status counts are the rows of
+    that write."""
+    import os
+
+    import pyarrow.dataset as ds
+
+    from intelligent_document_processing_on_aws_spark.plans.status import (
+        STATUS_TABLE,
+        append_status,
+    )
+
+    wh = str(tmp_path / "wh")
+    ids = lambda *v: spark.createDataFrame([(x,) for x in v], "doc_id long")  # noqa: E731
+    written = append_status([
+        (ids(1, 1, 2, 3), "QUEUED"),       # duplicate ids collapse
+        (ids(3, 2, 1), "QUEUED"),          # as do repeated transitions
+        (ids(1, 2), "EXTRACTING"),
+        (ids(1), "COMPLETED"),
+        (ids(), "FAILED"),                 # no ids: counted as 0
+    ], wh)
+    assert written == {"QUEUED": 3, "EXTRACTING": 2, "COMPLETED": 1, "FAILED": 0}
+    table = os.path.join(wh, STATUS_TABLE)
+    rows = ds.dataset(table).to_table().to_pylist()
+    assert sorted((r["doc_id"], r["status"], r["seq"]) for r in rows) == [
+        (1, "COMPLETED", 10), (1, "EXTRACTING", 4), (1, "QUEUED", 0),
+        (2, "EXTRACTING", 4), (2, "QUEUED", 0), (3, "QUEUED", 0),
+    ]
+    # one append: every file carries the same write-job id
+    assert len({f[len("part-00000-"):][:36] for f in os.listdir(table)
+                if f.startswith("part-")}) == 1
+
+
+def test_append_status_checks_every_status_before_writing(spark, tmp_path):
+    import os
+
+    import pytest as _pytest
+
+    from intelligent_document_processing_on_aws_spark.plans.status import append_status
+
+    wh = str(tmp_path / "wh")
+    ids = spark.createDataFrame([(1,)], "doc_id long")
+    with _pytest.raises(ValueError, match="NOT_A_STATUS"):
+        append_status([(ids, "QUEUED"), (ids, "NOT_A_STATUS")], wh)
+    assert not os.path.exists(wh)
 
 
 def test_manifest_parser_parity(tmp_path, spark, fixtures_dir):

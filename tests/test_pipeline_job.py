@@ -1,0 +1,154 @@
+"""jobs/pipeline.py end to end, in-process on the committed packet fixtures.
+
+Runs the job's ``main`` against the session fixture (its ``spark.stop``
+patched out) inside a Spark job group, then checks the warehouse it
+leaves: the eleven tables, the summary counts, every golden section in
+its class table with its golden values, every document's latest status,
+and the number of Spark jobs the run took.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import importlib.util
+import io
+import json
+import os
+import sys
+
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURES = os.path.join(REPO, "fixtures_data")
+
+CLASSES = ("bank_statement", "invoice", "tax_form", "webpage")
+WAREHOUSE_TABLES = sorted(
+    [f"document_sections_{c}" for c in CLASSES]
+    + ["confidence_alerts", "document_status", "document_summaries",
+       "document_summaries_md", "evaluation_metrics_by_class",
+       "evaluation_metrics_overall", "evaluation_reports"]
+)
+# every stage's output is computed once and the statuses are one append:
+# 41 Spark jobs on these fixtures (77 when each stage re-ran its inputs)
+MAX_SPARK_JOBS = 45
+
+
+def _load_job():
+    spec = importlib.util.spec_from_file_location(
+        "pipeline_job", os.path.join(REPO, "jobs", "pipeline.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _run(spark, warehouse: str, expected: bool) -> tuple[dict, int]:
+    """(the job's JSON summary, Spark jobs it ran) for one in-process run."""
+    job = _load_job()
+    argv = ["--pages", os.path.join(FIXTURES, "packet_pages.parquet"),
+            "--warehouse", warehouse, "--master", "local[4]"]
+    if expected:
+        argv += ["--expected", os.path.join(FIXTURES, "flat_expected.parquet")]
+    sc = spark.sparkContext
+    group = f"pipeline-job-{os.path.basename(warehouse)}"
+    saved_argv, out = sys.argv, io.StringIO()
+    sys.argv = [job.__file__, *argv]
+    spark.stop = lambda: None
+    sc.setJobGroup(group, "jobs/pipeline.py end to end")
+    try:
+        with contextlib.redirect_stdout(out):
+            assert job.main() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        del spark.stop
+        sys.argv = saved_argv
+    summary = json.loads(out.getvalue().strip().splitlines()[-1])
+    return summary, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(warehouse: str, table: str) -> list[dict]:
+    return ds.dataset(os.path.join(warehouse, table), partitioning="hive") \
+        .to_table().to_pylist()
+
+
+@pytest.fixture(scope="module")
+def evaluated(spark, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("pipeline") / "wh_eval")
+    summary, jobs = _run(spark, wh, expected=True)
+    return wh, summary, jobs
+
+
+def test_pipeline_writes_every_table_and_summary(evaluated):
+    wh, summary, _ = evaluated
+    assert summary["warehouse_tables"] == WAREHOUSE_TABLES
+    assert sorted(os.listdir(wh)) == WAREHOUSE_TABLES
+    assert summary["counts"] == {
+        "sections": 774, "attributed_sections": 774, "alerts": 36,
+        "summaries": 400, "eval_reports": 400, "eval_f1": 1.0,
+        "eval_accuracy": 1.0, "failed_docs": 0,
+    }
+    assert summary["status"] == {"COMPLETED": 400}
+    # the counts the job observed are the rows it committed
+    assert len(_rows(wh, "confidence_alerts")) == 36
+    assert len(_rows(wh, "document_summaries")) == 400
+    assert len(_rows(wh, "evaluation_reports")) == 400
+    overall = _rows(wh, "evaluation_metrics_overall")
+    assert len(overall) == 1
+    assert overall[0]["f1_score"] == 1.0 and overall[0]["accuracy"] == 1.0
+    assert {r["classification"] for r in _rows(wh, "evaluation_metrics_by_class")} \
+        == set(CLASSES)
+
+
+def test_pipeline_sections_match_golden(evaluated):
+    wh = evaluated[0]
+    sections = pq.read_table(os.path.join(FIXTURES, "golden_sections.parquet")).to_pylist()
+    attrs = {(g["doc_id"], g["section_id"]): json.loads(g["attributes_json"])
+             for g in pq.read_table(
+                 os.path.join(FIXTURES, "golden_attributes.parquet")).to_pylist()}
+    got = {}
+    for cls in CLASSES:
+        for row in _rows(wh, f"document_sections_{cls}"):
+            key = (row["doc_id"], row["section_id"])
+            assert key not in got, f"section {key} written twice"
+            got[key] = (cls, row)
+    assert set(got) == {(g["doc_id"], g["section_id"]) for g in sections}
+    for g in sections:
+        cls, row = got[(g["doc_id"], g["section_id"])]
+        assert cls == g["classification"]
+        for name, value in attrs[(g["doc_id"], g["section_id"])].items():
+            assert row[name.replace(" ", "_").lower()] == value, (g["doc_id"], name)
+
+
+def test_pipeline_statuses(evaluated):
+    wh = evaluated[0]
+    rows = _rows(wh, "document_status")
+    docs = set(pq.read_table(os.path.join(FIXTURES, "packet_pages.parquet"),
+                             columns=["doc_id"]).column("doc_id").to_pylist())
+    latest = {}
+    for r in sorted(rows, key=lambda r: r["seq"]):
+        latest[r["doc_id"]] = r["status"]
+    assert latest == dict.fromkeys(docs, "COMPLETED")
+    # one row per document and stage reached, nothing twice
+    stages = ("QUEUED", "CLASSIFYING", "EXTRACTING", "ASSESSING",
+              "SUMMARIZING", "EVALUATING", "COMPLETED")
+    keys = [(r["doc_id"], r["status"]) for r in rows]
+    assert len(keys) == len(set(keys)) == len(docs) * len(stages)
+    assert {s for _, s in keys} == set(stages)
+
+
+def test_pipeline_spark_job_budget(evaluated):
+    assert 0 < evaluated[2] <= MAX_SPARK_JOBS
+
+
+def test_pipeline_without_expected(spark, tmp_path):
+    wh = str(tmp_path / "wh_plain")
+    summary, _ = _run(spark, wh, expected=False)
+    tables = [t for t in WAREHOUSE_TABLES if not t.startswith("evaluation_")]
+    assert summary["warehouse_tables"] == tables
+    assert summary["counts"] == {
+        "sections": 774, "attributed_sections": 774, "alerts": 36,
+        "summaries": 400, "failed_docs": 0,
+    }
+    assert summary["status"] == {"COMPLETED": 400}
+    assert "EVALUATING" not in {r["status"] for r in _rows(wh, "document_status")}

@@ -173,3 +173,14 @@ def test_politeness_schedule_semantics(spark):
         "https://a.com/2": (2, 110),
         "https://b.com/x": (1, 100),
     }
+
+
+def test_self_closing_url_is_not_an_open_tag():
+    """An attribute-carrying self-closing `<url .../>` has no body; taken
+    as an open tag it paired with the next `</url>` and yielded the stray
+    loc between them instead of the real entry."""
+    r = parse_sitemap(_urlset(
+        '<url a="x"/><loc>http://a/stray</loc>'
+        "<url><loc>http://a/real</loc></url>"
+    ))
+    assert [e.loc for e in r.entries] == ["http://a/real"]
