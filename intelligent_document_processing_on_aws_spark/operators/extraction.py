@@ -141,14 +141,15 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
 def extract_pages(pages: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extraction result rows.
 
-    salt_partitions: when set, repartition by pmod(xxhash64(url), P) first —
-    spreads a giant host's pages evenly across P partitions (url-hash salt),
-    the skew strategy SURVEY.md §4 calls out for 100 TB inputs.
+    salt_partitions: when set, hash-repartition by xxhash64(url) into P
+    partitions first — spreads a giant host's pages evenly (url-hash salt),
+    the skew strategy SURVEY.md §4 calls out for 100 TB inputs. The salt
+    is the full 64-bit url hash: pre-reducing it mod P would leave only P
+    distinct keys for the partitioner's own hash to place, so some
+    partitions collide and others stay empty.
     """
     cols = ["url", "warc_ts", "html", "lang"]
     src = pages.select(*cols)
     if salt_partitions:
-        src = src.repartition(
-            salt_partitions, F.pmod(F.xxhash64("url"), F.lit(salt_partitions))
-        )
+        src = src.repartition(salt_partitions, F.xxhash64("url"))
     return src.mapInArrow(_extract_batches, RESULT_SCHEMA)

@@ -144,7 +144,9 @@ def classify_lang(
                 n_grams.append(ng)
                 score_micro.append(smax)
                 preds.append(cls[k_pred])
-                probs.append(round(1.0 / denom, 6))
+                # half-up like F.round and DuckDB's round(); Python's
+                # round() is half-even (1/128 -> 0.007812, not 0.007813)
+                probs.append(math.floor(1.0 / denom * 1e6 + 0.5) / 1e6)
                 corrects.append(None if y is None else (cls[k_pred] == y))
             yield pa.RecordBatch.from_arrays(
                 [

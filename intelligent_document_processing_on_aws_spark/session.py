@@ -2,8 +2,10 @@
 
 Tuned for the extraction workload: Arrow-batched Python stages, AQE with
 skew-join handling (giant-host URL skew per SURVEY.md §4), and shuffle
-partitioning sized to cores locally (on a real cluster set
-spark.sql.shuffle.partitions ~= 2-3x total cores via spark-submit conf).
+partitioning sized to cores locally. On a real cluster pass
+shuffle_partitions ~= 2-3x total cores (a job's own flag, such as
+jobs/extract.py --salt-partitions): the builder's value overrides a
+spark-submit --conf spark.sql.shuffle.partitions.
 """
 
 from __future__ import annotations

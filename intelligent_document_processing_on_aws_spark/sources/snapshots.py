@@ -29,6 +29,11 @@ closes the semantic gap with a from-scratch mini commit protocol:
 - ``read_table(snapshot_id=...)`` is time travel; ``rollback_to`` re-points
   without deleting newer snapshots (Iceberg ``rollback_to_snapshot``).
 - ``snapshot_history`` is the ``table.snapshots()`` metadata-table analog.
+- Each manifest records its added files' metrics, read from the parquet
+  footers the commit just wrote (Iceberg's data-file ``record_count``,
+  ``null_value_counts`` and ``lower_bounds``/``upper_bounds``), and a
+  summary with ``added_records``/``total_records``: row counts and
+  per-file lineage come from metadata, with no Spark job.
 
 On a real deployment the same call sites swap to ``df.writeTo(tbl)`` with an
 Iceberg catalog; this keeps kill/resume tests honest locally. File listings
@@ -43,6 +48,7 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 VERSION_HINT = "version-hint.text"
@@ -139,6 +145,84 @@ def _read_manifest(table_dir: str, snapshot_id: int) -> dict:
         return json.load(fh)
 
 
+def _bound(value):
+    """A footer min/max as a JSON value; types JSON cannot hold (bytes,
+    timestamps, decimals) stay unknown."""
+    return value if isinstance(value, (str, int, float, bool)) else None
+
+
+def _file_stats(path: str) -> dict:
+    """One data file's metrics from its parquet footer alone: the record
+    count and, per top-level primitive column, the null count and the
+    lower/upper bounds over all row groups. A bound is None (unknown)
+    when any row group holding non-null values has no min/max — e.g.
+    parquet-mr drops binary stats above 4 KB."""
+    md = pq.read_metadata(path)
+    columns: dict[str, dict] = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        if col.path != col.name:  # a leaf of a nested column
+            continue
+        nulls, lo, hi, known = 0, None, None, True
+        for g in range(md.num_row_groups):
+            chunk = md.row_group(g).column(i)
+            st = chunk.statistics
+            if st is None or not st.has_null_count:
+                nulls = None
+                known = False
+                continue
+            if nulls is not None:
+                nulls += st.null_count
+            if st.null_count == chunk.num_values:  # all nulls: no bounds
+                continue
+            if not st.has_min_max:
+                known = False
+                continue
+            lo = st.min if lo is None or st.min < lo else lo
+            hi = st.max if hi is None or st.max > hi else hi
+        columns[col.name] = {
+            "null_count": nulls,
+            "lower_bound": _bound(lo) if known else None,
+            "upper_bound": _bound(hi) if known else None,
+        }
+    return {"record_count": md.num_rows, "columns": columns}
+
+
+def _file_entries(table_dir: str, files: list[str]) -> list[dict]:
+    return [{"path": f, **_file_stats(os.path.join(table_dir, f))} for f in files]
+
+
+def _total_records(table_dir: str, manifest: dict) -> int:
+    """A snapshot's live row count: its summary, or for a manifest written
+    before summaries existed, the sum of its files' footer row counts."""
+    total = manifest.get("summary", {}).get("total_records")
+    if total is None:
+        total = sum(pq.read_metadata(os.path.join(table_dir, f)).num_rows
+                    for f in manifest["files"])
+    return total
+
+
+def total_records(table_dir: str, snapshot_id: int | None = None) -> int:
+    """Rows in the committed (or ``snapshot_id``) snapshot, from metadata
+    alone; 0 for an empty table."""
+    snap = snapshot_id if snapshot_id is not None else current_snapshot_id(table_dir)
+    if snap is None:
+        return 0
+    return _total_records(table_dir, _read_manifest(table_dir, snap))
+
+
+def added_file_stats(table_dir: str, snapshot_id: int) -> list[dict]:
+    """The files ``snapshot_id`` added, each ``{"path", "record_count",
+    "columns"}`` as :func:`_file_stats` gives it; read from the footers
+    for a manifest written before stats existed."""
+    manifest = _read_manifest(table_dir, snapshot_id)
+    stats = manifest.get("added_file_stats")
+    if stats is None:
+        added = manifest["files"][len(manifest["files"]) - manifest["added_files"]:]
+        stats = _file_entries(table_dir, added)
+    return stats
+
+
 def commit_snapshot(
     df: DataFrame,
     table_dir: str,
@@ -182,9 +266,13 @@ def commit_snapshot(
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
     )
-    files = list(new_files)
+    stats = _file_entries(table_dir, new_files)
+    added_records = sum(st["record_count"] for st in stats)
+    files, total = list(new_files), added_records
     if operation == "append" and parent is not None:
-        files = _read_manifest(table_dir, parent)["files"] + files
+        parent_manifest = _read_manifest(table_dir, parent)
+        files = parent_manifest["files"] + files
+        total += _total_records(table_dir, parent_manifest)
     manifest = {
         "snapshot_id": snap_id,
         "parent_id": parent,
@@ -192,6 +280,8 @@ def commit_snapshot(
         "committed_at_ms": int(time.time() * 1000),
         "added_files": len(new_files),
         "files": files,
+        "added_file_stats": stats,
+        "summary": {"added_records": added_records, "total_records": total},
     }
     with open(os.path.join(snap, "manifest.json"), "w", encoding="utf-8") as fh:
         json.dump(manifest, fh, sort_keys=True)

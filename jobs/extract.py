@@ -7,14 +7,22 @@ Usage (local or cluster):
       [--salt-partitions 64] [--synthetic-rows N] [--snapshots]
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the vectorized
-extraction stage, writes the result table partitioned by content_type, and
-prints a one-line JSON summary (rows, docs/sec).
+extraction stage in one Python pass, writes the result table partitioned
+by content_type, and prints a one-line JSON summary (rows, docs/sec).
+With --salt-partitions P the pages are first salted by url hash into P
+partitions; without it this path reads the input's own partitioning.
 
-With --snapshots the output and per-partition lineage land as atomic
-snapshot commits (sources/snapshots.py) under {output}/table and
-{output}/lineage: re-running the same command resumes from the last
-committed snapshot, processing only not-yet-committed urls — the kill
-mid-run / re-run path.
+--snapshots always salts, and --synthetic-rows generates its pages in P
+partitions; for both, P defaults to spark.sql.shuffle.partitions, which
+get_spark sizes to the local cores. On a cluster pass --salt-partitions:
+get_spark's own shuffle-partition value overrides a spark-submit --conf.
+
+With --snapshots the output lands as an atomic snapshot commit
+(sources/snapshots.py) under {output}/table, and its per-file lineage,
+read from that commit's parquet footer stats, under {output}/lineage:
+re-running the same command resumes from the last committed snapshot,
+processing only not-yet-committed urls — the kill mid-run / re-run path.
+"rows" is then the committed snapshot's record count, from its manifest.
 """
 
 from __future__ import annotations
@@ -48,11 +56,12 @@ def main() -> int:
 
     spark = get_spark("idp-extract", master=args.master)
     t0 = time.time()
+    # P of the --snapshots salt and of the --synthetic-rows generator
+    salt = args.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if args.synthetic_rows:
         from intelligent_document_processing_on_aws_spark.sources.pages_source import synthetic_pages
 
-        pages = synthetic_pages(spark, args.synthetic_rows,
-                                partitions=args.salt_partitions or 32)
+        pages = synthetic_pages(spark, args.synthetic_rows, partitions=salt)
     elif args.manifest:
         from intelligent_document_processing_on_aws_spark.plans.manifest import (
             parse_manifest,
@@ -72,17 +81,16 @@ def main() -> int:
             run_with_resume_snapshots,
         )
         from intelligent_document_processing_on_aws_spark.sources.snapshots import (
-            read_table,
+            total_records,
         )
 
         stats = run_with_resume_snapshots(
             spark, pages,
             os.path.join(args.output, "table"),
             os.path.join(args.output, "lineage"),
-            salt_partitions=args.salt_partitions or 32,
+            salt_partitions=salt,
         )
-        tbl = read_table(spark, os.path.join(args.output, "table"))
-        n = tbl.count() if tbl is not None else 0
+        n = total_records(os.path.join(args.output, "table"))
         dt = time.time() - t0
         # throughput reflects THIS run's work; rows is the committed total
         print(json.dumps({"rows": n, "sec": round(dt, 2),

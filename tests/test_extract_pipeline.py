@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages
@@ -63,3 +64,18 @@ def test_spans_struct_column(spark, fixtures_dir):
     assert s0.start == 0 and s0.end > 0 and s0.block_id == 0
     # offsets consistent with text
     assert row.extracted_text[s0.start : s0.end] == row.extracted_text.split("\n")[0]
+
+
+@pytest.mark.parametrize("n_parts", [8, 32])
+def test_url_hash_salt_spreads_rows(spark, n_parts):
+    """The salt spreads 2 000 urls over every partition, none holding more
+    than 1.5x the mean (a salt pre-reduced mod P filled 4 of 8)."""
+    pages = synthetic_pages(spark, 2000, partitions=4)
+    counts = [
+        r.n for r in extract_pages(pages, salt_partitions=n_parts)
+        .groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert len(counts) == n_parts
+    assert max(counts) / (2000 / n_parts) <= 1.5

@@ -108,6 +108,26 @@ def test_native_scorer_matches_pure_kernel(spark):
         assert r.correct == (pred == lang)
 
 
+def test_prob_tie_rounds_half_up_like_spark(spark):
+    """128 fully tied classes give prob = 1/128 = 0.0078125 exactly, a tie
+    at the 6th decimal: rounded half-up like Spark's F.round and DuckDB's
+    round() (0.007813), not half-even like Python's round() (0.007812)."""
+    from pyspark.sql import functions as F
+
+    from intelligent_document_processing_on_aws_spark.operators.ft_classifier import (
+        classify_lang,
+    )
+
+    n_cls, n_buckets = 128, 64
+    df = spark.createDataFrame([(0, "tied scores", "c000")],
+                               "doc_id long, text string, lang string")
+    row = classify_lang(df, [[0] * n_buckets] * n_cls, [0] * n_cls,
+                        [f"c{k:03d}" for k in range(n_cls)],
+                        n_buckets=n_buckets).first()
+    spark_round = spark.range(1).select(F.round(F.lit(1 / 128), 6)).first()[0]
+    assert row.prob == spark_round == 0.007813
+
+
 def test_full_stage_learns_corpus_langs(spark, fixtures_dir):
     """Trained on the first 512 docs of the langid fixture corpus, the
     classifier gets >=98% of ALL 1200 docs right (held-out 512..1199

@@ -13,9 +13,10 @@ from intelligent_document_processing_on_aws_spark.operators.multimodal import (
 )
 from intelligent_document_processing_on_aws_spark.plans.lineage import (
     assert_no_duplicates,
-    run_with_resume,
+    run_with_resume_snapshots,
 )
 from intelligent_document_processing_on_aws_spark.sources.pages_source import synthetic_pages
+from intelligent_document_processing_on_aws_spark.sources.snapshots import read_table
 from intelligent_document_processing_on_aws_spark.streaming.stream_extract import (
     start_extract_stream,
 )
@@ -29,21 +30,22 @@ def test_resume_no_duplicates(spark, tmp_path):
     all_pages = synthetic_pages(spark, 120, partitions=4)
     first_half = all_pages.where(F.xxhash64("url") % 2 == 0)
 
-    r1 = run_with_resume(spark, first_half, out, lineage, salt_partitions=4)
+    r1 = run_with_resume_snapshots(spark, first_half, out, lineage, salt_partitions=4)
     assert r1["processed"] > 0
 
     # "resume" over the full input: only the unprocessed urls run
-    r2 = run_with_resume(spark, all_pages, out, lineage, salt_partitions=4)
+    r2 = run_with_resume_snapshots(spark, all_pages, out, lineage, salt_partitions=4)
     assert r2["processed"] + r2["skipped"] == 120
     assert r2["skipped"] == r1["processed"]
 
     assert assert_no_duplicates(spark, out) == 120
     # idempotent third run: nothing to do
-    r3 = run_with_resume(spark, all_pages, out, lineage, salt_partitions=4)
+    r3 = run_with_resume_snapshots(spark, all_pages, out, lineage, salt_partitions=4)
     assert r3["processed"] == 0 and r3["skipped"] == 120
+    assert assert_no_duplicates(spark, out) == 120
 
-    lin = spark.read.parquet(lineage)
-    assert lin.count() > 0
+    lin = read_table(spark, lineage)
+    assert lin.agg(F.sum("n_rows")).first()[0] == 120
     assert lin.agg(F.sum("n_errors")).first()[0] == 0
 
 

@@ -11,12 +11,17 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 from intelligent_document_processing_on_aws_spark.sources.snapshots import (
+    added_file_stats,
     commit_snapshot,
     current_snapshot_id,
     read_table,
     rollback_to,
     snapshot_history,
+    total_records,
 )
 
 
@@ -187,3 +192,93 @@ def test_resume_from_last_committed_snapshot(spark, tmp_path, fixtures_dir):
     assert r3 == {"processed": 0, "skipped": n_pages, "snapshot_id": None}
     hist = snapshot_history(lin)
     assert len(hist) == 2  # one lineage commit per productive run
+
+    # lineage: one row per committed output file, counted from its footer
+    lineage = read_table(spark, lin).collect()
+    assert sum(r.n_rows for r in lineage) == n_pages == total_records(out)
+    files = {}
+    for sid in (r1["snapshot_id"], r2["snapshot_id"]):
+        for st in added_file_stats(out, sid):
+            pid = int(os.path.basename(st["path"]).split("-")[1])
+            files[(sid, pid)] = os.path.join(out, st["path"])
+    assert len(lineage) == len(files)
+    for r in lineage:
+        urls = pq.read_table(files[(r.output_snapshot_id, r.partition_id)],
+                             columns=["url"]).column("url")
+        assert (r.n_rows, r.min_url, r.max_url) == (
+            len(urls), pc.min(urls).as_py(), pc.max(urls).as_py())
+
+
+def test_manifest_records_footer_stats(spark, tmp_path):
+    """Each added file's record count, null counts and url bounds in the
+    manifest equal what pyarrow reads from that file."""
+    t = str(tmp_path / "tbl")
+    rows = [(f"https://h{i % 7}.example/{i:03d}", None if i % 3 else f"err {i}")
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "url string, error string").repartition(3)
+    sid = commit_snapshot(df, t)
+    stats = added_file_stats(t, sid)
+    assert len(stats) == 3
+    for st in stats:
+        tbl = pq.read_table(os.path.join(t, st["path"]))
+        assert st["record_count"] == tbl.num_rows
+        for name in ("url", "error"):
+            col = st["columns"][name]
+            assert col["null_count"] == tbl.column(name).null_count
+            assert col["lower_bound"] == pc.min(tbl.column(name)).as_py()
+            assert col["upper_bound"] == pc.max(tbl.column(name)).as_py()
+    assert total_records(t) == 60
+
+
+def test_total_records_adds_up_and_resets_on_overwrite(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    assert total_records(t) == 0
+    s1 = commit_snapshot(_df(spark, [1, 2]), t)
+    s2 = commit_snapshot(_df(spark, [3]), t)
+    assert (total_records(t, s1), total_records(t)) == (2, 3)
+    commit_snapshot(_df(spark, [9]), t, operation="overwrite")
+    assert total_records(t) == 1
+    assert total_records(t, s2) == 3  # time travel keeps its own total
+
+
+def test_manifest_without_stats_still_reads(spark, tmp_path):
+    """Manifests written before file stats existed: reads, totals and
+    file stats fall back to the data files' footers, and the next append
+    builds its total on them."""
+    t = str(tmp_path / "tbl")
+    s1 = commit_snapshot(_df(spark, [1, 2]), t)
+    s2 = commit_snapshot(_df(spark, [3]), t)
+    for sid in (s1, s2):
+        path = os.path.join(t, f"snap-{sid:08d}", "manifest.json")
+        with open(path, encoding="utf-8") as fh:
+            manifest = json.load(fh)
+        with open(path, "w", encoding="utf-8") as fh:
+            json.dump({k: v for k, v in manifest.items()
+                       if k not in ("added_file_stats", "summary")}, fh)
+    assert _vals(read_table(spark, t)) == [1, 2, 3]
+    assert total_records(t) == 3
+    [st] = [st for st in added_file_stats(t, s2) if st["record_count"]]
+    assert st["record_count"] == 1 and st["columns"]["v"]["lower_bound"] == 3
+    commit_snapshot(_df(spark, [4, 5]), t)
+    assert total_records(t) == 5
+
+
+def test_fresh_resume_runs_at_most_five_jobs(spark, tmp_path, fixtures_dir):
+    """One Python pass: input count, the extraction write (its shuffle
+    map stage and the write) and the lineage write — no resume anti-join
+    on an empty table and no second pass over the result."""
+    from intelligent_document_processing_on_aws_spark.plans.lineage import (
+        run_with_resume_snapshots,
+    )
+
+    pages = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-resume", "fresh run_with_resume_snapshots")
+    try:
+        r = run_with_resume_snapshots(
+            spark, pages, str(tmp_path / "out"), str(tmp_path / "lineage"),
+            salt_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r["processed"] == 200
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-resume")) <= 5
