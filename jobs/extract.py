@@ -8,7 +8,8 @@ Usage (local or cluster):
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the vectorized
 extraction stage in one Python pass, writes the result table partitioned
-by content_type, and prints a one-line JSON summary (rows, docs/sec).
+by content_type, and prints a one-line JSON summary (rows, docs/sec, and
+jvm_jit_s: the seconds the driver JVM's JIT compilers spent in the job).
 With --salt-partitions P the pages are first salted by url hash into P
 partitions; without it this path reads the input's own partitioning.
 
@@ -36,7 +37,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages  # noqa: E402
-from intelligent_document_processing_on_aws_spark.session import get_spark  # noqa: E402
+from intelligent_document_processing_on_aws_spark.session import get_spark, jit_seconds  # noqa: E402
 
 
 def main() -> int:
@@ -55,7 +56,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark("idp-extract", master=args.master)
-    t0 = time.time()
+    t0, jit0 = time.time(), jit_seconds(spark)
     # P of the --snapshots salt and of the --synthetic-rows generator
     salt = args.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if args.synthetic_rows:
@@ -95,6 +96,7 @@ def main() -> int:
         # throughput reflects THIS run's work; rows is the committed total
         print(json.dumps({"rows": n, "sec": round(dt, 2),
                           "docs_per_sec": round(stats["processed"] / dt, 1),
+                          "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
                           **stats}))
         spark.stop()
         return 0
@@ -107,7 +109,8 @@ def main() -> int:
     n = spark.read.parquet(args.output).count()
     dt = time.time() - t0
     print(json.dumps({"rows": n, "sec": round(dt, 2),
-                      "docs_per_sec": round(n / dt, 1)}))
+                      "docs_per_sec": round(n / dt, 1),
+                      "jvm_jit_s": round(jit_seconds(spark) - jit0, 2)}))
     spark.stop()
     return 0
 

@@ -6,6 +6,10 @@ alerts) -> summarization -> [optional evaluation vs expected] -> reporting
 warehouse (per-class section tables, metrics, alerts, summaries) -> the
 run's document status transitions, appended once at the end.
 
+Prints a one-line JSON summary: the warehouse tables, the stage counts,
+the latest status of every document, the job's seconds and jvm_jit_s
+(the seconds the driver JVM's JIT compilers spent in the job).
+
 Usage:
   python jobs/pipeline.py --pages fixtures_data/packet_pages.parquet \
       --warehouse /tmp/idp_warehouse \
@@ -47,7 +51,7 @@ from intelligent_document_processing_on_aws_spark.operators.summarize import (  
     format_document_summaries,
     summarize_sections,
 )
-from intelligent_document_processing_on_aws_spark.session import get_spark  # noqa: E402
+from intelligent_document_processing_on_aws_spark.session import get_spark, jit_seconds  # noqa: E402
 from intelligent_document_processing_on_aws_spark.sources.catalog import (  # noqa: E402
     list_warehouse_tables,
     write_document_sections,
@@ -70,7 +74,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark("idp-pipeline", master=args.master)
-    t0 = time.time()
+    t0, jit0 = time.time(), jit_seconds(spark)
     wh = args.warehouse
     counts = {}
 
@@ -167,6 +171,7 @@ def main() -> int:
         "counts": counts,
         "status": status_counts(spark, wh),
         "sec": round(time.time() - t0, 2),
+        "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
     }))
     for df in persisted:
         df.unpersist()

@@ -89,6 +89,7 @@ def test_pipeline_writes_every_table_and_summary(evaluated):
         "eval_accuracy": 1.0, "failed_docs": 0,
     }
     assert summary["status"] == {"COMPLETED": 400}
+    assert summary["jvm_jit_s"] >= 0
     # the counts the job observed are the rows it committed
     assert len(_rows(wh, "confidence_alerts")) == 36
     assert len(_rows(wh, "document_summaries")) == 400
