@@ -2122,8 +2122,8 @@ def _sql_embedding_neardup() -> str:
 
 # the testdata embeddings tables carry 64-dim vectors at every SF
 # (TESTDATA.md); a constant beats probing the data with a driver-side
-# .first() in the query path (VERDICT r3 nit) — pinned by
-# tests/test_entry_contract.py against the parquet itself
+# .first() in the query path, which would cost a Spark job per call —
+# pinned by tests/test_entry_contract.py against the parquet itself
 EMBED_DIM = 64
 
 
@@ -3143,8 +3143,8 @@ def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans WindowGroupLimit, so oversized hosts prune map-side before
     the shuffle). Inputs are deterministic: distinct urlset locs from
     the sitemap golden; per-host delays by formula (1 + len(host)%5,
-    broadcast-joined). Oracle: the identical window + formula chain in
-    DuckDB."""
+    broadcast-joined). Oracle: the identical host filter, window and
+    formula chain in DuckDB."""
     from .operators.cdx import politeness_schedule
 
     locs = (
@@ -3173,7 +3173,7 @@ WITH locs AS (
 ), seq AS (
   SELECT loc, host,
          row_number() OVER (PARTITION BY host ORDER BY loc) AS fetch_seq
-  FROM x
+  FROM x WHERE host <> ''
 )
 SELECT loc, host, fetch_seq,
        1717200000 + (fetch_seq - 1) * (1 + length(host) % 5) AS eta_epoch

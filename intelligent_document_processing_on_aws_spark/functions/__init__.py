@@ -2,8 +2,6 @@
 
 from .scalars import (  # noqa: F401
     normalize_boolean,
-    normalize_numeric_col,
     parse_uri,
     pipe_escape,
-    strip_punctuation_space_col,
 )

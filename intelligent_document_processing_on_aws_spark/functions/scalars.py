@@ -4,11 +4,12 @@ Each is the Catalyst twin of a pure kernel in kernels/textnorm.py — JVM-side
 and codegen-able, for use in hot paths where the pandas-UDF route would be
 waste:
 
-- strip_punctuation_space_col: comparator.py:86-101
-- normalize_numeric_col:       comparator.py:104-126 (try_cast -> NULL on junk)
-- normalize_boolean:           utils/__init__.py:255-275
-- parse_uri:                   utils/__init__.py:42-74 (s3://bucket/key split)
-- pipe_escape:                 ocr/service.py:1542-1544
+- normalize_boolean: utils/__init__.py:255-275
+- parse_uri:         utils/__init__.py:42-74 (s3://bucket/key split)
+- pipe_escape:       ocr/service.py:1542-1544
+
+The comparator normalizers (comparator.py:86-126) live once, as
+operators/evaluation.norm_exact and norm_numeric.
 """
 
 from __future__ import annotations
@@ -18,16 +19,6 @@ from pyspark.sql import functions as F
 
 _TRUTHY = ("true", "yes", "1", "y", "t")
 _FALSY = ("false", "no", "0", "n", "f")
-
-
-def strip_punctuation_space_col(col: Column) -> Column:
-    return F.lower(
-        F.trim(F.regexp_replace(F.regexp_replace(col, r"[^\w\s]", ""), r"\s+", " "))
-    )
-
-
-def normalize_numeric_col(col: Column) -> Column:
-    return F.translate(col, "$,()", "").try_cast("double")
 
 
 def normalize_boolean(col: Column) -> Column:

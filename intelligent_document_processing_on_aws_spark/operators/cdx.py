@@ -258,11 +258,6 @@ def politeness_schedule(
     # them default_delay semantics indistinguishable from a real
     # host). They are excluded here; callers that want them route the
     # complement (host = '') to a quarantine output instead.
-    # Oracle note: the committed fetch_schedule oracle predates this
-    # quarantine and models the unfiltered schedule; its fixture input
-    # (sitemap_golden urlset locs) contains zero non-http(s) locs, so
-    # both spellings agree on every committed input — the filter is
-    # only observable on inputs that carry malformed locs.
     df = df.where(F.col("host") != "")
     w = Window.partitionBy("host").orderBy(F.col("loc").asc())
     df = df.withColumn("fetch_seq", F.row_number().over(w))

@@ -169,9 +169,9 @@ def evaluate_attributes(
         # enforce one vector per text, or duplicate rows would fan out
         # matches and double-count tp/fp/fn (ADVICE r3). The JOIN KEY is
         # xxhash64(text) — an 8-byte bigint — so the lookup scales past
-        # broadcast size without shuffling long string keys (r5 VERDICT
-        # #5); the residual text-equality predicate keeps semantics exact
-        # under a 64-bit collision.
+        # broadcast size without shuffling long string keys; the residual
+        # text-equality predicate keeps semantics exact under a 64-bit
+        # collision.
         emb = embeddings.dropDuplicates(["text"])
         emb_e = emb.select(
             F.xxhash64("text").alias("__e_key"),

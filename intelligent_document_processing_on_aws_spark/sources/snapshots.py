@@ -4,25 +4,25 @@ The reference writes its reporting layer to Iceberg tables, whose core
 guarantees are (public Iceberg spec / HadoopTables layout): atomic snapshot
 commits via a version pointer, readers always seeing the last committed
 snapshot, time travel by snapshot id, and append/overwrite operations
-recorded in manifests. No Iceberg jar ships in this sandbox, so
+recorded in manifests. No Iceberg jar ships with this package, so
 sources/catalog.py documents plain parquet as the stand-in; this module
 closes the semantic gap with a from-scratch mini commit protocol:
 
     table_dir/
       snap-00000001/data/*.parquet      immutable data written per commit
       snap-00000001/manifest.json       snapshot metadata + readable file set
-      version-hint.text                 pointer to the committed snapshot id
+      commits/v00000001                 version marker: a committed snapshot id
 
 - ``commit_snapshot`` stages data + manifest first; the commit's
   linearization point is an O_EXCL-created version marker
   (``commits/v<N+1>``, Iceberg's ``vN.metadata.json`` analog): exactly one
   writer per version can win, so two concurrent appenders can never both
   commit against the same parent — the loser gets CommitConflictError and
-  its staged snapshot stays invisible. The ``version-hint.text`` pointer
-  is a read cache flipped after the claim; a winner that crashes between
-  claim and flip is repaired by the next writer (hint reconciled from the
-  latest marker), a crashed writer before the claim leaves only a
-  dangling snap dir no reader ever sees (snapshot isolation).
+  its staged snapshot stays invisible. The committed snapshot is the one
+  the highest readable marker names; a writer that crashes between the
+  marker's create and its write leaves an empty marker that readers walk
+  past, and a crashed writer before the claim leaves only a dangling snap
+  dir no reader ever sees (snapshot isolation).
 - ``append`` manifests carry the parent's file set plus the new files;
   ``overwrite`` starts a fresh set — so every manifest is self-contained
   and a read needs exactly one manifest (like Iceberg's manifest lists).
@@ -51,12 +51,10 @@ import time
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-VERSION_HINT = "version-hint.text"
-
 
 class CommitConflictError(RuntimeError):
     """Another writer committed between this commit's parent read and its
-    pointer flip (Iceberg's CommitFailedException analog). The staged
+    version-marker claim (Iceberg's CommitFailedException analog). The staged
     snapshot was abandoned (left dangling, invisible); callers retry the
     whole commit to pick up the new parent."""
 
@@ -103,40 +101,17 @@ def _claim_version(table_dir: str, version: int, snapshot_id: int) -> None:
         os.close(fd)
 
 
-def _write_hint(table_dir: str, snapshot_id: int) -> None:
-    tmp = os.path.join(table_dir, f"{VERSION_HINT}.{snapshot_id}.{os.getpid()}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(snapshot_id))
-    os.replace(tmp, os.path.join(table_dir, VERSION_HINT))
-
-
-def _reconcile_hint(table_dir: str) -> None:
-    """Repair a crashed winner: if the latest claimed marker points past
-    the hint cache, finish its pointer flip (idempotent, any process may
-    do it)."""
-    v = _latest_version(table_dir)
-    if v == 0:
-        return
-    snap = _marker_snapshot(table_dir, v)
-    if snap is not None and _read_hint(table_dir) != snap:
-        _write_hint(table_dir, snap)
-
-
-def _read_hint(table_dir: str) -> int | None:
-    hint = os.path.join(table_dir, VERSION_HINT)
-    try:
-        with open(hint, encoding="utf-8") as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
 def current_snapshot_id(table_dir: str) -> int | None:
-    """The committed snapshot id, or None for an empty/uncreated table.
-    Dangling snap dirs without a pointer flip are invisible by design;
-    a crashed winner's claimed-but-unflipped commit is reconciled first."""
-    _reconcile_hint(table_dir)
-    return _read_hint(table_dir)
+    """The committed snapshot id, or None for an empty/uncreated table:
+    the snapshot the highest readable commit marker names. A marker that
+    is empty or unparsable (its writer crashed between the O_EXCL create
+    and the write) is walked past, so the table reads the commit before
+    it. Dangling snap dirs without a marker are invisible by design."""
+    for version in range(_latest_version(table_dir), 0, -1):
+        snap = _marker_snapshot(table_dir, version)
+        if snap is not None:
+            return snap
+    return None
 
 
 def _read_manifest(table_dir: str, snapshot_id: int) -> dict:
@@ -231,8 +206,8 @@ def commit_snapshot(
     """Write ``df`` as a new committed snapshot; returns the snapshot id.
 
     operation: 'append' (new snapshot reads parent files + these) or
-    'overwrite' (new snapshot reads only these). The pointer flip is the
-    single atomic step; everything before it is invisible staging.
+    'overwrite' (new snapshot reads only these). The version-marker claim
+    is the single atomic step; everything before it is invisible staging.
     """
     if operation not in ("append", "overwrite"):
         raise ValueError(f"unknown operation: {operation}")
@@ -301,12 +276,10 @@ def commit_snapshot(
     try:
         _claim_version(table_dir, parent_version + 1, snap_id)
     except FileExistsError:
-        _reconcile_hint(table_dir)  # finish the winner's flip if it crashed
         raise CommitConflictError(
             f"concurrent commit detected on {table_dir}: version "
             f"{parent_version + 1} already claimed; retry the commit"
         ) from None
-    _write_hint(table_dir, snap_id)
     return snap_id
 
 
@@ -333,7 +306,8 @@ def read_table(
 
 def snapshot_history(table_dir: str) -> list[dict]:
     """All COMMITTED snapshots oldest-first (``table.snapshots()`` analog):
-    walk parent pointers from the current hint; dangling snaps excluded."""
+    walk parent pointers from the current snapshot; dangling snaps
+    excluded."""
     out: list[dict] = []
     snap = current_snapshot_id(table_dir)
     while snap is not None:
@@ -356,7 +330,7 @@ def rollback_to(table_dir: str, snapshot_id: int) -> None:
     ):
         raise ValueError(f"snapshot {snapshot_id} was never committed")
     # a rollback is itself a version claim: the new marker records the
-    # re-pointed snapshot, so hint reconciliation can never undo it
+    # re-pointed snapshot, and the highest marker is the current snapshot
     version = _latest_version(table_dir)
     while True:
         version += 1
@@ -365,4 +339,3 @@ def rollback_to(table_dir: str, snapshot_id: int) -> None:
             break
         except FileExistsError:
             continue
-    _write_hint(table_dir, snapshot_id)

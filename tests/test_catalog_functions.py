@@ -8,14 +8,16 @@ from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.functions import (
     normalize_boolean,
-    normalize_numeric_col,
     parse_uri,
     pipe_escape,
-    strip_punctuation_space_col,
 )
 from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
     normalize_boolean_value,
     strip_punctuation_space,
+)
+from intelligent_document_processing_on_aws_spark.operators.evaluation import (
+    norm_exact,
+    norm_numeric,
 )
 from intelligent_document_processing_on_aws_spark.sources.catalog import (
     list_warehouse_tables,
@@ -29,8 +31,8 @@ def test_scalar_columns_match_kernels(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     rows = df.select(
         "v",
-        strip_punctuation_space_col("v").alias("s"),
-        normalize_numeric_col("v").alias("n"),
+        norm_exact(F.col("v")).alias("s"),
+        norm_numeric(F.col("v")).alias("n"),
         normalize_boolean(F.col("v")).alias("b"),
     ).collect()
     for r in rows:

@@ -149,3 +149,24 @@ def test_politeness_schedule_quarantines_empty_host(spark):
     assert set(rows) == {"http://a/1", "http://a/2"}
     assert rows["http://a/1"]["fetch_seq"] == 1
     assert rows["http://a/2"]["eta_epoch"] == 102
+
+
+def test_fetch_schedule_oracle_drops_empty_host(spark, tmp_path, monkeypatch):
+    """The fetch_schedule query and its DuckDB oracle agree on an input
+    that carries non-http(s) locs: both leave out the host='' rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from intelligent_document_processing_on_aws_spark import entry_queries as eq
+
+    locs = ["https://a.example/1", "https://a.example/2", "http://bb.example/x",
+            "ftp://weird/3", "not-a-url", "mailto:x@a.example"]
+    path = str(tmp_path / "sitemap_golden.parquet")
+    pq.write_table(pa.table({"kind": ["urlset"] * len(locs), "loc": locs}), path)
+    monkeypatch.setattr(eq, "_fx", lambda name: path)
+
+    spark_rows = sorted(tuple(r) for r in eq.q_fetch_schedule(spark, "").collect())
+    oracle_rows = sorted(duckdb.connect().execute(eq._sql_fetch_schedule()).fetchall())
+    assert spark_rows == oracle_rows
+    assert {r[0] for r in oracle_rows} == set(locs[:3])

@@ -44,8 +44,8 @@ def test_extraction_plan_vectorized(spark, fixtures_dir):
     pages = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet"))
     df = extract_pages(pages, salt_partitions=4)
     plan = _plan(df)
-    # r6: the stage is Arrow-native (MapInArrow) — spans are built as
-    # Arrow arrays directly instead of through the pandas bridge
+    # r6: the stage is Arrow-native (MapInArrow) — output columns are
+    # built as Arrow arrays directly instead of through the pandas bridge
     assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
     # column pruning: the unused `text` column must not be read
@@ -240,7 +240,8 @@ def test_dedup_posting_tables_checkpointed_by_default(spark):
 
 
 def test_round5_webfilter_plans(spark):
-    """r4 web operators, pinned (r5 VERDICT #6): c4_clean and pii_stats
+    """r4 web operators, pinned so a shuffle or a Python hop cannot creep
+    back in unnoticed: c4_clean and pii_stats
     are map-only codegen'd projections (zero Exchange, zero Python);
     url_dedup has exactly ONE Exchange (the canonical-key window) and no
     Python; doc_quality is one MapInPandas over the scan with zero
@@ -301,7 +302,7 @@ def test_canonical_selection_plan_one_window_no_python(spark):
 def test_round5_semantic_lookup_hashed_join_key(spark):
     """The SEMANTIC embeddings lookup joins on xxhash64(text) — an 8-byte
     bigint shuffle key — with the raw-string equality kept only as a
-    residual predicate (r5 VERDICT #5)."""
+    residual predicate, so a long-string key is never shuffled."""
     expected = spark.createDataFrame(
         [(1, "s", "p", "c", "hello world")],
         "doc_id long, section_id string, attr_path string, "

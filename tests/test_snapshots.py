@@ -88,7 +88,6 @@ def test_concurrent_appenders_cannot_both_win(spark, tmp_path):
         _claim_version,
         _latest_version,
         _snap_dir,
-        _write_hint,
     )
 
     tbl = str(tmp_path / "tbl")
@@ -114,25 +113,37 @@ def test_concurrent_appenders_cannot_both_win(spark, tmp_path):
     assert _latest_version(tbl) == 2
 
 
-def test_crashed_winner_is_repaired_by_next_reader(spark, tmp_path):
-    """A writer that crashes between marker claim and hint flip: the next
-    current_snapshot_id() reconciles the hint from the marker, so the
-    committed snapshot becomes visible and later commits proceed."""
-    from intelligent_document_processing_on_aws_spark.sources.snapshots import (
-        VERSION_HINT,
-    )
+def test_crashed_winner_is_repaired_by_next_reader(spark, tmp_path, monkeypatch):
+    """A writer that crashes between the O_EXCL create of its version
+    marker and the write of its snapshot id leaves an empty marker: the
+    next reader walks past it to the previous commit, and the next
+    commit claims the version after it."""
+    import pytest
+
+    import intelligent_document_processing_on_aws_spark.sources.snapshots as snaps
+
+    class Crash(Exception):
+        pass
+
+    def crash_after_create(table_dir, version, snapshot_id):
+        path = os.path.join(table_dir, snaps.COMMITS_DIR, f"v{version:08d}")
+        os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        raise Crash
 
     tbl = str(tmp_path / "tbl")
-    s1 = commit_snapshot(_df(spark, [1]), tbl, "append")
+    commit_snapshot(_df(spark, [1]), tbl, "append")
     s2 = commit_snapshot(_df(spark, [2]), tbl, "append")
-    # simulate s2's writer crashing before the hint flip
-    hint = os.path.join(tbl, VERSION_HINT)
-    with open(hint, "w", encoding="utf-8") as fh:
-        fh.write(str(s1))
-    assert current_snapshot_id(tbl) == s2  # reconciled from the marker
-    assert _vals(read_table(spark, tbl)) == [1, 2]
-    s3 = commit_snapshot(_df(spark, [3]), tbl, "append")
+    monkeypatch.setattr(snaps, "_claim_version", crash_after_create)
+    with pytest.raises(Crash):
+        commit_snapshot(_df(spark, [777]), tbl, "append")
+    monkeypatch.undo()
+    assert snaps._latest_version(tbl) == 3  # the empty marker is there
+    assert current_snapshot_id(tbl) == s2
+    assert _vals(read_table(spark, tbl)) == [1, 2]  # 777 never leaks
+    s4 = commit_snapshot(_df(spark, [3]), tbl, "append")
+    assert s4 == 4 and current_snapshot_id(tbl) == s4
     assert _vals(read_table(spark, tbl)) == [1, 2, 3]
+    assert [h["snapshot_id"] for h in snapshot_history(tbl)] == [1, 2, 4]
 
 
 def test_rollback_then_commit_does_not_clobber(spark, tmp_path):
