@@ -16,6 +16,7 @@ golden parquet via read_parquet().
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +30,7 @@ from .operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs
 from .operators.evaluation import evaluate_attributes, evaluate_lists_hungarian, metrics_rollup
 from .operators.extraction import extract_pages
 from .operators.similarity import brute_force_topk, cosine_pairs, lsh_topk
+from .pyfiles import build
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO_ROOT, "fixtures_data")
@@ -39,37 +41,25 @@ def _fx(name: str) -> str:
 
 
 _SHIPPED_SESSIONS: set[int] = set()
+# (temp directory, archive in it): the directory goes when the process exits
+_ARCHIVE: tuple[tempfile.TemporaryDirectory, str] | None = None
 
 
 def ensure_workers(spark: SparkSession) -> None:
-    """Ship the package to executor Python workers (spark-submit --py-files
-    analog) so cloudpickled mapInPandas functions can import it regardless
-    of the harness's cwd/PYTHONPATH. Idempotent per session."""
+    """Ship this checkout's package to executor Python workers as the
+    spark-submit --py-files archive, so cloudpickled mapInPandas functions
+    can import it regardless of the harness's cwd/PYTHONPATH. The archive
+    is built once per process, into a temp directory of its own, so two
+    checkouts on one machine never ship each other's package. Idempotent
+    per session; Spark ignores a repeat add of the same path."""
+    global _ARCHIVE
     key = id(spark)
     if key in _SHIPPED_SESSIONS:
         return
-    import zipfile
-
-    pkg_dir = os.path.join(REPO_ROOT, "intelligent_document_processing_on_aws_spark")
-    zip_path = "/tmp/idp_spark_pkg.zip"
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    ):
-        with zipfile.ZipFile(zip_path + ".tmp", "w") as zf:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, REPO_ROOT)
-                        zf.write(full, rel)
-        os.replace(zip_path + ".tmp", zip_path)
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:  # noqa: BLE001 — already added in this context
-        pass
+    if _ARCHIVE is None:
+        tmp = tempfile.TemporaryDirectory(prefix="idp_spark_pyfiles_")
+        _ARCHIVE = tmp, build(os.path.join(tmp.name, "idp_spark_pkg.zip"))
+    spark.sparkContext.addPyFile(_ARCHIVE[1])
     _SHIPPED_SESSIONS.add(key)
 
 

@@ -1,4 +1,4 @@
-"""Document fingerprinting kernels: shingles, MinHash, SimHash, rolling hash.
+"""Document fingerprinting kernels: shingles, MinHash, SimHash.
 
 Used by the dedup operators (operators/dedup.py). All hashes are
 deterministic and dependency-free (md5-based), so driver, executors, and
@@ -139,14 +139,3 @@ def simhash64(text: str) -> int:
 
 def hamming64(a: int, b: int) -> int:
     return bin(a ^ b).count("1")
-
-
-def rolling_fingerprint(text: str, window: int = 8, base: int = 257,
-                        mod: int = MERSENNE_PRIME) -> int:
-    """Polynomial rolling hash of the first `window` normalized tokens —
-    a cheap near-prefix document fingerprint."""
-    toks = tokens_of(text)[:window]
-    h = 0
-    for t in toks:
-        h = (h * base + stable_hash64(t)) % mod
-    return h

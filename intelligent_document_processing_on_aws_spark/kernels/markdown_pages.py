@@ -68,23 +68,3 @@ def markdown_to_pages(markdown_content: str) -> list[str]:
         for i in range(0, len(lines), per_page)
     ]
     return pages if pages else [markdown_content]
-
-
-# backwards-compatible aliases used by tests
-def analyze_table_structure(lines: list[str]) -> dict:
-    tables = find_tables(lines)
-    return {
-        "headers": [(s, h, sep) for s, _e, h, sep in tables],
-        "table_ranges": [(s, e) for s, e, _h, _sep in tables],
-    }
-
-
-def ensure_table_headers(page_lines: list[str], table_info: dict,
-                         start_line_idx: int) -> list[str]:
-    tables = [
-        (s, e, h, sep)
-        for (s, e), (_s2, h, sep) in zip(
-            table_info["table_ranges"], table_info["headers"]
-        )
-    ]
-    return carry_table_header(page_lines, tables, start_line_idx)

@@ -31,10 +31,6 @@ PAGE_JOIN = "\n"
 WORD_JOIN = " "
 
 
-def is_pdf_payload(content: bytes) -> bool:
-    return content.startswith(PDF_MAGIC) or content.startswith(b"%PDF")
-
-
 def parse_spans(content: bytes) -> list[dict]:
     payload = content[len(PDF_MAGIC):]
     data = json.loads(payload.decode("utf-8"))

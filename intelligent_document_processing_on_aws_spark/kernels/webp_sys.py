@@ -92,16 +92,6 @@ def _require() -> ctypes.CDLL:
     return _LIB
 
 
-def get_info(data: bytes) -> tuple[int, int]:
-    """(width, height) from any WebP container, via WebPGetInfo."""
-    lib = _require()
-    w, h = ctypes.c_int(), ctypes.c_int()
-    ok = lib.WebPGetInfo(data, len(data), ctypes.byref(w), ctypes.byref(h))
-    if not ok:
-        raise WebpSysError("WebPGetInfo rejected the payload")
-    return w.value, h.value
-
-
 def decode_rgba(data: bytes):
     """Decode any WebP (lossy VP8 or lossless VP8L) to (h, w, 4) uint8
     RGBA with the system decoder."""

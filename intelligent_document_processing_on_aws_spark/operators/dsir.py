@@ -75,12 +75,6 @@ def _bigrams_of(toks: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _bigrams(text: Column) -> Column:
-    """Spec twin over raw text (kept for parity with the oracle SQL);
-    query paths stage the token array first — see _bigrams_of."""
-    return _bigrams_of(_tokens(text))
-
-
 def dsir_weights(
     docs: DataFrame,
     target_cond: Column,

@@ -114,30 +114,6 @@ def alpha_word_fraction(col: Column) -> Column:
     return _signal_cols(col, _words(col), _lines(col))["alpha_word_fraction"]
 
 
-_REPETITION_SCHEMA = T.StructType(
-    [T.StructField("doc_id", T.LongType())]
-    + [T.StructField(c, T.DoubleType()) for c in REPETITION_COLS]
-)
-
-
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, dup_line_fraction, dup_line_char_fraction,
-    top{2,3,4}gram_char_fraction, dup{5,10}gram_char_fraction) — one
-    map-only Arrow pass."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sig = [repetition_signals(t) for t in pdf[text_col]]
-            out = {"doc_id": pdf["doc_id"]}
-            for j, c in enumerate(REPETITION_COLS):
-                out[c] = [s[j] for s in sig]
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", text_col).mapInPandas(run, _REPETITION_SCHEMA)
-
-
 _NATIVE_COLS = (
     "symbol_word_ratio",
     "ellipsis_line_fraction",

@@ -66,12 +66,6 @@ def detect_lang(col: Column) -> Column:
     return expr
 
 
-def fingerprint8(col: Column) -> Column:
-    """md5 of the first 8 whitespace tokens — cheap near-prefix fingerprint."""
-    first8 = F.slice(tokens(col), 1, 8)
-    return F.md5(F.array_join(first8, " "))
-
-
 def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Single-pass stats built the 100 TB-shaped way: explode tokens once,
     aggregate all marker/stopword hit counts in ONE codegen'd groupBy

@@ -2,14 +2,17 @@
 
 Tuned for the extraction workload: Arrow-batched Python stages, AQE with
 skew-join handling (giant-host URL skew per SURVEY.md §4), and shuffle
-partitioning sized to cores locally. On a real cluster pass
-shuffle_partitions ~= 2-3x total cores (a job's own flag, such as
-jobs/extract.py --salt-partitions): the builder's value overrides a
-spark-submit --conf spark.sql.shuffle.partitions.
+partitioning sized to the local task slots.
 
-Sized to the box: local[N] runs one task slot per core this process may
-use (SPARK_GRAFT_CPUS overrides), and the driver heap is 60 % of physical
-RAM, at most 24g, since local-mode Python workers share that RAM.
+One precedence rule covers every setting get_spark makes:
+1. the caller's explicit master= and **extra;
+2. what a launcher already set: spark-submit --master, --name and --conf,
+   and spark-defaults.conf (read from the driver JVM a launcher started);
+3. the engine's defaults: local[N] with one task slot per core this
+   process may use (SPARK_GRAFT_CPUS overrides), shuffle partitions equal
+   to the slots (set only for a local master), a driver heap of 60 % of
+   physical RAM, at most 24g, since local-mode Python workers share that
+   RAM, the C1 JIT options below, and DEFAULT_CONFS.
 
 JIT policy: a driver JVM that get_spark launches compiles with C1 only
 (-XX:TieredStopAtLevel=1 in spark.driver.defaultJavaOptions), with the
@@ -18,7 +21,7 @@ compiling Spark's own code cost more CPU than their tasks; C1 roughly
 halves the CPU per document (README, "What the driver JVM costs"). C2
 comes back with -XX:TieredStopAtLevel=4 in spark.driver.extraJavaOptions,
 which the launcher places after the default options. Under spark-submit
-the driver JVM is already running, so pass
+the driver JVM is already running and takes no JVM options, so pass
 --driver-java-options "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 there instead.
 """
@@ -84,8 +87,20 @@ def jit_seconds(spark: SparkSession) -> float:
         .getTotalCompilationTime() / 1000
 
 
+def _launcher_conf() -> dict[str, str]:
+    """The Spark settings of the launcher that started the driver JVM
+    (spark-submit sets PYSPARK_GATEWAY_PORT); empty when get_spark is to
+    start the JVM itself."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
 def get_spark(app: str = "idp-spark", master: str | None = None,
-              shuffle_partitions: int | None = None, **extra: str) -> SparkSession:
+              **extra: str) -> SparkSession:
     # Spark owns the parallelism: pin BLAS to 1 thread in this process
     # (ctypes) and in the Python workers it forks (env var) — see
     # kernels/blasctl.py for the measured 20-100x small-GEMM effect.
@@ -98,17 +113,16 @@ def get_spark(app: str = "idp-spark", master: str | None = None,
     path = os.environ.get("PYTHONPATH")
     if IMPORT_ROOT not in (path or "").split(os.pathsep):
         os.environ["PYTHONPATH"] = IMPORT_ROOT + (os.pathsep + path if path else "")
+    launched = _launcher_conf()
+    explicit = {"spark.master": master, **extra} if master else extra
     cores = len(os.sched_getaffinity(0))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = local_slots(master, int(cpus) if cpus.isdigit() else cores)
-    builder = SparkSession.builder.appName(app).master(master)
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
+    master = master or launched.get("spark.master", f"local[{cpus}]")
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    builder = builder.config("spark.driver.memory", driver_memory(ram))
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in extra.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    defaults = {"spark.app.name": app, "spark.master": master, **DEFAULT_CONFS,
+                "spark.driver.memory": driver_memory(ram)}
+    if master.startswith("local"):
+        slots = local_slots(master, int(cpus) if cpus.isdigit() else cores)
+        defaults["spark.sql.shuffle.partitions"] = str(slots)
+    confs = {k: v for k, v in defaults.items() if k not in launched}
+    return SparkSession.builder.config(map={**confs, **explicit}).getOrCreate()

@@ -59,19 +59,3 @@ def synthetic_pages(spark: SparkSession, n: int, partitions: int | None = None) 
 def synthetic_golden(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     rng = spark.range(0, n, numPartitions=partitions) if partitions else spark.range(0, n)
     return rng.mapInPandas(_gen_cols(GOLDEN_COLS), GOLDEN_SCHEMA)
-
-
-def synthetic_real_pdfs(
-    spark: SparkSession, n: int, partitions: int | None = None
-) -> DataFrame:
-    """Executor-side generation of genuine %PDF payloads (seed-addressed
-    realpdf_gen writer) — the real-PDF decode bench input."""
-    from ..fixtures.realpdf_gen import gen_real_pdf
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [gen_real_pdf(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame({c: [r[c] for r in recs] for c in INPUT_COLS})
-
-    rng = spark.range(0, n, numPartitions=partitions) if partitions else spark.range(0, n)
-    return rng.mapInPandas(gen, PAGES_SCHEMA)

@@ -14,15 +14,15 @@ closes the semantic gap with a from-scratch mini commit protocol:
       commits/v00000001                 version marker: a committed snapshot id
 
 - ``commit_snapshot`` stages data + manifest first; the commit's
-  linearization point is an O_EXCL-created version marker
+  linearization point is an exclusively created version marker
   (``commits/v<N+1>``, Iceberg's ``vN.metadata.json`` analog): exactly one
   writer per version can win, so two concurrent appenders can never both
   commit against the same parent — the loser gets CommitConflictError and
   its staged snapshot stays invisible. The committed snapshot is the one
-  the highest readable marker names; a writer that crashes between the
-  marker's create and its write leaves an empty marker that readers walk
-  past, and a crashed writer before the claim leaves only a dangling snap
-  dir no reader ever sees (snapshot isolation).
+  the highest readable marker names. A marker is hard-linked from a temp
+  file that already holds its snapshot id, so it is never seen empty; a
+  crashed writer before the claim leaves only a dangling snap dir no
+  reader ever sees (snapshot isolation).
 - ``append`` manifests carry the parent's file set plus the new files;
   ``overwrite`` starts a fresh set — so every manifest is self-contained
   and a read needs exactly one manifest (like Iceberg's manifest lists).
@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 
 import pyarrow.parquet as pq
@@ -89,24 +90,28 @@ def _marker_snapshot(table_dir: str, version: int) -> int | None:
 
 
 def _claim_version(table_dir: str, version: int, snapshot_id: int) -> None:
-    """The commit's linearization point: O_EXCL create of the version
-    marker — exactly one writer can own each version."""
+    """The commit's linearization point: exactly one writer can own each
+    version, and the marker appears with its snapshot id already in it.
+    The id goes to a temp file that _latest_version ignores, which is
+    then hard-linked to the marker name (FileExistsError: taken)."""
     d = os.path.join(table_dir, COMMITS_DIR)
     os.makedirs(d, exist_ok=True)
-    fd = os.open(os.path.join(d, f"v{version:08d}"),
-                 os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    fd, tmp = tempfile.mkstemp(prefix=".claim-", dir=d)
     try:
-        os.write(fd, str(snapshot_id).encode("ascii"))
+        with os.fdopen(fd, "w", encoding="ascii") as fh:
+            fh.write(str(snapshot_id))
+        os.link(tmp, os.path.join(d, f"v{version:08d}"))
     finally:
-        os.close(fd)
+        os.unlink(tmp)
 
 
 def current_snapshot_id(table_dir: str) -> int | None:
     """The committed snapshot id, or None for an empty/uncreated table:
     the snapshot the highest readable commit marker names. A marker that
-    is empty or unparsable (its writer crashed between the O_EXCL create
-    and the write) is walked past, so the table reads the commit before
-    it. Dangling snap dirs without a marker are invisible by design."""
+    is empty or unparsable (a table committed before markers were linked
+    whole can hold one from a crashed writer) is walked past, so the table
+    reads the commit before it. Dangling snap dirs without a marker are
+    invisible by design."""
     for version in range(_latest_version(table_dir), 0, -1):
         snap = _marker_snapshot(table_dir, version)
         if snap is not None:
@@ -262,7 +267,7 @@ def commit_snapshot(
         json.dump(manifest, fh, sort_keys=True)
 
     # Optimistic-concurrency commit (Iceberg CommitFailedException analog),
-    # NO check-then-replace window: the O_EXCL marker create below is the
+    # NO check-then-replace window: the exclusive marker link below is the
     # single linearization point. Any writer that committed since we read
     # `parent` owns version parent_version+1, so our claim fails and the
     # staged snapshot is abandoned (invisible); an append manifest built

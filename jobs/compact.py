@@ -56,15 +56,13 @@ def main() -> int:
     ap.add_argument("--order-by", default=None, metavar="COL",
                     help="range-order output files by this column "
                          "(better compression + min/max pruning stats)")
-    ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 
     t0 = time.time()
     files_in, bytes_in = _walk_parquet(args.input)
     n_out = max(1, -(-bytes_in // (args.target_mb * 1024 * 1024)))
 
-    spark = get_spark("idp-compact", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-compact")
     df = spark.read.parquet(args.input)
     rows_in = df.count()
 

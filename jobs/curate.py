@@ -151,7 +151,6 @@ def main() -> int:
     ap.add_argument("--span-dedup", type=int, default=0, metavar="K",
                     help="remove duplicated >=K-token spans from the "
                          "curated corpus (0 = off)")
-    ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--checkpoint-dir", default=None, metavar="DIR_OR_URI",
                     help="reliable checkpoint dir (HDFS/S3/local) for the "
                          "iterative near-dup stages; default keeps the "
@@ -161,8 +160,7 @@ def main() -> int:
     args = ap.parse_args()
 
     t0 = time.time()
-    spark = get_spark("idp-curate", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-curate")
     raw = spark.read.parquet(args.input)
     docs = raw.select("doc_id", "text")
     if args.fix_mojibake:

@@ -36,7 +36,6 @@ def main() -> int:
     ap.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--threshold", type=float, default=0.8)
-    ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--checkpoint-dir", default=None, metavar="DIR_OR_URI",
                     help="reliable checkpoint dir (HDFS/S3/local) for the "
                          "iterative stages; default localCheckpoint")
@@ -47,8 +46,7 @@ def main() -> int:
     args = ap.parse_args()
 
     t0 = time.time()
-    spark = get_spark("idp-dedup", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-dedup")
     docs = spark.read.parquet(args.input).select("doc_id", "text")
     pairs = minhash_lsh_pairs(docs, threshold=args.threshold,
                               checkpoint_dir=args.checkpoint_dir)

@@ -14,9 +14,8 @@ With --salt-partitions P the pages are first salted by url hash into P
 partitions; without it this path reads the input's own partitioning.
 
 --snapshots always salts, and --synthetic-rows generates its pages in P
-partitions; for both, P defaults to spark.sql.shuffle.partitions, which
-get_spark sizes to the local cores. On a cluster pass --salt-partitions:
-get_spark's own shuffle-partition value overrides a spark-submit --conf.
+partitions; for both, P defaults to spark.sql.shuffle.partitions: a
+spark-submit --conf value, or else the local task slots.
 
 With --snapshots the output lands as an atomic snapshot commit
 (sources/snapshots.py) under {output}/table, and its per-file lineage,

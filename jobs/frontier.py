@@ -96,7 +96,6 @@ def main() -> int:
     ap.add_argument("--default-delay", type=int, default=1)
     ap.add_argument("--max-per-host", type=int, default=10000)
     ap.add_argument("--start-epoch", type=int, default=0)
-    ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
     if not args.sitemaps and not args.feeds:
         ap.error("need --sitemaps and/or --feeds")
@@ -106,8 +105,7 @@ def main() -> int:
         politeness_schedule,
     )
 
-    spark = get_spark("frontier", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores)
+    spark = get_spark("frontier")
     t0 = time.time()
     counts = {"sitemap_docs": 0, "feed_docs": 0}
 

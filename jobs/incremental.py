@@ -14,7 +14,7 @@ batch; only never-seen documents join the corpus):
 Usage:
   python jobs/incremental.py --batch new_docs.parquet \
       --corpus corpus.parquet --output /tmp/idp_incremental \
-      [--fpp 0.01] [--cores 8]
+      [--fpp 0.01]
 Prints one JSON line {"batch", "kept", "dropped", "sec", ...}.
 """
 
@@ -43,12 +43,10 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--fpp", type=float, default=0.01,
                     help="Bloom false-positive rate (size/recheck tradeoff)")
-    ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 
     t0 = time.time()
-    spark = get_spark("idp-incremental", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-incremental")
     batch = spark.read.parquet(args.batch)
     corpus = spark.read.parquet(args.corpus)
     n_batch = batch.count()

@@ -34,7 +34,6 @@ def main() -> int:
                     help="documents parquet (doc_id, text[, source])")
     ap.add_argument("--output", required=True,
                     help="tier-partitioned parquet root (tier_label=*/)")
-    ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--mix-budget", type=int, default=None, metavar="TOKENS",
                     help="also derive alpha=0.5 temperature mix rates "
                          "across tiers for this token budget")
@@ -48,8 +47,7 @@ def main() -> int:
     )
 
     t0 = time.time()
-    spark = get_spark("idp-tier", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-tier")
     docs = spark.read.parquet(args.input)
     write_tiered(docs, args.output)
 

@@ -57,12 +57,10 @@ def main() -> int:
     ap.add_argument("--max-words", type=int, default=50_000)
     ap.add_argument("--seq-len", type=int, default=2048)
     ap.add_argument("--buckets", type=int, default=1024)
-    ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 
     t0 = time.time()
-    spark = get_spark("idp-tokenize", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores * 2)
+    spark = get_spark("idp-tokenize")
     docs = spark.read.parquet(args.input).select("doc_id", "text")
 
     merges = bpe_train(docs, n_merges=args.merges,

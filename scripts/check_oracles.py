@@ -62,7 +62,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from intelligent_document_processing_on_aws_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(args.sf_dir, f"{t}.parquet")

@@ -26,7 +26,7 @@ mapInPandas), so the generator itself exercises the engine's scale path.
 
 Usage:
   python scripts/gen_stress_corpus.py --n 1000000 \
-      --output /tmp/stress_docs.parquet [--cores 32]
+      --output /tmp/stress_docs.parquet
 """
 
 from __future__ import annotations
@@ -176,14 +176,12 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=1_000_000)
     ap.add_argument("--template-cluster", type=int, default=800)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
 
     from intelligent_document_processing_on_aws_spark.session import get_spark
 
     t0 = time.time()
-    spark = get_spark("stress-gen", master=f"local[{args.cores}]",
-                      shuffle_partitions=args.cores)
+    spark = get_spark("stress-gen")
     build(spark, args.n, args.template_cluster, args.output)
     n = spark.read.parquet(args.output).count()
     print({"docs": n, "sec": round(time.time() - t0, 2),

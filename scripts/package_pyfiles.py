@@ -1,8 +1,8 @@
 """Build the --py-files archive for spark-submit deployment.
 
 Zips the `intelligent_document_processing_on_aws_spark` package (source
-only, deterministic entry order, pinned timestamps — byte-stable output
-for artifact caching) so cluster executors import it from the archive:
+only, byte-stable output for artifact caching; see the package's
+`pyfiles.build`) so cluster executors import it from the archive:
 
     python scripts/package_pyfiles.py [dist/idp_spark.zip]
     spark-submit --py-files dist/idp_spark.zip jobs/extract.py ...
@@ -16,32 +16,11 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PKG = "intelligent_document_processing_on_aws_spark"
+sys.path.insert(0, REPO)
 
-
-def build(out_path: str) -> str:
-    os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
-    entries: list[tuple[str, str]] = []
-    pkg_root = os.path.join(REPO, PKG)
-    for dirpath, dirnames, filenames in os.walk(pkg_root):
-        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
-        for fn in sorted(filenames):
-            if not fn.endswith(".py"):
-                continue
-            full = os.path.join(dirpath, fn)
-            entries.append((full, os.path.relpath(full, REPO)))
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for full, arc in entries:
-            with open(full, "rb") as f:
-                data = f.read()
-            info = zipfile.ZipInfo(arc, date_time=(2020, 1, 1, 0, 0, 0))
-            info.external_attr = 0o644 << 16
-            zf.writestr(info, data)
-    return out_path
-
+from intelligent_document_processing_on_aws_spark.pyfiles import build  # noqa: E402
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(

@@ -21,7 +21,6 @@ def spark():
     s = get_spark(
         "idp-spark-tests",
         master="local[4]",
-        shuffle_partitions=4,
         **{
             "spark.sql.warehouse.dir": f"{scratch}/warehouse",
             "spark.driver.extraJavaOptions": f"-Dderby.system.home={scratch}/derby",

@@ -33,8 +33,7 @@ def test_compact_job_merges_files_content_identical(spark, tmp_path):
         out = str(tmp_path / f"compacted_{name}")
         proc = subprocess.run(
             [sys.executable, os.path.join(REPO, "jobs", "compact.py"),
-             "--input", src, "--output", out, "--target-mb", "1",
-             "--cores", "4", *extra],
+             "--input", src, "--output", out, "--target-mb", "1", *extra],
             capture_output=True, text=True, timeout=300, cwd=REPO,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]

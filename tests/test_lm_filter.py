@@ -226,7 +226,7 @@ def test_curate_job_ppl_keep_flag(tmp_path):
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "curate.py"),
          "--input", "/root/testdata/sf0.01/documents.parquet",
-         "--output", out, "--ppl-keep", "head,middle", "--cores", "4"],
+         "--output", out, "--ppl-keep", "head,middle"],
         capture_output=True, text=True, timeout=300, cwd=repo,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

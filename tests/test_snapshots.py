@@ -77,7 +77,7 @@ def test_crashed_commit_is_invisible(spark, tmp_path):
 
 
 def test_concurrent_appenders_cannot_both_win(spark, tmp_path):
-    """Two appenders racing from the same parent: the O_EXCL version
+    """Two appenders racing from the same parent: the exclusive version
     marker lets exactly one publish; the loser raises and its rows never
     appear — no silent lost update. Simulated by claiming the next
     version (what the racing winner does) before the commit's flip."""
@@ -114,10 +114,10 @@ def test_concurrent_appenders_cannot_both_win(spark, tmp_path):
 
 
 def test_crashed_winner_is_repaired_by_next_reader(spark, tmp_path, monkeypatch):
-    """A writer that crashes between the O_EXCL create of its version
-    marker and the write of its snapshot id leaves an empty marker: the
-    next reader walks past it to the previous commit, and the next
-    commit claims the version after it."""
+    """A table committed before markers were linked whole can hold an
+    empty marker, left by a writer that crashed between creating it and
+    writing its snapshot id: the next reader walks past it to the
+    previous commit, and the next commit claims the version after it."""
     import pytest
 
     import intelligent_document_processing_on_aws_spark.sources.snapshots as snaps
@@ -144,6 +144,58 @@ def test_crashed_winner_is_repaired_by_next_reader(spark, tmp_path, monkeypatch)
     assert s4 == 4 and current_snapshot_id(tbl) == s4
     assert _vals(read_table(spark, tbl)) == [1, 2, 3]
     assert [h["snapshot_id"] for h in snapshot_history(tbl)] == [1, 2, 4]
+
+
+def test_stalled_claim_cannot_lose_its_commit(spark, tmp_path, monkeypatch):
+    """Writer 1 stalls inside its version claim once the marker exists;
+    writer 2 commits meanwhile. Whatever each writer returns, the rows of
+    every commit that returned a snapshot id are in the table."""
+    import threading
+
+    import intelligent_document_processing_on_aws_spark.sources.snapshots as snaps
+
+    tbl = str(tmp_path / "tbl")
+    commit_snapshot(_df(spark, [1]), tbl, "append")
+    marker = os.path.join(tbl, snaps.COMMITS_DIR, f"v{2:08d}")
+    claimed, release = threading.Event(), threading.Event()
+    stalled = threading.current_thread().name + "-writer-1"
+
+    class StallingOs:
+        """The module's os, except that writer 1 waits for the release
+        after the first call that leaves the version-2 marker on disk."""
+
+        def __getattr__(self, name):
+            real = getattr(os, name)
+            if not callable(real):
+                return real
+
+            def call(*args, **kwargs):
+                out = real(*args, **kwargs)
+                if (threading.current_thread().name == stalled
+                        and not claimed.is_set() and os.path.exists(marker)):
+                    claimed.set()
+                    assert release.wait(120)
+                return out
+            return call
+
+    monkeypatch.setattr(snaps, "os", StallingOs())
+    committed: dict[int, list[int]] = {}
+
+    def writer_1():
+        committed[commit_snapshot(_df(spark, [2]), tbl, "append")] = [2]
+
+    t1 = threading.Thread(target=writer_1, name=stalled)
+    t1.start()
+    try:
+        assert claimed.wait(120)
+        committed[commit_snapshot(_df(spark, [3]), tbl, "append")] = [3]
+    finally:
+        release.set()
+        t1.join(120)
+    monkeypatch.undo()
+    assert len(committed) == 2
+    rows = _vals(read_table(spark, tbl))
+    assert rows == sorted([1, *(v for vs in committed.values() for v in vs)])
 
 
 def test_rollback_then_commit_does_not_clobber(spark, tmp_path):

@@ -15,6 +15,7 @@ import os
 import shutil
 import subprocess
 import sys
+import textwrap
 
 import duckdb
 import pyarrow.parquet as pq
@@ -26,6 +27,55 @@ def _spark_submit() -> str:
     import pyspark
 
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+
+
+# the settings a session took, read back from the session itself
+_PRECEDENCE_PROBE = textwrap.dedent("""
+    import json
+
+    from intelligent_document_processing_on_aws_spark.session import get_spark
+
+    spark = get_spark("precedence-probe")
+    print(json.dumps([spark.sparkContext.master,
+                      spark.conf.get("spark.sql.shuffle.partitions"),
+                      spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")]))
+    spark.stop()
+""")
+
+
+def _probe_settings(cmd: list[str], env: dict, cwd: str) -> list[str]:
+    proc = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
+                          env=env, cwd=cwd)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_launcher_settings_win_over_session_defaults(tmp_path):
+    """spark-submit's --master and --conf reach the session; without a
+    launcher the session takes the engine's defaults, sized by
+    SPARK_GRAFT_CPUS."""
+    sys.path.insert(0, REPO)
+    from scripts.package_pyfiles import build
+
+    zip_path = build(str(tmp_path / "idp_spark.zip"))
+    probe = tmp_path / "probe.py"
+    probe.write_text(_PRECEDENCE_PROBE)
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    env.pop("PYTHONPATH", None)
+
+    submitted = _probe_settings(
+        [_spark_submit(), "--master", "local[2]",
+         "--conf", "spark.sql.shuffle.partitions=7",
+         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=100",
+         "--py-files", zip_path, str(probe)],
+        env, str(tmp_path))
+    assert submitted == ["local[2]", "7", "100"]
+
+    plain = _probe_settings(
+        [sys.executable, str(probe)],
+        dict(env, PYTHONPATH=zip_path, SPARK_GRAFT_CPUS="3"), str(tmp_path))
+    assert plain == ["local[3]", "3", "2048"]
 
 
 def test_spark_submit_pyfiles_roundtrip(tmp_path):

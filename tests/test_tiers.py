@@ -248,7 +248,7 @@ def test_tier_job_cli(tmp_path):
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "tier.py"),
          "--input", "/root/testdata/sf0.01/documents.parquet",
-         "--output", out, "--mix-budget", "8000", "--cores", "4"],
+         "--output", out, "--mix-budget", "8000"],
         capture_output=True, text=True, timeout=300, cwd=repo,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

@@ -160,7 +160,7 @@ def test_curate_job_c4_and_pii_flags(tmp_path):
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "curate.py"),
          "--input", src, "--output", out, "--c4-clean", "--redact-pii",
-         "--min-tokens", "5", "--min-quality", "0.0", "--cores", "4"],
+         "--min-tokens", "5", "--min-quality", "0.0"],
         capture_output=True, text=True, timeout=300, cwd=repo,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -279,7 +279,7 @@ def test_curate_job_strip_templates_flag(tmp_path):
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "curate.py"),
          "--input", src, "--output", out, "--strip-templates",
-         "--min-tokens", "5", "--min-quality", "0.0", "--cores", "4"],
+         "--min-tokens", "5", "--min-quality", "0.0"],
         capture_output=True, text=True, timeout=300, cwd=repo,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
