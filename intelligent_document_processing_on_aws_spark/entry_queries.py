@@ -6795,8 +6795,7 @@ def q_corpus_curated_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel (gates -> exact dedup -> near-dup canonical) composed with
     the r5 tail — GPT-3 13-gram decontamination against eval slices,
     then the deterministic alpha=0.5 temperature sample down to a token
-    budget, stratified by detected language. Mirrors jobs/curate.py
-    --decontaminate --sample-budget end to end."""
+    budget, stratified by detected language."""
     from .operators.contamination import _token_array, decontaminate
     from .operators.sampling import temperature_sample
 

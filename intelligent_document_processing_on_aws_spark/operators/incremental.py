@@ -127,8 +127,13 @@ def _sharded_bloom_candidates(
     through a cogrouped Arrow pass — each task sees ONE shard's batch
     rows plus that shard's single bitmap row. Trade vs the broadcast
     path (documented crossover): the corpus's 16-byte hash pairs are
-    shuffled once by shard key (the payload never moves), in exchange
-    for O(m / n_shards) peak memory anywhere."""
+    shuffled once by shard key (the payload never moves), and no task
+    holds more than one shard's m / n_shards-bit bitmap. The build's
+    peak memory has a second, larger term: groupBy(__shard).applyInPandas
+    hands each build task ONE shard's hash pairs as one pandas frame,
+    about n_corpus / n_shards rows of 24 bytes (shard key + two hashes)
+    — ~1.1e8 rows, ~2.6 GB, per task at 10^10 corpus docs with the
+    default shard_bits. A smaller shard_bits (more shards) lowers both."""
     n_shards = max(1, -(-m // shard_bits))
     m_s = ((min(shard_bits, m) + 63) // 64) * 64
     words = m_s // 64

@@ -1,8 +1,9 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Tuned for the extraction workload: Arrow-batched Python stages, AQE with
-skew-join handling (giant-host URL skew per SURVEY.md §4), and shuffle
-partitioning sized to the local task slots.
+Tuned for the extraction workload: Arrow-batched Python stages, bounded
+Arrow batches, and shuffle partitioning sized to the local task slots.
+AQE with skew-join handling (giant-host URL skew per SURVEY.md §4) and
+partition coalescing is Spark's own default, so it is not restated here.
 
 One precedence rule covers every setting get_spark makes:
 1. the caller's explicit master= and **extra;
@@ -12,7 +13,10 @@ One precedence rule covers every setting get_spark makes:
    process may use (SPARK_GRAFT_CPUS overrides), shuffle partitions equal
    to the slots (set only for a local master), a driver heap of 60 % of
    physical RAM, at most 24g, since local-mode Python workers share that
-   RAM, the C1 JIT options below, and DEFAULT_CONFS.
+   RAM, the C1 JIT options below, and DEFAULT_CONFS. The heap and the JIT
+   options only take effect when the driver JVM starts, so get_spark sets
+   them only when it starts the JVM itself: under a launcher they would
+   report a heap and options the running JVM does not have.
 
 JIT policy: a driver JVM that get_spark launches compiles with C1 only
 (-XX:TieredStopAtLevel=1 in spark.driver.defaultJavaOptions), with the
@@ -37,20 +41,12 @@ from pyspark.sql import SparkSession
 IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_CONFS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # keep Arrow batches bounded so wide html blobs don't blow executor mem
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-    "spark.sql.files.maxPartitionBytes": "134217728",
+    # the engine's default is the host's zone
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    # C1-only JIT (module docstring); a user's extraJavaOptions follow on
-    # the command line, and HotSpot keeps a flag's last value. C1-only
-    # mode would shrink the code cache to 48m, which a JVM that reruns a
-    # job fills, then evicts and recompiles: keep the tiered 240m
-    "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
     # the ContextCleaner only drops unreferenced checkpoint/shuffle/
     # broadcast blocks after a JVM GC notices the references are gone;
     # with a large heap organic GCs are rare and the default periodic GC
@@ -60,6 +56,12 @@ DEFAULT_CONFS = {
     # long-lived driver, not a local[32] tune).
     "spark.cleaner.periodicGC.interval": "60s",
 }
+
+# C1-only JIT (module docstring); a user's extraJavaOptions follow on the
+# command line, and HotSpot keeps a flag's last value. C1-only mode would
+# shrink the code cache to 48m, which a JVM that reruns a job fills, then
+# evicts and recompiles: keep the tiered 240m
+JIT_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
 # the driver heap's ceiling, whatever the box
 MAX_DRIVER_MEMORY_MB = 24 * 1024
@@ -118,9 +120,12 @@ def get_spark(app: str = "idp-spark", master: str | None = None,
     cores = len(os.sched_getaffinity(0))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(cores))
     master = master or launched.get("spark.master", f"local[{cpus}]")
-    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    defaults = {"spark.app.name": app, "spark.master": master, **DEFAULT_CONFS,
-                "spark.driver.memory": driver_memory(ram)}
+    defaults = {"spark.app.name": app, "spark.master": master, **DEFAULT_CONFS}
+    if not launched:
+        # JVM-launch settings: a launcher's driver JVM is already running
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        defaults["spark.driver.memory"] = driver_memory(ram)
+        defaults["spark.driver.defaultJavaOptions"] = JIT_OPTIONS
     if master.startswith("local"):
         slots = local_slots(master, int(cpus) if cpus.isdigit() else cores)
         defaults["spark.sql.shuffle.partitions"] = str(slots)

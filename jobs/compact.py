@@ -9,7 +9,7 @@ expressed as plain Spark.
 
 Usage:
   python jobs/compact.py --input /warehouse/table --output /warehouse/table_c \
-      [--target-mb 512] [--partition-by tier_label] [--order-by doc_id]
+      [--target-mb 512] [--order-by doc_id]
 
 Shape: one scan + one Exchange (round-robin when unordered, range when
 --order-by is given — range-ordered files compress better and carry
@@ -51,8 +51,6 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--target-mb", type=int, default=512,
                     help="target output file size (of INPUT bytes)")
-    ap.add_argument("--partition-by", default=None, metavar="COL",
-                    help="keep/introduce Hive partitioning by this column")
     ap.add_argument("--order-by", default=None, metavar="COL",
                     help="range-order output files by this column "
                          "(better compression + min/max pruning stats)")
@@ -70,10 +68,7 @@ def main() -> int:
         out = df.repartitionByRange(n_out, args.order_by)
     else:
         out = df.repartition(n_out)
-    writer = out.write.mode("overwrite")
-    if args.partition_by:
-        writer = writer.partitionBy(args.partition_by)
-    writer.parquet(args.output)
+    out.write.mode("overwrite").parquet(args.output)
 
     rows_out = spark.read.parquet(args.output).count()
     if rows_out != rows_in:

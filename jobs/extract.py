@@ -4,7 +4,7 @@ Usage (local or cluster):
   spark-submit --py-files idp_spark.zip jobs/extract.py \
       --input fixtures_data/t2_pages.parquet \
       --output /tmp/extracted \
-      [--salt-partitions 64] [--synthetic-rows N] [--snapshots]
+      [--salt-partitions 64] [--snapshots]
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the vectorized
 extraction stage in one Python pass, writes the result table partitioned
@@ -13,9 +13,9 @@ jvm_jit_s: the seconds the driver JVM's JIT compilers spent in the job).
 With --salt-partitions P the pages are first salted by url hash into P
 partitions; without it this path reads the input's own partitioning.
 
---snapshots always salts, and --synthetic-rows generates its pages in P
-partitions; for both, P defaults to spark.sql.shuffle.partitions: a
-spark-submit --conf value, or else the local task slots.
+--snapshots always salts, and P then defaults to
+spark.sql.shuffle.partitions: a spark-submit --conf value, or else the
+local task slots.
 
 With --snapshots the output lands as an atomic snapshot commit
 (sources/snapshots.py) under {output}/table, and its per-file lineage,
@@ -41,14 +41,12 @@ from intelligent_document_processing_on_aws_spark.session import get_spark, jit_
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", help="pages parquet path (omit with --synthetic-rows)")
+    ap.add_argument("--input", help="pages parquet path (or --manifest)")
     ap.add_argument("--manifest",
                     help="CSV/JSON manifest of input parquet paths "
                          "(CLI ManifestParser semantics)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--salt-partitions", type=int, default=None)
-    ap.add_argument("--synthetic-rows", type=int, default=None,
-                    help="generate N synthetic pages on executors instead of reading --input")
     ap.add_argument("--master", default=None)
     ap.add_argument("--snapshots", action="store_true",
                     help="snapshot-committed output + lineage with resume")
@@ -56,13 +54,7 @@ def main() -> int:
 
     spark = get_spark("idp-extract", master=args.master)
     t0, jit0 = time.time(), jit_seconds(spark)
-    # P of the --snapshots salt and of the --synthetic-rows generator
-    salt = args.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if args.synthetic_rows:
-        from intelligent_document_processing_on_aws_spark.sources.pages_source import synthetic_pages
-
-        pages = synthetic_pages(spark, args.synthetic_rows, partitions=salt)
-    elif args.manifest:
+    if args.manifest:
         from intelligent_document_processing_on_aws_spark.plans.manifest import (
             parse_manifest,
         )
@@ -74,7 +66,7 @@ def main() -> int:
         pages = spark.read.parquet(*[d["path"] for d in specs])
     else:
         if not args.input:
-            ap.error("--input or --manifest required unless --synthetic-rows given")
+            ap.error("--input or --manifest required")
         pages = spark.read.parquet(args.input)
     if args.snapshots:
         from intelligent_document_processing_on_aws_spark.plans.lineage import (
@@ -84,6 +76,7 @@ def main() -> int:
             total_records,
         )
 
+        salt = args.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         stats = run_with_resume_snapshots(
             spark, pages,
             os.path.join(args.output, "table"),

@@ -32,6 +32,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages  # noqa: E402
 from intelligent_document_processing_on_aws_spark.session import get_spark  # noqa: E402
 from intelligent_document_processing_on_aws_spark.sources.warc import read_warc, warc_pages  # noqa: E402
@@ -45,48 +47,13 @@ def main() -> int:
     ap.add_argument("--raw", action="store_true",
                     help="write the parsed record table (with error rows) "
                          "instead of running extraction")
-    ap.add_argument("--cdx-out", default=None, metavar="DIR",
-                    help="also build the CDX capture index (one scan, "
-                         "cc-index columns incl. ranged-fetch spans) and "
-                         "write it as parquet here")
-    ap.add_argument("--wet-out", default=None, metavar="DIR",
-                    help="also write the extracted text as WET files "
-                         "(WARC conversion records, per-record gzip "
-                         "members, byte-deterministic)")
-    ap.add_argument("--wat-out", default=None, metavar="DIR",
-                    help="also write link/title metadata as WAT files "
-                         "(WARC metadata records with canonical-JSON "
-                         "envelopes, byte-deterministic)")
-    ap.add_argument("--from-cdx", default=None, metavar="INDEX_PARQUET",
-                    help="skip the archive scan: select status-200 "
-                         "captures from this CDX index and ranged-fetch "
-                         "ONLY their (offset, length) spans")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     spark = get_spark("idp-ingest-warc", master=args.master)
     t0 = time.time()
-
-    from pyspark.sql import functions as F
-
-    if args.cdx_out:
-        from intelligent_document_processing_on_aws_spark.sources.warc import build_cdx
-
-        idx = build_cdx(spark, args.input)
-        idx.write.mode("overwrite").parquet(args.cdx_out)
-        n_idx = spark.read.parquet(args.cdx_out).count()
-        print(json.dumps({"cdx_rows": n_idx, "cdx_out": args.cdx_out}))
-
-    if args.from_cdx:
-        from intelligent_document_processing_on_aws_spark.operators.cdx import cdx_select
-        from intelligent_document_processing_on_aws_spark.sources.warc import fetch_records
-
-        idx = spark.read.parquet(args.from_cdx).withColumn("valid", F.lit(True))
-        records = fetch_records(cdx_select(idx, statuses=("200",), mimes=None))
-    else:
-        records = read_warc(spark, args.input)
     if args.raw:
-        records.write.mode("overwrite").parquet(args.output)
+        read_warc(spark, args.input).write.mode("overwrite").parquet(args.output)
         out = spark.read.parquet(args.output)
         stats = out.agg(
             F.count("*").alias("records"),
@@ -102,47 +69,17 @@ def main() -> int:
         }))
         return 0
 
-    if args.from_cdx:
-        pages = (
-            records.where(F.col("error").isNull() & (F.col("status") == 200))
-            .select(
-                F.col("url"),
-                F.to_timestamp("warc_date").alias("warc_ts"),
-                F.encode("text", "utf-8").alias("html"),
-                F.col("text"),
-                F.lit(None).cast("string").alias("lang"),
-            )
-        )
-    else:
-        pages = warc_pages(spark, args.input)
+    pages = warc_pages(spark, args.input)
     result = extract_pages(pages, salt_partitions=args.salt_partitions)
     result.write.mode("overwrite").partitionBy("content_type") \
         .parquet(args.output)
     out = spark.read.parquet(args.output)
     rows = out.count()
-    wet_records = None
-    if args.wet_out:
-        from intelligent_document_processing_on_aws_spark.sources.warc import write_wet
-
-        wet_records = write_wet(
-            out.select("url", F.col("extracted_text").alias("text")),
-            args.wet_out,
-        )
-    wat_records = None
-    if args.wat_out:
-        from intelligent_document_processing_on_aws_spark.sources.warc import write_wat
-
-        wat_records = write_wat(pages, args.wat_out, date_col="warc_ts")
     sec = round(time.time() - t0, 2)
-    summary = {
+    print(json.dumps({
         "rows": rows, "sec": sec,
         "docs_per_sec": round(rows / sec, 1) if sec else None,
-    }
-    if wet_records is not None:
-        summary["wet_records"] = wet_records
-    if wat_records is not None:
-        summary["wat_records"] = wat_records
-    print(json.dumps(summary))
+    }))
     return 0
 
 

@@ -20,6 +20,8 @@ import textwrap
 import duckdb
 import pyarrow.parquet as pq
 
+from intelligent_document_processing_on_aws_spark.session import driver_memory
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -29,16 +31,21 @@ def _spark_submit() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-# the settings a session took, read back from the session itself
+# the settings a session took, read back from the session itself, and the
+# heap the driver JVM really has (MB)
 _PRECEDENCE_PROBE = textwrap.dedent("""
     import json
 
     from intelligent_document_processing_on_aws_spark.session import get_spark
 
     spark = get_spark("precedence-probe")
+    runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
     print(json.dumps([spark.sparkContext.master,
                       spark.conf.get("spark.sql.shuffle.partitions"),
-                      spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")]))
+                      spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
+                      spark.conf.get("spark.driver.memory", None),
+                      runtime.maxMemory() >> 20,
+                      spark.conf.get("spark.sql.adaptive.skewJoin.enabled")]))
     spark.stop()
 """)
 
@@ -51,9 +58,10 @@ def _probe_settings(cmd: list[str], env: dict, cwd: str) -> list[str]:
 
 
 def test_launcher_settings_win_over_session_defaults(tmp_path):
-    """spark-submit's --master and --conf reach the session; without a
+    """spark-submit's --master and --conf reach the session, and the session
+    claims no heap beyond the one the launcher's JVM runs with; without a
     launcher the session takes the engine's defaults, sized by
-    SPARK_GRAFT_CPUS."""
+    SPARK_GRAFT_CPUS and the box's RAM."""
     sys.path.insert(0, REPO)
     from scripts.package_pyfiles import build
 
@@ -70,12 +78,19 @@ def test_launcher_settings_win_over_session_defaults(tmp_path):
          "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=100",
          "--py-files", zip_path, str(probe)],
         env, str(tmp_path))
-    assert submitted == ["local[2]", "7", "100"]
+    assert submitted[:4] == ["local[2]", "7", "100", None]
+    # the launcher's default heap is 1g
+    assert submitted[4] <= 1024
 
     plain = _probe_settings(
         [sys.executable, str(probe)],
         dict(env, PYTHONPATH=zip_path, SPARK_GRAFT_CPUS="3"), str(tmp_path))
-    assert plain == ["local[3]", "3", "2048"]
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = driver_memory(ram)
+    assert plain[:4] == ["local[3]", "3", "2048", heap]
+    assert plain[4] > int(heap[:-1]) * 0.9
+    # AQE skew-join handling is the engine's own default
+    assert plain[5] == "true"
 
 
 def test_spark_submit_pyfiles_roundtrip(tmp_path):

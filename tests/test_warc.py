@@ -213,6 +213,74 @@ def test_warc_pages_feed_extraction_golden(spark):
             assert r.lang is None
 
 
+def _run_ingest_job(spark, argv: list[str]) -> dict:
+    """jobs/ingest_warc.py's main in-process on the session fixture (its
+    spark.stop patched out); returns the job's JSON summary."""
+    import contextlib
+    import importlib.util
+    import io
+    import json
+    import os
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "ingest_warc_job", os.path.join(repo, "jobs", "ingest_warc.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    saved_argv, out = sys.argv, io.StringIO()
+    sys.argv = [job.__file__, "--input", os.path.join(repo, "fixtures_data", "warc"),
+                *argv]
+    spark.stop = lambda: None
+    try:
+        with contextlib.redirect_stdout(out):
+            assert job.main() == 0
+    finally:
+        del spark.stop
+        sys.argv = saved_argv
+    return json.loads(out.getvalue().strip().splitlines()[-1])
+
+
+def test_ingest_warc_job_extracts_every_page(spark, tmp_path):
+    """The job end to end: one extracted row per 200 response of the four
+    fixture files (warc_pages' rows), none of them an error row."""
+    import pyarrow.dataset as ds
+
+    out = str(tmp_path / "ingested")
+    summary = _run_ingest_job(spark, ["--output", out, "--salt-partitions", "4"])
+    pages = sum(r["error"] is None and r["status"] == 200
+                for k in range(4) for r in golden_rows(k))
+    assert summary["rows"] == pages > 0
+    errors = ds.dataset(out, partitioning="hive").to_table(columns=["error"])
+    assert errors.num_rows == pages and errors["error"].null_count == pages
+
+
+def test_ingest_warc_job_raw_audits_every_record(spark, tmp_path):
+    """--raw writes the record table: every response record of the four
+    fixture files, the corrupt ones as error rows, as the golden plans."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "records")
+    summary = _run_ingest_job(spark, ["--output", out, "--raw"])
+    gold = [r for k in range(4) for r in golden_rows(k)]
+    assert summary["files"] == 4
+    assert summary["records"] == summary["rows"] == len(gold)
+    assert summary["error_records"] == sum(r["error"] is not None for r in gold) > 0
+    cols = list(gold[0])
+    got = []
+    for r in pq.read_table(out).to_pylist():
+        r["text_sha1"] = None if r["text"] is None else \
+            hashlib.sha1(r["text"].encode()).hexdigest()
+        r["n_chars"] = None if r["text"] is None else len(r["text"])
+        got.append(r)
+    assert sorted((tuple(r[c] for c in cols) for r in got), key=repr) == \
+        sorted((tuple(r[c] for c in cols) for r in gold), key=repr)
+    assert {os.path.basename(r["warc_file"]) for r in got} == \
+        {f"cc-{k:05d}.warc.gz" for k in range(4)}
+
+
 # ---------------------------------------------------------------------------
 # CDX index generation + ranged fetch (build_cdx / fetch_records)
 # ---------------------------------------------------------------------------
