@@ -9,11 +9,12 @@ Spark engine over Common-Crawl-style web-page tables:
                   the byte-identity surface, unit-testable without Spark.
 - ``operators/``  DataFrame->DataFrame transforms (extraction stage,
                   classification + sectioning, attribute extraction,
-                  evaluation, dedup, similarity search, text stats).
+                  evaluation, assessment, summaries, metering, crawl
+                  and link graph; corpus dedup and filters that only
+                  their tests reach).
 - ``sources/``    warehouse read/write helpers (parquet locally; Iceberg
                   layout in production).
 - ``plans/``      end-to-end pipelines + lineage/resume.
-- ``streaming/``  Structured Streaming variants.
 - ``fixtures/``   deterministic synthetic `pages` corpus + golden outputs.
 
 All per-row logic runs in Arrow-batched pandas UDFs / mapInPandas — no

@@ -308,29 +308,6 @@ def build_warc(out_dir: str = FIXTURES_DIR) -> None:
           f"{len(rows)} rows")
 
 
-N_LANGID = 1200
-
-
-def build_langid(out_dir: str = FIXTURES_DIR, n: int = N_LANGID) -> None:
-    from .langid_gen import langid_rows
-
-    rows = langid_rows(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [r["doc_id"] for r in rows],
-            "text": [r["text"] for r in rows],
-            "lang": [r["lang"] for r in rows],
-        },
-        schema=pa.schema(
-            [("doc_id", pa.int64()), ("text", pa.string()),
-             ("lang", pa.string())]
-        ),
-    )
-    pq.write_table(table, os.path.join(out_dir, "langid_pages.parquet"),
-                   compression="zstd")
-    print(f"wrote langid_pages: {n} rows")
-
-
 N_CHARSET = 280
 
 
@@ -402,62 +379,6 @@ def build_html_meta_fixtures(out_dir: str = FIXTURES_DIR,
     pq.write_table(golden, os.path.join(out_dir, "html_meta_golden.parquet"),
                    compression="zstd")
     print(f"wrote html_meta_docs/html_meta_golden: {n} rows")
-
-
-N_SENTENCES = 320
-
-
-def build_sentence_fixtures(out_dir: str = FIXTURES_DIR,
-                            n: int = N_SENTENCES) -> None:
-    from .sentences_gen import gen_sentence_docs, pack_facts
-
-    docs = gen_sentence_docs(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [d["doc_id"] for d in docs],
-            "family": [d["family"] for d in docs],
-            "text": [d["text"] for d in docs],
-        },
-        schema=pa.schema([("doc_id", pa.int64()), ("family", pa.string()),
-                          ("text", pa.string())]),
-    )
-    pq.write_table(table, os.path.join(out_dir, "sentences_docs.parquet"),
-                   compression="zstd")
-
-    s_ids, s_sent, s_tok, s_txt = [], [], [], []
-    c_ids, c_cid, c_ns, c_nt, c_txt = [], [], [], [], []
-    for d in docs:
-        for j, s in enumerate(d["sentences"]):
-            s_ids.append(d["doc_id"])
-            s_sent.append(j)
-            s_tok.append(len(s.split()))
-            s_txt.append(s)
-        for ch in pack_facts(d["sentences"]):
-            c_ids.append(d["doc_id"])
-            c_cid.append(ch["chunk_id"])
-            c_ns.append(ch["n_sentences"])
-            c_nt.append(ch["n_tokens"])
-            c_txt.append(ch["text"])
-    golden = pa.Table.from_pydict(
-        {"doc_id": s_ids, "sent_id": s_sent, "n_tokens": s_tok,
-         "sentence": s_txt},
-        schema=pa.schema([("doc_id", pa.int64()), ("sent_id", pa.int64()),
-                          ("n_tokens", pa.int64()), ("sentence", pa.string())]),
-    )
-    pq.write_table(golden, os.path.join(out_dir, "sentences_golden.parquet"),
-                   compression="zstd")
-    chunks = pa.Table.from_pydict(
-        {"doc_id": c_ids, "chunk_id": c_cid, "n_sentences": c_ns,
-         "n_tokens": c_nt, "text": c_txt},
-        schema=pa.schema([("doc_id", pa.int64()), ("chunk_id", pa.int64()),
-                          ("n_sentences", pa.int64()), ("n_tokens", pa.int64()),
-                          ("text", pa.string())]),
-    )
-    pq.write_table(chunks,
-                   os.path.join(out_dir, "sentence_chunks_golden.parquet"),
-                   compression="zstd")
-    print(f"wrote sentences_docs/sentences_golden/sentence_chunks_golden: "
-          f"{n} docs, {len(s_ids)} sentences, {len(c_ids)} chunks")
 
 
 N_SITEMAPS = 320
@@ -604,10 +525,8 @@ def build(out_dir: str = FIXTURES_DIR) -> None:
     build_ocrblocks(out_dir)
     build_semantic(out_dir)
     build_warc(out_dir)
-    build_langid(out_dir)
     build_charset_fixtures(out_dir)
     build_html_meta_fixtures(out_dir)
-    build_sentence_fixtures(out_dir)
     build_sitemap_fixtures(out_dir)
     build_feed_fixtures(out_dir)
     build_pagedate_fixtures(out_dir)

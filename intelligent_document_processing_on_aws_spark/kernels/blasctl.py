@@ -1,19 +1,18 @@
 """Pin BLAS to one thread: Spark owns the parallelism, not OpenBLAS.
 
-Every numpy matmul in this engine is small (512x512 training batches,
-per-Arrow-batch centroid scoring) and runs either on the driver next to
-32 executor threads or inside one of 32 Python workers. OpenBLAS's
-default behavior — spin up a thread pool per process and busy-wait on
-it — makes those tiny GEMMs 20-100x SLOWER under that contention
-(measured: 200 reps of (512,512)@(512,2) at 2.7 s multi-threaded vs
-0.18 s pinned, and the ft-classifier training step at 5.8 s vs 0.12 s).
-One BLAS thread per task is the standard setting whenever a task
-scheduler (Spark, dask, ray) owns the cores.
+The numpy matmuls left in this engine are tiny: the JPEG codec's 8x8
+DCT/IDCT products (kernels/jpeg_codec.py), run inside the Python
+workers, one worker per Spark task slot. OpenBLAS's default behavior —
+spin up a thread pool per process and busy-wait on it — would give every
+worker a pool as wide as the box, on cores Spark has already handed
+out. Small GEMMs measured 20-100x SLOWER under that contention (200 reps
+of (512,512)@(512,2) at 2.7 s multi-threaded vs 0.18 s pinned). One BLAS
+thread per task is the standard setting whenever a task scheduler
+(Spark, dask, ray) owns the cores.
 
 Determinism note: OpenBLAS GEMM partitions OUTPUT tiles across threads,
-so each output element's accumulation order is thread-count-invariant —
-verified bit-identical quantized classifier weights with and without
-the pin (kernels/ft_linear.py); the pin is a pure speed knob.
+so each output element's accumulation order is thread-count-invariant;
+the pin is a pure speed knob.
 
 Two mechanisms, both needed:
 * ``OPENBLAS_NUM_THREADS`` env var — read by OpenBLAS at load time;

@@ -15,12 +15,10 @@ Ladder (first hit wins), each from a distinct surface:
 3. ``url`` — a ``/YYYY/MM/DD/`` or ``/YYYY-MM-DD`` path segment
    (the blog/news permalink convention); sanity-ranged 1995..2035.
 
-Outputs epoch seconds + which source won — the confidence tier a
-mixing policy weighs. All surfaces missing -> NULL.
+Outputs epoch seconds + which source won (how far the date can be
+trusted). All surfaces missing -> NULL.
 
-Reference scope: GenAIIDP has no crawl-side recency surface; pairs
-with the tier/temperature mixing operators (a date column is the
-recency axis of the mix).
+Reference scope: GenAIIDP has no crawl-side recency surface.
 """
 
 from __future__ import annotations

@@ -89,8 +89,7 @@ class BigramLM:
 
 
 def _tokens_col(text_col: str):
-    """Whitespace tokens, empties dropped — the frozen corpus token spec
-    (kernels/textstats.whitespace_tokens / doc_stats oracle)."""
+    """Whitespace tokens, empties dropped — the frozen corpus token spec."""
     return F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
     )
@@ -103,8 +102,7 @@ def train_bigram_lm(
     max_vocab: int | None = None,
 ) -> BigramLM:
     """Count tables via native explode + hash aggregation (partial
-    map-side combine), collected to the driver at VOCABULARY scale —
-    bounded like the IVF centroid sample (operators/similarity.py), not
+    map-side combine), collected to the driver at VOCABULARY scale, not
     corpus scale; the reference slice is the small, trusted corpus.
 
     Driver-memory guard rails (both default to no-ops so the committed

@@ -124,9 +124,7 @@ def read_warc(spark: SparkSession, path: str,
 def warc_pages(spark: SparkSession, path: str) -> DataFrame:
     """WARC responses -> the `pages(url, warc_ts, html, text, lang)`
     schema consumed by operators/extraction.extract_pages
-    (jobs/ingest_warc.py runs `warc_pages` -> extraction; a corpus then
-    goes on through webfilters/quality -> dedup, as jobs/curate.py does).
-    Charset is already normalized, so html is the utf-8 re-encoding of
+    (jobs/ingest_warc.py runs `warc_pages` -> extraction). Charset is already normalized, so html is the utf-8 re-encoding of
     the decoded text; non-200 and error records are dropped here (they
     remain auditable via read_warc itself)."""
     recs = read_warc(spark, path)

@@ -1,4 +1,4 @@
-"""Tests for benchmark decontamination and deterministic sampling."""
+"""Tests for deterministic sampling (operators/sampling.py)."""
 
 from __future__ import annotations
 
@@ -7,77 +7,12 @@ import struct
 
 from pyspark.sql import functions as F
 
-from intelligent_document_processing_on_aws_spark.operators.contamination import (
-    contamination_report,
-    decontaminate,
-)
 from intelligent_document_processing_on_aws_spark.operators.sampling import (
     PPM,
     hash_sample,
     temperature_mix_rates,
     temperature_sample,
 )
-
-GRAM = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima mike"  # noqa: E501  13 tokens
-
-
-def _corpus(spark):
-    rows = [
-        # contaminated: contains the eval 13-gram verbatim
-        (1, f"intro words {GRAM} trailing words"),
-        # clean: 12 of the 13 tokens (no full window)
-        (2, "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima"),  # noqa: E501
-        # contaminated twice: two distinct eval grams
-        (3, f"{GRAM} and separately november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee zulu"),  # noqa: E501
-        # clean short doc
-        (4, "too short to matter"),
-        # case-insensitive match
-        (5, f"padding {GRAM.upper()} padding more padding tokens here ok"),
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def _evals(spark):
-    rows = [
-        (100, GRAM),
-        (200, "november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee zulu"),  # noqa: E501
-    ]
-    return spark.createDataFrame(rows, ["eval_id", "text"])
-
-
-def test_contamination_report_flags_exact_13gram_overlap(spark):
-    rep = {
-        r["doc_id"]: r
-        for r in contamination_report(
-            _corpus(spark), _evals(spark), n=13
-        ).collect()
-    }
-    assert set(rep) == {1, 2, 3, 4, 5}
-    assert rep[1]["contaminated"] and rep[1]["n_eval_ids"] == 1
-    assert not rep[2]["contaminated"] and rep[2]["n_hit_grams"] == 0
-    assert rep[3]["contaminated"] and rep[3]["n_eval_ids"] == 2
-    assert rep[3]["n_hit_grams"] == 2
-    assert not rep[4]["contaminated"] and rep[4]["n_windows"] == 0
-    assert rep[5]["contaminated"], "matching is case-insensitive"
-
-
-def test_decontaminate_drops_exactly_the_contaminated_docs(spark):
-    kept = decontaminate(_corpus(spark), _evals(spark), n=13)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 4]
-    # schema passes through untouched
-    assert kept.columns == ["doc_id", "text"]
-
-
-def test_contamination_null_text_is_clean(spark):
-    df = spark.createDataFrame(
-        [(1, None), (2, GRAM)], ["doc_id", "text"]
-    )
-    rep = {
-        r["doc_id"]: r
-        for r in contamination_report(df, _evals(spark), n=13).collect()
-    }
-    assert rep[1]["n_windows"] == 0 and not rep[1]["contaminated"]
-    assert rep[2]["contaminated"]
 
 
 def _py_bucket(seed: str, doc_id: int) -> int:

@@ -1,10 +1,8 @@
-"""Dedup + similarity operators: cross-checks vs pure kernels / brute force."""
+"""Dedup operators: cross-checks vs the pure fingerprint kernels."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.kernels.fingerprint import (
     hamming64,
@@ -17,11 +15,6 @@ from intelligent_document_processing_on_aws_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
-)
-from intelligent_document_processing_on_aws_spark.operators.similarity import (
-    brute_force_topk,
-    cosine_pairs,
-    lsh_topk,
 )
 
 DOCS = [
@@ -216,124 +209,6 @@ def test_simhash_pairs_match_kernel(spark, docs_df):
         assert truth.get(k) == v
 
 
-def test_brute_force_topk_vs_numpy(spark):
-    rng = np.random.RandomState(7)
-    vecs = rng.normal(size=(50, 16)).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = brute_force_topk(df, n_queries=3, k=4).collect()
-    V = vecs.astype(np.float64)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    S = Vn @ Vn.T
-    for q in range(3):
-        sims = [(round(S[q, j], 6), j) for j in range(50) if j != q]
-        sims.sort(key=lambda t: (-t[0], t[1]))
-        expect = [j for _, j in sims[:4]]
-        mine = [r.neighbor_id for r in sorted(
-            (r for r in got if r.query_id == q), key=lambda r: r.rank)]
-        assert mine == expect, q
-
-
-def test_lsh_topk_recall(spark):
-    rng = np.random.RandomState(11)
-    base = rng.normal(size=(20, 16)).astype(np.float32)
-    # plant near-neighbors: vec i+20 = vec i + small noise
-    near = base + rng.normal(scale=0.05, size=base.shape).astype(np.float32)
-    vecs = np.vstack([base, near])
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = lsh_topk(df, dim=16, n_queries=5, k=1, n_bits=4).collect()
-    hits = sum(1 for r in got if r.rank == 1 and r.neighbor_id == r.query_id + 20)
-    assert hits >= 3  # planted twin lands in the same bucket most of the time
-
-
-def test_cosine_pairs_threshold(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [1.0, 0.01, 0.0]),
-        (2, [0.0, 1.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = cosine_pairs(df, threshold=0.95).collect()
-    assert [(p.id_a, p.id_b) for p in pairs] == [(0, 1)]
-
-
-def test_ivf_topk_recall_vs_brute(spark):
-    from intelligent_document_processing_on_aws_spark.operators.similarity import ivf_topk
-
-    rng = np.random.RandomState(3)
-    vecs = rng.normal(size=(200, 16)).astype(np.float32)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    brute = brute_force_topk(df, n_queries=5, k=5).collect()
-    ivf = ivf_topk(df, n_queries=5, k=5, n_centroids=8, n_probe=4).collect()
-    truth = {(r.query_id, r.neighbor_id) for r in brute}
-    got = {(r.query_id, r.neighbor_id) for r in ivf}
-    recall = len(truth & got) / len(truth)
-    assert recall >= 0.5, recall  # 4/8 cells probed on isotropic data
-    # determinism: same call twice -> identical
-    again = {(r.query_id, r.rank, r.neighbor_id)
-             for r in ivf_topk(df, n_queries=5, k=5, n_centroids=8, n_probe=4).collect()}
-    assert again == {(r.query_id, r.rank, r.neighbor_id) for r in ivf}
-
-
-def test_lsh_cosine_pairs_recall(spark):
-    from intelligent_document_processing_on_aws_spark.operators.similarity import (
-        lsh_cosine_pairs,
-    )
-
-    rng = np.random.RandomState(5)
-    base = rng.normal(size=(60, 16)).astype(np.float32)
-    near = base[:15] + rng.normal(scale=0.03, size=(15, 16)).astype(np.float32)
-    vecs = np.vstack([base, near])  # ids 60..74 are twins of 0..14
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(75)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    truth = {(r.id_a, r.id_b) for r in cosine_pairs(df, threshold=0.95).collect()}
-    got = {(r.id_a, r.id_b) for r in
-           lsh_cosine_pairs(df, 0.95, dim=16, n_bits=6, n_tables=4).collect()}
-    assert got <= truth            # no false positives (exact verify)
-    assert len(got) >= 0.8 * len(truth)  # multi-table recall
-    assert truth                   # planted twins must be above threshold
-
-
-def test_ann_queries_dataframe_api(spark):
-    """Production (corpus, queries) signature: corpus-derived queries with
-    exclude_self reproduce the n_queries fallback exactly, and an external
-    query vector (id outside the corpus range) gets ranked neighbors."""
-    from intelligent_document_processing_on_aws_spark.operators.similarity import (
-        ivf_topk,
-    )
-
-    rng = np.random.RandomState(11)
-    vecs = rng.normal(size=(40, 16)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    qdf = df.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-    )
-    legacy = {(r.query_id, r.rank, r.neighbor_id)
-              for r in brute_force_topk(df, n_queries=3, k=4).collect()}
-    via_df = {(r.query_id, r.rank, r.neighbor_id)
-              for r in brute_force_topk(df, queries=qdf, k=4,
-                                        exclude_self=True).collect()}
-    assert via_df == legacy
-
-    # external query: not in the corpus id-space, no self-exclusion needed
-    ext = spark.createDataFrame(
-        [(999, [float(x) for x in (vecs[7] + 0.01)])],
-        "query_id long, q_vec array<float>",
-    )
-    got = brute_force_topk(df, queries=ext, k=3).collect()
-    assert [r.neighbor_id for r in got if r.rank == 1] == [7]
-    assert len(got) == 3
-
-    ivf_ext = ivf_topk(df, queries=ext, k=3, n_centroids=4, n_probe=4)
-    rows = ivf_ext.collect()
-    assert rows and rows[0].neighbor_id == 7  # n_probe=all cells -> exact
-
-
 def test_duplicate_groups_connected_components(spark):
     """Transitive closure: a-b and b-c pair -> one group {a,b,c} with
     canonical=min id; singletons keep their own id, size 1."""
@@ -429,62 +304,6 @@ def test_repeated_passages_boilerplate_detection(spark):
                for p in out), out
     # min_df gate: nothing from the unique doc
     assert not any("unique" in p for p in out)
-
-
-def test_lsh_multiprobe_improves_recall(spark):
-    """Multi-probe (flip lowest-|margin| bits) vs single-probe at n_bits=10:
-    recall against exact brute force must strictly improve on planted
-    near-neighbors, and every probe set must contain distinct buckets."""
-    from intelligent_document_processing_on_aws_spark.operators.similarity import (
-        lsh_query_probes,
-    )
-
-    rng = np.random.RandomState(23)
-    base = rng.normal(size=(100, 16)).astype(np.float32)
-    near = base + rng.normal(scale=0.08, size=base.shape).astype(np.float32)
-    vecs = np.vstack([base, near])
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    truth = {(r.query_id, r.neighbor_id)
-             for r in brute_force_topk(df, n_queries=20, k=1).collect()}
-
-    def recall(n_probes):
-        got = {(r.query_id, r.neighbor_id)
-               for r in lsh_topk(df, dim=16, n_queries=20, k=1, n_bits=10,
-                                 n_probes=n_probes).collect()}
-        return len(truth & got) / len(truth)
-
-    r1, r3, r5 = recall(1), recall(3), recall(5)
-    assert r3 > r1, (r1, r3)           # probing neighbor buckets helps
-    assert r5 >= r3, (r3, r5)          # monotone in probe count
-    assert r5 >= 0.6, r5               # and lands at usable recall
-
-    # probe invariants: n_probes distinct buckets per query, first = own
-    q = df.where("vec_id < 20").selectExpr(
-        "vec_id as query_id", "embedding as q_vec")
-    probes = lsh_query_probes(q, dim=16, n_bits=10, n_probes=5).collect()
-    by_q = {}
-    for r in probes:
-        by_q.setdefault(r.query_id, []).append(r.q_bucket)
-    assert all(len(v) == 5 and len(set(v)) == 5 for v in by_q.values())
-
-
-def test_lsh_probe_tie_break_is_lowest_bit(spark):
-    """Exact |projection| ties (the zero vector ties every plane at 0)
-    must flip the LOWEST bit indices first — the stable-sort order the
-    DuckDB oracle's 'abs(d) ASC, bit ASC' uses (r5 ADVICE fix)."""
-    from intelligent_document_processing_on_aws_spark.operators.similarity import (
-        lsh_query_probes,
-    )
-
-    q = spark.createDataFrame(
-        [(0, [0.0] * 16)], "query_id long, q_vec array<float>")
-    probes = sorted(
-        (r.q_bucket for r in
-         lsh_query_probes(q, dim=16, n_bits=10, n_probes=4).collect()))
-    # zero vector: proj>0 false everywhere -> base bucket 0; ties resolve
-    # to bits 0,1,2 -> buckets 1, 2, 4
-    assert probes == [0, 1, 2, 4]
 
 
 def test_duplicate_groups_durable_checkpoint(spark, tmp_path):

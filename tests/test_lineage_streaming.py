@@ -1,4 +1,4 @@
-"""Resume-from-checkpoint, streaming extraction, multimodal plumbing."""
+"""Resume-from-checkpoint, document status, manifests, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -17,9 +17,6 @@ from intelligent_document_processing_on_aws_spark.plans.lineage import (
 )
 from intelligent_document_processing_on_aws_spark.sources.pages_source import synthetic_pages
 from intelligent_document_processing_on_aws_spark.sources.snapshots import read_table
-from intelligent_document_processing_on_aws_spark.streaming.stream_extract import (
-    start_extract_stream,
-)
 
 
 def test_resume_no_duplicates(spark, tmp_path):
@@ -47,30 +44,6 @@ def test_resume_no_duplicates(spark, tmp_path):
     lin = read_table(spark, lineage)
     assert lin.agg(F.sum("n_rows")).first()[0] == 120
     assert lin.agg(F.sum("n_errors")).first()[0] == 0
-
-
-def test_streaming_extract_matches_batch(spark, tmp_path, fixtures_dir):
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet"))
-    pages.limit(60).write.parquet(src)
-
-    q = start_extract_stream(spark, src, out, ckpt, available_now=True)
-    q.awaitTermination(120)
-
-    result = spark.read.parquet(out)
-    golden = spark.read.parquet(os.path.join(fixtures_dir, "t1_golden.parquet"))
-    j = result.join(golden, "url")
-    assert j.count() == 60
-    assert j.where(
-        result["extracted_text"] != golden["extracted_text"]
-    ).count() == 0
-
-    # restart with same checkpoint: no new data -> no duplicates
-    q2 = start_extract_stream(spark, src, out, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 60
 
 
 def test_multimodal_features(spark):
@@ -101,186 +74,6 @@ def test_multimodal_features(spark):
     fs = frame_sample(df, every_n=10).collect()
     assert len(fs) == 10
     assert [r.frame_idx for r in fs] == list(range(0, 95, 10))
-
-
-def test_windowed_rollup_stream_equals_batch(spark, tmp_path):
-    """Streaming windowed agg (with watermark) over a drained file source
-    equals the batch expression on the same data."""
-    import datetime as dt
-
-    from intelligent_document_processing_on_aws_spark.streaming.windowed import (
-        streaming_windowed_rollup,
-        windowed_event_rollup,
-    )
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (i, base + dt.timedelta(minutes=7 * i), f"t{i % 3}", float(i))
-        for i in range(100)
-    ]
-    src = str(tmp_path / "ev_src")
-    out = str(tmp_path / "ev_out")
-    ckpt = str(tmp_path / "ev_ckpt")
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, event_type string, value double"
-    )
-    df.write.parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    q = (
-        streaming_windowed_rollup(stream, "1 hour", "0 seconds")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (str(r.window_start), r.event_type): (r.n_events, r.total_value)
-        for r in spark.read.parquet(out).collect()
-    }
-    # append mode only emits windows finalized by the watermark: windows
-    # whose end <= max event time (watermark delay 0). The final in-flight
-    # window stays in state — expected Structured Streaming semantics.
-    max_ts = max(r[1] for r in rows)
-    want = {
-        (str(r.window_start), r.event_type): (r.n_events, r.total_value)
-        for r in windowed_event_rollup(df, "1 hour").collect()
-        if r.window_start + dt.timedelta(hours=1) <= max_ts
-    }
-    assert got == want and len(want) > 10
-
-
-def test_stateful_streaming_dedup(spark, tmp_path, fixtures_dir):
-    """applyInPandasWithState dedup: duplicates across micro-batches are
-    suppressed; state survives between triggers via the checkpoint."""
-
-    from intelligent_document_processing_on_aws_spark.streaming.stateful_dedup import (
-        stream_dedup,
-    )
-
-    src = str(tmp_path / "dd_src")
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    os.makedirs(src)
-    pages = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet"))
-    batch1 = pages.limit(40)
-    batch1.write.parquet(src + "/b1.parquet")
-
-    def run_trigger():
-        stream = spark.readStream.schema(pages.schema).parquet(src + "/*.parquet")
-        q = (
-            stream_dedup(stream, n_buckets=8)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_trigger()
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 40
-
-    # batch 2: 20 duplicates of batch 1 + 20 new pages
-    dup = pages.limit(20)
-    new = pages.orderBy("url").limit(60).subtract(batch1).limit(20)
-    dup.unionAll(new).write.parquet(src + "/b2.parquet")
-    run_trigger()
-
-    final = spark.read.parquet(out)
-    assert final.count() == 60  # 40 + 20 new, 20 dups suppressed by state
-    assert final.select("content_hash").distinct().count() == 60
-
-
-def test_streaming_mixed_formats_matches_batch(spark, tmp_path, fixtures_dir):
-    """Real %PDF, CSV (extension-routed via url), HTML and office payloads
-    flow through the SAME streaming extraction unchanged — streamed output
-    equals the batch run row-for-row, all content types represented."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from intelligent_document_processing_on_aws_spark.operators.extraction import (
-        extract_pages,
-    )
-    from intelligent_document_processing_on_aws_spark.streaming.stream_extract import (
-        start_extract_stream,
-    )
-
-    html = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet")).limit(20)
-    pdfs = spark.read.parquet(os.path.join(fixtures_dir, "realpdf_pages.parquet")).limit(20)
-    csvs = (
-        spark.read.parquet(os.path.join(fixtures_dir, "csv_docs.parquet")).limit(20)
-        .select(
-            F.concat(F.lit("https://x.example/"), F.col("doc_id").cast("string"),
-                     F.lit(".csv")).alias("url"),
-            F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.col("payload").alias("html"),
-            F.lit("").alias("text"), F.lit("en").alias("lang"),
-        )
-    )
-    ocr = (
-        spark.read.parquet(os.path.join(fixtures_dir, "ocrblocks_docs.parquet"))
-        .limit(20)
-        .select(
-            F.concat(F.lit("https://x.example/ocr/"), F.col("doc_id").cast("string"),
-                     F.lit(".json")).alias("url"),
-            F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.encode(F.col("blocks_json"), "utf-8").alias("html"),
-            F.lit("").alias("text"), F.lit("en").alias("lang"),
-        )
-    )
-    xls = (
-        spark.read.parquet(os.path.join(fixtures_dir, "xls_docs.parquet"))
-        .limit(20)
-        .select(
-            F.col("url"),
-            F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.col("payload").alias("html"),
-            F.lit("").alias("text"), F.lit("en").alias("lang"),
-        )
-    )
-    docb = (
-        spark.read.parquet(os.path.join(fixtures_dir, "doc_docs.parquet"))
-        .limit(20)
-        .select(
-            F.col("url"),
-            F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.col("payload").alias("html"),
-            F.lit("").alias("text"), F.lit("en").alias("lang"),
-        )
-    )
-    rtf = (
-        spark.read.parquet(os.path.join(fixtures_dir, "rtf_docs.parquet"))
-        .limit(20)
-        .select(
-            F.col("url"),
-            F.lit("2025-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-            F.col("payload").alias("html"),
-            F.lit("").alias("text"), F.lit("en").alias("lang"),
-        )
-    )
-    mixed = (html.unionByName(pdfs).unionByName(csvs).unionByName(ocr)
-             .unionByName(xls).unionByName(docb).unionByName(rtf))
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    mixed.write.parquet(in_dir)
-
-    q = start_extract_stream(spark, in_dir, out_dir, ckpt, available_now=True)
-    q.awaitTermination(120)
-    streamed = spark.read.parquet(out_dir)
-    batch = extract_pages(spark.read.parquet(in_dir))
-
-    s_rows = {(r.url, r.content_type, r.extracted_text) for r in streamed.collect()}
-    b_rows = {(r.url, r.content_type, r.extracted_text) for r in batch.collect()}
-    assert s_rows == b_rows
-    types = {r.content_type for r in streamed.collect()}
-    assert {"html", "pdf", "csv", "ocr_json", "xls", "doc", "rtf"} <= types
 
 
 def test_document_status_lifecycle(spark, tmp_path):

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from intelligent_document_processing_on_aws_spark.operators.lm_filter import (
     HEAD_MAX_AVG_NLL_MICRO,
     MIDDLE_MAX_AVG_NLL_MICRO,
@@ -212,37 +210,10 @@ def test_perplexity_tiers_corpus_never_sorted(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_curate_job_ppl_keep_flag(tmp_path):
-    """jobs/curate.py --ppl-keep head,middle: per-language tercile gate
-    keeps ~2/3 of the survivors (terciles by construction) and reports
-    the stage count."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = str(tmp_path / "curated")
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "curate.py"),
-         "--input", "/root/testdata/sf0.01/documents.parquet",
-         "--output", out, "--ppl-keep", "head,middle"],
-        capture_output=True, text=True, timeout=300, cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    stats = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1])
-    n_in = stats["after_repetition"]
-    n_ppl = stats["after_ppl_tiers"]
-    # two of three terciles, +/- boundary ties and untiered/empty rows
-    assert 0.55 * n_in <= n_ppl <= 0.78 * n_in
-    assert stats["kept"] <= n_ppl
-
-
 def test_train_caps_bound_the_collected_tables(spark):
     """min_count/max_vocab are applied INSIDE the aggregation, before
     the driver collect (the bpe_train max_words discipline), and their
-    defaults are no-ops so the committed oracles are unchanged."""
+    defaults are no-ops."""
     docs = spark.createDataFrame(
         [(0, "a b a b a"), (10, "a c b a")], ["doc_id", "text"]
     )

@@ -21,8 +21,6 @@ from intelligent_document_processing_on_aws_spark.operators.evaluation import (
     flatten_attributes,
 )
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages
-from intelligent_document_processing_on_aws_spark.operators.similarity import brute_force_topk
-from intelligent_document_processing_on_aws_spark.operators.textstats import document_stats
 
 
 def _plan(df) -> str:
@@ -78,23 +76,6 @@ def test_flatten_is_arrow_batched(spark, fixtures_dir):
     df = flatten_attributes(attrs)
     plan = _plan(df)
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan
-
-
-def test_topk_broadcasts_queries(spark, fixtures_dir):
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(100)],
-        "vec_id long, embedding array<float>",
-    )
-    df = brute_force_topk(emb, n_queries=5, k=3)
-    plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_doc_stats_native(spark):
-    docs = spark.createDataFrame([(1, "the quick fox")], "doc_id long, text string")
-    plan = _plan(document_stats(docs))
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
 
 def test_filter_pushdown_to_scan(spark, fixtures_dir):
@@ -337,27 +318,6 @@ def test_warc_ingestion_plan_map_only(spark):
     assert plan.count("MapInPandas") == 1
 
 
-def test_round5_lang_classifier_plan_single_arrow_pass(spark):
-    """fastText-style lang-ID inference is ONE Arrow batch pass over the
-    scan (r6: the interpreted Catalyst lambda chain moved to exact-
-    integer numpy inside mapInArrow — the lm_perplexity audit shape):
-    a single MapInArrow, zero Exchange, no row-at-a-time Python —
-    inference still scales exactly like the scan."""
-    from intelligent_document_processing_on_aws_spark.operators.ft_classifier import (
-        classify_lang,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "en", "the quick brown fox jumps")],
-        "doc_id long, lang string, text string")
-    df = classify_lang(docs, [[1] * 64, [2] * 64], [0, 0],
-                       ["en", "de"], n_buckets=64)
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert plan.count("MapInArrow") == 1
-    assert "Exchange" not in plan
-
-
 def test_round5_lm_perplexity_plan_single_arrow_pass(spark):
     """CCNet perplexity scoring is ONE broadcast-model Arrow pass over
     the corpus: a single MapInPandas, zero Exchange, zero row-Python."""
@@ -411,29 +371,6 @@ def test_round5_audio_plans_map_only(spark):
         assert "Exchange" not in plan, op.__name__
 
 
-def test_round5_decontamination_plan_broadcast_no_python(spark):
-    """Decontamination is scan-shaped: corpus n-gram windows are native
-    (transform over sequence, codegen), the eval gram table is
-    BROADCAST (the corpus never shuffles for the match), and the only
-    Exchange is the per-doc hit aggregation keyed on doc_id."""
-    from intelligent_document_processing_on_aws_spark.operators.contamination import (
-        contamination_report,
-        decontaminate,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "a b c d e f g h i j k l m n")], "doc_id long, text string")
-    evals = spark.createDataFrame(
-        [(1, "a b c d e f g h i j k l m")], "eval_id long, text string")
-    plan = _plan(contamination_report(corpus, evals, n=13))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "BroadcastHashJoin" in plan
-    drop_plan = _plan(decontaminate(corpus, evals, n=13))
-    assert "BroadcastHashJoin" in drop_plan
-    assert "BatchEvalPython" not in drop_plan
-
-
 def test_round5_sampling_plans(spark):
     """hash_sample is a pure codegen'd filter inside the scan stage
     (zero Exchange, zero Python); temperature_sample shuffles only the
@@ -456,75 +393,6 @@ def test_round5_sampling_plans(spark):
     assert "BroadcastHashJoin" in temp or "BroadcastNestedLoopJoin" in temp
 
 
-def test_semdedup_plan_cluster_join_no_row_python(spark):
-    """SemDeDup: assignment is ONE Arrow map pass; the pair stage joins on
-    the centroid key (bounded clusters), never an unkeyed cross join."""
-    from intelligent_document_processing_on_aws_spark.operators.semdedup import (
-        semdedup,
-    )
-
-    df = spark.createDataFrame(
-        [(i, [float(i % 5), 1.0, 0.1 * i, 0.0]) for i in range(40)],
-        ["vec_id", "embedding"],
-    ).withColumn("embedding", F.col("embedding").cast("array<float>"))
-    out = semdedup(df, threshold=0.99, n_centroids=4)
-    plan = _plan(out)
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan            # the Arrow assignment pass
-    assert "CartesianProduct" not in plan   # pair stage keyed on centroid
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_round5_tier_family_plans(spark):
-    """Central audit for the r5 tier family: tier_mix's corpus side is a
-    broadcast-rate compare (no wide shuffle of the corpus), host_split
-    is map-only, perplexity_tiers/tier_agreement never sort or
-    SortMergeJoin the corpus, and none of them run row-at-a-time
-    Python."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_host_split,
-        q_perplexity_tiers,
-        q_tier_agreement,
-        q_tier_mix,
-    )
-
-    sf = "/root/testdata/sf0.001"
-
-    hs = _plan(q_host_split(spark, sf))
-    assert "Exchange" not in hs and "BatchEvalPython" not in hs
-
-    tm = _plan(q_tier_mix(spark, sf))
-    # rate table broadcasts back; the corpus-side filter is a codegen'd
-    # md5-bucket compare — no SortMergeJoin anywhere
-    assert "BroadcastHashJoin" in tm and "SortMergeJoin" not in tm
-    assert "BatchEvalPython" not in tm and "MapInPandas" not in tm
-
-    for q in (q_perplexity_tiers, q_tier_agreement):
-        p = _plan(q(spark, sf))
-        assert "SortMergeJoin" not in p, q.__name__
-        assert p.count("BroadcastExchange") == 1, q.__name__
-        assert "BatchEvalPython" not in p, q.__name__
-
-
-def test_source_tier_profile_plan_two_exchanges(spark):
-    """source_tier_profile: the corpus crosses the wire ONCE (partial-agg
-    groupBy source+tier); the share/dominant windows both run on a single
-    source repartition of the <=5-rows-per-source aggregated frame —
-    exactly two physical Exchanges, one Sort, no Python."""
-    from intelligent_document_processing_on_aws_spark.operators.tiers import (
-        source_tier_profile,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta", "s"), (2, "gamma", "t")],
-        "doc_id long, text string, source string")
-    plan = _plan(source_tier_profile(df))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert plan.count("Exchange") == 2, plan[:2000]
-    assert plan.count("Window") == 2, plan[:2000]
-
-
 def test_winnow_fingerprints_plan_single_doc_exchange(spark):
     """winnow_fingerprints: gram explode is map-side and the ordered
     frame + per-doc count + final distinct all run off ONE doc_id
@@ -542,27 +410,6 @@ def test_winnow_fingerprints_plan_single_doc_exchange(spark):
     assert "MapInPandas" not in plan
     assert plan.count("hashpartitioning(doc_id") <= 2, plan[:2000]
     assert "Window" in plan
-
-
-def test_sentence_queries_plan_map_only(spark):
-    """sentence_segments / sentence_chunks: ONE Arrow MapInPandas
-    directly over the pruned parquet scan — zero Exchange, zero
-    row-Python. Segmentation and packing are per-document, so at 100 TB
-    both stages scale exactly like the scan."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_sentence_chunks,
-        q_sentence_segments,
-    )
-
-    for q in (q_sentence_segments, q_sentence_chunks):
-        df = q(spark, "/root/testdata/sf0.001")
-        plan = _plan(df)
-        assert "BatchEvalPython" not in plan
-        assert "Exchange" not in plan, plan[:2000]
-        assert plan.count("MapInPandas") == 1
-        formatted = _formatted(df)
-        read = formatted.split("ReadSchema:")[-1].split("\n")[0]
-        assert "family" not in read  # column pruning: only doc_id, text
 
 
 def test_sitemap_queries_plan_shapes(spark):
@@ -636,18 +483,3 @@ def test_page_dates_plan_map_only(spark):
     read = formatted.split("ReadSchema:")[-1].split("\n")[0]
     assert "family" not in read
 
-
-def test_recency_mix_plan_map_side_weight(spark):
-    """recency_mix: weight + keep-bit are pure row functions (no
-    Python, no window); the only Exchange is the tiny per-source
-    rollup with a map-side partial aggregate."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_recency_mix,
-    )
-
-    plan = _plan(q_recency_mix(spark, "/root/testdata/sf0.001"))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "Window" not in plan
-    assert plan.count("Exchange") == 1, plan[:2000]
-    assert plan.count("HashAggregate") == 2, plan[:2000]

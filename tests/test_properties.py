@@ -347,7 +347,7 @@ def test_differences_mapping_consistent(names, start):
         assert got == want
 
 
-# --- r5 kernels: BPE + robots ------------------------------------------------
+# --- BPE + robots ------------------------------------------------------------
 
 _word_st = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Nd")),

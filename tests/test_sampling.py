@@ -1,6 +1,5 @@
 """operators/sampling recency decay — exact-integer weights and
-the deterministic freshness-biased downsample (query-level parity
-runs in the oracle sweep as `recency_mix`)."""
+the deterministic freshness-biased downsample."""
 
 
 def test_recency_weight_exact_integers(spark):

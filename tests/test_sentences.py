@@ -1,10 +1,10 @@
 """kernels/sentences — segmentation + chunking unit and differential
 tests.
 
-Spark-level parity (query vs composition-fact golden) runs in the
-oracle sweep; these pin the suppression rules (abbreviations,
-initials, decimals), terminator runs, closing-quote handling,
-paragraph breaks, greedy-pack invariants, and totality.
+These pin the suppression rules (abbreviations, initials, decimals),
+terminator runs, closing-quote handling, paragraph breaks,
+greedy-pack invariants, and totality, and check the segmenter against
+the generator's composition facts.
 """
 
 from intelligent_document_processing_on_aws_spark.fixtures.sentences_gen import (

@@ -132,54 +132,6 @@ def test_webfilter_plans_native(spark):
     assert "Exchange" not in feats
 
 
-def test_curate_job_c4_and_pii_flags(tmp_path):
-    """jobs/curate.py --c4-clean --redact-pii end-to-end on a
-    sentence-structured corpus: C4 passes real sentences, drops the
-    brace/lorem docs, and the curated output carries no raw PII."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rows = []
-    for i in range(40):
-        body = (f"Document number {i} talks about the weather today.\n"
-                f"The quick brown fox jumped over fence number {i}.\n"
-                f"Contact admin{i}@corp.example.org for all the details.")
-        if i % 10 == 0:
-            body += "\nif (x) { broken code }"
-        rows.append({"doc_id": i, "text": body})
-    src = str(tmp_path / "docs.parquet")
-    pq.write_table(pa.Table.from_pylist(rows), src)
-    out = str(tmp_path / "curated")
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "curate.py"),
-         "--input", src, "--output", out, "--c4-clean", "--redact-pii",
-         "--min-tokens", "5", "--min-quality", "0.0"],
-        capture_output=True, text=True, timeout=300, cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    stats = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1])
-    assert stats["after_c4"] == 36          # the 4 brace docs dropped
-    assert stats["kept"] == 36
-    con = duckdb.connect()
-    n_pii = con.execute(
-        f"SELECT count(*) FROM read_parquet('{out}/curated/*.parquet') "
-        f"WHERE text LIKE '%@corp.example.org%'"
-    ).fetchone()[0]
-    n_redacted = con.execute(
-        f"SELECT count(*) FROM read_parquet('{out}/curated/*.parquet') "
-        f"WHERE text LIKE '%<EMAIL>%'"
-    ).fetchone()[0]
-    assert n_pii == 0 and n_redacted == 36
-
-
 def test_canonicalization_and_redaction_idempotent(spark):
     """canonical_url and redact_pii are idempotent — applying twice never
     changes the result (a second cleanup pass over an already-curated
@@ -248,52 +200,3 @@ def test_url_features_edge_cases(spark):
     # NULL url -> coalesced to '' (one row per input, never dropped)
     assert len(got) == 4 and sum(1 for r in got.values() if r.url == "") == 1
 
-
-def test_curate_job_strip_templates_flag(tmp_path):
-    """jobs/curate.py --strip-templates: per-source boilerplate lines
-    vanish from the curated text before any signal; unique body text
-    survives; the funnel line reports the template count."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    nav = "Home | Products | About us | Contact"
-    rows = []
-    for i in range(30):
-        body = (f"{nav}\n"
-                f"This is the informative article number {i} and it talks "
-                f"about the weather in that region today.\n"
-                f"The text then continues with more of the unique "
-                f"words for document {i}.")
-        rows.append({"doc_id": i, "text": body,
-                     "source": "siteA" if i % 2 else "siteB"})
-    src = str(tmp_path / "docs.parquet")
-    pq.write_table(pa.Table.from_pylist(rows), src)
-    out = str(tmp_path / "curated")
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "curate.py"),
-         "--input", src, "--output", out, "--strip-templates",
-         "--min-tokens", "5", "--min-quality", "0.0"],
-        capture_output=True, text=True, timeout=300, cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    stats = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1])
-    assert stats["template_lines_stripped"] == 2   # nav on each source
-    assert stats["kept"] == 30
-    con = duckdb.connect()
-    n_nav = con.execute(
-        f"SELECT count(*) FROM read_parquet('{out}/curated/*.parquet') "
-        f"WHERE text LIKE '%Home | Products%'"
-    ).fetchone()[0]
-    n_body = con.execute(
-        f"SELECT count(*) FROM read_parquet('{out}/curated/*.parquet') "
-        f"WHERE text LIKE '%informative article%'"
-    ).fetchone()[0]
-    assert n_nav == 0 and n_body == 30
