@@ -2330,36 +2330,6 @@ def _sql_section_summaries() -> str:
     """
 
 
-def q_document_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.summarize import assemble_document_markdown, summarize_sections
-
-    secs = spark.read.parquet(_fx("golden_sections.parquet"))
-    return assemble_document_markdown(summarize_sections(secs))
-
-
-def _sql_document_markdown() -> str:
-    return f"""
-        WITH summ AS (
-            SELECT doc_id, CAST(section_id AS INT) AS sid, classification AS cls,
-                   array_to_string(string_split_regex(trim(section_text), '\\s+')[1:25], ' ') AS s
-            FROM read_parquet('{_fx('golden_sections.parquet')}')
-        )
-        SELECT doc_id,
-               '# Document ' || CAST(doc_id AS VARCHAR) || chr(10) || chr(10)
-               || '## Table of Contents' || chr(10)
-               || string_agg('- [Section ' || CAST(sid AS VARCHAR) || ': ' || cls
-                             || '](#section-' || CAST(sid AS VARCHAR) || ')',
-                             chr(10) ORDER BY sid)
-               || chr(10) || chr(10)
-               || string_agg('## Section ' || CAST(sid AS VARCHAR) || ': ' || cls
-                             || chr(10) || chr(10) || s,
-                             chr(10) || chr(10) ORDER BY sid)
-               AS document_markdown,
-               CAST(count(*) AS INT) AS n_sections
-        FROM summ GROUP BY doc_id
-    """
-
-
 def q_summary_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-parity combined document summary
     (markdown_formatter.py:15-418): duplicate-title removal, citation
@@ -3036,7 +3006,6 @@ _RAW_QUERIES = {
     "assessment_granular": q_assessment_granular,
     "assessment_geometry": q_assessment_geometry,
     "section_summaries": q_section_summaries,
-    "document_markdown": q_document_markdown,
     "summary_markdown": q_summary_markdown,
     "eval_metrics": q_eval_metrics,
     "eval_report": q_eval_report,
@@ -3094,7 +3063,6 @@ def oracles() -> dict[str, str]:
         "assessment_granular": _sql_assessment_granular(),
         "assessment_geometry": _sql_assessment_geometry(),
         "section_summaries": _sql_section_summaries(),
-        "document_markdown": _sql_document_markdown(),
         "summary_markdown": _sql_summary_markdown(),
         "eval_metrics": _sql_eval_metrics(),
         "eval_report": _sql_eval_report(),

@@ -30,14 +30,27 @@ the scan: zero Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .domains import url_host
-
 SCALE = 1_000_000_000_000  # 1e12 fixed-point units of rank
+TRUNCATE_EVERY = 8  # power iterations between two rank checkpoints
+# hostname from a URL: text between '://' and the next '/', '?', '#' or
+# end (ASCII classes only, read alike by Java regex and RE2); url_host
+# strips credentials and port in separate steps.
+_HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)"
 # href extraction: standard attribute scan (double/single-quoted)
 _HREF_RE = r"""href\s*=\s*["']([^"'#][^"']*)["']"""
+
+
+def url_host(col: Column) -> Column:
+    """Lowercased hostname of a URL: scheme and path stripped, then
+    userinfo ('user:pass@') and port (':8080') removed. Empty string
+    when the value has no '<scheme>://' prefix."""
+    h = F.regexp_extract(col, _HOST_RE, 1)
+    h = F.regexp_replace(h, r"^[^@]*@", "")   # userinfo
+    h = F.regexp_replace(h, r":[0-9]*$", "")  # port
+    return F.lower(h)
 
 
 def extract_links(
@@ -77,9 +90,6 @@ def pagerank_hosts(
     n_iter: int = 3,
     damping_num: int = 17,
     damping_den: int = 20,
-    materialize: bool = True,
-    checkpoint_dir: str | None = None,
-    truncate_every: int = 8,
 ) -> DataFrame:
     """Deterministic integer PageRank over a (src_host, dst_host)
     edge list -> (host, rank) with rank in SCALE fixed-point units.
@@ -90,21 +100,17 @@ def pagerank_hosts(
                   + num * sum(contrib into h) DIV den
     All arithmetic is bigint — order-free, bit-stable.
 
-    materialize (default ON): the deduped edge list, host set and
-    out-degree table are lineage-truncated once ("build the graph
-    once") — without it every iteration arm re-derives all three from
-    the raw pages, so iteration k re-scans the corpus ~3k times and the
-    plan grows combinatorially. checkpoint_dir switches to a reliable
-    checkpoint (the dedup knob); ranks are additionally truncated every
-    ``truncate_every`` iterations so a long power iteration neither
-    replans from scratch nor overflows the optimizer — a pure plan
-    change: ranks are exact integers, bit-identical with or without it.
+    The distinct edge list, host set and out-degree table are built
+    once, behind a lazy localCheckpoint — otherwise every iteration arm
+    re-derives all three from the raw pages, so iteration k re-scans the
+    corpus ~3k times and the plan grows combinatorially. Ranks are
+    truncated the same way every ``TRUNCATE_EVERY`` iterations, so a
+    long power iteration neither replans from scratch nor overflows the
+    optimizer. Both are plan changes only: ranks are exact integers,
+    bit-identical either way.
     """
-    from .dedup import _truncate_lineage
-
     edges = edges.select("src_host", "dst_host").distinct()
-    if materialize:
-        edges = _truncate_lineage(edges, checkpoint_dir, eager=False)
+    edges = edges.localCheckpoint(eager=False)
     hosts = (
         edges.select(F.col("src_host").alias("host"))
         .unionAll(edges.select(F.col("dst_host").alias("host")))
@@ -113,9 +119,8 @@ def pagerank_hosts(
     degrees = edges.groupBy("src_host").agg(
         F.count(F.lit(1)).alias("out_degree")
     )
-    if materialize:
-        hosts = _truncate_lineage(hosts, checkpoint_dir, eager=False)
-        degrees = _truncate_lineage(degrees, checkpoint_dir, eager=False)
+    hosts = hosts.localCheckpoint(eager=False)
+    degrees = degrees.localCheckpoint(eager=False)
     # N is one scalar (a count, not data) — the only driver action
     n_val = int(hosts.count())
     teleport = (SCALE * (damping_den - damping_num) // damping_den) // n_val
@@ -124,8 +129,8 @@ def pagerank_hosts(
         "host", F.lit(SCALE // n_val).cast("long").alias("rank")
     )
     for it in range(int(n_iter)):
-        if materialize and it > 0 and it % truncate_every == 0:
-            ranks = _truncate_lineage(ranks, checkpoint_dir, eager=False)
+        if it > 0 and it % TRUNCATE_EVERY == 0:
+            ranks = ranks.localCheckpoint(eager=False)
         contrib = (
             edges.join(
                 ranks.withColumnRenamed("host", "src_host"), "src_host"
@@ -158,9 +163,6 @@ def trustrank_hosts(
     damping_num: int = 17,
     damping_den: int = 20,
     reverse: bool = False,
-    materialize: bool = True,
-    checkpoint_dir: str | None = None,
-    truncate_every: int = 8,
 ) -> DataFrame:
     """Personalized PageRank with teleport restricted to a seed set —
     TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004) when seeds
@@ -174,20 +176,16 @@ def trustrank_hosts(
     DIV/sum, exact 17/20 damping) — order-free, bit-stable, oracle-
     comparable.  Same 100-TB shape: one Exchange per iteration on the
     aggregation key; the seed table is a broadcast-sized dimension.
-    materialize/checkpoint_dir/truncate_every: the pagerank_hosts
-    graph-built-once + periodic rank truncation knobs (pure plan
-    change, bit-identical ranks).
+    The graph is built once and ranks are truncated every
+    ``TRUNCATE_EVERY`` iterations, as in ``pagerank_hosts``.
     """
-    from .dedup import _truncate_lineage
-
     edges = edges.select("src_host", "dst_host").distinct()
     if reverse:
         edges = edges.select(
             F.col("dst_host").alias("src_host"),
             F.col("src_host").alias("dst_host"),
         )
-    if materialize:
-        edges = _truncate_lineage(edges, checkpoint_dir, eager=False)
+    edges = edges.localCheckpoint(eager=False)
     hosts = (
         edges.select(F.col("src_host").alias("host"))
         .unionAll(edges.select(F.col("dst_host").alias("host")))
@@ -202,9 +200,8 @@ def trustrank_hosts(
     hosts = hosts.join(seeds, "host", "left").select(
         "host", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
     )
-    if materialize:
-        hosts = _truncate_lineage(hosts, checkpoint_dir, eager=False)
-        degrees = _truncate_lineage(degrees, checkpoint_dir, eager=False)
+    hosts = hosts.localCheckpoint(eager=False)
+    degrees = degrees.localCheckpoint(eager=False)
     # n_seeds counts seeds PRESENT in the graph (a scalar, like N)
     n_seeds = int(hosts.where("is_seed").count())
     if n_seeds == 0:
@@ -220,8 +217,8 @@ def trustrank_hosts(
         .alias("rank"),
     )
     for it in range(int(n_iter)):
-        if materialize and it > 0 and it % truncate_every == 0:
-            ranks = _truncate_lineage(ranks, checkpoint_dir, eager=False)
+        if it > 0 and it % TRUNCATE_EVERY == 0:
+            ranks = ranks.localCheckpoint(eager=False)
         contrib = (
             edges.join(
                 ranks.select(

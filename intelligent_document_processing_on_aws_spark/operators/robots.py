@@ -85,7 +85,7 @@ def robots_gate(
 ) -> DataFrame:
     """urls + (allowed boolean, matched_len int).
 
-    ``urls`` must carry a host column (see operators/domains.url_host);
+    ``urls`` must carry a host column (see operators/linkgraph.url_host);
     ``rules`` is parse_robots_rules output.  RFC 9309 §2.2.2: among
     matching rules the longest pattern wins, ties go to Allow; no
     matching rule (or no rules for the host) -> allowed, matched_len 0.

@@ -23,9 +23,9 @@ needs between curation and tokenization:
    to integer ppm before use, so the sampled set is bit-stable.
 
 Hashing: the sampler key is the little-endian uint64 of the first 8
-md5 bytes of ``seed || ':' || doc_id`` (kernels/fingerprint.stable_hash64
-convention) — md5 is available and byte-identical in Spark, DuckDB and
-Python, unlike xxhash64 which only Spark exposes.
+md5 bytes of ``seed || ':' || doc_id`` — md5 is available and
+byte-identical in Spark, DuckDB and Python, unlike xxhash64 which only
+Spark exposes.
 
 100-TB shape: `hash_sample` is a codegen'd filter inside the scan
 stage (partition-pruning and pushdown unaffected).  The mix computation
@@ -49,9 +49,9 @@ PPM = 1_000_000
 def sample_key(doc_id_col, seed: str):
     """Stable uniform uint64 in [0, 2^64) from (seed, doc_id).
 
-    Little-endian read of the first 8 md5 bytes of 'seed:doc_id' —
-    the stable_hash64 convention (kernels/fingerprint.py), expressed as
-    native Catalyst expressions (md5 + substring shuffle + conv).
+    Little-endian read of the first 8 md5 bytes of 'seed:doc_id',
+    expressed as native Catalyst expressions (md5 + substring shuffle +
+    conv).
     """
     h = F.md5(F.concat(F.lit(seed + ":"), doc_id_col.cast("string")))
     le_hex = F.concat(*[

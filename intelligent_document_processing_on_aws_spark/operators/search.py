@@ -6,8 +6,8 @@ Spark-first for corpus-scale retrieval WITHOUT building a persistent
 inverted index:
 
 - tokenization is the corpus-wide frozen convention (lowercase,
-  whitespace split, edge punctuation stripped — the badword/stopword
-  rule in operators/webfilters.py);
+  whitespace split, edge punctuation stripped — the stopword rule in
+  operators/quality.py);
 - the posting explosion is pruned MAP-SIDE to the query's terms before
   any aggregation (a broadcast `array_contains` filter over the scan),
   so the shuffle carries only matching (doc, term) rows — at 100 TB the

@@ -4,8 +4,8 @@ Mirrors the reference's summarization dataflow (summarization/service.py:
 402-689: per-section summaries computed in parallel, then combined per
 document; markdown_formatter.py:15-418: TOC + per-section markdown) with a
 deterministic extractive summarizer (leading tokens of the section text)
-instead of the LLM call — fully native Catalyst: one projection + one
-groupBy(doc) with sort_array/transform/array_join string assembly.
+instead of the LLM call: one native projection per section, then one
+groupBy(doc) feeding the SummaryMarkdownFormatter mirror in Arrow batches.
 """
 
 from __future__ import annotations
@@ -24,39 +24,6 @@ def summarize_sections(sections: DataFrame, n_tokens: int = SUMMARY_TOKENS) -> D
         "doc_id", "section_id", "classification",
         summary.alias("summary"),
     )
-
-
-def assemble_document_markdown(section_summaries: DataFrame) -> DataFrame:
-    """One markdown report per document: title, TOC, per-section bodies,
-    ordered by numeric section id (markdown_formatter.py parity: section
-    order from the document, TOC of section links)."""
-    ordered = F.sort_array(
-        F.collect_list(
-            F.struct(
-                F.col("section_id").cast("int").alias("sid"),
-                F.col("classification").alias("cls"),
-                F.col("summary").alias("s"),
-            )
-        )
-    )
-    toc_entry = "x -> concat('- [Section ', x.sid, ': ', x.cls, '](#section-', x.sid, ')')"
-    body_entry = "x -> concat('## Section ', x.sid, ': ', x.cls, '\n\n', x.s)"
-    agg = (
-        section_summaries.groupBy("doc_id")
-        .agg(ordered.alias("secs"))
-        .select(
-            "doc_id",
-            F.concat(
-                F.lit("# Document "), F.col("doc_id").cast("string"),
-                F.lit("\n\n## Table of Contents\n"),
-                F.array_join(F.expr(f"transform(secs, {toc_entry})"), "\n"),
-                F.lit("\n\n"),
-                F.array_join(F.expr(f"transform(secs, {body_entry})"), "\n\n"),
-            ).alias("document_markdown"),
-            F.size("secs").alias("n_sections"),
-        )
-    )
-    return agg
 
 
 def format_document_summaries(

@@ -47,7 +47,6 @@ from intelligent_document_processing_on_aws_spark.operators.evaluation import ( 
     metrics_rollup,
 )
 from intelligent_document_processing_on_aws_spark.operators.summarize import (  # noqa: E402
-    assemble_document_markdown,
     format_document_summaries,
     summarize_sections,
 )
@@ -113,11 +112,8 @@ def main() -> int:
     section_summaries = persist(summarize_sections(sections))
     # reference-parity combined summary (markdown_formatter.py semantics:
     # duplicate-title removal, citation prefixing, TOC/anchors/navigation)
-    format_document_summaries(section_summaries).write.mode("overwrite").parquet(
-        os.path.join(wh, "document_summaries_md")
-    )
-    summaries, n_summaries = _observed(assemble_document_markdown(section_summaries))
-    summaries.write.mode("overwrite").parquet(os.path.join(wh, "document_summaries"))
+    summaries, n_summaries = _observed(format_document_summaries(section_summaries))
+    summaries.write.mode("overwrite").parquet(os.path.join(wh, "document_summaries_md"))
     counts["summaries"] = n_summaries.get["rows"]
 
     transitions = [

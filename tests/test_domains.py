@@ -1,27 +1,16 @@
-"""Domain-level curation operators: host parsing, registrable-domain
-grouping (public-suffix-lite), per-domain stats, blocklist/volume-cap
-gating — plus the Gopher word gates and the C4 badword filter."""
+"""Host parsing for the link graph (``linkgraph.url_host``) and the
+Gopher word gates (``operators.quality``)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from intelligent_document_processing_on_aws_spark.operators.domains import (
-    domain_filter,
-    domain_stats,
-    registrable_domain,
-    url_host,
-)
+from intelligent_document_processing_on_aws_spark.operators.linkgraph import url_host
 from intelligent_document_processing_on_aws_spark.operators.quality import (
     doc_word_stats,
     mean_word_length,
     required_stopword_hits,
     word_count,
-)
-from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-    badword_filter,
-    badword_hits,
 )
 
 
@@ -34,79 +23,12 @@ HOST_CASES = [
     ("no-scheme.example.com/path", ""),  # schemeless -> empty host
 ]
 
-DOMAIN_CASES = [
-    ("www.example.com", "example.com"),
-    ("a.b.c.example.org", "example.org"),
-    ("www.site.co.uk", "site.co.uk"),          # multi-suffix eTLD
-    ("portal.uni.ac.jp", "uni.ac.jp"),
-    ("cdn.shop.com.au", "shop.com.au"),
-    ("ac.uk", "ac.uk"),                         # bare suffix passthrough
-    ("10.1.2.5", "10.1.2.5"),                   # raw IP passthrough
-    ("localhost", "localhost"),                 # single label
-]
-
 
 def test_url_host_cases(spark):
     df = spark.createDataFrame([(u,) for u, _ in HOST_CASES], "url string")
     got = [r.h for r in
            df.select(url_host(F.col("url")).alias("h")).collect()]
     assert got == [want for _, want in HOST_CASES]
-
-
-def test_registrable_domain_cases(spark):
-    df = spark.createDataFrame([(h,) for h, _ in DOMAIN_CASES], "h string")
-    got = [r.d for r in
-           df.select(registrable_domain(F.col("h")).alias("d")).collect()]
-    assert got == [want for _, want in DOMAIN_CASES]
-
-
-def _pages(spark):
-    rows = [
-        (1, "https://www.spam.com/a", 100),
-        (2, "https://blog.spam.com/b", 200),   # same registrable domain
-        (3, "https://ok.org/a", 50),
-        (4, "https://ok.org/b", 70),
-        (5, "https://big.net/1", 10),
-        (6, "https://big.net/2", 10),
-        (7, "https://big.net/3", 10),
-        (8, "https://small.io/x", 99),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, url string, n_chars long")
-
-
-def test_domain_stats_rollup(spark):
-    out = {r.domain: (r.n_docs, r.total_chars)
-           for r in domain_stats(_pages(spark)).collect()}
-    assert out == {
-        "spam.com": (2, 300),
-        "ok.org": (2, 120),
-        "big.net": (3, 30),
-        "small.io": (1, 99),
-    }
-
-
-def test_domain_filter_blocklist_and_cap(spark):
-    bl = spark.createDataFrame([("spam.com",)], "domain string")
-    kept = sorted(
-        r.doc_id
-        for r in domain_filter(_pages(spark), bl,
-                               max_docs_per_domain=2).collect()
-    )
-    # spam.com blocklisted (1,2); big.net over the 2-doc cap (5,6,7)
-    assert kept == [3, 4, 8]
-    # schema passthrough: gate drops rows, never alters columns
-    cols = domain_filter(_pages(spark), bl).columns
-    assert cols == ["doc_id", "url", "n_chars"]
-
-
-def test_domain_filter_is_broadcast_anti_join(spark):
-    bl = spark.createDataFrame([("spam.com",)], "domain string")
-    plan = domain_filter(_pages(spark), bl, max_docs_per_domain=2) \
-        ._jdf.queryExecution().executedPlan().toString()
-    # both gates join broadcast-side — the page table never shuffles
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "LeftAnti" in plan
-    assert "BatchEvalPython" not in plan
 
 
 # -- Gopher word gates --------------------------------------------------------
@@ -143,188 +65,3 @@ def test_doc_word_stats_is_pure_codegen(spark):
     plan = doc_word_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-# -- C4 badword filter --------------------------------------------------------
-
-
-@pytest.mark.parametrize(
-    "text,hits",
-    [
-        ("A normal sentence about cooking.", 0),
-        ("Win at the CASINO, tonight!", 1),       # case + edge punct
-        ("cheap viagra; cialis.", 2),             # two distinct words
-        ("visiting casinos legally", 0),          # whole-word: no hit
-        ("xxx", 1),
-        ("", 0),
-    ],
-)
-def test_badword_hits_whole_word_rule(spark, text, hits):
-    df = spark.createDataFrame([(text,)], "t string")
-    assert df.select(badword_hits(F.col("t")).alias("h")).first().h == hits
-
-
-def test_badword_filter_drops_flagged_docs(spark):
-    df = spark.createDataFrame(
-        [(1, "clean text here"), (2, "hit the jackpot now")],
-        "doc_id long, text string",
-    )
-    assert [r.doc_id for r in badword_filter(df).collect()] == [1]
-
-
-# -- mojibake repair ----------------------------------------------------------
-
-
-def test_mojibake_roundtrip_repairs_planted_defects(spark):
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        fix_mojibake,
-    )
-
-    clean = "don’t stop — it’s café… “fine‘ – €99 ©"
-    moji = clean.encode("utf-8").decode("cp1252")
-    assert moji != clean
-    df = spark.createDataFrame([(moji,), (clean,), ("plain ascii",)],
-                               "t string")
-    got = [r.f for r in df.select(fix_mojibake(F.col("t")).alias("f"))
-           .collect()]
-    assert got[0] == clean          # defect repaired
-    assert got[1] == clean          # already-clean text untouched
-    assert got[2] == "plain ascii"  # ascii untouched
-
-
-def test_mojibake_stats_flags_and_nulls(spark):
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        mojibake_stats,
-    )
-
-    moji = "’".encode("utf-8").decode("cp1252")
-    df = spark.createDataFrame(
-        [(1, f"x {moji} y"), (2, "clean"), (3, None)],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in mojibake_stats(df).collect()}
-    assert rows[1].was_mojibake is True and "’" in rows[1].fixed_text
-    assert rows[2].was_mojibake is False
-    assert rows[3].was_mojibake is False and rows[3].fixed_text is None
-
-
-def test_mojibake_is_pure_codegen(spark):
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        mojibake_stats,
-    )
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    plan = mojibake_stats(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-# -- Unicode script profile ---------------------------------------------------
-
-
-def test_script_profile_dominance_and_fractions(spark):
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        script_profile,
-    )
-
-    rows = [
-        (1, "hello plain english text"),
-        (2, "привет мир сегодня"),
-        (3, "你好世界 こんにちは"),
-        (4, "مرحبا بالعالم"),
-        (5, "mixed текст here"),      # latin 9 letters vs cyrillic 5
-        (6, "12345 .,!?"),             # no profiled letters at all
-        (7, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in script_profile(df).collect()}
-    assert out[1].dominant_script == "latin" and out[1].latin_frac == 1.0
-    assert out[2].dominant_script == "cyrillic"
-    assert out[2].cyrillic_frac == 1.0
-    assert out[3].dominant_script == "cjk" and out[3].cjk_frac == 1.0
-    assert out[4].dominant_script == "arabic"
-    assert out[5].dominant_script == "latin"
-    assert 0.0 < out[5].cyrillic_frac < 1.0
-    assert out[6].dominant_script == "none"
-    assert out[7].dominant_script == "none" and out[7].latin_frac == 0.0
-
-
-def test_script_profile_is_pure_codegen(spark):
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        script_profile,
-    )
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    plan = script_profile(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_badword_filter_keeps_null_text_docs(spark):
-    df = spark.createDataFrame(
-        [(1, None), (2, "clean"), (3, "xxx spam")],
-        "doc_id long, text string",
-    )
-    kept = sorted(r.doc_id for r in badword_filter(df).collect())
-    assert kept == [1, 2]  # NULL text has no badwords — never dropped
-
-
-def test_host_template_detection_and_strip(spark):
-    """Host-scoped boilerplate: the per-host nav/footer lines clear the
-    df+share gates, cross-host unique lines never do; stripping removes
-    EVERY occurrence (within-doc repeats included), preserves order of
-    survivors, and empties all-boilerplate docs without dropping them."""
-    from intelligent_document_processing_on_aws_spark.operators.domains import (
-        host_template_lines,
-        strip_host_templates,
-    )
-
-    nav, foot = "Home | About | Contact", "(c) example"
-    rows = []
-    for i in range(6):
-        rows.append((i, "a.com", f"{nav}\nunique body {i}\n{foot}"))
-    rows.append((6, "a.com", f"{nav}\n{foot}"))          # all boilerplate
-    rows.append((7, "b.org", f"{nav}\nother site body"))  # nav df=1 on b.org
-    rows.append((8, "b.org", "just text"))
-    docs = spark.createDataFrame(rows, "doc_id long, host string, text string")
-
-    tpl = host_template_lines(docs, min_docs=3, min_share_ppm=500_000)
-    got = {(r.host, r.line): r for r in tpl.collect()}
-    assert ("a.com", nav) in got and ("a.com", foot) in got
-    assert got[("a.com", nav)].df == 7 and got[("a.com", nav)].host_docs == 7
-    assert got[("a.com", nav)].share_ppm == 1_000_000
-    assert not any(h == "b.org" for h, _ in got)      # never crosses hosts
-    assert not any(l.startswith("unique body") for _, l in got)
-
-    out = {r.doc_id: r for r in strip_host_templates(docs, tpl).collect()}
-    assert len(out) == 9
-    assert out[0].text_stripped == "unique body 0" and out[0].n_removed == 2
-    assert out[6].text_stripped == "" and out[6].n_removed == 2
-    assert out[7].text_stripped == f"{nav}\nother site body"  # b.org keeps nav
-    assert out[8].n_removed == 0
-
-
-def test_host_template_plans(spark):
-    """Detection: corpus crosses the wire once (no window, no join for
-    the gate until the tiny broadcast of host sizes); strip: template
-    table broadcast — the corpus side never SortMergeJoins."""
-    from intelligent_document_processing_on_aws_spark.operators.domains import (
-        host_template_lines,
-        strip_host_templates,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "h", "x\ny"), (2, "h", "x\nz")],
-        "doc_id long, host string, text string")
-    tpl = host_template_lines(docs, min_docs=2)
-    p1 = tpl._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in p1
-    assert "BroadcastHashJoin" in p1 and "SortMergeJoin" not in p1
-
-    # strip: the (host, line) template join must be broadcast — the
-    # corpus never shuffles for the GATE; the final doc_id rebuild join
-    # is corpus-to-corpus and legitimately shuffles.
-    p2 = strip_host_templates(docs, tpl) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in p2
-    assert "BroadcastHashJoin" in p2

@@ -2,7 +2,7 @@
 
 Runs the job's ``main`` against the session fixture (its ``spark.stop``
 patched out) inside a Spark job group, then checks the warehouse it
-leaves: the eleven tables, the summary counts, every golden section in
+leaves: the ten tables, the summary counts, every golden section in
 its class table with its golden values, every document's latest status,
 and the number of Spark jobs the run took.
 """
@@ -26,13 +26,13 @@ FIXTURES = os.path.join(REPO, "fixtures_data")
 CLASSES = ("bank_statement", "invoice", "tax_form", "webpage")
 WAREHOUSE_TABLES = sorted(
     [f"document_sections_{c}" for c in CLASSES]
-    + ["confidence_alerts", "document_status", "document_summaries",
-       "document_summaries_md", "evaluation_metrics_by_class",
-       "evaluation_metrics_overall", "evaluation_reports"]
+    + ["confidence_alerts", "document_status", "document_summaries_md",
+       "evaluation_metrics_by_class", "evaluation_metrics_overall",
+       "evaluation_reports"]
 )
 # every stage's output is computed once and the statuses are one append:
-# 41 Spark jobs on these fixtures (77 when each stage re-ran its inputs)
-MAX_SPARK_JOBS = 45
+# 38 Spark jobs on these fixtures (77 when each stage re-ran its inputs)
+MAX_SPARK_JOBS = 42
 
 
 def _load_job():
@@ -92,7 +92,7 @@ def test_pipeline_writes_every_table_and_summary(evaluated):
     assert summary["jvm_jit_s"] >= 0
     # the counts the job observed are the rows it committed
     assert len(_rows(wh, "confidence_alerts")) == 36
-    assert len(_rows(wh, "document_summaries")) == 400
+    assert len(_rows(wh, "document_summaries_md")) == 400
     assert len(_rows(wh, "evaluation_reports")) == 400
     overall = _rows(wh, "evaluation_metrics_overall")
     assert len(overall) == 1

@@ -165,121 +165,6 @@ def test_ocr_table_markdown_plan_vectorized(spark):
     assert "Exchange" not in plan  # row-parallel: no shuffle at all
 
 
-def test_round3_ngram_plan_hashed_keys_and_anti_join(spark):
-    """The shingle pipeline shuffles 8-byte xxhash64 keys (never the
-    shingle strings) and applies the df-cap as a broadcast LeftAnti join
-    against the violator set — no per-row Python anywhere."""
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"some text body number {i} with shared tokens") for i in range(50)],
-        "doc_id long, text string",
-    )
-    # materialize=False keeps full lineage so the audit can see inside
-    # the posting-table build (the default lazily checkpoints it)
-    df = ngram_jaccard_pairs(docs, max_df=10, materialize=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "xxhash64" in plan
-    assert "LeftAnti" in plan and "BroadcastExchange" in plan
-    # the self-join keys on the hashed bigint column
-    assert "sh#" in plan
-
-
-def test_round3_bucket_cap_anti_join(spark):
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        _cap_buckets,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"k{i % 3}") for i in range(30)], "doc_id long, band_key string")
-    plan = (_cap_buckets(df, ["band_key"], 5)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "LeftAnti" in plan and "BroadcastExchange" in plan
-
-
-def test_dedup_posting_tables_checkpointed_by_default(spark):
-    """The default pipelines materialize the (capped) posting/signature
-    table once: the final plan reads an RDD scan where the checkpoint
-    truncated lineage, instead of re-running the kernels per branch."""
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"some text body number {i} with shared tokens") for i in range(30)],
-        "doc_id long, text string",
-    )
-    for fn in (ngram_jaccard_pairs, minhash_lsh_pairs):
-        df = fn(docs)
-        df.count()  # checkpoint happens on first compute
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, fn.__name__
-
-
-def test_round5_webfilter_plans(spark):
-    """r4 web operators, pinned so a shuffle or a Python hop cannot creep
-    back in unnoticed: c4_clean and pii_stats
-    are map-only codegen'd projections (zero Exchange, zero Python);
-    url_dedup has exactly ONE Exchange (the canonical-key window) and no
-    Python; doc_quality is one MapInPandas over the scan with zero
-    Exchange."""
-    from intelligent_document_processing_on_aws_spark.operators.quality import (
-        doc_quality,
-    )
-    from intelligent_document_processing_on_aws_spark.operators.webfilters import (
-        c4_clean,
-        pii_stats,
-        url_dedup,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "A proper sentence with five words.", "https://x.example/p")],
-        "doc_id long, text string, url string")
-
-    for op in (c4_clean, pii_stats):
-        plan = _plan(op(docs))
-        assert "BatchEvalPython" not in plan, op.__name__
-        assert "MapInPandas" not in plan, op.__name__
-        assert "Exchange" not in plan, op.__name__
-
-    plan = _plan(url_dedup(docs))
-    assert "BatchEvalPython" not in plan
-    assert plan.count("Exchange") == 1, plan[:1500]
-    assert "Window" in plan
-
-    plan = _plan(doc_quality(docs))
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan
-    assert plan.count("MapInPandas") == 1
-
-
-def test_canonical_selection_plan_one_window_no_python(spark):
-    """canonical_selection stays relational: the argmax-per-group is a
-    single Window over group_id (running first_value), never an agg+join
-    second pass and never Python — downstream of the score join there is
-    exactly one group_id Exchange feeding one Window."""
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        canonical_selection,
-    )
-
-    groups = spark.createDataFrame(
-        [(1, 1, 2, True), (2, 1, 2, False)],
-        "doc_id long, group_id long, group_size long, is_duplicate boolean")
-    quality = spark.createDataFrame(
-        [(1, 10), (2, 20)], "doc_id long, quality long")
-    plan = _plan(canonical_selection(groups, quality, "quality"))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert plan.count("Window") == 1, plan[:1500]
-    # shuffles: the doc_id equi-join sides + ONE group_id partitioning for
-    # the window — no extra agg/join round-trip for the argmax
-    assert plan.count("hashpartitioning(group_id") == 1, plan[:2000]
-
-
 def test_round5_semantic_lookup_hashed_join_key(spark):
     """The SEMANTIC embeddings lookup joins on xxhash64(text) — an 8-byte
     bigint shuffle key — with the raw-string equality kept only as a
@@ -335,24 +220,6 @@ def test_round5_lm_perplexity_plan_single_arrow_pass(spark):
     assert "Exchange" not in plan
 
 
-def test_round5_line_dedup_plan_pure_relational(spark):
-    """Cross-document line dedup stays entirely JVM-side: posexplode +
-    window + distinct-agg + joins, no Python stage of any kind, and a
-    bounded number of shuffles (line window, distinct DF agg, doc
-    rebuild + joins)."""
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        line_dedup,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x\ny"), (2, "x\nz")], "doc_id long, text string")
-    plan = _plan(line_dedup(docs))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "Window" in plan
-    assert plan.count("Exchange") <= 8, plan.count("Exchange")
-
-
 def test_round5_audio_plans_map_only(spark):
     """Audio decode/probe stages are one Arrow MapInPandas over the
     payload scan — zero Exchange; at 100 TB they scale exactly like the
@@ -391,25 +258,6 @@ def test_round5_sampling_plans(spark):
     temp = _plan(temperature_sample(df, "lang", 100))
     assert "BatchEvalPython" not in temp
     assert "BroadcastHashJoin" in temp or "BroadcastNestedLoopJoin" in temp
-
-
-def test_winnow_fingerprints_plan_single_doc_exchange(spark):
-    """winnow_fingerprints: gram explode is map-side and the ordered
-    frame + per-doc count + final distinct all run off ONE doc_id
-    Exchange; the argmin is a JVM array aggregate — no Python, no
-    second shuffle before the distinct's partial agg."""
-    from intelligent_document_processing_on_aws_spark.operators.dedup import (
-        winnow_fingerprints,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h"), (2, "x y z w v u t")],
-        "doc_id long, text string")
-    plan = _plan(winnow_fingerprints(docs))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert plan.count("hashpartitioning(doc_id") <= 2, plan[:2000]
-    assert "Window" in plan
 
 
 def test_sitemap_queries_plan_shapes(spark):

@@ -15,11 +15,6 @@ from intelligent_document_processing_on_aws_spark.kernels.compare import (
     hungarian_min_cost,
     levenshtein,
 )
-from intelligent_document_processing_on_aws_spark.kernels.fingerprint import (
-    hamming64,
-    jaccard,
-    simhash64,
-)
 from intelligent_document_processing_on_aws_spark.kernels.pagination import (
     text_to_pages,
     wrap_lines,
@@ -72,13 +67,6 @@ def test_hungarian_rectangular(rows, cols, seed):
     assert len(pairs) == min(rows, cols)
     assert len({i for i, _ in pairs}) == len(pairs)
     assert len({j for _, j in pairs}) == len(pairs)
-
-
-@settings(max_examples=40, deadline=None)
-@given(texts)
-def test_jaccard_self_identity(t):
-    assert jaccard(t, t) == 1.0
-    assert 0 <= hamming64(simhash64(t), simhash64(t + " zz")) <= 64
 
 
 @settings(max_examples=40, deadline=None)

@@ -26,7 +26,6 @@ from intelligent_document_processing_on_aws_spark.operators.metering import (
     with_costs,
 )
 from intelligent_document_processing_on_aws_spark.operators.summarize import (
-    assemble_document_markdown,
     summarize_sections,
 )
 
@@ -88,17 +87,6 @@ def test_summarize_and_assemble(spark):
             for r in summarize_sections(secs).collect()}
     assert summ[(1, "1")] == " ".join(f"w{i}" for i in range(25))
     assert summ[(1, "2")] == "short text"
-
-    docs = {r.doc_id: r for r in
-            assemble_document_markdown(summarize_sections(secs)).collect()}
-    md = docs[1].document_markdown
-    assert md.startswith("# Document 1")
-    assert "## Table of Contents" in md
-    assert "- [Section 1: invoice](#section-1)" in md
-    assert "## Section 2: webpage" in md
-    assert docs[1].n_sections == 2
-    # section order is numeric
-    assert md.index("## Section 1:") < md.index("## Section 2:")
 
 
 def test_assessment_confidence_tiers(spark):
