@@ -10,8 +10,7 @@ Spark engine over Common-Crawl-style web-page tables:
 - ``operators/``  DataFrame->DataFrame transforms (extraction stage,
                   classification + sectioning, attribute extraction,
                   evaluation, assessment, summaries, metering, crawl
-                  and link graph; corpus-curation operators that only
-                  their tests reach).
+                  and link graph).
 - ``sources/``    warehouse read/write helpers (parquet locally; Iceberg
                   layout in production).
 - ``plans/``      end-to-end pipelines + lineage/resume.

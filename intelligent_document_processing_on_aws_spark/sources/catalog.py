@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 from ..operators.attributes import attribute_schema
 
 
-def write_partitioned(df: DataFrame, path: str, date_col: str = "date",
-                      mode: str = "append") -> None:
-    df.write.mode(mode).partitionBy(date_col).parquet(path)
-
-
 def write_metrics_table(metrics: DataFrame, warehouse: str, name: str,
                         event_time_col: str | None = None,
                         mode: str = "append") -> None:
@@ -39,7 +34,7 @@ def write_metrics_table(metrics: DataFrame, warehouse: str, name: str,
         df = df.withColumn("date", F.date_format(F.col(event_time_col), "yyyy-MM-dd"))
     elif "date" not in df.columns:
         df = df.withColumn("date", F.lit("1970-01-01"))
-    write_partitioned(df, os.path.join(warehouse, name), "date", mode)
+    df.write.mode(mode).partitionBy("date").parquet(os.path.join(warehouse, name))
 
 
 def write_document_sections(attrs: DataFrame, warehouse: str,

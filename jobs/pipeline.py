@@ -54,7 +54,11 @@ from intelligent_document_processing_on_aws_spark.session import get_spark, jit_
 from intelligent_document_processing_on_aws_spark.sources.catalog import (  # noqa: E402
     list_warehouse_tables,
     write_document_sections,
+    write_metrics_table,
 )
+
+# the date partition of the evaluation metric tables
+REPORT_DATE = "2025-01-01"
 
 
 def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -126,18 +130,17 @@ def main() -> int:
     if args.expected:
         expected = spark.read.parquet(args.expected)
         counted = persist(evaluate_attributes(expected, flat_actual, cfg))
-        metrics_rollup(counted, "classification").withColumn(
-            "date", F.lit("2025-01-01")
-        ).write.mode("overwrite").partitionBy("date").parquet(
-            os.path.join(wh, "evaluation_metrics_by_class"))
+        write_metrics_table(
+            metrics_rollup(counted, "classification").withColumn("date", F.lit(REPORT_DATE)),
+            wh, "evaluation_metrics_by_class", mode="overwrite")
         # the overall rollup is one row: collect it once for the summary
         # and write the table from that row
         overall_df = metrics_rollup(counted)
         overall = overall_df.collect()[0]
-        spark.createDataFrame([overall], overall_df.schema).withColumn(
-            "date", F.lit("2025-01-01")
-        ).write.mode("overwrite").partitionBy("date").parquet(
-            os.path.join(wh, "evaluation_metrics_overall"))
+        write_metrics_table(
+            spark.createDataFrame([overall], overall_df.schema).withColumn(
+                "date", F.lit(REPORT_DATE)),
+            wh, "evaluation_metrics_overall", mode="overwrite")
         # the report's Confidence columns consume the UPSTREAM assessment
         # (the reference reads explainability_info from the stored result)
         reports, n_reports = _observed(evaluation_report(

@@ -5,7 +5,8 @@ script entry points and the root ``*.py``, and resolves each import of
 the package — including the function-level lazy ones that only run on
 some branch — to an existing module and to a name that module defines at
 top level. A lazy import of a deleted module or helper then fails here,
-not on the first production run that takes that branch.
+not on the first production run that takes that branch. The same walk,
+from the entry points, finds the package modules nothing runs.
 """
 
 from __future__ import annotations
@@ -88,13 +89,18 @@ def _package_imports(path: str, tree: ast.Module):
                 yield node.lineno, base, None if a.name == "*" else a.name
 
 
-def test_every_package_import_resolves():
-    files = _program_files()
+def _parse_program() -> tuple[dict[str, ast.Module], dict[str, str]]:
+    """(path -> syntax tree, package module name -> path)."""
     trees = {}
-    for path in files:
+    for path in _program_files():
         with open(path, encoding="utf-8") as f:
             trees[path] = ast.parse(f.read(), path)
-    modules = {_module_name(p): p for p in files if _module_name(p).startswith(PKG)}
+    modules = {_module_name(p): p for p in trees if _module_name(p).startswith(PKG)}
+    return trees, modules
+
+
+def test_every_package_import_resolves():
+    trees, modules = _parse_program()
     defined: dict[str, set[str]] = {}
 
     def names_of(module: str) -> set[str]:
@@ -104,7 +110,7 @@ def test_every_package_import_resolves():
 
     problems = []
     n_checked = 0
-    for path in files:
+    for path in trees:
         rel = os.path.relpath(path, REPO_ROOT)
         for line, module, name in _package_imports(path, trees[path]):
             n_checked += 1
@@ -115,3 +121,44 @@ def test_every_package_import_resolves():
                 problems.append(f"{rel}:{line}: {module} defines no {name!r}")
     assert n_checked > 100, n_checked  # the walk really saw the program
     assert not problems, "\n".join(problems)
+
+
+# Package modules that no entry point reaches, relative to the package.
+# Deleting one, or giving it a job path, shortens this list; a new module
+# that no entry point reaches fails the test below.
+UNREACHED = {
+    "fixtures.sentences_gen",
+    "functions",
+    "functions.scalars",
+    "kernels.confidence",
+    "kernels.markdown_pages",
+    "kernels.sentences",
+    "kernels.structured",
+    "sources.pages_source",
+}
+
+
+def test_every_module_is_reached_or_listed():
+    """Walks the package imports, lazy ones included, from the entry
+    points: the root ``*.py``, ``jobs/``, ``scripts/`` and the fixture
+    builder. Importing a module also runs its parent packages."""
+    trees, modules = _parse_program()
+    reached: set[str] = set()
+    todo = [p for p in trees if not _module_name(p).startswith(PKG)]
+
+    def reach(module: str) -> None:
+        parts = module.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m in modules and m not in reached:
+                reached.add(m)
+                todo.append(modules[m])
+
+    reach(f"{PKG}.fixtures.build")
+    while todo:
+        path = todo.pop()
+        for _, module, name in _package_imports(path, trees[path]):
+            sub = f"{module}.{name}"
+            reach(sub if sub in modules else module)
+    unreached = {m[len(PKG) + 1:] for m in modules if m not in reached}
+    assert unreached == UNREACHED

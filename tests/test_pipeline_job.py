@@ -99,6 +99,10 @@ def test_pipeline_writes_every_table_and_summary(evaluated):
     assert overall[0]["f1_score"] == 1.0 and overall[0]["accuracy"] == 1.0
     assert {r["classification"] for r in _rows(wh, "evaluation_metrics_by_class")} \
         == set(CLASSES)
+    # both metric tables are date-partitioned, with the one report date
+    for table in ("evaluation_metrics_by_class", "evaluation_metrics_overall"):
+        parts = [d for d in os.listdir(os.path.join(wh, table)) if "=" in d]
+        assert parts == ["date=2025-01-01"], (table, parts)
 
 
 def test_pipeline_sections_match_golden(evaluated):

@@ -203,23 +203,6 @@ def test_warc_ingestion_plan_map_only(spark):
     assert plan.count("MapInPandas") == 1
 
 
-def test_round5_lm_perplexity_plan_single_arrow_pass(spark):
-    """CCNet perplexity scoring is ONE broadcast-model Arrow pass over
-    the corpus: a single MapInPandas, zero Exchange, zero row-Python."""
-    from intelligent_document_processing_on_aws_spark.operators.lm_filter import (
-        BigramLM,
-        score_perplexity,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "c d")], "doc_id long, text string")
-    lm = BigramLM(unigram={"a": 2, "b": 2}, bigram={("a", "b"): 2}, v=3)
-    plan = _plan(score_perplexity(docs, lm))
-    assert "BatchEvalPython" not in plan
-    assert plan.count("MapInPandas") == 1
-    assert "Exchange" not in plan
-
-
 def test_round5_audio_plans_map_only(spark):
     """Audio decode/probe stages are one Arrow MapInPandas over the
     payload scan — zero Exchange; at 100 TB they scale exactly like the
@@ -236,28 +219,6 @@ def test_round5_audio_plans_map_only(spark):
         assert "BatchEvalPython" not in plan, op.__name__
         assert plan.count("MapInPandas") == 1, op.__name__
         assert "Exchange" not in plan, op.__name__
-
-
-def test_round5_sampling_plans(spark):
-    """hash_sample is a pure codegen'd filter inside the scan stage
-    (zero Exchange, zero Python); temperature_sample shuffles only the
-    tiny per-stratum rates table and broadcasts it back."""
-    from intelligent_document_processing_on_aws_spark.operators.sampling import (
-        hash_sample,
-        temperature_sample,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "en", 10)], "doc_id long, lang string, n_tokens long")
-    plan = _plan(hash_sample(df, 500_000))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "Exchange" not in plan
-    strat = _plan(hash_sample(df, {"en": 1}, stratum_col="lang"))
-    assert "Exchange" not in strat
-    temp = _plan(temperature_sample(df, "lang", 100))
-    assert "BatchEvalPython" not in temp
-    assert "BroadcastHashJoin" in temp or "BroadcastNestedLoopJoin" in temp
 
 
 def test_sitemap_queries_plan_shapes(spark):

@@ -335,45 +335,7 @@ def test_differences_mapping_consistent(names, start):
         assert got == want
 
 
-# --- BPE + robots ------------------------------------------------------------
-
-_word_st = st.text(
-    alphabet=st.characters(whitelist_categories=("Ll", "Nd")),
-    min_size=1, max_size=12,
-)
-
-
-@given(st.dictionaries(_word_st, st.integers(1, 50), min_size=1, max_size=20),
-       st.integers(0, 30))
-@settings(max_examples=60, deadline=None)
-def test_bpe_encode_concat_invariant(counts, n_merges):
-    """Encoding never alters content: joined subtokens == word + EOW,
-    for any trained merge table and any word (seen or unseen)."""
-    from intelligent_document_processing_on_aws_spark.kernels.bpe import (
-        EOW, encode_word, make_ranks, train_merges,
-    )
-
-    ranks = make_ranks(train_merges(counts, n_merges))
-    for w in list(counts)[:10] + ["unseenword", "a"]:
-        enc = encode_word(w, ranks)
-        assert "".join(enc) == w + EOW
-        assert all(s for s in enc)
-
-
-@given(st.dictionaries(_word_st, st.integers(1, 50), min_size=1, max_size=15))
-@settings(max_examples=30, deadline=None)
-def test_bpe_more_merges_never_lengthen(counts):
-    """Monotonicity: training more merges never increases any trained
-    word's encoded length."""
-    from intelligent_document_processing_on_aws_spark.kernels.bpe import (
-        encode_word, make_ranks, train_merges,
-    )
-
-    r_small = make_ranks(train_merges(counts, 3))
-    r_big = make_ranks(train_merges(counts, 12))
-    for w in counts:
-        assert len(encode_word(w, r_big)) <= len(encode_word(w, r_small))
-
+# --- robots ------------------------------------------------------------------
 
 _path_st = st.text(
     alphabet=st.sampled_from(list("ab/.%_*$x1")), min_size=0, max_size=14)
