@@ -9,8 +9,7 @@ Spark engine over Common-Crawl-style web-page tables:
                   the byte-identity surface, unit-testable without Spark.
 - ``operators/``  DataFrame->DataFrame transforms (extraction stage,
                   classification + sectioning, attribute extraction,
-                  evaluation, assessment, summaries, metering, crawl
-                  and link graph).
+                  evaluation, assessment, summaries, metering).
 - ``sources/``    warehouse read/write helpers (parquet locally; Iceberg
                   layout in production).
 - ``plans/``      end-to-end pipelines + lineage/resume.

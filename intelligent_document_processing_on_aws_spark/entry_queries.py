@@ -3,8 +3,8 @@
 Each entry implements one operator family of the paper's dataflow
 (SURVEY.md §2: extraction and decoders, images and media, sectioning,
 attributes, assessment, summaries, evaluation, validation and status,
-metering) or of the Common-Crawl ingest path (WARC, CDX, crawl and link
-graph) as a (spark, sf_dir) -> DataFrame callable, paired with an
+metering) or of the Common-Crawl ingest path (WARC records and revisits)
+as a (spark, sf_dir) -> DataFrame callable, paired with an
 ANSI-SQL oracle DuckDB runs on the same inputs. From sf_dir the queries
 read only the ``documents`` and ``events`` tables. Column names and dtypes
 are aligned pair-wise; float-valued columns are either bit-identical by
@@ -550,287 +550,6 @@ def _sql_html_meta() -> str:
         "SELECT doc_id, title, description, canonical, lang, robots_meta, "
         "og_title, og_description, og_url, og_image, og_type "
         f"FROM read_parquet('{_fx('html_meta_golden.parquet')}')"
-    )
-
-
-def q_sitemap_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML sitemap parsing (kernels/sitemap — beyond reference, which
-    has no crawl frontier; pairs with robots.txt's surfaced Sitemap
-    lines): urlset + sitemapindex, gzip payloads, namespace prefixes,
-    entities, W3C lastmod normalization to epoch seconds, out-of-range
-    field nulling, loc-less block skipping, wrong-root error rows.
-    Map-only Arrow pass over raw binary, zero shuffles. Oracle: the
-    generator's composition facts (lastmod epochs computed from the
-    datetime objects the generator drew, never by the kernel)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .kernels.sitemap import parse_sitemap
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("entry_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("loc", T.StringType()),
-            T.StructField("lastmod_epoch", T.LongType()),
-            T.StructField("changefreq", T.StringType()),
-            T.StructField("priority", T.DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["raw"]):
-                r = parse_sitemap(bytes(raw))
-                if r.kind == "error":
-                    rows.append((doc_id, None, "error", None, None, None,
-                                 None))
-                    continue
-                for j, e in enumerate(r.entries):
-                    rows.append((doc_id, j, r.kind, e.loc, e.lastmod_epoch,
-                                 e.changefreq, e.priority))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "entry_id", "kind", "loc",
-                               "lastmod_epoch", "changefreq", "priority"]
-            )
-
-    src = spark.read.parquet(_fx("sitemap_docs.parquet")).select("doc_id", "raw")
-    return src.mapInPandas(run, schema)
-
-
-def _sql_sitemap_entries() -> str:
-    return (
-        "SELECT doc_id, entry_id, kind, loc, lastmod_epoch, changefreq, "
-        f"priority FROM read_parquet('{_fx('sitemap_golden.parquet')}')"
-    )
-
-
-def q_sitemap_fetchlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The polite-recrawl frontier (operators/cdx.frontier_fetchlist):
-    sitemap-declared URLs joined against the latest capture per url —
-    never-captured locs fetch as 'new', declared-lastmod-postdates-
-    capture locs fetch as 'stale', captured locs without a declared
-    lastmod are trusted fresh. Both sides reduce map-side (one row per
-    distinct url crosses the wire, not one per capture). The capture
-    index is synthesized from `documents` by formula in the same URL
-    space the sitemap generator draws locs from, so new/stale/fresh
-    populations are all genuinely exercised; the Spark side parses the
-    sitemap XML for real (kernels/sitemap) while the oracle reads the
-    generator facts."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .kernels.sitemap import parse_sitemap
-    from .operators.cdx import frontier_fetchlist
-
-    e_schema = T.StructType(
-        [
-            T.StructField("loc", T.StringType()),
-            T.StructField("lastmod_epoch", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            locs, lms = [], []
-            for raw in pdf["raw"]:
-                r = parse_sitemap(bytes(raw))
-                for e in r.entries:
-                    locs.append(e.loc)
-                    lms.append(e.lastmod_epoch)
-            yield pd.DataFrame({"loc": pd.Series(locs, dtype="object"),
-                                "lastmod_epoch": pd.Series(lms)})
-
-    entries = (
-        spark.read.parquet(_fx("sitemap_docs.parquet"))
-        .select("raw").mapInPandas(run, e_schema)
-    )
-    did = F.col("doc_id")
-    captures = _docs(spark, sf_dir).select(
-        F.concat(F.lit("https://site"), (did % 10).cast("string"),
-                 F.lit(".example.com/p/"), (did % 1000).cast("string"))
-        .alias("url"),
-        (F.lit(1704067200).cast("long")
-         + (did * 5023) % 24000000).alias("capture_ts"),
-    )
-    return frontier_fetchlist(entries, captures)
-
-
-def _sql_sitemap_fetchlist() -> str:
-    return f"""
-WITH e AS (
-  SELECT loc, max(lastmod_epoch) AS lastmod_epoch
-  FROM read_parquet('{_fx('sitemap_golden.parquet')}')
-  WHERE loc IS NOT NULL GROUP BY loc
-), c AS (
-  SELECT 'https://site' || CAST(doc_id % 10 AS VARCHAR)
-           || '.example.com/p/' || CAST(doc_id % 1000 AS VARCHAR) AS url,
-         max(1704067200 + (doc_id * 5023) % 24000000) AS capture_ts
-  FROM documents GROUP BY 1
-)
-SELECT e.loc, e.lastmod_epoch, c.capture_ts,
-       CASE WHEN c.capture_ts IS NULL THEN 'new' ELSE 'stale' END AS reason
-FROM e LEFT JOIN c ON e.loc = c.url
-WHERE c.capture_ts IS NULL OR e.lastmod_epoch > c.capture_ts
-"""
-
-
-def q_feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS 2.0 / Atom feed parsing (kernels/feeds — beyond reference,
-    which has no crawl-discovery surface; the change-feed companion to
-    kernels/sitemap): RFC 822 vs ISO-8601 dates, CDATA titles,
-    rel=alternate link preference over self/enclosure noise,
-    link-less item skipping, wrong-root error rows; gzip + the shared
-    WHATWG decode chain. Map-only Arrow pass, zero shuffles. Oracle:
-    the generator's composition facts (pub epochs computed from the
-    datetime objects the generator drew, never by the kernel)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .kernels.feeds import parse_feed
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("entry_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("feed_title", T.StringType()),
-            T.StructField("link", T.StringType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("guid", T.StringType()),
-            T.StructField("pub_epoch", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["raw"]):
-                r = parse_feed(bytes(raw))
-                if r.kind == "error":
-                    rows.append((doc_id, None, "error", None, None, None,
-                                 None, None))
-                    continue
-                for j, e in enumerate(r.entries):
-                    rows.append((doc_id, j, r.kind, r.feed_title, e.link,
-                                 e.title, e.guid, e.pub_epoch))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "entry_id", "kind", "feed_title",
-                               "link", "title", "guid", "pub_epoch"]
-            )
-
-    src = spark.read.parquet(_fx("feed_docs.parquet")).select("doc_id", "raw")
-    return src.mapInPandas(run, schema)
-
-
-def _sql_feed_entries() -> str:
-    return (
-        "SELECT doc_id, entry_id, kind, feed_title, link, title, guid, "
-        f"pub_epoch FROM read_parquet('{_fx('feed_golden.parquet')}')"
-    )
-
-
-def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host politeness scheduling (operators/cdx.politeness_schedule):
-    every URL gets its in-host slot (deterministic loc order) and its
-    earliest polite fetch time eta = start + (seq-1) x host crawl-delay;
-    a max_per_host=50 budget caps giant hosts (the rank-limit spelling
-    plans WindowGroupLimit, so oversized hosts prune map-side before
-    the shuffle). Inputs are deterministic: distinct urlset locs from
-    the sitemap golden; per-host delays by formula (1 + len(host)%5,
-    broadcast-joined). Oracle: the identical host filter, window and
-    formula chain in DuckDB."""
-    from .operators.cdx import politeness_schedule
-
-    locs = (
-        spark.read.parquet(_fx("sitemap_golden.parquet"))
-        .where((F.col("kind") == "urlset") & F.col("loc").isNotNull())
-        .select("loc").distinct()
-    )
-    delays = (
-        locs.select(
-            F.regexp_extract("loc", r"^https?://([^/]+)", 1).alias("host"))
-        .distinct()
-        .select("host", (F.lit(1) + F.length("host") % 5)
-                .cast("long").alias("crawl_delay"))
-    )
-    return politeness_schedule(locs, delays=delays,
-                               start_epoch=1717200000, max_per_host=50)
-
-
-def _sql_fetch_schedule() -> str:
-    return f"""
-WITH locs AS (
-  SELECT DISTINCT loc FROM read_parquet('{_fx('sitemap_golden.parquet')}')
-  WHERE kind = 'urlset' AND loc IS NOT NULL
-), x AS (
-  SELECT loc, regexp_extract(loc, '^https?://([^/]+)', 1) AS host FROM locs
-), seq AS (
-  SELECT loc, host,
-         row_number() OVER (PARTITION BY host ORDER BY loc) AS fetch_seq
-  FROM x WHERE host <> ''
-)
-SELECT loc, host, fetch_seq,
-       1717200000 + (fetch_seq - 1) * (1 + length(host) % 5) AS eta_epoch
-FROM seq WHERE fetch_seq <= 50
-"""
-
-
-def q_page_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Published-date extraction (kernels/pagedate — beyond reference,
-    which has no crawl-side recency surface): the precedence ladder
-    over redundant declarations — head-bounded article:published_time /
-    modified_time / name=date metas, first <time datetime> in the body,
-    /YYYY/MM/DD/ or /YYYY-MM-DD URL path segments (sanity-ranged,
-    calendar-validated) — emitting epoch + which surface won (how far
-    the date can be trusted). Map-only Arrow pass,
-    zero shuffles. Oracle: the generator's composition facts (dates
-    drawn as values first, pages rendered from them)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .kernels.pagedate import extract_page_date
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("date_epoch", T.LongType()),
-            T.StructField("date_source", T.StringType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            es, ss = [], []
-            for url, html_text in zip(pdf["url"], pdf["html"]):
-                r = extract_page_date(url, html_text)
-                es.append(r.epoch)
-                ss.append(r.source)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"],
-                 "date_epoch": pd.Series(es),
-                 "date_source": pd.Series(ss, dtype="object")}
-            )
-
-    src = spark.read.parquet(_fx("pagedate_docs.parquet")).select(
-        "doc_id", "url", "html")
-    return src.mapInPandas(run, schema)
-
-
-def _sql_page_dates() -> str:
-    return (
-        "SELECT doc_id, date_epoch, date_source "
-        f"FROM read_parquet('{_fx('pagedate_golden.parquet')}')"
     )
 
 
@@ -2402,580 +2121,6 @@ def _sql_eval_hungarian() -> str:
     )
 
 
-def q_capture_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capture-selection policies (operators/cdx.latest_captures +
-    canonical_captures): each url is synthesized with three crawls —
-    2023 original, 2024 identical re-fetch (same digest: a revisit),
-    2025 changed payload for odd docs only. The freshest capture per
-    url must be the 2025 one, and it is a stored FULL record iff its
-    digest first appeared then (odd docs); even docs' latest capture is
-    an identical re-fetch whose full record lives in 2023. The oracle
-    states that closed-form."""
-    from .operators.cdx import canonical_captures, latest_captures
-
-    d = _docs(spark, sf_dir)
-    did = F.col("doc_id")
-    urlkey = F.concat(F.lit("com,example)/"), did.cast("string"))
-    dg0 = F.md5(F.concat(did.cast("string"), F.col("text")))
-    dg1 = F.md5(F.concat(did.cast("string"), F.col("text"), F.lit("v2")))
-    caps = d.select(
-        urlkey.alias("urlkey"),
-        F.explode(F.array(
-            F.struct(F.lit("20230101000000").alias("ts"),
-                     dg0.alias("digest")),
-            F.struct(F.lit("20240101000000").alias("ts"),
-                     dg0.alias("digest")),
-            F.struct(F.lit("20250101000000").alias("ts"),
-                     F.when(did % 2 == 0, dg0).otherwise(dg1)
-                     .alias("digest")),
-        )).alias("c"),
-    ).select(
-        "urlkey", F.col("c.ts").alias("ts"),
-        F.col("c.digest").alias("digest"),
-        F.concat(F.lit("crawl-"), F.col("c.ts"), F.lit(".warc.gz"))
-        .alias("filename"),
-    )
-    latest = latest_captures(caps)
-    full = canonical_captures(caps).select(
-        "urlkey", "ts").withColumn("__full", F.lit(True))
-    return (
-        latest.join(full, ["urlkey", "ts"], "left")
-        .select(
-            "urlkey", "ts", "digest",
-            F.coalesce("__full", F.lit(False))
-            .alias("is_stored_full_record"),
-        )
-    )
-
-
-def _sql_capture_policy() -> str:
-    return """
-        SELECT 'com,example)/' || doc_id::VARCHAR AS urlkey,
-               '20250101000000' AS ts,
-               CASE WHEN doc_id % 2 = 0
-                    THEN md5(doc_id::VARCHAR || text)
-                    ELSE md5(doc_id::VARCHAR || text || 'v2') END AS digest,
-               doc_id % 2 = 1 AS is_stored_full_record
-        FROM documents
-    """
-
-
-def q_cdx_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-Crawl CDXJ capture-index selection (operators/cdx.py):
-    parse ``<urlkey> <ts> <json>`` lines natively (positional head
-    split + from_json), drop malformed lines, select status-200
-    text/html English captures.  The CDXJ lines are synthesized
-    deterministically from `documents` (every doc_id%41 line is
-    corrupt-JSON and must be dropped by the parser, not crash it); the
-    oracle re-derives the expected selection directly from the same
-    formulas, so any split/parse/cast/filter defect mismatches."""
-    from .operators.cdx import cdx_select, parse_cdxj
-
-    d = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source",
-                                    "n_chars")
-    did = F.col("doc_id")
-    urlkey = F.concat(
-        F.lit("com,site"), (did % 10).cast("string"), F.lit(")/"),
-        F.col("source"), F.lit("/"), did.cast("string"))
-    ts = F.format_string(
-        "2024%02d%02d%02d%02d%02d",
-        (did % 12 + 1), (did % 28 + 1), (did % 24), (did % 60),
-        (did * 7 % 60))
-    rec = F.to_json(F.struct(
-        F.concat(F.lit("https://site"), (did % 10).cast("string"),
-                 F.lit(".com/"), F.col("source"), F.lit("/"),
-                 did.cast("string")).alias("url"),
-        F.when(did % 7 == 0, "404").otherwise("200").alias("status"),
-        F.when(did % 5 == 0, "application/pdf")
-         .otherwise("text/html").alias("mime"),
-        F.concat(F.lit("sha1:"), F.md5("text")).alias("digest"),
-        F.col("n_chars").cast("string").alias("length"),
-        (did * 1024).cast("string").alias("offset"),
-        F.concat(F.lit("crawl-0"), (did % 4).cast("string"),
-                 F.lit(".warc.gz")).alias("filename"),
-        F.concat(F.col("lang"),
-                 F.when(did % 3 == 0, ",fr").otherwise("")
-                 ).alias("languages"),
-    ))
-    tail = F.when(did % 41 == 0, F.lit("{corrupt")).otherwise(rec)
-    lines = d.select(F.concat_ws(" ", urlkey, ts, tail).alias("line"))
-    sel = cdx_select(parse_cdxj(lines), statuses=("200",),
-                     mimes=("text/html",), languages=("en",))
-    return sel.select("urlkey", "ts", "url", "status", "mime", "digest",
-                      "length", "offset", "filename", "languages")
-
-
-def _sql_cdx_select() -> str:
-    return """
-        SELECT
-            'com,site' || (doc_id % 10)::VARCHAR || ')/' || source ||
-                '/' || doc_id::VARCHAR AS urlkey,
-            printf('2024%02d%02d%02d%02d%02d',
-                   doc_id % 12 + 1, doc_id % 28 + 1, doc_id % 24,
-                   doc_id % 60, doc_id * 7 % 60) AS ts,
-            'https://site' || (doc_id % 10)::VARCHAR || '.com/' ||
-                source || '/' || doc_id::VARCHAR AS url,
-            '200' AS status,
-            'text/html' AS mime,
-            'sha1:' || md5(text) AS digest,
-            n_chars::BIGINT AS length,
-            (doc_id * 1024)::BIGINT AS "offset",
-            'crawl-0' || (doc_id % 4)::VARCHAR || '.warc.gz' AS filename,
-            lang || CASE WHEN doc_id % 3 = 0 THEN ',fr' ELSE '' END
-                AS languages
-        FROM documents
-        WHERE doc_id % 41 != 0    -- corrupt-JSON lines the parser drops
-          AND doc_id % 7 != 0     -- status 404
-          AND doc_id % 5 != 0     -- mime application/pdf
-          AND list_contains(string_split(
-                lang || CASE WHEN doc_id % 3 = 0 THEN ',fr' ELSE '' END,
-                ','), 'en')
-    """
-
-
-def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation (operators/linkgraph.anchor_terms): the
-    off-page description signal — top-3 anchor terms per target host
-    from real `<a href>text</a>` extraction over synthesized html.
-    Pages are synthesized deterministically from `documents` (two
-    absolute cross-host anchors built from the doc's own leading
-    tokens, plus a relative link the extractor must skip; same-host
-    anchors — every doc_id%5==0 — must be dropped by the cross-host
-    filter); the oracle re-derives the expected term counts directly
-    from the same formulas, so any regex/zip/filter/window defect
-    mismatches."""
-    from .operators.linkgraph import anchor_terms
-
-    d = _docs(spark, sf_dir)
-    did = F.col("doc_id")
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
-        lambda t: t != "",
-    )
-    t2 = F.array_join(F.slice(toks, 1, 2), " ")
-    t1x = F.concat(
-        F.coalesce(F.element_at(toks, 1), F.lit("")), F.lit(" extra")
-    )
-    host = lambda e: F.concat(F.lit("site"), (e % 10).cast("string"),  # noqa: E731
-                              F.lit(".com"))
-    html = F.concat(
-        F.lit('<html><body><a href="https://'), host(did * 3),
-        F.lit('/p">'), t2,
-        F.lit('</a> mid <a href="/rel">rel skip</a><a href="https://'),
-        host(did * 7), F.lit('/q">'), t1x,
-        F.lit("</a></body></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://"), host(did), F.lit("/"),
-                 did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    return anchor_terms(pages, k=3)
-
-
-def _sql_anchor_text() -> str:
-    return """
-        WITH base AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(
-                       lower(coalesce(text, '')), '\\s+'),
-                       t -> t <> '') AS ts,
-                   doc_id % 10 AS sh,
-                   (doc_id * 3) % 10 AS a1,
-                   (doc_id * 7) % 10 AS a2
-            FROM documents
-        ),
-        anchors AS (
-            SELECT 'site' || a1::VARCHAR || '.com' AS dst_host,
-                   array_to_string(ts[1:2], ' ') AS anchor
-            FROM base WHERE a1 != sh
-            UNION ALL
-            SELECT 'site' || a2::VARCHAR || '.com' AS dst_host,
-                   array_to_string(ts[1:1], ' ') || ' extra' AS anchor
-            FROM base WHERE a2 != sh
-        ),
-        terms AS (
-            SELECT dst_host, t.term, count(*) AS n_anchors
-            FROM anchors,
-                 UNNEST(list_filter(regexp_split_to_array(anchor, '\\s+'),
-                                    x -> x <> '')) AS t(term)
-            GROUP BY dst_host, t.term
-        )
-        SELECT dst_host, term, n_anchors FROM terms
-        QUALIFY row_number() OVER (
-            PARTITION BY dst_host
-            ORDER BY n_anchors DESC, term ASC) <= 3
-    """
-
-
-def q_wat_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAT metadata derivation (sources/warc.wat_metadata): the
-    link/title envelope content Common Crawl ships as WAT, parsed
-    Catalyst-side. Pages are synthesized deterministically from
-    `documents` (a <title>, one absolute anchor, one RELATIVE anchor —
-    which WAT must keep, unlike the cross-host link graph); output is
-    one row per extracted link with the page title and link count, so
-    any regex/zip/explode defect mismatches the closed-form oracle."""
-    from .sources.warc import wat_metadata
-
-    d = _docs(spark, sf_dir)
-    did = F.col("doc_id")
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
-        lambda t: t != "",
-    )
-    t2 = F.array_join(F.slice(toks, 1, 2), " ")
-    host = lambda e: F.concat(F.lit("site"), (e % 10).cast("string"),  # noqa: E731
-                              F.lit(".com"))
-    html = F.concat(
-        F.lit("<html><head><title>"), t2,
-        F.lit('</title></head><body><a href="https://'), host(did * 3),
-        F.lit('/p">'), t2,
-        F.lit('</a> mid <a href="/rel">rel skip</a></body></html>'),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://"), host(did), F.lit("/"),
-                 did.cast("string")).alias("url"),
-        html.alias("html"),
-    )
-    meta = wat_metadata(pages)
-    return meta.select(
-        "url",
-        "title",
-        F.size("links").cast("long").alias("n_links"),
-        F.explode("links").alias("l"),
-    ).select(
-        "url", "title", "n_links",
-        F.col("l.url").alias("link_url"),
-        F.col("l.text").alias("anchor"),
-    )
-
-
-def _sql_wat_links() -> str:
-    return """
-        WITH base AS (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(
-                       lower(coalesce(text, '')), '\\s+'),
-                       t -> t <> '') AS ts,
-                   doc_id % 10 AS sh,
-                   (doc_id * 3) % 10 AS a1
-            FROM documents
-        ),
-        d AS (
-            SELECT 'https://site' || sh::VARCHAR || '.com/'
-                       || doc_id::VARCHAR AS url,
-                   array_to_string(ts[1:2], ' ') AS title,
-                   a1
-            FROM base
-        )
-        SELECT url, title, CAST(2 AS BIGINT) AS n_links,
-               'https://site' || a1::VARCHAR || '.com/p' AS link_url,
-               title AS anchor
-        FROM d
-        UNION ALL
-        SELECT url, title, CAST(2 AS BIGINT), '/rel', 'rel skip' FROM d
-    """
-
-
-_PR_HOSTS = 40
-_PR_ITERS = 3
-
-
-def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic synthetic host graph: each doc contributes two
-    edges h(doc_id%40) -> h((7*doc_id+3)%40) and -> h((13*doc_id+5)%40).
-    Mirrored literally by the oracle; the OPERATOR takes any real
-    (src_host, dst_host) DataFrame (see extract_links)."""
-    d = _docs(spark, sf_dir).select("doc_id")
-    m = _PR_HOSTS
-
-    def h(expr):
-        return F.concat(F.lit("h"), (expr % m).cast("string"))
-
-    e1 = d.select(h(F.col("doc_id")).alias("src_host"),
-                  h(F.col("doc_id") * 7 + 3).alias("dst_host"))
-    e2 = d.select(h(F.col("doc_id")).alias("src_host"),
-                  h(F.col("doc_id") * 13 + 5).alias("dst_host"))
-    return e1.unionAll(e2)
-
-
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer fixed-point PageRank (damping 17/20, 3 iterations) over
-    the deterministic host graph. All arithmetic is bigint DIV/sum —
-    order-free, so every partitioning and the DuckDB oracle agree
-    bit-for-bit (float PageRank could not be hash-compared)."""
-    from .operators.linkgraph import pagerank_hosts
-
-    return pagerank_hosts(_pr_edges(spark, sf_dir), n_iter=_PR_ITERS)
-
-
-def _sql_host_pagerank() -> str:
-    from .operators.linkgraph import SCALE
-
-    m = _PR_HOSTS
-    it = """
-        r{k} AS (
-            SELECT h.host,
-                   (SELECT tp FROM consts) +
-                   (17 * coalesce(i.incoming, 0)) // 20 AS rank
-            FROM hosts h LEFT JOIN (
-                SELECT e.dst_host AS host,
-                       sum(r.rank // d.out_degree)::BIGINT AS incoming
-                FROM edges e
-                JOIN r{p} r ON r.host = e.src_host
-                JOIN deg d ON d.src_host = e.src_host
-                GROUP BY e.dst_host) i ON i.host = h.host
-        )"""
-    iters = ",".join(it.format(k=k, p=k - 1) for k in range(1, _PR_ITERS + 1))
-    return f"""
-        WITH edges0 AS (
-            SELECT 'h' || (doc_id % {m})::VARCHAR AS src_host,
-                   'h' || ((doc_id * 7 + 3) % {m})::VARCHAR AS dst_host
-            FROM documents
-            UNION ALL
-            SELECT 'h' || (doc_id % {m})::VARCHAR,
-                   'h' || ((doc_id * 13 + 5) % {m})::VARCHAR
-            FROM documents
-        ),
-        edges AS (
-            SELECT DISTINCT src_host, dst_host FROM edges0
-            WHERE src_host <> dst_host
-        ),
-        hosts AS (
-            SELECT DISTINCT src_host AS host FROM edges
-            UNION
-            SELECT DISTINCT dst_host FROM edges
-        ),
-        deg AS (
-            SELECT src_host, count(*) AS out_degree FROM edges
-            GROUP BY src_host
-        ),
-        consts AS (
-            SELECT (({SCALE} * 3) // 20)
-                       // (SELECT count(*) FROM hosts) AS tp,
-                   {SCALE} // (SELECT count(*) FROM hosts) AS r0
-        ),
-        r0 AS (SELECT host, (SELECT r0 FROM consts) AS rank FROM hosts),
-        {iters}
-        SELECT host, rank::BIGINT AS rank FROM r{_PR_ITERS}
-    """
-
-
-_SPAM_SEEDS = [f"h{i}" for i in range(8)]
-
-
-def q_host_spamrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-TrustRank (Krishnan & Raj 2006): distrust seeded on 8 known
-    spam hosts propagates BACKWARD along the deterministic host graph
-    (a host linking into spam inherits spam mass).  Same integer
-    fixed-point discipline as host_pagerank — bit-stable under any
-    partitioning, hence a full value-hash oracle."""
-    from .operators.linkgraph import trustrank_hosts
-
-    seeds = spark.createDataFrame([(h,) for h in _SPAM_SEEDS], ["host"])
-    return trustrank_hosts(
-        _pr_edges(spark, sf_dir), seeds, n_iter=_PR_ITERS, reverse=True
-    )
-
-
-def _sql_host_spamrank() -> str:
-    from .operators.linkgraph import SCALE
-
-    m = _PR_HOSTS
-    seed_list = ", ".join(f"'{h}'" for h in _SPAM_SEEDS)
-    seed = f"h.host IN ({seed_list})"
-    it = f"""
-        r{{k}} AS (
-            SELECT h.host,
-                   (CASE WHEN {seed} THEN (SELECT tp FROM consts)
-                         ELSE 0 END) +
-                   (17 * coalesce(i.incoming, 0)) // 20 AS rank
-            FROM hosts h LEFT JOIN (
-                SELECT e.dst_host AS host,
-                       sum(r.rank // d.out_degree)::BIGINT AS incoming
-                FROM edges e
-                JOIN r{{p}} r ON r.host = e.src_host
-                JOIN deg d ON d.src_host = e.src_host
-                GROUP BY e.dst_host) i ON i.host = h.host
-        )"""
-    iters = ",".join(it.format(k=k, p=k - 1) for k in range(1, _PR_ITERS + 1))
-    return f"""
-        WITH edges0 AS (
-            SELECT 'h' || (doc_id % {m})::VARCHAR AS src_host,
-                   'h' || ((doc_id * 7 + 3) % {m})::VARCHAR AS dst_host
-            FROM documents
-            UNION ALL
-            SELECT 'h' || (doc_id % {m})::VARCHAR,
-                   'h' || ((doc_id * 13 + 5) % {m})::VARCHAR
-            FROM documents
-        ),
-        edges AS (
-            -- Anti-TrustRank propagates along REVERSED links
-            SELECT DISTINCT dst_host AS src_host, src_host AS dst_host
-            FROM edges0 WHERE src_host <> dst_host
-        ),
-        hosts AS (
-            SELECT DISTINCT src_host AS host FROM edges
-            UNION
-            SELECT DISTINCT dst_host FROM edges
-        ),
-        deg AS (
-            SELECT src_host, count(*) AS out_degree FROM edges
-            GROUP BY src_host
-        ),
-        consts AS (
-            SELECT (({SCALE} * 3) // 20)
-                       // (SELECT count(*) FROM hosts h WHERE {seed}) AS tp,
-                   {SCALE}
-                       // (SELECT count(*) FROM hosts h WHERE {seed}) AS r0
-        ),
-        r0 AS (
-            SELECT host,
-                   CASE WHEN {seed.replace("h.host", "host")}
-                        THEN (SELECT r0 FROM consts) ELSE 0 END AS rank
-            FROM hosts
-        ),
-        {iters}
-        SELECT host, rank::BIGINT AS rank FROM r{_PR_ITERS}
-    """
-
-
-_ROBOTS_AGENT = "fetchbot"
-_ROBOTS_HOSTS = 12
-
-
-def _robots_txt_for(k: int) -> str:
-    """Literal robots.txt body for host h{k}.example — host-dependent
-    rules so the gate outcome varies across the synthetic fleet."""
-    extra = "Disallow: /x$\n" if k % 4 == 0 else ""
-    return (
-        f"User-agent: {_ROBOTS_AGENT}\n"
-        f"Disallow: /sec{k % 3}\n"
-        f"Allow: /sec{k % 3}/pub*\n"
-        f"{extra}"
-        "\n"
-        "User-agent: *\n"
-        "Disallow: /tmp/*.bak$\n"
-    )
-
-
-def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 robots gating: the REAL Arrow parse kernel parses a
-    synthesized per-host robots fleet; matching is native per-row LIKE
-    (no Python); precedence is longest-pattern-then-Allow via one
-    window. The oracle embeds the SAME kernel's parse of the same
-    literal bodies as rule literals (compile-time constants)."""
-    from .operators.robots import parse_robots_rules, robots_gate
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    m = F.col("doc_id") % _ROBOTS_HOSTS
-    host = F.concat(F.lit("h"), m.cast("string"), F.lit(".example"))
-    sec = (m % 3).cast("string")
-    path = (
-        F.when(F.col("doc_id") % 6 == 0,
-               F.concat(F.lit("/sec"), sec, F.lit("/a")))
-        .when(F.col("doc_id") % 6 == 1,
-              F.concat(F.lit("/sec"), sec, F.lit("/pubz")))
-        .when(F.col("doc_id") % 6 == 2,
-              F.concat(F.lit("/sec"), ((m + 1) % 3).cast("string"),
-                       F.lit("/a")))
-        .when(F.col("doc_id") % 6 == 3, F.lit("/x"))
-        .when(F.col("doc_id") % 6 == 4, F.lit("/xy"))
-        .otherwise(F.lit(""))
-    )
-    urls = d.select(
-        "doc_id",
-        F.concat(F.lit("https://"), host, path,
-                 F.lit("?id="), F.col("doc_id").cast("string"))
-        .alias("url"),
-        host.alias("host"),
-    )
-    robots = spark.createDataFrame(
-        [(f"h{k}.example", _robots_txt_for(k))
-         for k in range(_ROBOTS_HOSTS)],
-        "host string, robots_txt string",
-    )
-    rules = parse_robots_rules(robots, agent=_ROBOTS_AGENT)
-    return robots_gate(urls, rules)
-
-
-def _sql_robots_gate() -> str:
-    from .kernels.robots import (
-        parse_robots,
-        pattern_to_like,
-        rules_for_agent,
-    )
-
-    rows = []
-    for k in range(_ROBOTS_HOSTS):
-        groups = parse_robots(_robots_txt_for(k))
-        for allow, pattern in rules_for_agent(groups, _ROBOTS_AGENT):
-            like = pattern_to_like(pattern).replace("'", "''")
-            rows.append(
-                f"('h{k}.example', {str(bool(allow)).upper()}, "
-                f"'{like}', {len(pattern)})"
-            )
-    values = ",\n            ".join(rows)
-    return f"""
-        WITH rules(host, allow, like_pattern, pattern_len) AS (VALUES
-            {values}
-        ),
-        urls AS (
-            SELECT doc_id,
-                'https://h' || (doc_id % {_ROBOTS_HOSTS})::VARCHAR
-                 || '.example' ||
-                CASE doc_id % 6
-                  WHEN 0 THEN '/sec' || ((doc_id % {_ROBOTS_HOSTS}) % 3)
-                                            ::VARCHAR || '/a'
-                  WHEN 1 THEN '/sec' || ((doc_id % {_ROBOTS_HOSTS}) % 3)
-                                            ::VARCHAR || '/pubz'
-                  WHEN 2 THEN '/sec' ||
-                       (((doc_id % {_ROBOTS_HOSTS}) + 1) % 3)::VARCHAR
-                       || '/a'
-                  WHEN 3 THEN '/x'
-                  WHEN 4 THEN '/xy'
-                  ELSE ''
-                END || '?id=' || doc_id::VARCHAR AS url,
-                'h' || (doc_id % {_ROBOTS_HOSTS})::VARCHAR
-                 || '.example' AS host
-            FROM documents
-        ),
-        withp AS (
-            SELECT *,
-                CASE WHEN regexp_extract(url,
-                    '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-                     THEN '/'
-                     ELSE regexp_extract(url,
-                    '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1)
-                END AS p
-            FROM urls
-        ),
-        joined AS (
-            SELECT w.doc_id, w.url, w.host, r.allow, r.pattern_len,
-                   (w.p LIKE r.like_pattern ESCAPE '\\') AS hit
-            FROM withp w LEFT JOIN rules r ON r.host = w.host
-        ),
-        ranked AS (
-            SELECT *,
-                   row_number() OVER (PARTITION BY url
-                       ORDER BY pattern_len DESC, allow DESC) AS rn
-            FROM joined WHERE hit IS NULL OR hit
-        ),
-        best AS (
-            SELECT url,
-                   coalesce(allow, TRUE) AS allowed,
-                   coalesce(CASE WHEN hit THEN pattern_len END, 0)
-                       AS matched_len
-            FROM ranked WHERE rn = 1
-        )
-        SELECT u.doc_id, u.url, u.host,
-               coalesce(b.allowed, TRUE) AS allowed,
-               coalesce(b.matched_len, 0)::INT AS matched_len
-        FROM urls u LEFT JOIN best b ON b.url = u.url
-    """
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -3019,18 +2164,6 @@ _RAW_QUERIES = {
     "events_props": q_events_props,
     "warc_extract": q_warc_extract,
     "warc_revisits": q_warc_revisits,
-    "wat_links": q_wat_links,
-    "cdx_select": q_cdx_select,
-    "capture_policy": q_capture_policy,
-    "fetch_schedule": q_fetch_schedule,
-    "sitemap_entries": q_sitemap_entries,
-    "sitemap_fetchlist": q_sitemap_fetchlist,
-    "feed_entries": q_feed_entries,
-    "page_dates": q_page_dates,
-    "robots_gate": q_robots_gate,
-    "anchor_text": q_anchor_text,
-    "host_pagerank": q_host_pagerank,
-    "host_spamrank": q_host_spamrank,
 }
 
 QUERIES = {name: _wrap(fn) for name, fn in _RAW_QUERIES.items()}
@@ -3076,16 +2209,4 @@ def oracles() -> dict[str, str]:
         "events_props": _sql_events_props(),
         "warc_extract": _sql_warc_extract(),
         "warc_revisits": _sql_warc_revisits(),
-        "wat_links": _sql_wat_links(),
-        "cdx_select": _sql_cdx_select(),
-        "capture_policy": _sql_capture_policy(),
-        "fetch_schedule": _sql_fetch_schedule(),
-        "sitemap_entries": _sql_sitemap_entries(),
-        "sitemap_fetchlist": _sql_sitemap_fetchlist(),
-        "feed_entries": _sql_feed_entries(),
-        "page_dates": _sql_page_dates(),
-        "robots_gate": _sql_robots_gate(),
-        "anchor_text": _sql_anchor_text(),
-        "host_pagerank": _sql_host_pagerank(),
-        "host_spamrank": _sql_host_spamrank(),
     }

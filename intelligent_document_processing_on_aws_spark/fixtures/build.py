@@ -381,132 +381,6 @@ def build_html_meta_fixtures(out_dir: str = FIXTURES_DIR,
     print(f"wrote html_meta_docs/html_meta_golden: {n} rows")
 
 
-N_SITEMAPS = 320
-
-
-def build_sitemap_fixtures(out_dir: str = FIXTURES_DIR,
-                           n: int = N_SITEMAPS) -> None:
-    from .sitemap_gen import gen_sitemap_docs
-
-    docs = gen_sitemap_docs(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [d["doc_id"] for d in docs],
-            "family": [d["family"] for d in docs],
-            "raw": [d["raw"] for d in docs],
-        },
-        schema=pa.schema([("doc_id", pa.int64()), ("family", pa.string()),
-                          ("raw", pa.binary())]),
-    )
-    pq.write_table(table, os.path.join(out_dir, "sitemap_docs.parquet"),
-                   compression="zstd")
-
-    ids, eids, kinds, locs, lms, cfs, prs = [], [], [], [], [], [], []
-    for d in docs:
-        if d["kind"] == "error":
-            ids.append(d["doc_id"]); eids.append(None); kinds.append("error")
-            locs.append(None); lms.append(None); cfs.append(None)
-            prs.append(None)
-            continue
-        for j, e in enumerate(d["entries"]):
-            ids.append(d["doc_id"]); eids.append(j); kinds.append(d["kind"])
-            locs.append(e["loc"]); lms.append(e["lastmod_epoch"])
-            cfs.append(e["changefreq"]); prs.append(e["priority"])
-    golden = pa.Table.from_pydict(
-        {"doc_id": ids, "entry_id": eids, "kind": kinds, "loc": locs,
-         "lastmod_epoch": lms, "changefreq": cfs, "priority": prs},
-        schema=pa.schema([("doc_id", pa.int64()), ("entry_id", pa.int64()),
-                          ("kind", pa.string()), ("loc", pa.string()),
-                          ("lastmod_epoch", pa.int64()),
-                          ("changefreq", pa.string()),
-                          ("priority", pa.float64())]),
-    )
-    pq.write_table(golden, os.path.join(out_dir, "sitemap_golden.parquet"),
-                   compression="zstd")
-    print(f"wrote sitemap_docs/sitemap_golden: {n} docs, {len(ids)} rows")
-
-
-N_FEEDS = 320
-
-
-def build_feed_fixtures(out_dir: str = FIXTURES_DIR,
-                        n: int = N_FEEDS) -> None:
-    from .feeds_gen import gen_feed_docs
-
-    docs = gen_feed_docs(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [d["doc_id"] for d in docs],
-            "family": [d["family"] for d in docs],
-            "raw": [d["raw"] for d in docs],
-        },
-        schema=pa.schema([("doc_id", pa.int64()), ("family", pa.string()),
-                          ("raw", pa.binary())]),
-    )
-    pq.write_table(table, os.path.join(out_dir, "feed_docs.parquet"),
-                   compression="zstd")
-
-    cols = {k: [] for k in ("doc_id", "entry_id", "kind", "feed_title",
-                            "link", "title", "guid", "pub_epoch")}
-    for d in docs:
-        if d["kind"] == "error":
-            cols["doc_id"].append(d["doc_id"]); cols["entry_id"].append(None)
-            cols["kind"].append("error"); cols["feed_title"].append(None)
-            cols["link"].append(None); cols["title"].append(None)
-            cols["guid"].append(None); cols["pub_epoch"].append(None)
-            continue
-        for j, e in enumerate(d["entries"]):
-            cols["doc_id"].append(d["doc_id"]); cols["entry_id"].append(j)
-            cols["kind"].append(d["kind"])
-            cols["feed_title"].append(d["feed_title"])
-            cols["link"].append(e["link"]); cols["title"].append(e["title"])
-            cols["guid"].append(e["guid"])
-            cols["pub_epoch"].append(e["pub_epoch"])
-    golden = pa.Table.from_pydict(
-        cols,
-        schema=pa.schema([("doc_id", pa.int64()), ("entry_id", pa.int64()),
-                          ("kind", pa.string()), ("feed_title", pa.string()),
-                          ("link", pa.string()), ("title", pa.string()),
-                          ("guid", pa.string()), ("pub_epoch", pa.int64())]),
-    )
-    pq.write_table(golden, os.path.join(out_dir, "feed_golden.parquet"),
-                   compression="zstd")
-    print(f"wrote feed_docs/feed_golden: {n} docs, {len(cols['doc_id'])} rows")
-
-
-N_PAGEDATES = 320
-
-
-def build_pagedate_fixtures(out_dir: str = FIXTURES_DIR,
-                            n: int = N_PAGEDATES) -> None:
-    from .pagedate_gen import gen_pagedate_docs
-
-    docs = gen_pagedate_docs(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [d["doc_id"] for d in docs],
-            "family": [d["family"] for d in docs],
-            "url": [d["url"] for d in docs],
-            "html": [d["html"] for d in docs],
-        },
-        schema=pa.schema([("doc_id", pa.int64()), ("family", pa.string()),
-                          ("url", pa.string()), ("html", pa.string())]),
-    )
-    pq.write_table(table, os.path.join(out_dir, "pagedate_docs.parquet"),
-                   compression="zstd")
-    golden = pa.Table.from_pydict(
-        {"doc_id": [d["doc_id"] for d in docs],
-         "date_epoch": [d["epoch"] for d in docs],
-         "date_source": [d["source"] for d in docs]},
-        schema=pa.schema([("doc_id", pa.int64()),
-                          ("date_epoch", pa.int64()),
-                          ("date_source", pa.string())]),
-    )
-    pq.write_table(golden, os.path.join(out_dir, "pagedate_golden.parquet"),
-                   compression="zstd")
-    print(f"wrote pagedate_docs/pagedate_golden: {n} rows")
-
-
 def build(out_dir: str = FIXTURES_DIR) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for tier, n in TIERS.items():
@@ -527,9 +401,6 @@ def build(out_dir: str = FIXTURES_DIR) -> None:
     build_warc(out_dir)
     build_charset_fixtures(out_dir)
     build_html_meta_fixtures(out_dir)
-    build_sitemap_fixtures(out_dir)
-    build_feed_fixtures(out_dir)
-    build_pagedate_fixtures(out_dir)
 
 
 if __name__ == "__main__":

@@ -164,7 +164,7 @@ def build_cdx(spark: SparkSession, path: str) -> DataFrame:
 
     Same 100-TB shape as read_warc: the file is the parallel unit, the
     index is a map-only projection of the archive — build once, then
-    every later selection (operators/cdx.cdx_select) reads the small
+    every later selection (a filter over this table) reads the small
     index instead of 100 TB of WARC.  Non-response records and damaged
     members are not indexed (they are auditable via read_warc; an index
     row must denote a fetchable span)."""
@@ -326,14 +326,22 @@ def resolve_revisits(revisits: DataFrame, cdx: DataFrame) -> DataFrame:
     )
 
 
+def _fetch_plan(selected: DataFrame) -> DataFrame:
+    """Order a selection for sequential ranged reads: one Exchange on
+    the archive filename, offsets sorted within each partition, so no
+    file straddles two partitions and each task walks its files in
+    (filename, offset) order."""
+    return selected.repartition("filename").sortWithinPartitions(
+        "filename", "offset")
+
+
 def fetch_records(selected: DataFrame, emit_text: bool = True) -> DataFrame:
     """Ranged fetch of SELECTED captures only — the Common-Crawl access
     pattern: never rescan the archive; read exactly the (offset, length)
     spans the index selection names.
 
-    Input is any cdx_select output (columns filename/offset/length at
-    minimum).  The plan is operators/cdx.fetch_plan's: one Exchange on
-    the archive filename, offsets sorted within partitions, so each
+    Input is any selection of build_cdx rows (columns
+    filename/offset/length at minimum).  Ordered by _fetch_plan, each
     task walks every file monotonically — locally a seek+read per span,
     on S3 the same loop issues sequential HTTP range requests.  Each
     span decompresses independently (per-record gzip members), which is
@@ -345,7 +353,6 @@ def fetch_records(selected: DataFrame, emit_text: bool = True) -> DataFrame:
         parse_http_response,
         parse_member_bytes,
     )
-    from ..operators.cdx import fetch_plan
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         handle = {"name": None, "f": None}
@@ -396,221 +403,4 @@ def fetch_records(selected: DataFrame, emit_text: bool = True) -> DataFrame:
             if rows["warc_file"]:
                 yield pd.DataFrame(rows)
 
-    return fetch_plan(selected).mapInPandas(run, WARC_SCHEMA)
-
-
-def write_wet(
-    extracted: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    text_col: str = "text",
-    date_col: str | None = None,
-    num_files: int | None = None,
-) -> int:
-    """Write extracted text as WET files (`.warc.gz` of WARC/1.0
-    ``conversion`` records, per-record gzip members — the format Common
-    Crawl distributes extracted text in, readable back by read_warc /
-    iter_warc_members / build_cdx like any other archive).
-
-    Distributed sink shape: each task serializes its own partition into
-    ONE ``wet-<partition>.warc.gz`` (the standard custom-binary-sink
-    pattern — parquet/Iceberg writers are file-per-task the same way).
-    Rows are hash-partitioned by url and SORTED by url within each
-    partition, and every record serializes byte-deterministically
-    (uuid5 ids, MTIME=0 gzip), so the same input at the same
-    ``num_files`` produces identical files — diffable, resumable
-    output.  Returns the number of records written."""
-    from ..kernels.warc import build_conversion_record, gzip_member
-
-    n = num_files or extracted.rdd.getNumPartitions()
-    cols = [F.col(url_col).alias("url"),
-            F.col(text_col).alias("text"),
-            (F.col(date_col) if date_col else F.lit(None))
-            .cast("string").alias("date")]
-    rows = (
-        extracted.select(*cols)
-        .repartition(n, "url")
-        .sortWithinPartitions("url")
-    )
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(it):
-        import os as _os
-
-        f = None
-        pid = count = 0
-        for r in it:
-            if f is None:                           # lazy: skip empty parts
-                from pyspark import TaskContext
-                pid = TaskContext.get().partitionId()
-                f = open(_os.path.join(out_dir, f".wet-{pid:05d}.tmp"), "wb")
-            f.write(gzip_member(build_conversion_record(
-                r["url"], r["text"], r["date"] or "1970-01-01T00:00:00Z")))
-            count += 1
-        if f is not None:
-            f.close()
-            _os.replace(                            # atomic publish
-                _os.path.join(out_dir, f".wet-{pid:05d}.tmp"),
-                _os.path.join(out_dir, f"wet-{pid:05d}.warc.gz"))
-        yield count
-
-    return sum(rows.rdd.mapPartitions(write_part).collect())
-
-
-_WAT_TITLE_RE = r"(?i)<title[^>]*>([^<]*)</title>"
-
-
-def wat_metadata(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    date_col: str | None = None,
-) -> DataFrame:
-    """Per-page link/title metadata — the content of a Common-Crawl WAT
-    envelope — derived entirely Catalyst-side.
-
-    Output: (url, date, title, links array<struct<url,text>>). The two
-    regexp_extract_all passes + arrays_zip stay in whole-stage codegen
-    over the scan (same native shape as linkgraph.anchor_pairs — no
-    Python in the parse); at 100 TB this is a map-only projection that
-    scales exactly like the scan. WAT lists ALL anchors (relative links
-    included), unlike the link graph's cross-host filter.
-    """
-    from ..operators.linkgraph import _ANCHOR_RE
-
-    h = F.col(html_col).cast("string")
-    zipped = F.arrays_zip(
-        F.regexp_extract_all(h, F.lit(_ANCHOR_RE), F.lit(1)).alias("url"),
-        F.regexp_extract_all(h, F.lit(_ANCHOR_RE), F.lit(2)).alias("text"),
-    )
-    return pages.select(
-        F.col(url_col).alias("url"),
-        (F.col(date_col) if date_col else F.lit(None))
-        .cast("string").alias("date"),
-        F.regexp_extract(h, _WAT_TITLE_RE, 1).alias("title"),
-        zipped.alias("links"),
-    )
-
-
-def write_wat(
-    pages: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    html_col: str = "html",
-    date_col: str | None = None,
-    num_files: int | None = None,
-) -> int:
-    """Write page metadata as WAT files (`.warc.gz` of WARC/1.0
-    ``metadata`` records whose payload is a canonical-JSON envelope —
-    the third member of Common Crawl's WARC/WET/WAT triple, readable
-    back by iter_warc_members / read_warc like any other archive).
-
-    Same distributed sink shape as write_wet: the html -> (title, links)
-    parse happens Catalyst-side (wat_metadata), each task serializes its
-    own url-hash partition into ONE ``wat-<partition>.warc.gz`` sorted by
-    url, every record byte-deterministic (sorted-key compact JSON, uuid5
-    ids, MTIME=0 gzip) — identical input at the same ``num_files``
-    produces identical files. Returns the number of records written.
-    """
-    import json as _json
-
-    from ..kernels.warc import build_metadata_record, gzip_member
-
-    n = num_files or pages.rdd.getNumPartitions()
-    rows = (
-        wat_metadata(pages, url_col=url_col, html_col=html_col,
-                     date_col=date_col)
-        .repartition(n, "url")
-        .sortWithinPartitions("url")
-    )
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(it):
-        import os as _os
-
-        f = None
-        pid = count = 0
-        for r in it:
-            if f is None:                           # lazy: skip empty parts
-                from pyspark import TaskContext
-                pid = TaskContext.get().partitionId()
-                f = open(_os.path.join(out_dir, f".wat-{pid:05d}.tmp"), "wb")
-            date = r["date"] or "1970-01-01T00:00:00Z"
-            env = {
-                "Envelope": {
-                    "WARC-Header-Metadata": {
-                        "WARC-Target-URI": r["url"],
-                        "WARC-Date": date,
-                    },
-                    "Payload-Metadata": {
-                        "HTTP-Response-Metadata": {
-                            "HTML-Metadata": {
-                                "Head": {"Title": r["title"] or ""},
-                                "Links": [
-                                    {"url": li["url"], "text": li["text"]}
-                                    for li in (r["links"] or [])
-                                ],
-                            }
-                        }
-                    },
-                }
-            }
-            payload = _json.dumps(
-                env, sort_keys=True, separators=(",", ":"),
-                ensure_ascii=False,
-            ).encode("utf-8")
-            f.write(gzip_member(
-                build_metadata_record(r["url"], date, payload)))
-            count += 1
-        if f is not None:
-            f.close()
-            _os.replace(                            # atomic publish
-                _os.path.join(out_dir, f".wat-{pid:05d}.tmp"),
-                _os.path.join(out_dir, f"wat-{pid:05d}.warc.gz"))
-        yield count
-
-    return sum(rows.rdd.mapPartitions(write_part).collect())
-
-
-_WAT_ENV_SCHEMA = T.StructType([T.StructField("Envelope", T.StructType([
-    T.StructField("WARC-Header-Metadata", T.StructType([
-        T.StructField("WARC-Target-URI", T.StringType()),
-        T.StructField("WARC-Date", T.StringType()),
-    ])),
-    T.StructField("Payload-Metadata", T.StructType([
-        T.StructField("HTTP-Response-Metadata", T.StructType([
-            T.StructField("HTML-Metadata", T.StructType([
-                T.StructField("Head", T.StructType([
-                    T.StructField("Title", T.StringType()),
-                ])),
-                T.StructField("Links", T.ArrayType(T.StructType([
-                    T.StructField("url", T.StringType()),
-                    T.StructField("text", T.StringType()),
-                ]))),
-            ])),
-        ])),
-    ])),
-]))])
-
-
-def read_wat(spark: SparkSession, path: str) -> DataFrame:
-    """Read WAT archives back into (url, date, title, links) — the
-    inverse of write_wat, so link-graph work can start from a published
-    WAT instead of rescanning the WARC bytes (exactly how Common Crawl
-    consumers avoid the full-archive scan).
-
-    Shape: the record walk is the same map-only Arrow pass as read_warc;
-    the JSON envelope parses with from_json (Jackson, JVM-side) — a
-    malformed envelope degrades to a NULL-fields row (from_json returns
-    null), never a crash."""
-    recs = read_warc(spark, path, record_types=("metadata",))
-    env = F.from_json(F.col("text"), _WAT_ENV_SCHEMA)["Envelope"]
-    html_meta = env["Payload-Metadata"]["HTTP-Response-Metadata"][
-        "HTML-Metadata"]
-    return recs.where(F.col("error").isNull()).select(
-        F.coalesce(env["WARC-Header-Metadata"]["WARC-Target-URI"],
-                   F.col("url")).alias("url"),
-        env["WARC-Header-Metadata"]["WARC-Date"].alias("date"),
-        html_meta["Head"]["Title"].alias("title"),
-        html_meta["Links"].alias("links"),
-    )
+    return _fetch_plan(selected).mapInPandas(run, WARC_SCHEMA)

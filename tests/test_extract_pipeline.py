@@ -43,6 +43,32 @@ def test_distributed_generation_matches_build(spark, fixtures_dir):
     assert b.exceptAll(a).count() == 0
 
 
+def test_build_reproduces_committed_fixtures(fixtures_dir, tmp_path):
+    """fixtures/build.py regenerates fixtures_data/ exactly: the same file
+    set, every parquet table equal to the committed one (schema included)
+    and the WARC files byte for byte. A generator deleted while its parquet
+    stays behind, or the reverse, fails here."""
+    import pyarrow.parquet as pq
+
+    from intelligent_document_processing_on_aws_spark.fixtures.build import build
+
+    def files(root):
+        return sorted(os.path.relpath(os.path.join(d, f), root)
+                      for d, _, fs in os.walk(root) for f in fs)
+
+    build(str(tmp_path))
+    committed = files(fixtures_dir)
+    assert files(tmp_path) == committed
+    for rel in committed:
+        want, got = os.path.join(fixtures_dir, rel), os.path.join(tmp_path, rel)
+        if rel.endswith(".parquet"):
+            assert pq.read_table(got).equals(
+                pq.read_table(want), check_metadata=True), rel
+        else:
+            with open(want, "rb") as a, open(got, "rb") as b:
+                assert a.read() == b.read(), rel
+
+
 def test_extract_on_generated_pages(spark):
     pages = synthetic_pages(spark, 120, partitions=4)
     golden = synthetic_golden(spark, 120, partitions=4)

@@ -219,76 +219,3 @@ def test_round5_audio_plans_map_only(spark):
         assert "BatchEvalPython" not in plan, op.__name__
         assert plan.count("MapInPandas") == 1, op.__name__
         assert "Exchange" not in plan, op.__name__
-
-
-def test_sitemap_queries_plan_shapes(spark):
-    """sitemap_entries: one Arrow MapInPandas over the binary scan —
-    zero Exchange. sitemap_fetchlist: both sides reduce via partial
-    hash aggregates before ONE url-key join (<=3 Exchanges total:
-    two agg shuffles + AQE artifacts), so only one row per distinct
-    url crosses the wire — never one per capture."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_sitemap_entries,
-        q_sitemap_fetchlist,
-    )
-
-    df = q_sitemap_entries(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan, plan[:2000]
-    assert plan.count("MapInPandas") == 1
-
-    df = q_sitemap_fetchlist(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert plan.count("MapInPandas") == 1
-    assert plan.count("Exchange") <= 3, plan[:3000]
-    # partial aggregation must precede the exchanges on both sides
-    assert plan.count("HashAggregate") >= 4, plan[:3000]
-
-
-def test_feed_entries_plan_map_only(spark):
-    """feed_entries: one Arrow MapInPandas over the binary scan — zero
-    Exchange; feed parsing scales exactly like the scan."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_feed_entries,
-    )
-
-    df = q_feed_entries(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan, plan[:2000]
-    assert plan.count("MapInPandas") == 1
-
-
-def test_fetch_schedule_plan_windowgrouplimit(spark):
-    """fetch_schedule: the max_per_host rank-limit must plan
-    WindowGroupLimit (giant hosts prune map-side BEFORE the host
-    Exchange); the crawl-delay join must broadcast; zero Python."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_fetch_schedule,
-    )
-
-    plan = _plan(q_fetch_schedule(spark, "/root/testdata/sf0.001"))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "WindowGroupLimit" in plan, plan[:3000]
-    assert "BroadcastHashJoin" in plan, plan[:3000]
-
-
-def test_page_dates_plan_map_only(spark):
-    """page_dates: one Arrow MapInPandas over the pruned scan — zero
-    Exchange; date extraction scales exactly like the scan."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_page_dates,
-    )
-
-    df = q_page_dates(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan, plan[:2000]
-    assert plan.count("MapInPandas") == 1
-    formatted = _formatted(df)
-    read = formatted.split("ReadSchema:")[-1].split("\n")[0]
-    assert "family" not in read
-

@@ -333,31 +333,3 @@ def test_differences_mapping_consistent(names, start):
         want = GLYPH_NAMES[name]
         got = mapping.get(code, bytes([code]).decode("latin-1"))
         assert got == want
-
-
-# --- robots ------------------------------------------------------------------
-
-_path_st = st.text(
-    alphabet=st.sampled_from(list("ab/.%_*$x1")), min_size=0, max_size=14)
-
-
-@given(pattern=_path_st, path=_path_st)
-@settings(max_examples=150, deadline=None)
-def test_robots_match_equals_like_translation(pattern, path):
-    """Differential: the kernel's _matches agrees with its own
-    pattern_to_like translation as evaluated by DuckDB's LIKE — the
-    exact expression the Spark gate executes."""
-    import duckdb
-
-    from intelligent_document_processing_on_aws_spark.kernels.robots import (
-        _matches, pattern_to_like,
-    )
-
-    # '$' is only an anchor at the end; embedded '$' is literal, and
-    # '*' inside patterns is a wildcard — both directions covered by
-    # the sampled alphabet.
-    like = pattern_to_like(pattern)
-    got = duckdb.sql(
-        "SELECT ? LIKE ? ESCAPE '\\'", params=[path, like]
-    ).fetchone()[0]
-    assert got == _matches(pattern, path)
