@@ -370,3 +370,71 @@ def surt_urlkey(url: str) -> str:
             host = host[: -len(port)]
     parts = [p for p in host.split(".") if p]
     return ",".join(reversed(parts)) + ")/" + (rest.lower() if sep else "")
+
+
+def build_conversion_record(
+    url: str, text: str, date: str, refers_to: str | None = None
+) -> bytes:
+    """One WARC/1.0 ``conversion`` record (the WET layout Common Crawl
+    distributes extracted text in), BYTE-DETERMINISTIC: the record id is
+    uuid5 of (url, payload digest) — identical input always serializes
+    to identical bytes, so WET outputs can be content-addressed and
+    diffed across runs."""
+    import base64
+    import hashlib
+    import uuid
+
+    body = (text or "").encode("utf-8")
+    digest = base64.b32encode(hashlib.sha1(body).digest()).decode()
+    rid = uuid.uuid5(uuid.NAMESPACE_URL, f"{url}\x01sha1:{digest}")
+    headers = [
+        ("WARC-Type", "conversion"),
+        ("WARC-Target-URI", url or ""),
+        ("WARC-Date", date or "1970-01-01T00:00:00Z"),
+        ("WARC-Record-ID", f"<urn:uuid:{rid}>"),
+        ("WARC-Block-Digest", f"sha1:{digest}"),
+        # explicit charset: payloads are always utf-8, and declaring it
+        # keeps the read-back decode off the html <meta> sniff (extracted
+        # text can legitimately CONTAIN a literal meta-charset string)
+        ("Content-Type", "text/plain; charset=utf-8"),
+        ("Content-Length", str(len(body))),
+    ]
+    if refers_to:
+        headers.insert(4, ("WARC-Refers-To", refers_to))
+    head = b"WARC/1.0\r\n" + b"".join(
+        f"{k}: {v}\r\n".encode("utf-8") for k, v in headers
+    )
+    return head + b"\r\n" + body + b"\r\n\r\n"
+
+
+def build_metadata_record(url: str, date: str, payload: bytes) -> bytes:
+    """One WARC/1.0 ``metadata`` record carrying a JSON envelope (the WAT
+    layout Common Crawl distributes page metadata in), BYTE-DETERMINISTIC
+    the same way build_conversion_record is: uuid5 record id over
+    (url, payload digest), fixed header order."""
+    import base64
+    import hashlib
+    import uuid
+
+    digest = base64.b32encode(hashlib.sha1(payload).digest()).decode()
+    rid = uuid.uuid5(uuid.NAMESPACE_URL, f"{url}\x01wat\x01sha1:{digest}")
+    headers = [
+        ("WARC-Type", "metadata"),
+        ("WARC-Target-URI", url or ""),
+        ("WARC-Date", date or "1970-01-01T00:00:00Z"),
+        ("WARC-Record-ID", f"<urn:uuid:{rid}>"),
+        ("WARC-Block-Digest", f"sha1:{digest}"),
+        ("Content-Type", "application/json"),
+        ("Content-Length", str(len(payload))),
+    ]
+    head = b"WARC/1.0\r\n" + b"".join(
+        f"{k}: {v}\r\n".encode("utf-8") for k, v in headers
+    )
+    return head + b"\r\n" + payload + b"\r\n\r\n"
+
+
+def gzip_member(record: bytes) -> bytes:
+    """Compress one record as a standalone gzip member (zlib wbits=31
+    writes MTIME=0 — deterministic bytes, unlike gzip.compress)."""
+    c = zlib.compressobj(9, zlib.DEFLATED, 31)
+    return c.compress(record) + c.flush()

@@ -326,6 +326,81 @@ def resolve_revisits(revisits: DataFrame, cdx: DataFrame) -> DataFrame:
     )
 
 
+# the JSON member set served by the cc-index CDXJ lines (all values are
+# JSON strings in the wire format; numeric casts happen after parse)
+CDX_JSON_SCHEMA = (
+    "url string, status string, mime string, digest string, "
+    "length string, offset string, filename string, languages string"
+)
+
+
+def parse_cdxj(lines: DataFrame, line_col: str = "line") -> DataFrame:
+    """Common Crawl's published CDXJ index lines (``<urlkey> <14-digit
+    timestamp> <json>``) -> typed capture columns plus a ``valid`` flag:
+    the same filename/offset/length spans build_cdx writes, so a
+    selection over either index feeds fetch_records.
+
+    Pure codegen: ``substring_index`` isolates the urlkey and timestamp
+    head; the JSON tail starts one byte past the second delimiter, so
+    embedded spaces inside the JSON survive, and ``from_json``
+    (PERMISSIVE) parses it JVM-side.  A corrupt tail or a short head
+    comes back ``valid = false`` with NULL fields, never a job crash.
+    """
+    l = F.col(line_col)
+    head2 = F.substring_index(l, " ", 2)
+    tail = F.expr(
+        f"substring({line_col}, length(substring_index({line_col}, ' ', 2)) + 2)"
+    )
+    rec = F.from_json(tail, CDX_JSON_SCHEMA)
+    parsed = lines.select(
+        F.substring_index(l, " ", 1).alias("urlkey"),
+        F.substring_index(head2, " ", -1).alias("ts"),
+        rec.alias("_r"),
+        # a well-formed line has at least "<k> <ts> {": the head must be
+        # strictly shorter than the line and the tail must parse to a
+        # record with a url (from_json gives an all-NULL struct on junk)
+        (
+            (F.length(head2) < F.length(l))
+            & rec.isNotNull()
+            & rec["url"].isNotNull()
+        ).alias("valid"),
+    )
+    return parsed.select(
+        "urlkey",
+        "ts",
+        F.col("_r.url").alias("url"),
+        F.col("_r.status").alias("status"),
+        F.col("_r.mime").alias("mime"),
+        F.col("_r.digest").alias("digest"),
+        F.col("_r.length").cast("bigint").alias("length"),
+        F.col("_r.offset").cast("bigint").alias("offset"),
+        F.col("_r.filename").alias("filename"),
+        F.col("_r.languages").alias("languages"),
+        "valid",
+    )
+
+
+def cdx_select(
+    parsed: DataFrame,
+    statuses: tuple[str, ...] = ("200",),
+    mimes: tuple[str, ...] | None = ("text/html",),
+    languages: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """Capture selection over parse_cdxj rows: valid rows matching the
+    allowlists.  ``languages`` matches CDXJ's comma-joined language
+    member (a capture counts if ANY of its languages is allowed).  A
+    scan-stage filter, no Exchange."""
+    cond = F.col("valid") & F.col("status").isin(*statuses)
+    if mimes is not None:
+        cond = cond & F.col("mime").isin(*mimes)
+    if languages is not None:
+        langs = F.split(F.coalesce(F.col("languages"), F.lit("")), ",")
+        cond = cond & F.arrays_overlap(
+            langs, F.array(*[F.lit(x) for x in languages])
+        )
+    return parsed.where(cond)
+
+
 def _fetch_plan(selected: DataFrame) -> DataFrame:
     """Order a selection for sequential ranged reads: one Exchange on
     the archive filename, offsets sorted within each partition, so no
@@ -340,7 +415,7 @@ def fetch_records(selected: DataFrame, emit_text: bool = True) -> DataFrame:
     pattern: never rescan the archive; read exactly the (offset, length)
     spans the index selection names.
 
-    Input is any selection of build_cdx rows (columns
+    Input is any selection of build_cdx or parse_cdxj rows (columns
     filename/offset/length at minimum).  Ordered by _fetch_plan, each
     task walks every file monotonically — locally a seek+read per span,
     on S3 the same loop issues sequential HTTP range requests.  Each
@@ -404,3 +479,218 @@ def fetch_records(selected: DataFrame, emit_text: bool = True) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return _fetch_plan(selected).mapInPandas(run, WARC_SCHEMA)
+
+
+def write_wet(
+    extracted: DataFrame,
+    out_dir: str,
+    url_col: str = "url",
+    text_col: str = "text",
+    date_col: str | None = None,
+    num_files: int | None = None,
+) -> int:
+    """Write extracted text as WET files (`.warc.gz` of WARC/1.0
+    ``conversion`` records, per-record gzip members — the format Common
+    Crawl distributes extracted text in, readable back by read_warc /
+    iter_warc_members / build_cdx like any other archive).
+
+    Distributed sink shape: each task serializes its own partition into
+    ONE ``wet-<partition>.warc.gz`` (the standard custom-binary-sink
+    pattern — parquet/Iceberg writers are file-per-task the same way).
+    Rows are hash-partitioned by url and SORTED by url within each
+    partition, and every record serializes byte-deterministically
+    (uuid5 ids, MTIME=0 gzip), so the same input at the same
+    ``num_files`` produces identical files — diffable, resumable
+    output.  Returns the number of records written."""
+    from ..kernels.warc import build_conversion_record, gzip_member
+
+    n = num_files or extracted.rdd.getNumPartitions()
+    cols = [F.col(url_col).alias("url"),
+            F.col(text_col).alias("text"),
+            (F.col(date_col) if date_col else F.lit(None))
+            .cast("string").alias("date")]
+    rows = (
+        extracted.select(*cols)
+        .repartition(n, "url")
+        .sortWithinPartitions("url")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write_part(it):
+        import os as _os
+
+        f = None
+        pid = count = 0
+        for r in it:
+            if f is None:                           # lazy: skip empty parts
+                from pyspark import TaskContext
+                pid = TaskContext.get().partitionId()
+                f = open(_os.path.join(out_dir, f".wet-{pid:05d}.tmp"), "wb")
+            f.write(gzip_member(build_conversion_record(
+                r["url"], r["text"], r["date"] or "1970-01-01T00:00:00Z")))
+            count += 1
+        if f is not None:
+            f.close()
+            _os.replace(                            # atomic publish
+                _os.path.join(out_dir, f".wet-{pid:05d}.tmp"),
+                _os.path.join(out_dir, f"wet-{pid:05d}.warc.gz"))
+        yield count
+
+    return sum(rows.rdd.mapPartitions(write_part).collect())
+
+
+_WAT_TITLE_RE = r"(?i)<title[^>]*>([^<]*)</title>"
+_WAT_ANCHOR_RE = r'(?i)<a\s[^>]*href="([^"#]+)"[^>]*>([^<]*)</a>'
+
+
+def wat_metadata(
+    pages: DataFrame,
+    url_col: str = "url",
+    html_col: str = "html",
+    date_col: str | None = None,
+) -> DataFrame:
+    """Per-page link/title metadata — the content of a Common-Crawl WAT
+    envelope — derived entirely Catalyst-side.
+
+    Output: (url, date, title, links array<struct<url,text>>). The two
+    regexp_extract_all passes + arrays_zip stay in whole-stage codegen
+    over the scan (no Python in the parse); at 100 TB this is a map-only
+    projection that scales exactly like the scan. WAT lists ALL anchors,
+    relative links included.
+    """
+    h = F.col(html_col).cast("string")
+    zipped = F.arrays_zip(
+        F.regexp_extract_all(h, F.lit(_WAT_ANCHOR_RE), F.lit(1)).alias("url"),
+        F.regexp_extract_all(h, F.lit(_WAT_ANCHOR_RE), F.lit(2)).alias("text"),
+    )
+    return pages.select(
+        F.col(url_col).alias("url"),
+        (F.col(date_col) if date_col else F.lit(None))
+        .cast("string").alias("date"),
+        F.regexp_extract(h, _WAT_TITLE_RE, 1).alias("title"),
+        zipped.alias("links"),
+    )
+
+
+def write_wat(
+    pages: DataFrame,
+    out_dir: str,
+    url_col: str = "url",
+    html_col: str = "html",
+    date_col: str | None = None,
+    num_files: int | None = None,
+) -> int:
+    """Write page metadata as WAT files (`.warc.gz` of WARC/1.0
+    ``metadata`` records whose payload is a canonical-JSON envelope —
+    the third member of Common Crawl's WARC/WET/WAT triple, readable
+    back by iter_warc_members / read_warc like any other archive).
+
+    Same distributed sink shape as write_wet: the html -> (title, links)
+    parse happens Catalyst-side (wat_metadata), each task serializes its
+    own url-hash partition into ONE ``wat-<partition>.warc.gz`` sorted by
+    url, every record byte-deterministic (sorted-key compact JSON, uuid5
+    ids, MTIME=0 gzip) — identical input at the same ``num_files``
+    produces identical files. Returns the number of records written.
+    """
+    import json as _json
+
+    from ..kernels.warc import build_metadata_record, gzip_member
+
+    n = num_files or pages.rdd.getNumPartitions()
+    rows = (
+        wat_metadata(pages, url_col=url_col, html_col=html_col,
+                     date_col=date_col)
+        .repartition(n, "url")
+        .sortWithinPartitions("url")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write_part(it):
+        import os as _os
+
+        f = None
+        pid = count = 0
+        for r in it:
+            if f is None:                           # lazy: skip empty parts
+                from pyspark import TaskContext
+                pid = TaskContext.get().partitionId()
+                f = open(_os.path.join(out_dir, f".wat-{pid:05d}.tmp"), "wb")
+            date = r["date"] or "1970-01-01T00:00:00Z"
+            env = {
+                "Envelope": {
+                    "WARC-Header-Metadata": {
+                        "WARC-Target-URI": r["url"],
+                        "WARC-Date": date,
+                    },
+                    "Payload-Metadata": {
+                        "HTTP-Response-Metadata": {
+                            "HTML-Metadata": {
+                                "Head": {"Title": r["title"] or ""},
+                                "Links": [
+                                    {"url": li["url"], "text": li["text"]}
+                                    for li in (r["links"] or [])
+                                ],
+                            }
+                        }
+                    },
+                }
+            }
+            payload = _json.dumps(
+                env, sort_keys=True, separators=(",", ":"),
+                ensure_ascii=False,
+            ).encode("utf-8")
+            f.write(gzip_member(
+                build_metadata_record(r["url"], date, payload)))
+            count += 1
+        if f is not None:
+            f.close()
+            _os.replace(                            # atomic publish
+                _os.path.join(out_dir, f".wat-{pid:05d}.tmp"),
+                _os.path.join(out_dir, f"wat-{pid:05d}.warc.gz"))
+        yield count
+
+    return sum(rows.rdd.mapPartitions(write_part).collect())
+
+
+_WAT_ENV_SCHEMA = T.StructType([T.StructField("Envelope", T.StructType([
+    T.StructField("WARC-Header-Metadata", T.StructType([
+        T.StructField("WARC-Target-URI", T.StringType()),
+        T.StructField("WARC-Date", T.StringType()),
+    ])),
+    T.StructField("Payload-Metadata", T.StructType([
+        T.StructField("HTTP-Response-Metadata", T.StructType([
+            T.StructField("HTML-Metadata", T.StructType([
+                T.StructField("Head", T.StructType([
+                    T.StructField("Title", T.StringType()),
+                ])),
+                T.StructField("Links", T.ArrayType(T.StructType([
+                    T.StructField("url", T.StringType()),
+                    T.StructField("text", T.StringType()),
+                ]))),
+            ])),
+        ])),
+    ])),
+]))])
+
+
+def read_wat(spark: SparkSession, path: str) -> DataFrame:
+    """Read WAT archives back into (url, date, title, links) — the
+    inverse of write_wat, so link or title work can start from a
+    published WAT instead of rescanning the WARC bytes (exactly how
+    Common Crawl consumers avoid the full-archive scan).
+
+    Shape: the record walk is the same map-only Arrow pass as read_warc;
+    the JSON envelope parses with from_json (Jackson, JVM-side) — a
+    malformed envelope degrades to a NULL-fields row (from_json returns
+    null), never a crash."""
+    recs = read_warc(spark, path, record_types=("metadata",))
+    env = F.from_json(F.col("text"), _WAT_ENV_SCHEMA)["Envelope"]
+    html_meta = env["Payload-Metadata"]["HTTP-Response-Metadata"][
+        "HTML-Metadata"]
+    return recs.where(F.col("error").isNull()).select(
+        F.coalesce(env["WARC-Header-Metadata"]["WARC-Target-URI"],
+                   F.col("url")).alias("url"),
+        env["WARC-Header-Metadata"]["WARC-Date"].alias("date"),
+        html_meta["Head"]["Title"].alias("title"),
+        html_meta["Links"].alias("links"),
+    )

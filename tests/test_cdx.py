@@ -4,9 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from intelligent_document_processing_on_aws_spark.operators.cdx import (
+from intelligent_document_processing_on_aws_spark.sources.warc import (
+    _fetch_plan,
     cdx_select,
-    fetch_plan,
     parse_cdxj,
 )
 
@@ -80,10 +80,18 @@ def test_fetch_plan_groups_by_file_and_sorts_offsets(spark):
     rows = [(f"crawl-0{i % 3}.warc.gz", (97 * i) % 1000, f"k{i}")
             for i in range(60)]
     df = spark.createDataFrame(rows, "filename string, offset long, urlkey string")
-    planned = fetch_plan(df, num_partitions=3)
-    per_part = planned.withColumn(
-        "pid", F.spark_partition_id()
-    ).collect()
+    # AQE would coalesce 60 rows into one partition, where no file can
+    # straddle two; keep the shuffle's partitions apart
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        per_part = _fetch_plan(df).withColumn(
+            "pid", F.spark_partition_id()
+        ).collect()
+    finally:
+        spark.conf.set(key, saved)
+    assert len({r["pid"] for r in per_part}) > 1
     by_pid: dict[int, list] = {}
     for r in per_part:
         by_pid.setdefault(r["pid"], []).append((r["filename"], r["offset"]))
@@ -94,79 +102,3 @@ def test_fetch_plan_groups_by_file_and_sorts_offsets(spark):
     for r in per_part:
         file_pids.setdefault(r["filename"], set()).add(r["pid"])
     assert all(len(p) == 1 for p in file_pids.values())
-
-
-def test_capture_policies_latest_and_canonical(spark):
-    """latest_captures keeps exactly the newest row per url (deterministic
-    ties); canonical_captures keeps the EARLIEST per digest — the stored
-    full record under Common Crawl's revisit rule — and both plan as
-    WindowGroupLimit (partition-local prune before the exchange)."""
-    from intelligent_document_processing_on_aws_spark.operators.cdx import (
-        canonical_captures,
-        latest_captures,
-    )
-
-    rows = [
-        # url A: 3 crawls, payload changes at the last one
-        ("com,a)/", "20230101000000", "d1", "f1"),
-        ("com,a)/", "20240101000000", "d1", "f2"),   # identical re-fetch
-        ("com,a)/", "20250101000000", "d2", "f3"),
-        # url B: one capture whose payload equals A's first (cross-url dup)
-        ("com,b)/", "20240601000000", "d1", "f4"),
-    ]
-    caps = spark.createDataFrame(
-        rows, "urlkey string, ts string, digest string, filename string")
-
-    latest = {r.urlkey: r for r in latest_captures(caps).collect()}
-    assert len(latest) == 2
-    assert latest["com,a)/"].ts == "20250101000000"
-    assert latest["com,b)/"].ts == "20240601000000"
-
-    canon = {r.digest: r for r in canonical_captures(caps).collect()}
-    assert len(canon) == 2
-    assert (canon["d1"].urlkey, canon["d1"].ts) == ("com,a)/",
-                                                    "20230101000000")
-    assert canon["d2"].ts == "20250101000000"
-
-    for op in (latest_captures, canonical_captures):
-        plan = op(caps)._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan, op.__name__
-        assert "BatchEvalPython" not in plan
-
-
-def test_politeness_schedule_quarantines_empty_host(spark):
-    """Non-http(s)/malformed locs (host extracts to '') are excluded
-    from the schedule instead of sharing one phantom-host eta ladder."""
-    from intelligent_document_processing_on_aws_spark.operators.cdx import (
-        politeness_schedule,
-    )
-
-    locs = spark.createDataFrame(
-        [("http://a/1",), ("http://a/2",), ("ftp://weird/3",),
-         ("not-a-url",)], "loc string")
-    out = politeness_schedule(locs, start_epoch=100, default_delay=2)
-    rows = {r["loc"]: r for r in out.collect()}
-    assert set(rows) == {"http://a/1", "http://a/2"}
-    assert rows["http://a/1"]["fetch_seq"] == 1
-    assert rows["http://a/2"]["eta_epoch"] == 102
-
-
-def test_fetch_schedule_oracle_drops_empty_host(spark, tmp_path, monkeypatch):
-    """The fetch_schedule query and its DuckDB oracle agree on an input
-    that carries non-http(s) locs: both leave out the host='' rows."""
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from intelligent_document_processing_on_aws_spark import entry_queries as eq
-
-    locs = ["https://a.example/1", "https://a.example/2", "http://bb.example/x",
-            "ftp://weird/3", "not-a-url", "mailto:x@a.example"]
-    path = str(tmp_path / "sitemap_golden.parquet")
-    pq.write_table(pa.table({"kind": ["urlset"] * len(locs), "loc": locs}), path)
-    monkeypatch.setattr(eq, "_fx", lambda name: path)
-
-    spark_rows = sorted(tuple(r) for r in eq.q_fetch_schedule(spark, "").collect())
-    oracle_rows = sorted(duckdb.connect().execute(eq._sql_fetch_schedule()).fetchall())
-    assert spark_rows == oracle_rows
-    assert {r[0] for r in oracle_rows} == set(locs[:3])
