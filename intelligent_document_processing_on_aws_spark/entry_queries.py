@@ -73,10 +73,6 @@ def _wrap(fn):
     return wrapped
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
 _CRITERIA = (  # (criteria_type, question_id, pass_pattern, fail_pattern)
     ("content", "q_spark_usage", "spark", "slow"),
     ("content", "q_customer_query", "customer query", None),
@@ -508,48 +504,6 @@ def _sql_charset_transcode() -> str:
     return (
         "SELECT doc_id, encoding, source, n_chars, text "
         f"FROM read_parquet('{_fx('charset_golden.parquet')}')"
-    )
-
-
-def q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-metadata extraction (kernels/html_meta — beyond reference,
-    which ingests uploads rather than crawled pages): title, meta
-    description, rel=canonical, html@lang, meta robots, og:* — the
-    crawl-side metadata stage (canonical URL, declared language).
-    Tokenizer parse bounded at </head>/<body>
-    (per-doc work ~= head size, not page size); map-only Arrow pass,
-    zero shuffles. Oracle: the generator's composition facts."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .kernels.html_meta import extract_head_meta
-
-    fields = ("title", "description", "canonical", "lang", "robots_meta",
-              "og_title", "og_description", "og_url", "og_image", "og_type")
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType())]
-        + [T.StructField(f, T.StringType()) for f in fields]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [extract_head_meta(h) for h in pdf["html"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"],
-                 **{f: [getattr(m, f) for m in metas] for f in fields}}
-            )
-
-    src = spark.read.parquet(_fx("html_meta_docs.parquet")).select("doc_id", "html")
-    return src.mapInPandas(run, schema)
-
-
-def _sql_html_meta() -> str:
-    return (
-        "SELECT doc_id, title, description, canonical, lang, robots_meta, "
-        "og_title, og_description, og_url, og_image, og_type "
-        f"FROM read_parquet('{_fx('html_meta_golden.parquet')}')"
     )
 
 
@@ -2134,7 +2088,6 @@ _RAW_QUERIES = {
     "extract_csv": q_extract_csv,
     "extract_real_pdf": q_extract_real_pdf,
     "charset_transcode": q_charset_transcode,
-    "html_meta": q_html_meta,
     "ocr_table_markdown": q_ocr_table_markdown,
     "image_meta": q_image_meta,
     "image_resize": q_image_resize,
@@ -2179,7 +2132,6 @@ def oracles() -> dict[str, str]:
         "extract_csv": _sql_extract_csv(),
         "extract_real_pdf": _sql_extract_real_pdf(),
         "charset_transcode": _sql_charset_transcode(),
-        "html_meta": _sql_html_meta(),
         "ocr_table_markdown": _sql_ocr_table_markdown(),
         "image_meta": _sql_image_meta(),
         "image_resize": _sql_image_resize(),

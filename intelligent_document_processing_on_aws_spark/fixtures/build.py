@@ -346,41 +346,6 @@ def build_charset_fixtures(out_dir: str = FIXTURES_DIR, n: int = N_CHARSET) -> N
     print(f"wrote charset_docs/charset_golden: {n} rows")
 
 
-N_HTML_META = 320
-
-_META_COLS = ("title", "description", "canonical", "lang", "robots_meta",
-              "og_title", "og_description", "og_url", "og_image", "og_type")
-
-
-def build_html_meta_fixtures(out_dir: str = FIXTURES_DIR,
-                             n: int = N_HTML_META) -> None:
-    from .html_meta_gen import gen_html_meta_docs
-
-    docs = gen_html_meta_docs(n)
-    table = pa.Table.from_pydict(
-        {
-            "doc_id": [d["doc_id"] for d in docs],
-            "family": [d["family"] for d in docs],
-            "html": [d["html"] for d in docs],
-        },
-        schema=pa.schema(
-            [("doc_id", pa.int64()), ("family", pa.string()),
-             ("html", pa.string())]
-        ),
-    )
-    pq.write_table(table, os.path.join(out_dir, "html_meta_docs.parquet"),
-                   compression="zstd")
-    golden = pa.Table.from_pydict(
-        {"doc_id": [d["doc_id"] for d in docs],
-         **{c: [d[c] for d in docs] for c in _META_COLS}},
-        schema=pa.schema([("doc_id", pa.int64())]
-                         + [(c, pa.string()) for c in _META_COLS]),
-    )
-    pq.write_table(golden, os.path.join(out_dir, "html_meta_golden.parquet"),
-                   compression="zstd")
-    print(f"wrote html_meta_docs/html_meta_golden: {n} rows")
-
-
 def build(out_dir: str = FIXTURES_DIR) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for tier, n in TIERS.items():
@@ -400,7 +365,6 @@ def build(out_dir: str = FIXTURES_DIR) -> None:
     build_semantic(out_dir)
     build_warc(out_dir)
     build_charset_fixtures(out_dir)
-    build_html_meta_fixtures(out_dir)
 
 
 if __name__ == "__main__":

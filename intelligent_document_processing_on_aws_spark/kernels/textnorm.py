@@ -205,8 +205,7 @@ def normalize_attr_pattern(path: str) -> str:
 
 
 def feature_combination_suffix(features: list[str] | None) -> str:
-    """Pure twin of functions/scalars.feature_combination_suffix
-    (reference ocr/service.py:500-536): Textract feature set -> the
+    """Reference ocr/service.py:500-536: Textract feature set -> the
     pricing suffix appended to the metering service_api key."""
     f = set(features or ())
     if "TABLES" in f and "FORMS" in f:

@@ -23,7 +23,6 @@ sources/warc.py.
 from __future__ import annotations
 
 import gzip
-import io
 import re
 import zlib
 

@@ -685,12 +685,12 @@ def read_wat(spark: SparkSession, path: str) -> DataFrame:
     null), never a crash."""
     recs = read_warc(spark, path, record_types=("metadata",))
     env = F.from_json(F.col("text"), _WAT_ENV_SCHEMA)["Envelope"]
-    html_meta = env["Payload-Metadata"]["HTTP-Response-Metadata"][
+    html = env["Payload-Metadata"]["HTTP-Response-Metadata"][
         "HTML-Metadata"]
     return recs.where(F.col("error").isNull()).select(
         F.coalesce(env["WARC-Header-Metadata"]["WARC-Target-URI"],
                    F.col("url")).alias("url"),
         env["WARC-Header-Metadata"]["WARC-Date"].alias("date"),
-        html_meta["Head"]["Title"].alias("title"),
-        html_meta["Links"].alias("links"),
+        html["Head"]["Title"].alias("title"),
+        html["Links"].alias("links"),
     )

@@ -37,3 +37,37 @@ def fixtures_dir():
 
         build()
     return FIXTURES_DIR
+
+
+def _generated_pages(spark, n, partitions, cols, ddl):
+    """pages_gen pages 0..n-1, generated on the executors: pages are
+    seed-addressed by index, so no driver-side materialization."""
+    import pandas as pd
+
+    from intelligent_document_processing_on_aws_spark.fixtures.pages_gen import gen_page
+
+    def gen(batches):
+        for pdf in batches:
+            recs = [gen_page(int(i)) for i in pdf["id"]]
+            yield pd.DataFrame({c: [r[c] for r in recs] for c in cols})
+
+    return spark.range(0, n, numPartitions=partitions).mapInPandas(gen, ddl)
+
+
+@pytest.fixture(scope="session")
+def synthetic_pages(spark):
+    """(n, partitions) -> the input columns of n generated pages."""
+    from intelligent_document_processing_on_aws_spark.fixtures.pages_gen import INPUT_COLS
+
+    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
+    return lambda n, partitions: _generated_pages(spark, n, partitions, INPUT_COLS, ddl)
+
+
+@pytest.fixture(scope="session")
+def synthetic_golden(spark):
+    """(n, partitions) -> the golden columns of n generated pages."""
+    from intelligent_document_processing_on_aws_spark.fixtures.pages_gen import GOLDEN_COLS
+
+    ddl = ("url string, extracted_text string, spans_json string, lang string, "
+           "confidence double, content_type string")
+    return lambda n, partitions: _generated_pages(spark, n, partitions, GOLDEN_COLS, ddl)

@@ -1,4 +1,5 @@
-"""Reporting sinks (catalog) + scalar Column library."""
+"""Reporting sinks (catalog), the comparator Columns and the scalar
+kernels of kernels/textnorm."""
 
 from __future__ import annotations
 
@@ -6,14 +7,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from intelligent_document_processing_on_aws_spark.functions import (
-    normalize_boolean,
-    parse_uri,
-    pipe_escape,
-)
 from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
+    extract_class_from_text,
+    feature_combination_suffix,
     normalize_boolean_value,
     strip_punctuation_space,
+    token_limit_warning,
 )
 from intelligent_document_processing_on_aws_spark.operators.evaluation import (
     norm_exact,
@@ -33,24 +32,17 @@ def test_scalar_columns_match_kernels(spark):
         "v",
         norm_exact(F.col("v")).alias("s"),
         norm_numeric(F.col("v")).alias("n"),
-        normalize_boolean(F.col("v")).alias("b"),
     ).collect()
     for r in rows:
         assert r.s == strip_punctuation_space(r.v)
-        assert r.b == normalize_boolean_value(r.v)
     byv = {r.v: r for r in rows}
     assert byv["$1,234.50"].n == 1234.50
     assert byv["(99)"].n == 99.0
     assert byv["A, B!"].n is None
-
-
-def test_parse_uri_and_pipe_escape(spark):
-    df = spark.createDataFrame(
-        [("s3://bucket-x/a/b/c.json", "a|b")], "u string, t string"
-    )
-    r = df.select(parse_uri(F.col("u")).alias("p"), pipe_escape(F.col("t")).alias("e")).first()
-    assert r.p.scheme == "s3" and r.p.bucket == "bucket-x" and r.p.key == "a/b/c.json"
-    assert r.e == "a\\|b"
+    assert [normalize_boolean_value(v) for v in vals] == [
+        None, None, None, None, True, False, None, None]
+    assert normalize_boolean_value(" Y ") is True
+    assert normalize_boolean_value(0) is False
 
 
 def test_write_document_sections_dynamic_tables(spark, fixtures_dir, tmp_path):
@@ -81,117 +73,66 @@ def test_write_metrics_table_date_partition(spark, tmp_path):
     assert os.path.isdir(os.path.join(wh, "metrics", "date=2025-03-04"))
 
 
-def test_feature_combination_suffix_all_combos(spark):
-    """Exhaustive 16-combination parity: the native Column expression equals
-    the pure kernel for every subset of {TABLES, FORMS, LAYOUT, SIGNATURES}
-    (reference ocr/service.py:500-536 billing rules)."""
+def test_feature_combination_suffix_all_combos():
+    """Every subset of {TABLES, FORMS, LAYOUT, SIGNATURES} gets the
+    suffix of the reference's billing rules (ocr/service.py:500-536):
+    tables and forms outrank layout, layout outranks signatures."""
     from itertools import combinations
 
-    from intelligent_document_processing_on_aws_spark.functions.scalars import (
-        feature_combination_suffix as col_fn,
-    )
-    from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-        feature_combination_suffix as py_fn,
-    )
-
     feats = ["TABLES", "FORMS", "LAYOUT", "SIGNATURES"]
-    rows = [(i, list(c)) for i, c in enumerate(
-        sum([list(combinations(feats, k)) for k in range(5)], [])
-    )] + [(99, None)]
-    df = spark.createDataFrame(rows, "id long, features array<string>")
-    got = {r.id: r.suffix for r in
-           df.select("id", col_fn(F.col("features")).alias("suffix")).collect()}
-    for i, c in rows:
-        assert got[i] == py_fn(c), (c, got[i])
+    for k in range(5):
+        for c in combinations(feats, k):
+            f = set(c)
+            want = ("-Tables+Forms" if {"TABLES", "FORMS"} <= f
+                    else "-Tables" if "TABLES" in f
+                    else "-Forms" if "FORMS" in f
+                    else "-Layout" if "LAYOUT" in f
+                    else "-Signatures" if "SIGNATURES" in f
+                    else "")
+            assert feature_combination_suffix(list(c)) == want, c
+    assert feature_combination_suffix(None) == ""
     # spot semantics: signatures free with tables; layout free with forms
-    assert py_fn(["TABLES", "SIGNATURES"]) == "-Tables"
-    assert py_fn(["FORMS", "LAYOUT"]) == "-Forms"
-    assert py_fn(["SIGNATURES"]) == "-Signatures"
+    assert feature_combination_suffix(["TABLES", "SIGNATURES"]) == "-Tables"
+    assert feature_combination_suffix(["FORMS", "LAYOUT"]) == "-Forms"
+    assert feature_combination_suffix(["SIGNATURES"]) == "-Signatures"
 
 
-def test_token_limit_warning_parity(spark):
+def test_token_limit_warning_parity():
     """chars/4 estimate semantics of utils check_token_limit: warning iff
-    configured budget < estimate; no budget -> always None; native Column
-    twin agrees with the pure kernel."""
-    from intelligent_document_processing_on_aws_spark.functions.scalars import (
-        token_limit_warning_col,
-    )
-    from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-        token_limit_warning,
-    )
-
+    configured budget < estimate; no budget -> always None."""
     text, results = "x" * 300, "y" * 100  # estimate = 100 tokens
-    assert token_limit_warning(text, results, 99) is not None
+    assert token_limit_warning(text, results, 99) == (
+        "The max_tokens value of 99 is too low for this document.")
     assert token_limit_warning(text, results, 100) is None  # 100 < 100 false
     assert token_limit_warning(text, results, None) is None
     assert token_limit_warning("", "", 1) is None
 
-    df = spark.createDataFrame([(text, results)], "t string, r string")
-    for budget, want in ((99, True), (100, False)):
-        got = df.select(
-            token_limit_warning_col(F.col("t"), F.col("r"), budget).alias("w")
-        ).collect()[0].w
-        assert (got is not None) == want
-        if want:
-            assert got == token_limit_warning(text, results, budget)
 
-
-def test_extract_class_from_text_parity(spark):
-    """Fixed pattern order, case preservation, quote strip, EOL slicing —
-    native twin equals the pure kernel on every shape
+def test_extract_class_from_text_parity():
+    """Fixed pattern order, case preservation, quote strip, EOL slicing
     (classification/service.py:1432-1453)."""
-    from intelligent_document_processing_on_aws_spark.functions.scalars import (
-        extract_class_from_text_col,
-    )
-    from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-        extract_class_from_text,
-    )
-
-    cases = [
-        "Class: Invoice\nrest",            # case-insensitive find, case kept
-        'classification: "bank_statement"',
-        "The document type: W2 Form",
-        "document class: Receipt",          # 'class: ' substring hit wins
-        "type: 'letter'",
-        "no label here",
-        "TYPE: loud\nquiet",
-        "class:missing-space",              # no trailing space -> no match...
-        "prefix\nclass: tail value  ",
-    ]
-    expected = [extract_class_from_text(t) for t in cases]
-    assert expected[0] == "Invoice"
-    assert expected[1] == "bank_statement"
-    assert expected[3] == "Receipt"
-    assert expected[5] == ""
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)],
-                               "id long, t string")
-    got = {r.id: r.v for r in
-           df.select("id", extract_class_from_text_col(F.col("t")).alias("v")).collect()}
-    for i, want in enumerate(expected):
-        assert got[i] == want, (cases[i], got[i], want)
+    cases = {
+        "Class: Invoice\nrest": "Invoice",  # case-insensitive find, case kept
+        'classification: "bank_statement"': "bank_statement",
+        "The document type: W2 Form": "W2 Form",
+        "document class: Receipt": "Receipt",  # 'class: ' substring hit wins
+        "type: 'letter'": "letter",
+        "no label here": "",
+        "TYPE: loud\nquiet": "loud",
+        "class:missing-space": "",  # no trailing space -> no match
+        "prefix\nclass: tail value  ": "tail value",
+    }
+    for text, want in cases.items():
+        assert extract_class_from_text(text) == want, text
 
 
-def test_extract_class_from_text_whitespace_and_unicode(spark):
+def test_extract_class_from_text_whitespace_and_unicode():
     """Regression inputs from review: CRLF values, tab-wrapped quotes, and
-    a length-changing lowercase char must agree between twins and be clean."""
-    from intelligent_document_processing_on_aws_spark.functions.scalars import (
-        extract_class_from_text_col,
-    )
-    from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-        extract_class_from_text,
-    )
-
+    a length-changing lowercase char must come out clean."""
     cases = [
         "class: Invoice\r\nnext",    # CRLF: \r must strip
         "class: \t'Invoice'\t",      # tabs around quotes
         "İ\nclass: Invoice",     # 'İ' lowers to 2 chars — index shift
         "class:  Invoice ", # unicode NBSP whitespace
     ]
-    expected = [extract_class_from_text(t) for t in cases]
-    assert expected == ["Invoice"] * 4
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)],
-                               "id long, t string")
-    got = {r.id: r.v for r in
-           df.select("id", extract_class_from_text_col(F.col("t")).alias("v")).collect()}
-    for i, want in enumerate(expected):
-        assert got[i] == want, (cases[i], got[i], want)
+    assert [extract_class_from_text(t) for t in cases] == ["Invoice"] * 4

@@ -9,10 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages
-from intelligent_document_processing_on_aws_spark.sources.pages_source import (
-    synthetic_golden,
-    synthetic_pages,
-)
 
 
 def test_extract_matches_golden_parquet(spark, fixtures_dir):
@@ -33,10 +29,10 @@ def test_extract_matches_golden_parquet(spark, fixtures_dir):
     assert result.count() == 200
 
 
-def test_distributed_generation_matches_build(spark, fixtures_dir):
+def test_distributed_generation_matches_build(spark, fixtures_dir, synthetic_pages):
     """Executor-side generated pages == committed parquet (seed addressing)."""
     committed = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet"))
-    generated = synthetic_pages(spark, 200, partitions=4)
+    generated = synthetic_pages(200, partitions=4)
     a = committed.select("url", F.md5(F.col("html")).alias("h"), "text", "lang")
     b = generated.select("url", F.md5(F.col("html")).alias("h"), "text", "lang")
     assert a.exceptAll(b).count() == 0
@@ -69,9 +65,9 @@ def test_build_reproduces_committed_fixtures(fixtures_dir, tmp_path):
                 assert a.read() == b.read(), rel
 
 
-def test_extract_on_generated_pages(spark):
-    pages = synthetic_pages(spark, 120, partitions=4)
-    golden = synthetic_golden(spark, 120, partitions=4)
+def test_extract_on_generated_pages(synthetic_pages, synthetic_golden):
+    pages = synthetic_pages(120, partitions=4)
+    golden = synthetic_golden(120, partitions=4)
     result = extract_pages(pages)
     j = result.alias("r").join(golden.alias("g"), "url")
     mismatches = j.where(
@@ -95,10 +91,10 @@ def test_spans_struct_column(spark, fixtures_dir):
 
 
 @pytest.mark.parametrize("n_parts", [8, 32])
-def test_url_hash_salt_spreads_rows(spark, n_parts):
+def test_url_hash_salt_spreads_rows(synthetic_pages, n_parts):
     """The salt spreads 2 000 urls over every partition, none holding more
     than 1.5x the mean (a salt pre-reduced mod P filled 4 of 8)."""
-    pages = synthetic_pages(spark, 2000, partitions=4)
+    pages = synthetic_pages(2000, partitions=4)
     counts = [
         r.n for r in extract_pages(pages, salt_partitions=n_parts)
         .groupBy(F.spark_partition_id().alias("p"))

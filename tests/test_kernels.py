@@ -13,10 +13,6 @@ import pytest
 from intelligent_document_processing_on_aws_spark.fixtures.pages_gen import gen_page, gen_pages
 from intelligent_document_processing_on_aws_spark.kernels import filetype
 from intelligent_document_processing_on_aws_spark.kernels.boilerplate import extract_html
-from intelligent_document_processing_on_aws_spark.kernels.confidence import (
-    synthetic_line_blocks,
-    text_confidence_table,
-)
 from intelligent_document_processing_on_aws_spark.kernels.extract import extract_page
 from intelligent_document_processing_on_aws_spark.kernels.pagination import text_to_pages, wrap_lines
 from intelligent_document_processing_on_aws_spark.kernels.tables import (
@@ -103,24 +99,6 @@ def test_text_pagination_wrap_math():
 def test_blank_lines_preserved():
     pages = text_to_pages("a\n\nb")
     assert pages[0] == "a\n\nb"
-
-
-def test_text_confidence_table():
-    md = text_confidence_table(
-        [("Hello | world", 98.76, "PRINTED"), ("scrawl", 70.0, "HANDWRITING"), ("", 1.0, "PRINTED")]
-    )
-    assert md.split("\n") == [
-        "| Text | Confidence |",
-        "|:-----|:-----------|",
-        "| Hello \\| world | 98.8 |",
-        "| scrawl (HANDWRITING) | 70.0 |",
-    ]
-
-
-def test_synthetic_line_blocks():
-    blocks = synthetic_line_blocks("a\n\nb c")
-    assert [b["Text"] for b in blocks] == ["a", "b c"]
-    assert all(b["Confidence"] == 99.0 and b["BlockType"] == "LINE" for b in blocks)
 
 
 def test_html_entity_and_malformed():

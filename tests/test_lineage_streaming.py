@@ -15,16 +15,15 @@ from intelligent_document_processing_on_aws_spark.plans.lineage import (
     assert_no_duplicates,
     run_with_resume_snapshots,
 )
-from intelligent_document_processing_on_aws_spark.sources.pages_source import synthetic_pages
 from intelligent_document_processing_on_aws_spark.sources.snapshots import read_table
 
 
-def test_resume_no_duplicates(spark, tmp_path):
+def test_resume_no_duplicates(spark, tmp_path, synthetic_pages):
     """Kill-and-rerun semantics: first run commits half the corpus, resume
     processes only the remainder; no url duplicated, all urls present."""
     out = str(tmp_path / "out")
     lineage = str(tmp_path / "lineage")
-    all_pages = synthetic_pages(spark, 120, partitions=4)
+    all_pages = synthetic_pages(120, partitions=4)
     first_half = all_pages.where(F.xxhash64("url") % 2 == 0)
 
     r1 = run_with_resume_snapshots(spark, first_half, out, lineage, salt_partitions=4)
@@ -108,9 +107,7 @@ def test_document_status_lifecycle(spark, tmp_path):
     append_status([(ids(3), "CLASSIFYING")], wh)
     assert {r.doc_id: r.status for r in
             latest_status(spark, wh).collect()}[3] == "CLASSIFYING"
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         append_status([(ids(1), "NOT_A_STATUS")], wh)
 
 
@@ -149,15 +146,11 @@ def test_append_status_is_one_write_with_observed_counts(spark, tmp_path):
 
 
 def test_append_status_checks_every_status_before_writing(spark, tmp_path):
-    import os
-
-    import pytest as _pytest
-
     from intelligent_document_processing_on_aws_spark.plans.status import append_status
 
     wh = str(tmp_path / "wh")
     ids = spark.createDataFrame([(1,)], "doc_id long")
-    with _pytest.raises(ValueError, match="NOT_A_STATUS"):
+    with pytest.raises(ValueError, match="NOT_A_STATUS"):
         append_status([(ids, "QUEUED"), (ids, "NOT_A_STATUS")], wh)
     assert not os.path.exists(wh)
 

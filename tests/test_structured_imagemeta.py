@@ -1,13 +1,11 @@
-"""YAML/JSON autodetect ladder + image-header metadata tests.
+"""Image-header metadata, image preprocessing, list parsing and DOCX runs.
 
-Reference roles: utils/__init__.py:277-621 (extract_yaml_from_text /
-detect_format / extract_structured_data_from_text), image/__init__.py
-size probing (header fields replace the PIL read).
+Reference roles: image/__init__.py size probing (header fields replace
+the PIL read), resize and binarization; comparator.py list parsing.
 """
 
 from __future__ import annotations
 
-import json
 import struct
 
 from hypothesis import given
@@ -19,110 +17,9 @@ from intelligent_document_processing_on_aws_spark.kernels.image_meta import (
     jpeg_size,
     png_size,
 )
-from intelligent_document_processing_on_aws_spark.kernels.structured import (
-    detect_format,
-    extract_structured_data_from_text,
-    extract_yaml_from_text,
-)
 from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
     convert_to_list,
 )
-
-# ---------------------------------------------------------------------------
-# extract_yaml_from_text strategy ladder
-# ---------------------------------------------------------------------------
-
-
-def test_yaml_fenced_block():
-    text = "Here you go:\n```yaml\nname: a\nitems:\n  - 1\n  - 2\n```\ndone"
-    assert extract_yaml_from_text(text) == "name: a\nitems:\n  - 1\n  - 2"
-
-
-def test_yaml_fence_invalid_returns_original():
-    """The reference's strategy-1 early-out: a ```yaml tag whose body is
-    invalid returns the ORIGINAL text, not later strategies."""
-    text = "```yaml\n: : : [unbalanced\n```\n---\nvalid: yes\n---"
-    assert extract_yaml_from_text(text) == text
-
-
-def test_yml_fence_falls_through_to_markers():
-    text = "```yml\n: : : [unbalanced\n```  ---\nkey: v\n--- trailing"
-    out = extract_yaml_from_text(text)
-    assert out.startswith("---") and "key: v" in out
-
-
-def test_generic_fence_validated_as_yaml():
-    text = "```\nfoo: bar\nbaz: 2\n```"
-    assert extract_yaml_from_text(text) == "foo: bar\nbaz: 2"
-
-
-def test_document_markers():
-    text = "preamble\n---\nkey: value\nn: 3\n--- trailing prose"
-    assert extract_yaml_from_text(text) == "---\nkey: value\nn: 3"
-
-
-def test_indicator_ratio_whole_text():
-    text = "alpha: 1\nbeta: 2\ngamma: 3"
-    assert extract_yaml_from_text(text) == text
-
-
-def test_no_yaml_returns_original():
-    text = "just a plain sentence with no structure at all"
-    assert extract_yaml_from_text(text) == text
-
-
-# ---------------------------------------------------------------------------
-# detect_format
-# ---------------------------------------------------------------------------
-
-
-def test_detect_format_ladder():
-    assert detect_format('{"a": 1}') == "json"
-    assert detect_format("[1, 2]") == "json"
-    assert detect_format("---\na: 1") == "yaml"
-    assert detect_format("a: 1\nb: 2") == "yaml"
-    assert detect_format("```json\n{}\n```") == "json"
-    assert detect_format("```yaml\na: 1\n```") == "yaml"
-    assert detect_format("") == "unknown"
-    assert detect_format("   ") == "unknown"
-    assert detect_format("plain scalar text") == "unknown"  # not structured
-
-
-def test_detect_format_prefers_json_when_both_parse():
-    # valid JSON is also valid YAML; the reference prefers JSON
-    assert detect_format('{"k": [1, 2]}') == "json"
-
-
-def test_extract_structured_cross_format_fallback():
-    data, fmt = extract_structured_data_from_text('```json\n{"a": 1}\n```')
-    assert (data, fmt) == ({"a": 1}, "json")
-    data, fmt = extract_structured_data_from_text("a: 1\nb:\n  - x\n  - y")
-    assert fmt == "yaml" and data == {"a": 1, "b": ["x", "y"]}
-    data, fmt = extract_structured_data_from_text("no structure here.!.")
-    assert fmt == "unknown"
-
-
-@given(st.dictionaries(
-    st.text(alphabet="abcdefgh", min_size=1, max_size=6),
-    st.one_of(st.integers(-9999, 9999), st.text(alphabet="xyz ", max_size=8),
-              st.booleans()),
-    min_size=1, max_size=5,
-))
-def test_property_fenced_json_roundtrip(d):
-    """Any JSON object inside a fence is recovered exactly."""
-    text = f"response:\n```json\n{json.dumps(d)}\n```\nthanks"
-    data, fmt = extract_structured_data_from_text(text)
-    assert fmt == "json" and data == d
-
-
-@given(st.text(max_size=200))
-def test_property_never_raises(text):
-    """Malformed/adversarial input never raises — the ladder always
-    degrades to the original text / 'unknown'."""
-    extract_yaml_from_text(text)
-    detect_format(text)
-    extract_structured_data_from_text(text)
-
 
 # ---------------------------------------------------------------------------
 # convert_to_list reference parity (comparator.py:196-223)

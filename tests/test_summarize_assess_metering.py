@@ -1,4 +1,4 @@
-"""Summarization, assessment, metering, markdown pagination, CSV convert."""
+"""Summarization, assessment, metering, CSV convert."""
 
 from __future__ import annotations
 
@@ -13,9 +13,6 @@ from intelligent_document_processing_on_aws_spark.kernels.csv_convert import (
     csv_to_markdown,
     sheets_to_markdown,
 )
-from intelligent_document_processing_on_aws_spark.kernels.markdown_pages import (
-    markdown_to_pages,
-)
 from intelligent_document_processing_on_aws_spark.operators.assessment import (
     assess_attributes,
     threshold_alerts,
@@ -28,29 +25,6 @@ from intelligent_document_processing_on_aws_spark.operators.metering import (
 from intelligent_document_processing_on_aws_spark.operators.summarize import (
     summarize_sections,
 )
-
-
-def test_markdown_pagination_header_carryover():
-    """a page break mid-table re-inserts header + separator
-    (document_converter.py:1368-1397 parity)."""
-    header = "| A | B |"
-    sep = "| --- | --- |"
-    rows = [f"| a{i} | b{i} |" for i in range(120)]
-    md = "\n".join(["intro text", header, sep] + rows)
-    pages = markdown_to_pages(md)
-    assert len(pages) == 2
-    # lines_per_page = (1650-150)//18 = 83
-    assert pages[0].split("\n")[1] == header
-    p2 = pages[1].split("\n")
-    assert p2[0] == header and p2[1] == sep  # carryover
-    assert p2[2] == rows[83 - 3]  # continuation row follows
-
-
-def test_markdown_pagination_no_table():
-    md = "\n".join(f"line {i}" for i in range(200))
-    pages = markdown_to_pages(md)
-    assert len(pages) == 3
-    assert pages[1].split("\n")[0] == "line 83"
 
 
 def test_csv_to_markdown_formats():
