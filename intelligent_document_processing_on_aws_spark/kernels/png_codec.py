@@ -75,16 +75,6 @@ def _chunks(data: bytes):
     raise PngError("missing IEND")
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter(raw: bytes, width: int, height: int, bpp: int,
               row_bytes: int) -> bytearray:
     """Reverse the per-scanline filters. bpp = filter unit in BYTES

@@ -1,4 +1,4 @@
-"""Scalar normalization + JSON-rescue functions (reference parity).
+"""Scalar normalization and flattening functions (reference parity).
 
 Pure-Python mirrors of the reference's scalar library so pandas-UDF code and
 golden tests share one implementation:
@@ -7,8 +7,6 @@ golden tests share one implementation:
 - normalize_numeric:       evaluation/comparator.py:104-126
 - normalize_boolean_value: utils/__init__.py:255-275
 - convert_to_list:         evaluation/comparator.py:196-223
-- extract_json_from_text:  utils/__init__.py:115-252 (fence + brace-match
-  strategies)
 - flatten_nested_data:     evaluation/service.py:194-230 (dot / [i] paths)
 """
 
@@ -76,62 +74,6 @@ def convert_to_list(value: Any) -> list[str]:
         except (ValueError, SyntaxError):
             pass
     return [str(value)]
-
-
-_JSON_FENCE_RE = re.compile(r"```json\s*(.*?)\s*```", re.DOTALL)
-_ANY_FENCE_RE = re.compile(r"```\s*(.*?)\s*```", re.DOTALL)
-
-
-def _match_braces(text: str) -> str | None:
-    """Brace matching with string-escape awareness (utils/__init__.py parity)."""
-    start = text.find("{")
-    if start < 0:
-        return None
-    depth = 0
-    in_str = False
-    escape = False
-    for i in range(start, len(text)):
-        c = text[i]
-        if in_str:
-            if escape:
-                escape = False
-            elif c == "\\":
-                escape = True
-            elif c == '"':
-                in_str = False
-            continue
-        if c == '"':
-            in_str = True
-        elif c == "{":
-            depth += 1
-        elif c == "}":
-            depth -= 1
-            if depth == 0:
-                return text[start : i + 1]
-    return None
-
-
-def extract_json_from_text(text: str) -> dict | None:
-    """Multi-strategy JSON extraction: ```json fence, ``` fence, brace match."""
-    if not text:
-        return None
-    for pattern in (_JSON_FENCE_RE, _ANY_FENCE_RE):
-        m = pattern.search(text)
-        if m:
-            try:
-                return json.loads(m.group(1))
-            except json.JSONDecodeError:
-                pass
-    candidate = _match_braces(text)
-    if candidate is not None:
-        try:
-            return json.loads(candidate)
-        except json.JSONDecodeError:
-            try:
-                return json.loads(_WS_RE.sub(" ", candidate))
-            except json.JSONDecodeError:
-                return None
-    return None
 
 
 def flatten_nested_data(data: dict, parent_key: str = "") -> dict[str, Any]:

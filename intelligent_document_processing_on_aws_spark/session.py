@@ -13,10 +13,26 @@ One precedence rule covers every setting get_spark makes:
    process may use (SPARK_GRAFT_CPUS overrides), shuffle partitions equal
    to the slots (set only for a local master), a driver heap of 60 % of
    physical RAM, at most 24g, since local-mode Python workers share that
-   RAM, the C1 JIT options below, and DEFAULT_CONFS. The heap and the JIT
-   options only take effect when the driver JVM starts, so get_spark sets
-   them only when it starts the JVM itself: under a launcher they would
-   report a heap and options the running JVM does not have.
+   RAM, the C1 JIT options below, the class-data sharing archive below,
+   and DEFAULT_CONFS. The heap, the JIT options and the archive only take
+   effect when the driver JVM starts, so get_spark sets them only when it
+   starts the JVM itself: under a launcher, or when an earlier session's
+   JVM is still running, they would report a heap and options the running
+   JVM does not have.
+
+Class-data sharing (cds.py): a driver JVM that get_spark launches maps a
+dynamic AppCDS archive of the classes a Spark session loads
+(-XX:SharedArchiveFile in spark.driver.defaultJavaOptions), which takes
+about 5 s off each start (README, "Class-data sharing"). The first start
+for a JDK, jar set and JIT options builds the archive into
+$XDG_CACHE_HOME/idp-spark/cds (or ~/.cache/...). A conf directory holding
+a real file (spark-defaults.conf, spark-env.sh, log4j2.properties) turns
+it off, since CDS cannot share classes with a non-empty directory on the
+classpath, and -Xshare:off in spark.driver.extraJavaOptions turns it off
+too (HotSpot keeps a flag's last value). Under spark-submit, pass
+--driver-java-options "-XX:SharedArchiveFile=<archive>": it maps only
+when the launcher's classpath, conf directory included, matches the one
+the archive was built with.
 
 JIT policy: a driver JVM that get_spark launches compiles with C1 only
 (-XX:TieredStopAtLevel=1 in spark.driver.defaultJavaOptions), with the
@@ -35,6 +51,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .cds import sharing
 
 # where Python imports this package from: the checkout, or the zip the
 # package was loaded from under spark-submit --py-files
@@ -89,6 +107,15 @@ def jit_seconds(spark: SparkSession) -> float:
         .getTotalCompilationTime() / 1000
 
 
+def cds_archive(spark: SparkSession) -> str | None:
+    """The class-data sharing archive the driver JVM was started with (its
+    SharedArchiveFile flag, read through HotSpotDiagnosticMXBean), or None."""
+    jvm = spark.sparkContext._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    return hotspot.getVMOption("SharedArchiveFile").getValue() or None
+
+
 def _launcher_conf() -> dict[str, str]:
     """The Spark settings of the launcher that started the driver JVM
     (spark-submit sets PYSPARK_GATEWAY_PORT); empty when get_spark is to
@@ -130,4 +157,5 @@ def get_spark(app: str = "idp-spark", master: str | None = None,
         slots = local_slots(master, int(cpus) if cpus.isdigit() else cores)
         defaults["spark.sql.shuffle.partitions"] = str(slots)
     confs = {k: v for k, v in defaults.items() if k not in launched}
-    return SparkSession.builder.config(map={**confs, **explicit}).getOrCreate()
+    with sharing(confs) as confs:
+        return SparkSession.builder.config(map={**confs, **explicit}).getOrCreate()

@@ -36,7 +36,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages  # noqa: E402
-from intelligent_document_processing_on_aws_spark.session import get_spark, jit_seconds  # noqa: E402
+from intelligent_document_processing_on_aws_spark.session import (  # noqa: E402
+    cds_archive,
+    get_spark,
+    jit_seconds,
+)
 
 
 def main() -> int:
@@ -52,8 +56,10 @@ def main() -> int:
                     help="snapshot-committed output + lineage with resume")
     args = ap.parse_args()
 
+    t_start = time.time()
     spark = get_spark("idp-extract", master=args.master)
     t0, jit0 = time.time(), jit_seconds(spark)
+    session = {"session_start_s": round(t0 - t_start, 2), "cds_archive": cds_archive(spark)}
     if args.manifest:
         from intelligent_document_processing_on_aws_spark.plans.manifest import (
             parse_manifest,
@@ -89,7 +95,7 @@ def main() -> int:
         print(json.dumps({"rows": n, "sec": round(dt, 2),
                           "docs_per_sec": round(stats["processed"] / dt, 1),
                           "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
-                          **stats}))
+                          **session, **stats}))
         spark.stop()
         return 0
     result = extract_pages(pages, salt_partitions=args.salt_partitions)
@@ -102,7 +108,8 @@ def main() -> int:
     dt = time.time() - t0
     print(json.dumps({"rows": n, "sec": round(dt, 2),
                       "docs_per_sec": round(n / dt, 1),
-                      "jvm_jit_s": round(jit_seconds(spark) - jit0, 2)}))
+                      "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
+                      **session}))
     spark.stop()
     return 0
 

@@ -50,7 +50,11 @@ from intelligent_document_processing_on_aws_spark.operators.summarize import (  
     format_document_summaries,
     summarize_sections,
 )
-from intelligent_document_processing_on_aws_spark.session import get_spark, jit_seconds  # noqa: E402
+from intelligent_document_processing_on_aws_spark.session import (  # noqa: E402
+    cds_archive,
+    get_spark,
+    jit_seconds,
+)
 from intelligent_document_processing_on_aws_spark.sources.catalog import (  # noqa: E402
     list_warehouse_tables,
     write_document_sections,
@@ -76,8 +80,10 @@ def main() -> int:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
+    t_start = time.time()
     spark = get_spark("idp-pipeline", master=args.master)
     t0, jit0 = time.time(), jit_seconds(spark)
+    session_start_s = round(t0 - t_start, 2)
     wh = args.warehouse
     counts = {}
 
@@ -171,6 +177,8 @@ def main() -> int:
         "status": status_counts(spark, wh),
         "sec": round(time.time() - t0, 2),
         "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
+        "session_start_s": session_start_s,
+        "cds_archive": cds_archive(spark),
     }))
     for df in persisted:
         df.unpersist()

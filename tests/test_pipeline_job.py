@@ -20,6 +20,8 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
+from intelligent_document_processing_on_aws_spark.session import cds_archive
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures_data")
 
@@ -79,7 +81,7 @@ def evaluated(spark, tmp_path_factory):
     return wh, summary, jobs
 
 
-def test_pipeline_writes_every_table_and_summary(evaluated):
+def test_pipeline_writes_every_table_and_summary(spark, evaluated):
     wh, summary, _ = evaluated
     assert summary["warehouse_tables"] == WAREHOUSE_TABLES
     assert sorted(os.listdir(wh)) == WAREHOUSE_TABLES
@@ -90,6 +92,9 @@ def test_pipeline_writes_every_table_and_summary(evaluated):
     }
     assert summary["status"] == {"COMPLETED": 400}
     assert summary["jvm_jit_s"] >= 0
+    # the session fixture's JVM is running already: get_spark only returns it
+    assert 0 <= summary["session_start_s"] < 5
+    assert summary["cds_archive"] == cds_archive(spark)
     # the counts the job observed are the rows it committed
     assert len(_rows(wh, "confidence_alerts")) == 36
     assert len(_rows(wh, "document_summaries_md")) == 400

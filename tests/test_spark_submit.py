@@ -36,7 +36,7 @@ def _spark_submit() -> str:
 _PRECEDENCE_PROBE = textwrap.dedent("""
     import json
 
-    from intelligent_document_processing_on_aws_spark.session import get_spark
+    from intelligent_document_processing_on_aws_spark.session import cds_archive, get_spark
 
     spark = get_spark("precedence-probe")
     runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
@@ -45,7 +45,8 @@ _PRECEDENCE_PROBE = textwrap.dedent("""
                       spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"),
                       spark.conf.get("spark.driver.memory", None),
                       runtime.maxMemory() >> 20,
-                      spark.conf.get("spark.sql.adaptive.skewJoin.enabled")]))
+                      spark.conf.get("spark.sql.adaptive.skewJoin.enabled"),
+                      cds_archive(spark)]))
     spark.stop()
 """)
 
@@ -59,9 +60,9 @@ def _probe_settings(cmd: list[str], env: dict, cwd: str) -> list[str]:
 
 def test_launcher_settings_win_over_session_defaults(tmp_path):
     """spark-submit's --master and --conf reach the session, and the session
-    claims no heap beyond the one the launcher's JVM runs with; without a
-    launcher the session takes the engine's defaults, sized by
-    SPARK_GRAFT_CPUS and the box's RAM."""
+    claims no heap or class-data archive beyond what the launcher's JVM
+    runs with; without a launcher the session takes the engine's
+    defaults, sized by SPARK_GRAFT_CPUS and the box's RAM."""
     sys.path.insert(0, REPO)
     from scripts.package_pyfiles import build
 
@@ -79,8 +80,8 @@ def test_launcher_settings_win_over_session_defaults(tmp_path):
          "--py-files", zip_path, str(probe)],
         env, str(tmp_path))
     assert submitted[:4] == ["local[2]", "7", "100", None]
-    # the launcher's default heap is 1g
-    assert submitted[4] <= 1024
+    # the launcher's default heap is 1g, and its JVM maps no archive of ours
+    assert submitted[4] <= 1024 and submitted[6] is None
 
     plain = _probe_settings(
         [sys.executable, str(probe)],
@@ -129,6 +130,7 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
     stats = json.loads(line)
     assert stats["rows"] == 150 and stats["jvm_jit_s"] >= 0
+    assert stats["cds_archive"] is None
 
     con = duckdb.connect()
     bad = con.execute(
