@@ -756,88 +756,6 @@ def _sql_image_resize() -> str:
     """
 
 
-_IMAGE_RESIZE_JPEG_N = 32
-
-
-def q_image_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline-JPEG decode -> resize, end-to-end on executors: the
-    from-scratch SOF0 huffman decoder (kernels/jpeg_codec.py) feeds the
-    same fit-within resize as the PNG path. Fixtures rotate quality,
-    4:2:0 subsampling and restart markers; every 16th payload is
-    truncated (error row). Oracle note: JPEG is lossy, so expected pixels
-    cannot be re-derived from the source formula the way the PNG oracle
-    does — the oracle re-runs the SHARED pure decode kernel driver-side
-    (the IVF-centroid shared-kernel pattern); pixel-level decoder
-    correctness is pinned separately by the roundtrip-error-bound and
-    solid-block-exact tests in tests/test_jpeg_codec.py."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .fixtures.media_gen import gradient_jpeg
-    from .operators.multimodal import decode_resize_images
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": [gradient_jpeg(i) for i in ids]}
-            )
-
-    items = spark.range(0, _IMAGE_RESIZE_JPEG_N, numPartitions=8).mapInPandas(
-        gen, schema)
-    # target below every fixture's dims so ALL good rows downscale (the
-    # PNG query covers the leave-unchanged branch)
-    return decode_resize_images(items, target_w=60, target_h=45)
-
-
-def _sql_image_resize_jpeg() -> str:
-    import hashlib as _hl
-
-    import numpy as _np
-
-    from .fixtures.media_gen import gradient_jpeg
-    from .kernels.image_ops import resize_array
-    from .kernels.jpeg_codec import JpegError, decode_jpeg
-
-    rows = []
-    for i in range(_IMAGE_RESIZE_JPEG_N):
-        try:
-            img = decode_jpeg(gradient_jpeg(i))
-        except JpegError as e:
-            err = f"JpegError: {e}"[:200].replace("'", "''")
-            rows.append(f"({i}, NULL, NULL, NULL, NULL, NULL, '{err}')")
-            continue
-        if img.ndim == 2:
-            img = _np.dstack([img, img, img])
-        img = img[:, :, :3]
-        h, w = img.shape[:2]
-        out = resize_array(img, 60, 45)
-        oh, ow = out.shape[:2]
-        sha = _hl.sha1(out.tobytes()).hexdigest()
-        rows.append(f"({i}, {w}, {h}, {ow}, {oh}, '{sha}', NULL)")
-    values = ",\n               ".join(rows)
-    return f"""
-        SELECT CAST(item_id AS BIGINT) AS item_id,
-               CAST(in_width AS INT) AS in_width,
-               CAST(in_height AS INT) AS in_height,
-               CAST(out_width AS INT) AS out_width,
-               CAST(out_height AS INT) AS out_height,
-               resized_sha1, error
-        FROM (VALUES {values})
-             t(item_id, in_width, in_height, out_width, out_height,
-               resized_sha1, error)
-    """
-
-
 _IMAGE_RESIZE_MULTI_N = 48
 
 
@@ -936,89 +854,6 @@ def _sql_image_resize_multi() -> str:
         img = img[:, :, :3]
         h, w = img.shape[:2]
         out = resize_array(img, 200, 150)
-        oh, ow = out.shape[:2]
-        sha = _hl.sha1(out.tobytes()).hexdigest()
-        rows.append(f"({i}, {w}, {h}, {ow}, {oh}, '{sha}', NULL)")
-    values = ",\n               ".join(rows)
-    return f"""
-        SELECT CAST(item_id AS BIGINT) AS item_id,
-               CAST(in_width AS INT) AS in_width,
-               CAST(in_height AS INT) AS in_height,
-               CAST(out_width AS INT) AS out_width,
-               CAST(out_height AS INT) AS out_height,
-               resized_sha1, error
-        FROM (VALUES {values})
-             t(item_id, in_width, in_height, out_width, out_height,
-               resized_sha1, error)
-    """
-
-
-_IMAGE_RESIZE_WEBP_N = 40
-
-
-def q_image_resize_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless-WebP decode -> resize, end-to-end on executors with the
-    from-scratch VP8L codec (kernels/webp_codec.py: prefix codes, LZ77
-    distance map, color cache, all four transforms). Fixture rotation
-    covers none / subtract-green / left- and top-predictor transforms
-    and gray/RGB/RGBA shapes; every 16th payload truncated. VP8L is
-    LOSSLESS, so the oracle re-derives the expected pixels from the same
-    closed-form formulas WITHOUT parsing container bytes — the
-    encoder+decoder pair sits inside the verified loop."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .fixtures.media_gen import gradient_webp
-    from .operators.multimodal import decode_resize_images
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"item_id": ids, "payload": [gradient_webp(i) for i in ids]}
-            )
-
-    items = spark.range(0, _IMAGE_RESIZE_WEBP_N, numPartitions=8).mapInPandas(
-        gen, schema)
-    return decode_resize_images(items, target_w=120, target_h=90)
-
-
-def _sql_image_resize_webp() -> str:
-    """Expected rows from the pure pixel formulas + shared resize kernel
-    (the PNG-oracle pattern; decoder-in-the-loop for error rows only)."""
-    import hashlib as _hl
-
-    import numpy as _np
-
-    from .fixtures.media_gen import gradient_webp, webp_gradient_image
-    from .kernels.image_ops import resize_array
-    from .kernels.webp_codec import WebpError, decode_webp
-
-    rows = []
-    for i in range(_IMAGE_RESIZE_WEBP_N):
-        if i % 16 == 5:
-            try:
-                decode_webp(gradient_webp(i))
-                raise AssertionError("fixture should be malformed")
-            except WebpError as e:
-                err = f"WebpError: {e}"[:200].replace("'", "''")
-            rows.append(f"({i}, NULL, NULL, NULL, NULL, NULL, '{err}')")
-            continue
-        img = webp_gradient_image(i)
-        if img.ndim == 2:
-            img = _np.dstack([img, img, img])
-        img = img[:, :, :3]
-        h, w = img.shape[:2]
-        out = resize_array(img, 120, 90)
         oh, ow = out.shape[:2]
         sha = _hl.sha1(out.tobytes()).hexdigest()
         rows.append(f"({i}, {w}, {h}, {ow}, {oh}, '{sha}', NULL)")
@@ -2091,9 +1926,7 @@ _RAW_QUERIES = {
     "ocr_table_markdown": q_ocr_table_markdown,
     "image_meta": q_image_meta,
     "image_resize": q_image_resize,
-    "image_resize_jpeg": q_image_resize_jpeg,
     "image_resize_multi": q_image_resize_multi,
-    "image_resize_webp": q_image_resize_webp,
     "audio_features": q_audio_features,
     "media_meta_av": q_media_meta_av,
     "sectioning": q_sectioning,
@@ -2135,9 +1968,7 @@ def oracles() -> dict[str, str]:
         "ocr_table_markdown": _sql_ocr_table_markdown(),
         "image_meta": _sql_image_meta(),
         "image_resize": _sql_image_resize(),
-        "image_resize_jpeg": _sql_image_resize_jpeg(),
         "image_resize_multi": _sql_image_resize_multi(),
-        "image_resize_webp": _sql_image_resize_webp(),
         "audio_features": _sql_audio_features(),
         "media_meta_av": _sql_media_meta_av(),
         "sectioning": _sql_sectioning(),

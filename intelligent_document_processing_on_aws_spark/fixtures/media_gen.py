@@ -127,29 +127,11 @@ def gradient_png(i: int) -> bytes:
     return data
 
 
-def jpeg_gradient_image(i: int):
-    """Deterministic pixels for the JPEG fixture family (r5): smaller dims
-    than the PNG family (huffman decode is Python-loop work), gray/RGB
-    rotation, closed-form gradient content."""
-    import numpy as np
-
-    w = 64 + (i * 37) % 200
-    h = 48 + (i * 29) % 200
-    x = np.arange(w, dtype=np.int64)[None, :]
-    y = np.arange(h, dtype=np.int64)[:, None]
-    base = (x * 5 + y * 7 + i * 13) % 256
-    if i % 2 == 0:
-        return base.astype(np.uint8)
-    return np.stack(
-        [((base + c * 23 + i * 11) % 256).astype(np.uint8)
-         for c in range(3)], axis=2)
-
-
 def gif_gradient_image(i: int):
     """Closed-form palette-friendly pixels for the GIF fixture family:
     rotates gray (256-level palette) / 216-color RGB cube / RGBA with
-    binary alpha. Dims stay modest — GIF LZW decode is Python-loop work
-    like the JPEG huffman path."""
+    binary alpha. Dims stay modest — GIF LZW decode is Python-loop
+    work."""
     import numpy as np
 
     w = 80 + (i * 53) % 240
@@ -205,65 +187,6 @@ def gradient_tiff(i: int) -> bytes:
     )
     if i % 16 == 5:
         return data[:32]
-    return data
-
-
-def gradient_jpeg(i: int) -> bytes:
-    """encode_jpeg of jpeg_gradient_image(i), rotating quality /
-    4:2:0 subsampling / restart-marker settings so the decoder's paths
-    are all exercised; every 16th item (i % 16 == 9) is truncated
-    mid-stream (error-column row)."""
-    from ..kernels.jpeg_codec import encode_jpeg
-
-    img = jpeg_gradient_image(i)
-    data = encode_jpeg(
-        img,
-        quality=70 + (i * 11) % 31,
-        subsample=(i % 3 == 1 and img.ndim == 3),
-        restart_interval=(4 if i % 5 == 0 else 0),
-    )
-    if i % 16 == 9:
-        return data[:24]
-    return data
-
-
-def webp_gradient_image(i: int):
-    """Closed-form pixels for the WebP fixture family: gray / RGB / RGBA
-    rotation with modest dims (VP8L entropy coding is Python-loop work
-    like the GIF LZW path)."""
-    import numpy as np
-
-    w = 64 + (i * 47) % 160
-    h = 48 + (i * 37) % 160
-    x = np.arange(w, dtype=np.int64)[None, :]
-    y = np.arange(h, dtype=np.int64)[:, None]
-    base = (x * 5 + y * 7 + i * 13) % 256
-    if i % 3 == 0:
-        return base.astype(np.uint8)
-    n_ch = 3 if i % 3 == 1 else 4
-    return np.stack(
-        [((base + c * 29 + i * 3) % 256).astype(np.uint8)
-         for c in range(n_ch)], axis=2)
-
-
-def gradient_webp(i: int) -> bytes:
-    """encode_webp of webp_gradient_image(i), rotating the transform
-    (none / subtract-green / left-predictor / top-predictor); every 16th
-    item truncated (error-column row)."""
-    from ..kernels.webp_codec import encode_webp
-
-    img = webp_gradient_image(i)
-    mode = (i // 4) % 4
-    if mode == 1:
-        data = encode_webp(img, subtract_green=True)
-    elif mode == 2:
-        data = encode_webp(img, predictor=1)
-    elif mode == 3:
-        data = encode_webp(img, predictor=2)
-    else:
-        data = encode_webp(img)
-    if i % 16 == 5:
-        return data[:36]
     return data
 
 

@@ -1,6 +1,6 @@
 """From-scratch BMP decoder/encoder — stdlib struct + numpy only, no PIL.
 
-Extends the codec boundary (kernels/png_codec.py, jpeg_codec.py) to the
+Extends the codec boundary (kernels/png_codec.py) to the
 Windows bitmap format: the reference's image pipeline decodes with PIL
 before resizing (lib/idp_common_pkg/idp_common/image/__init__.py:13-96);
 PIL is absent from this container, so this module implements the public

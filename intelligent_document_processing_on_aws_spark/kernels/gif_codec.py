@@ -1,7 +1,7 @@
 """From-scratch GIF decoder/encoder — stdlib struct + numpy, no PIL.
 
-Extends the codec boundary (kernels/png_codec.py, jpeg_codec.py,
-bmp_codec.py, tiff_codec.py) to GIF87a/89a (public W3C/CompuServe spec):
+Extends the codec boundary (kernels/png_codec.py, bmp_codec.py,
+tiff_codec.py) to GIF87a/89a (public W3C/CompuServe spec):
 the reference decodes with PIL (lib/idp_common_pkg/idp_common/image/
 __init__.py:13-96), absent from this container.
 

@@ -1,9 +1,8 @@
 """From-scratch baseline-TIFF decoder/encoder — stdlib struct + numpy.
 
-Extends the codec boundary (kernels/png_codec.py, jpeg_codec.py,
-bmp_codec.py) to baseline TIFF 6.0 (public Adobe spec): the reference
-decodes with PIL (lib/idp_common_pkg/idp_common/image/__init__.py:13-96),
-absent here.
+Extends the codec boundary (kernels/png_codec.py, bmp_codec.py) to
+baseline TIFF 6.0 (public Adobe spec): the reference decodes with PIL
+(lib/idp_common_pkg/idp_common/image/__init__.py:13-96), absent here.
 
 decode_tiff:
 - both byte orders (II little / MM big), classic 32-bit offsets,

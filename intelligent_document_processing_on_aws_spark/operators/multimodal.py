@@ -1,24 +1,20 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads travel as `binary` columns with a typed metadata
-struct; decode/feature-extract/resize/frame-sample run as Arrow-batched
-mapInPandas stages.
+struct; decode/resize/probe/frame-sample run as Arrow-batched mapInPandas
+stages.
 
-Codec status (r5): PNG decodes END-TO-END via the from-scratch stdlib
-decoder (kernels/png_codec.py — zlib inflate, all 5 scanline filters,
-gray/RGB/palette/alpha, Adam7), feeding the real resize/binarize math in
+Codec status: PNG, GIF, BMP and baseline TIFF decode END-TO-END via the
+from-scratch stdlib decoders (kernels/png_codec.py, gif_codec.py,
+bmp_codec.py, tiff_codec.py), feeding the real resize math in
 kernels/image_ops.py — the reference's image pipeline semantics
-(lib/idp_common_pkg/idp_common/image/__init__.py:13-96 resize, :125-188
-binarization) run on real pixels for the dominant web image format.
-Audio/video containers (r5): WAV PCM decodes end-to-end
+(lib/idp_common_pkg/idp_common/image/__init__.py:13-96 resize) run on
+real pixels. Audio/video containers: WAV PCM decodes end-to-end
 (kernels/audio_codec.py RIFF chunk walker, 8/16/24-bit) feeding
 integer-exact signal stats; MP3 frame-header walking and AVI avih
 parsing give real (n_frames, sample_rate, bitrate, duration) metadata.
-The honest boundary that remains: compressed A/V payload decode (MP3
-MDCT, video codecs) and lossy-VP8 WebP — those need entropy/transform
-codecs (ffmpeg/PIL/cv2) absent from this container; `decode=False`
-(default) computes real, deterministic byte-level features and
-`decode=True` raises at the marked point for unsupported formats.
+Every other image payload raises NotImplementedError in `_decode_image`,
+which `decode_resize_images` turns into an error row.
 
 Schema contract for a multimodal table:
   (item_id long, modality string, payload binary,
@@ -52,142 +48,27 @@ MULTIMODAL_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("item_id", T.LongType()),
-        T.StructField("modality", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("payload_sha1", T.StringType()),
-        T.StructField("byte_entropy", T.DoubleType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def _byte_entropy(b: bytes) -> float:
-    if not b:
-        return 0.0
-    import math
-
-    counts = [0] * 256
-    for x in b:
-        counts[x] += 1
-    n = len(b)
-    return round(-sum(c / n * math.log2(c / n) for c in counts if c), 6)
-
-
-def _stub_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake feature vector (sha256-seeded) standing in for the
-    codec-backed extractor; replace with a real decoder in production."""
-    h = hashlib.sha256(payload).digest()
-    return [round(int.from_bytes(h[4 * i : 4 * i + 4], "little") / 2**32, 6)
-            for i in range(dim)]
-
 
 def _decode_image(payload: bytes):
-    """Codec dispatch: PNG, baseline JPEG, GIF, BMP and baseline TIFF
-    decode with the from-scratch stdlib kernels; anything else raises
-    NotImplementedError (the honest boundary — WEBP/VP8 entropy decode
-    and video/audio need external codec libraries absent from this
-    container)."""
+    """Codec dispatch: PNG, GIF, BMP and baseline TIFF decode with the
+    from-scratch stdlib kernels; anything else raises
+    NotImplementedError."""
     from ..kernels.bmp_codec import decode_bmp
     from ..kernels.gif_codec import decode_gif
-    from ..kernels.jpeg_codec import decode_jpeg
     from ..kernels.png_codec import PNG_SIG, decode_png
     from ..kernels.tiff_codec import decode_tiff
-    from ..kernels.webp_codec import decode_webp
 
     if payload.startswith(PNG_SIG):
         return decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload)
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
         return decode_tiff(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from ..kernels.webp_codec import has_lossy_vp8
-
-        if has_lossy_vp8(payload):
-            # Lossy VP8: the from-scratch boundary (RFC 6386's ~2 KB of
-            # empirical entropy/dequant tables can't be re-derived, so a
-            # reimplementation can't be independently verified here).
-            # Gated system-libwebp path when the shared object is
-            # present; the honest WebpError boundary otherwise.
-            from ..kernels import webp_sys
-
-            if webp_sys.available():
-                return webp_sys.decode_rgba(payload)
-        return decode_webp(payload)  # from-scratch VP8L
     raise NotImplementedError(
-        "decode supports PNG, baseline JPEG, GIF, BMP, baseline TIFF "
-        "and lossless WebP (from-scratch stdlib decoders), plus lossy "
-        "VP8 via the optional system libwebp when present; video/audio "
-        "decode requires PIL/cv2/ffmpeg (not in this container) — run "
-        "with decode=False for byte-level features"
+        "decode supports PNG, GIF, BMP and baseline TIFF"
     )
-
-
-def _png_features(payload: bytes, dim: int) -> list[float]:
-    """Real pixel features from a decoded image: log-dims, luma mean/std
-    and a 4-bin luma histogram — deterministic, codec-backed."""
-    import math
-
-    import numpy as np
-
-    from ..kernels.image_ops import to_grayscale
-
-    img = _decode_image(payload)
-    gray = to_grayscale(img[:, :, :3] if img.ndim == 3 else img)
-    h, w = gray.shape
-    hist = np.bincount(gray.reshape(-1) >> 6, minlength=4) / gray.size
-    feats = [
-        math.log1p(w), math.log1p(h),
-        float(gray.mean()) / 255.0, float(gray.std()) / 255.0,
-        *[float(x) for x in hist],
-    ]
-    feats = (feats + [0.0] * dim)[:dim]
-    return [round(f, 6) for f in feats]
-
-
-def extract_features(items: DataFrame, decode: bool = False,
-                     feature_dim: int = 8) -> DataFrame:
-    """Multimodal feature extraction stage (Arrow-batched).
-
-    decode=False: byte-level features (real) + deterministic stub vector.
-    decode=True: PNG / baseline-JPEG / GIF / BMP / baseline-TIFF /
-    lossless-WebP payloads decode with the from-scratch stdlib codecs
-    (kernels/png_codec.py, jpeg_codec.py, gif_codec.py, bmp_codec.py,
-    tiff_codec.py, webp_codec.py) and yield real pixel features; any
-    other payload raises NotImplementedError (lossy-VP8 WebP and
-    video/audio need PIL/cv2/ffmpeg, absent from this container —
-    clearly-marked boundary)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            feats = []
-            if decode:
-                for p in pdf["payload"]:
-                    feats.append(_png_features(bytes(p), feature_dim))
-            else:
-                feats = [_stub_features(bytes(p), feature_dim)
-                         for p in pdf["payload"]]
-            out = {
-                "item_id": pdf["item_id"],
-                "modality": pdf["modality"],
-                "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                "payload_sha1": [hashlib.sha1(bytes(p)).hexdigest() for p in pdf["payload"]],
-                "byte_entropy": [_byte_entropy(bytes(p)) for p in pdf["payload"]],
-                "features": feats,
-            }
-            yield pd.DataFrame(out)
-
-    return items.select("item_id", "modality", "payload").mapInPandas(run, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -208,19 +89,16 @@ def decode_resize_images(items: DataFrame, target_w: int = 951,
     """(item_id, in/out dims, resized_sha1, error) — the reference's image
     preprocessing (lib/idp_common_pkg/idp_common/image/__init__.py:54-66:
     aspect-preserving fit-within, downscale-only, defaults 951x1268) run
-    END-TO-END on real pixels: stdlib PNG / baseline-JPEG / GIF / BMP /
-    baseline-TIFF decode -> bilinear resize -> sha1 of the resized RGB
-    bytes. Unsupported /
-    malformed payloads land in the error column (loud-degrade
-    convention), never kill the job. Map-only Arrow lineage — scales
-    exactly like the scan."""
+    END-TO-END on real pixels: stdlib PNG / GIF / BMP / baseline-TIFF
+    decode -> bilinear resize -> sha1 of the resized RGB bytes.
+    Unsupported / malformed payloads land in the error column
+    (loud-degrade convention), never kill the job. Map-only Arrow
+    lineage — scales exactly like the scan."""
     from ..kernels.bmp_codec import BmpError
     from ..kernels.gif_codec import GifError
     from ..kernels.image_ops import resize_array
-    from ..kernels.jpeg_codec import JpegError
     from ..kernels.png_codec import PngError
     from ..kernels.tiff_codec import TiffError
-    from ..kernels.webp_codec import WebpError
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -246,8 +124,8 @@ def decode_resize_images(items: DataFrame, target_w: int = 951,
                     rows["resized_sha1"].append(
                         hashlib.sha1(out.tobytes()).hexdigest())
                     rows["error"].append(None)
-                except (PngError, JpegError, GifError, BmpError, TiffError,
-                        WebpError, NotImplementedError) as e:
+                except (PngError, GifError, BmpError, TiffError,
+                        NotImplementedError) as e:
                     rows["in_width"].append(None)
                     rows["in_height"].append(None)
                     rows["out_width"].append(None)

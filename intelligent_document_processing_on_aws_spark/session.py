@@ -130,12 +130,6 @@ def _launcher_conf() -> dict[str, str]:
 
 def get_spark(app: str = "idp-spark", master: str | None = None,
               **extra: str) -> SparkSession:
-    # Spark owns the parallelism: pin BLAS to 1 thread in this process
-    # (ctypes) and in the Python workers it forks (env var) — see
-    # kernels/blasctl.py for the measured 20-100x small-GEMM effect.
-    from .kernels.blasctl import limit_blas_threads
-
-    limit_blas_threads(1)
     # Python workers import the package from any working directory: a JVM
     # started from here inherits this PYTHONPATH, and local-mode workers
     # merge it into their path. Cluster executors keep their own settings.

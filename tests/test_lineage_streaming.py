@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.operators.multimodal import (
-    extract_features,
     frame_sample,
 )
 from intelligent_document_processing_on_aws_spark.plans.lineage import (
@@ -56,19 +55,6 @@ def test_multimodal_features(spark):
         "item_id long, modality string, payload binary, "
         "meta struct<width:int,height:int,sample_rate:int,n_frames:int>",
     )
-    feats = {r.item_id: r for r in extract_features(df).collect()}
-    assert feats[1].n_bytes == len(b"\x89PNG fake bytes")
-    assert len(feats[2].features) == 8
-    assert all(0.0 <= x <= 1.0 for x in feats[3].features)
-    # determinism
-    again = {r.item_id: r for r in extract_features(df).collect()}
-    assert again[1].features == feats[1].features
-    assert again[1].payload_sha1 == feats[1].payload_sha1
-
-    # decode path is a clearly-marked stub
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        extract_features(df, decode=True).collect()
-
     # frame sampling fan-out: n_frames=95 every 10 -> 10 rows
     fs = frame_sample(df, every_n=10).collect()
     assert len(fs) == 10

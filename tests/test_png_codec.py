@@ -193,54 +193,3 @@ def test_decode_resize_images_matches_pixel_truth(spark):
         assert (got[i].out_width, got[i].out_height) == (
             out.shape[1], out.shape[0])
         assert got[i].resized_sha1 == hashlib.sha1(out.tobytes()).hexdigest()
-
-
-def test_extract_features_decode_true_png(spark):
-    """decode=True computes REAL pixel features for PNG payloads (luma
-    stats match a driver-side recompute) and still raises the honest
-    boundary error for non-PNG payloads."""
-    from intelligent_document_processing_on_aws_spark.fixtures.media_gen import (
-        gradient_image,
-    )
-    from intelligent_document_processing_on_aws_spark.kernels.image_ops import (
-        to_grayscale,
-    )
-    from intelligent_document_processing_on_aws_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    items = _items_df(spark, n=5).where("item_id % 16 <> 5") \
-        .selectExpr("item_id", "'image' as modality", "payload")
-    got = {r.item_id: r for r in extract_features(items, decode=True).collect()}
-    for i in got:
-        img = gradient_image(i)
-        gray = to_grayscale(img[:, :, :3] if img.ndim == 3 else img)
-        # features is array<float>: float32 storage, compare at 1e-6
-        assert got[i].features[2] == pytest.approx(
-            float(gray.mean()) / 255.0, abs=1e-6)
-        assert got[i].features[3] == pytest.approx(
-            float(gray.std()) / 255.0, abs=1e-6)
-
-    # Lossy-VP8 WebP now routes to the from-scratch VP8L decoder, which
-    # raises its typed boundary error (lossless-only support).
-    bad = spark.createDataFrame(
-        [(99, "image", bytearray(b"RIFF\x10\x00\x00\x00WEBPVP8 "))],
-        "item_id long, modality string, payload binary")
-    with pytest.raises(Exception, match="WebpError|VP8L"):
-        extract_features(bad, decode=True).collect()
-
-    # A format with no from-scratch decoder at all keeps the honest
-    # NotImplementedError boundary.
-    unk = spark.createDataFrame(
-        [(97, "image", bytearray(b"\x00\x01\x02not-an-image"))],
-        "item_id long, modality string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|decode=True"):
-        extract_features(unk, decode=True).collect()
-
-    # A JPEG-magic payload now reaches the real baseline decoder, which
-    # fails loudly on garbage rather than falling to the stub boundary.
-    trunc = spark.createDataFrame(
-        [(98, "image", bytearray(b"\xff\xd8\xff\xe0 not a jpeg"))],
-        "item_id long, modality string, payload binary")
-    with pytest.raises(Exception, match="JpegError|truncated"):
-        extract_features(trunc, decode=True).collect()

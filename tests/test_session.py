@@ -88,6 +88,41 @@ def test_extra_java_options_restore_c2(tmp_path):
     assert _levels(args) == ["1", "4"] and flags["TieredStopAtLevel"] == "4"
 
 
+# the thread-count variables as the driver and a Python worker see them
+# after get_spark
+_THREAD_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS")
+_ENV_PROBE = textwrap.dedent("""
+    import json, os
+
+    import pandas as pd
+
+    from intelligent_document_processing_on_aws_spark.session import get_spark
+    from test_session import _THREAD_VARS
+
+    def seen():
+        return {v: os.environ.get(v) for v in _THREAD_VARS}
+
+    def task(batches):
+        for _ in batches:
+            yield pd.DataFrame({"env": [json.dumps(seen())]})
+
+    spark = get_spark("env-probe", master="local[2]", **{"spark.task.cpus": "2"})
+    [row] = spark.range(1).mapInPandas(task, "env string").collect()
+    print(json.dumps([seen(), json.loads(row.env)]))
+    spark.stop()
+""")
+
+
+def test_get_spark_leaves_thread_variables_unset(tmp_path):
+    """get_spark exports no thread-count variable: unset before, they stay
+    unset in the driver. In a Python worker, Spark itself sets
+    OMP_NUM_THREADS to spark.task.cpus (SPARK-28843) and nothing else."""
+    env = {k: v for k, v in os.environ.items() if k not in _THREAD_VARS}
+    driver, worker = _run_probe(_ENV_PROBE, [], env, tmp_path)[0]
+    assert driver == dict.fromkeys(_THREAD_VARS)
+    assert worker == {"OMP_NUM_THREADS": "2", "OPENBLAS_NUM_THREADS": None}
+
+
 def test_jit_seconds_reads_the_driver_jvm(spark):
     # starting the session alone has the JIT compile Spark's own code
     assert jit_seconds(spark) > 0
