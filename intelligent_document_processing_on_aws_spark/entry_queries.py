@@ -756,121 +756,6 @@ def _sql_image_resize() -> str:
     """
 
 
-_IMAGE_RESIZE_MULTI_N = 48
-
-
-def q_image_resize_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF / BMP / baseline-TIFF decode -> resize, end-to-end on
-    executors with the remaining from-scratch stdlib codecs
-    (kernels/gif_codec.py LZW + interlace + transparency, bmp_codec.py
-    palette/24/32-BITFIELDS/row orders, tiff_codec.py both endians +
-    strips + PackBits). Format rotates by item_id % 3; every 16th payload
-    truncated (one error row lands in each format). All three formats
-    are LOSSLESS, so the oracle re-derives expected pixels from the same
-    closed-form fixture formulas WITHOUT parsing any container bytes —
-    each encoder+decoder pair sits inside the verified loop."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .fixtures.media_gen import gradient_bmp, gradient_gif, gradient_tiff
-    from .operators.multimodal import decode_resize_images
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    makers = (gradient_bmp, gradient_tiff, gradient_gif)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"item_id": ids,
-                 "payload": [makers[i % 3](i) for i in ids]}
-            )
-
-    items = spark.range(0, _IMAGE_RESIZE_MULTI_N, numPartitions=8).mapInPandas(
-        gen, schema)
-    # target below most fixture dims so the downscale path dominates (the
-    # PNG query covers leave-unchanged)
-    return decode_resize_images(items, target_w=200, target_h=150)
-
-
-def _sql_image_resize_multi() -> str:
-    """Expected rows from the pure pixel formulas + shared resize kernel
-    (the PNG-oracle pattern): GIF transparency drops to the palette's
-    zero RGB under the operator's alpha-drop rule, mirrored here from the
-    fixture's alpha mask — no container parsing on the oracle side.
-    Error rows reproduce the loud-degrade formatting via each decoder
-    (decoder-in-the-loop for the error path only, like the PNG oracle)."""
-    import hashlib as _hl
-
-    import numpy as _np
-
-    from .fixtures.media_gen import (
-        gif_gradient_image,
-        gradient_bmp,
-        gradient_gif,
-        gradient_image,
-        gradient_tiff,
-    )
-    from .kernels.bmp_codec import BmpError, decode_bmp
-    from .kernels.gif_codec import GifError, decode_gif
-    from .kernels.image_ops import resize_array
-    from .kernels.tiff_codec import TiffError, decode_tiff
-
-    decoders = (
-        (gradient_bmp, decode_bmp, BmpError),
-        (gradient_tiff, decode_tiff, TiffError),
-        (gradient_gif, decode_gif, GifError),
-    )
-    rows = []
-    for i in range(_IMAGE_RESIZE_MULTI_N):
-        maker, decoder, err_cls = decoders[i % 3]
-        if i % 16 == 5:
-            try:
-                decoder(maker(i))
-                raise AssertionError("fixture should be malformed")
-            except err_cls as e:
-                err = f"{type(e).__name__}: {e}"[:200].replace("'", "''")
-            rows.append(f"({i}, NULL, NULL, NULL, NULL, NULL, '{err}')")
-            continue
-        if i % 3 == 2:                              # GIF family
-            img = gif_gradient_image(i)
-            if img.ndim == 3 and img.shape[2] == 4:
-                # operator drops alpha; transparent pixels carry the
-                # palette's zeroed RGB slot (encoder contract)
-                mask = img[:, :, 3] == 0
-                img = img[:, :, :3].copy()
-                img[mask] = 0
-        else:
-            img = gradient_image(i)
-        if img.ndim == 2:
-            img = _np.dstack([img, img, img])
-        img = img[:, :, :3]
-        h, w = img.shape[:2]
-        out = resize_array(img, 200, 150)
-        oh, ow = out.shape[:2]
-        sha = _hl.sha1(out.tobytes()).hexdigest()
-        rows.append(f"({i}, {w}, {h}, {ow}, {oh}, '{sha}', NULL)")
-    values = ",\n               ".join(rows)
-    return f"""
-        SELECT CAST(item_id AS BIGINT) AS item_id,
-               CAST(in_width AS INT) AS in_width,
-               CAST(in_height AS INT) AS in_height,
-               CAST(out_width AS INT) AS out_width,
-               CAST(out_height AS INT) AS out_height,
-               resized_sha1, error
-        FROM (VALUES {values})
-             t(item_id, in_width, in_height, out_width, out_height,
-               resized_sha1, error)
-    """
-
-
 _AUDIO_FEATURES_N = 160
 
 
@@ -1926,7 +1811,6 @@ _RAW_QUERIES = {
     "ocr_table_markdown": q_ocr_table_markdown,
     "image_meta": q_image_meta,
     "image_resize": q_image_resize,
-    "image_resize_multi": q_image_resize_multi,
     "audio_features": q_audio_features,
     "media_meta_av": q_media_meta_av,
     "sectioning": q_sectioning,
@@ -1968,7 +1852,6 @@ def oracles() -> dict[str, str]:
         "ocr_table_markdown": _sql_ocr_table_markdown(),
         "image_meta": _sql_image_meta(),
         "image_resize": _sql_image_resize(),
-        "image_resize_multi": _sql_image_resize_multi(),
         "audio_features": _sql_audio_features(),
         "media_meta_av": _sql_media_meta_av(),
         "sectioning": _sql_sectioning(),

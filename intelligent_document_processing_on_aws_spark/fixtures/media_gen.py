@@ -1,9 +1,10 @@
-"""Minimal valid media payload builders (headers real, pixel data fake).
+"""Media payload builders for the multimodal queries and tests.
 
-Used by the multimodal fixtures/queries: the headers are spec-conformant
-(image_meta parses them like any real file's), the payload body is
-deterministic filler — honest inputs for the metadata/feature plumbing
-while the codec boundary stays stubbed.
+The six ``*_bytes`` builders write spec-conformant headers (image_meta
+parses them like any real file's) around deterministic filler that is
+not a decodable image. ``gradient_png`` writes real pixels that the PNG
+decoder reads back. The WAV / MP3 / AVI builders write real containers
+that kernels/audio_codec.py parses.
 """
 
 from __future__ import annotations
@@ -124,69 +125,6 @@ def gradient_png(i: int) -> bytes:
     data = encode_png(gradient_image(i), row_filter=_gradient_row_filter)
     if i % 16 == 5:
         return data[:30]
-    return data
-
-
-def gif_gradient_image(i: int):
-    """Closed-form palette-friendly pixels for the GIF fixture family:
-    rotates gray (256-level palette) / 216-color RGB cube / RGBA with
-    binary alpha. Dims stay modest — GIF LZW decode is Python-loop
-    work."""
-    import numpy as np
-
-    w = 80 + (i * 53) % 240
-    h = 60 + (i * 41) % 240
-    x = np.arange(w, dtype=np.int64)[None, :]
-    y = np.arange(h, dtype=np.int64)[:, None]
-    if i % 3 == 0:
-        return ((x * 3 + y * 5 + i * 11) % 256).astype(np.uint8)
-    q = (x * 2 + y * 3 + i * 7) % 216
-    rgb = np.stack(
-        [(q // 36 * 51).astype(np.uint8),
-         (q // 6 % 6 * 51).astype(np.uint8),
-         (q % 6 * 51).astype(np.uint8)], axis=2)
-    if i % 3 == 1:
-        return rgb
-    alpha = np.where((x + y + i) % 7 == 0, 0, 255).astype(np.uint8)
-    return np.dstack([rgb, alpha])
-
-
-def gradient_gif(i: int) -> bytes:
-    """encode_gif of gif_gradient_image(i), rotating interlace; every
-    16th item (i % 16 == 5) is truncated (error-column row)."""
-    from ..kernels.gif_codec import encode_gif
-
-    data = encode_gif(gif_gradient_image(i), interlace=(i % 2 == 0))
-    if i % 16 == 5:
-        return data[:40]
-    return data
-
-
-def gradient_bmp(i: int) -> bytes:
-    """encode_bmp of gradient_image(i) — gray rows take the 8-bit palette
-    path, RGB 24-bit, RGBA 32-bit BITFIELDS; row order rotates; every
-    16th item truncated."""
-    from ..kernels.bmp_codec import encode_bmp
-
-    data = encode_bmp(gradient_image(i), top_down=(i % 2 == 0))
-    if i % 16 == 5:
-        return data[:48]
-    return data
-
-
-def gradient_tiff(i: int) -> bytes:
-    """encode_tiff of gradient_image(i), rotating byte order / strip
-    size / PackBits; every 16th item truncated."""
-    from ..kernels.tiff_codec import encode_tiff
-
-    data = encode_tiff(
-        gradient_image(i),
-        big_endian=(i % 2 == 1),
-        rows_per_strip=(i % 5) * 37,
-        packbits=(i % 3 == 0),
-    )
-    if i % 16 == 5:
-        return data[:32]
     return data
 
 

@@ -2,9 +2,11 @@
 
 The reference's image pipeline (lib/idp_common_pkg/idp_common/image/
 __init__.py:13-96 resize_image, :125-188 apply_adaptive_binarization)
-operates on PIL Images; PIL is absent from this container, so the codec
-boundary (decode/encode) stays stubbed (operators/multimodal.py), but the
-MATH those functions perform is implemented here on decoded arrays:
+operates on PIL Images; PIL is absent from this container, so PNG is
+decoded by kernels/png_codec.py (the only pixel decoder; every other
+format stops at operators/multimodal.py's NotImplementedError boundary),
+and the MATH those functions perform is implemented here on decoded
+arrays:
 
 - fit_within_scale / resize_array: aspect-preserving fit-within scaling —
   scale = min(target_w/w, target_h/h), resize only when downscaling (or

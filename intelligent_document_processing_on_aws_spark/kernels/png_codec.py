@@ -19,10 +19,9 @@ encode_png (the independent writer twin, fixture-generator pattern of
 fixtures/xls_gen.py): 8-bit gray / RGB / RGBA, non-interlaced, with a
 caller-chosen scanline filter so tests exercise every decode filter path.
 
-Sibling from-scratch codecs: kernels/gif_codec.py (LZW), bmp_codec.py,
-tiff_codec.py. Every other format reaches the NotImplementedError
-boundary (operators/multimodal.py); header metadata for every format
-lives in kernels/image_meta.py.
+PNG is the only pixel decoder: every other format reaches the
+NotImplementedError boundary (operators/multimodal.py); header metadata
+for every format lives in kernels/image_meta.py.
 """
 
 from __future__ import annotations

@@ -5,7 +5,6 @@ golden tests share one implementation:
 
 - strip_punctuation_space: evaluation/comparator.py:86-101
 - normalize_numeric:       evaluation/comparator.py:104-126
-- normalize_boolean_value: utils/__init__.py:255-275
 - convert_to_list:         evaluation/comparator.py:196-223
 - flatten_nested_data:     evaluation/service.py:194-230 (dot / [i] paths)
 """
@@ -40,21 +39,6 @@ def normalize_numeric(value: Any) -> float:
         return float(value)
     except (ValueError, TypeError):
         raise ValueError(f"Cannot convert {value} to numeric value")
-
-
-_TRUTHY = {"true", "yes", "1", "y", "t"}
-_FALSY = {"false", "no", "0", "n", "f"}
-
-
-def normalize_boolean_value(value: Any) -> bool | None:
-    if isinstance(value, bool):
-        return value
-    s = str(value).strip().lower()
-    if s in _TRUTHY:
-        return True
-    if s in _FALSY:
-        return False
-    return None
 
 
 def convert_to_list(value: Any) -> list[str]:
@@ -144,67 +128,6 @@ def normalize_attr_pattern(path: str) -> str:
     """`Transactions[3].Amount` -> `Transactions[].Amount` for config lookup
     (evaluation/service.py:546-659 list-pattern matching analog)."""
     return _INDEX_RE.sub("[]", path)
-
-
-def feature_combination_suffix(features: list[str] | None) -> str:
-    """Reference ocr/service.py:500-536: Textract feature set -> the
-    pricing suffix appended to the metering service_api key."""
-    f = set(features or ())
-    if "TABLES" in f and "FORMS" in f:
-        return "-Tables+Forms"
-    if "TABLES" in f:
-        return "-Tables"
-    if "FORMS" in f:
-        return "-Forms"
-    if "LAYOUT" in f:
-        return "-Layout"
-    if "SIGNATURES" in f:
-        return "-Signatures"
-    return ""
-
-
-def token_limit_warning(
-    document_text: str, extraction_results_str: str, configured_max_tokens: int | None
-) -> str | None:
-    """Reference utils/__init__.py:623-652 ``check_token_limit``: tokens are
-    estimated as total chars / 4; returns the warning string when the
-    configured budget is below the estimate, else None."""
-    if not configured_max_tokens:
-        return None
-    estimated = (len(document_text) + len(extraction_results_str)) / 4
-    if int(configured_max_tokens) < estimated:
-        return (
-            f"The max_tokens value of {configured_max_tokens} is too low "
-            f"for this document."
-        )
-    return None
-
-
-CLASS_LABEL_PATTERNS = (
-    "class: ", "document type: ", "document class: ",
-    "classification: ", "type: ",
-)
-
-
-def extract_class_from_text(text: str) -> str:
-    """Classification-response fallback parser (reference
-    classification/service.py:1432-1453 ``_extract_class_from_text``):
-    patterns tried in fixed order, match located case-insensitively, the
-    ORIGINAL-case value taken to end-of-line, stripped of whitespace and
-    surrounding quotes; '' when nothing matches.
-
-    One documented fix: the reference indexes into the original text with
-    offsets computed on ``text.lower()``, which can change string length
-    (e.g. 'İ'.lower() is two chars) and corrupt the slice; a
-    case-insensitive regex search keeps indices aligned."""
-    for pattern in CLASS_LABEL_PATTERNS:
-        m = re.search(re.escape(pattern), text, re.IGNORECASE)
-        if m:
-            end = text.find("\n", m.end())
-            if end == -1:
-                end = len(text)
-            return text[m.end():end].strip().strip("\"'")
-    return ""
 
 
 def convert_value_to_string(value: Any) -> str | None:

@@ -4,9 +4,8 @@ Image/audio/video payloads travel as `binary` columns with a typed metadata
 struct; decode/resize/probe/frame-sample run as Arrow-batched mapInPandas
 stages.
 
-Codec status: PNG, GIF, BMP and baseline TIFF decode END-TO-END via the
-from-scratch stdlib decoders (kernels/png_codec.py, gif_codec.py,
-bmp_codec.py, tiff_codec.py), feeding the real resize math in
+Codec status: PNG decodes END-TO-END via the from-scratch stdlib decoder
+(kernels/png_codec.py), feeding the real resize math in
 kernels/image_ops.py — the reference's image pipeline semantics
 (lib/idp_common_pkg/idp_common/image/__init__.py:13-96 resize) run on
 real pixels. Audio/video containers: WAV PCM decodes end-to-end
@@ -50,25 +49,13 @@ MULTIMODAL_SCHEMA = T.StructType(
 
 
 def _decode_image(payload: bytes):
-    """Codec dispatch: PNG, GIF, BMP and baseline TIFF decode with the
-    from-scratch stdlib kernels; anything else raises
-    NotImplementedError."""
-    from ..kernels.bmp_codec import decode_bmp
-    from ..kernels.gif_codec import decode_gif
+    """Codec dispatch: PNG decodes with the from-scratch stdlib kernel;
+    anything else raises NotImplementedError."""
     from ..kernels.png_codec import PNG_SIG, decode_png
-    from ..kernels.tiff_codec import decode_tiff
 
     if payload.startswith(PNG_SIG):
         return decode_png(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return decode_tiff(payload)
-    raise NotImplementedError(
-        "decode supports PNG, GIF, BMP and baseline TIFF"
-    )
+    raise NotImplementedError("decode supports PNG only")
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -89,16 +76,13 @@ def decode_resize_images(items: DataFrame, target_w: int = 951,
     """(item_id, in/out dims, resized_sha1, error) — the reference's image
     preprocessing (lib/idp_common_pkg/idp_common/image/__init__.py:54-66:
     aspect-preserving fit-within, downscale-only, defaults 951x1268) run
-    END-TO-END on real pixels: stdlib PNG / GIF / BMP / baseline-TIFF
-    decode -> bilinear resize -> sha1 of the resized RGB bytes.
+    END-TO-END on real pixels: stdlib PNG decode -> bilinear resize ->
+    sha1 of the resized RGB bytes.
     Unsupported / malformed payloads land in the error column
     (loud-degrade convention), never kill the job. Map-only Arrow
     lineage — scales exactly like the scan."""
-    from ..kernels.bmp_codec import BmpError
-    from ..kernels.gif_codec import GifError
     from ..kernels.image_ops import resize_array
     from ..kernels.png_codec import PngError
-    from ..kernels.tiff_codec import TiffError
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -124,8 +108,7 @@ def decode_resize_images(items: DataFrame, target_w: int = 951,
                     rows["resized_sha1"].append(
                         hashlib.sha1(out.tobytes()).hexdigest())
                     rows["error"].append(None)
-                except (PngError, GifError, BmpError, TiffError,
-                        NotImplementedError) as e:
+                except (PngError, NotImplementedError) as e:
                     rows["in_width"].append(None)
                     rows["in_height"].append(None)
                     rows["out_width"].append(None)
