@@ -756,238 +756,6 @@ def _sql_image_resize() -> str:
     """
 
 
-_AUDIO_FEATURES_N = 160
-
-
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAV PCM decode -> integer-exact signal stats, END-TO-END: the
-    from-scratch RIFF/WAVE decoder (kernels/audio_codec.py) runs on
-    deterministic executor-built payloads (8- and 16-bit PCM, mono and
-    stereo, six sample rates, an extra LIST chunk before fmt so real
-    chunk-walking is exercised; every 16th item truncated and every
-    16th+13 claiming an MP3 format tag -> loud error rows). The oracle
-    re-derives every statistic in PURE SQL from the closed-form sample
-    formula (fixtures/media_gen.wav_sample) — the codec roundtrip is the
-    thing under test, and all stats are integer sums so there is no
-    float drift at any scale."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .fixtures.media_gen import wav_fixture_bytes
-    from .operators.multimodal import audio_signal_stats
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"item_id": ids,
-                 "payload": [wav_fixture_bytes(i) for i in ids]}
-            )
-
-    items = spark.range(0, _AUDIO_FEATURES_N, numPartitions=8).mapInPandas(
-        gen, schema)
-    return audio_signal_stats(items)
-
-
-def _sql_audio_features() -> str:
-    """Good rows re-derived in PURE SQL from the closed-form interleaved
-    sample formula (no byte parsing anywhere): per-item params, a
-    range-join sample expansion, a LAG window for sign changes, then
-    integer aggregation. Error rows (truncated container / non-PCM
-    format tag) come from the shared kernel driver-side, reproducing the
-    loud-degrade strings exactly — the same hybrid the image-resize
-    oracles use."""
-    from .fixtures.media_gen import wav_fixture_bytes
-    from .kernels.audio_codec import AudioError, decode_wav
-
-    err_rows = []
-    for i in range(_AUDIO_FEATURES_N):
-        if i % 16 not in (9, 13):
-            continue
-        try:
-            decode_wav(wav_fixture_bytes(i))
-            raise AssertionError("fixture should be malformed")
-        except AudioError as e:
-            err = f"AudioError: {e}"[:200].replace("'", "''")
-        err_rows.append(f"({i}, '{err}')")
-    err_values = ",\n                   ".join(err_rows)
-    return f"""
-        WITH params AS (
-            SELECT i,
-                   CASE WHEN i % 3 = 1 THEN 8 ELSE 16 END AS bits,
-                   1 + (i % 2) AS channels,
-                   CASE i % 6 WHEN 0 THEN 8000 WHEN 1 THEN 11025
-                              WHEN 2 THEN 16000 WHEN 3 THEN 22050
-                              WHEN 4 THEN 32000 ELSE 44100 END AS sample_rate,
-                   300 + (i * 37) % 700 AS n_frames
-            FROM range({_AUDIO_FEATURES_N}) t(i)
-            WHERE i % 16 NOT IN (9, 13)
-        ),
-        samples AS (
-            SELECT p.i, p.bits, p.channels, p.sample_rate, p.n_frames, r.k,
-                   CASE WHEN p.bits = 16
-                        THEN ((p.i * 2654435761 + r.k * 40503) % 65536) - 32768
-                        ELSE ((p.i * 97 + r.k * 31) % 256) - 128
-                   END AS s
-            FROM params p JOIN range(2000) r(k)
-              ON r.k < p.n_frames * p.channels
-        ),
-        lagged AS (
-            SELECT *, LAG(s) OVER (PARTITION BY i ORDER BY k) AS prev
-            FROM samples
-        ),
-        good AS (
-            SELECT i AS item_id,
-                   CAST(ANY_VALUE(sample_rate) AS INT) AS sample_rate,
-                   CAST(ANY_VALUE(channels) AS INT) AS channels,
-                   CAST(ANY_VALUE(bits) AS INT) AS bits,
-                   CAST(COUNT(*) AS BIGINT) AS n_samples,
-                   CAST(MAX(ABS(s)) AS INT) AS peak_abs,
-                   CAST(SUM(ABS(s)) AS BIGINT) AS sum_abs,
-                   CAST(SUM(s * s) AS BIGINT) AS sum_sq,
-                   CAST(SUM(CASE WHEN prev IS NOT NULL
-                                  AND ((prev < 0) <> (s < 0))
-                             THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
-                   CAST(ANY_VALUE(n_frames) * 1000
-                        // ANY_VALUE(sample_rate) AS BIGINT) AS duration_ms,
-                   CAST(NULL AS VARCHAR) AS error
-            FROM lagged
-            GROUP BY i
-        )
-        SELECT * FROM good
-        UNION ALL
-        SELECT CAST(item_id AS BIGINT), CAST(NULL AS INT), CAST(NULL AS INT),
-               CAST(NULL AS INT), CAST(NULL AS BIGINT), CAST(NULL AS INT),
-               CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-               CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), error
-        FROM (VALUES {err_values}) e(item_id, error)
-    """
-
-
-_MEDIA_META_AV_N = 120
-
-
-def q_media_meta_av(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed audio/video container probe: WAV / MP3 / AVI payloads (by
-    item_id mod 3) built on executors from closed-form parameters;
-    probe_av_meta dispatches on magic bytes and must recover sample
-    rate, frame counts, video dimensions, MP3 bitrate and exact integer
-    durations from the containers alone. MP3 streams carry i%5 leading
-    junk bytes so the sync-scan is inside the verified loop. Oracle is
-    PURE SQL over the same parameter formulas — no byte parsing."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .fixtures.media_gen import (
-        avi_fixture_bytes,
-        mp3_fixture_bytes,
-        wav_fixture_bytes,
-    )
-    from .operators.multimodal import probe_av_meta
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        builders = (wav_fixture_bytes, mp3_fixture_bytes, avi_fixture_bytes)
-        for pdf in batches:
-            ids, payloads = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                ids.append(i)
-                if i % 3 == 0:
-                    # malformed=False: this probe is all-good rows; the
-                    # loud-degrade variants are audio_features' job
-                    payloads.append(wav_fixture_bytes(i, malformed=False))
-                else:
-                    payloads.append(builders[i % 3](i))
-            yield pd.DataFrame({"item_id": ids, "payload": payloads})
-
-    items = spark.range(0, _MEDIA_META_AV_N, numPartitions=8).mapInPandas(
-        gen, schema)
-    return probe_av_meta(items)
-
-
-def _sql_media_meta_av() -> str:
-    return f"""
-        WITH ids AS (SELECT i FROM range({_MEDIA_META_AV_N}) t(i)),
-        wav AS (
-            SELECT i, i AS j FROM ids WHERE i % 3 = 0
-        ),
-        wav_rows AS (
-            SELECT i AS item_id, 'audio' AS modality, 'wav' AS container,
-                   CASE j % 6 WHEN 0 THEN 8000 WHEN 1 THEN 11025
-                              WHEN 2 THEN 16000 WHEN 3 THEN 22050
-                              WHEN 4 THEN 32000 ELSE 44100 END AS sample_rate,
-                   300 + (j * 37) % 700 AS n_frames,
-                   NULL AS bitrate_kbps, NULL AS width, NULL AS height,
-                   (300 + (j * 37) % 700) * 1000 //
-                   CASE j % 6 WHEN 0 THEN 8000 WHEN 1 THEN 11025
-                              WHEN 2 THEN 16000 WHEN 3 THEN 22050
-                              WHEN 4 THEN 32000 ELSE 44100 END AS duration_ms
-            FROM wav
-        ),
-        mp3_rows AS (
-            SELECT i AS item_id, 'audio' AS modality, 'mp3' AS container,
-                   CASE (i // 3) % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                                     ELSE 32000 END AS sample_rate,
-                   40 + (i * 7) % 160 AS n_frames,
-                   CASE 1 + (i // 3) % 14
-                        WHEN 1 THEN 32 WHEN 2 THEN 40 WHEN 3 THEN 48
-                        WHEN 4 THEN 56 WHEN 5 THEN 64 WHEN 6 THEN 80
-                        WHEN 7 THEN 96 WHEN 8 THEN 112 WHEN 9 THEN 128
-                        WHEN 10 THEN 160 WHEN 11 THEN 192 WHEN 12 THEN 224
-                        WHEN 13 THEN 256 ELSE 320 END AS bitrate_kbps,
-                   NULL AS width, NULL AS height,
-                   (40 + (i * 7) % 160) * 1152 * 1000 //
-                   CASE (i // 3) % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                                     ELSE 32000 END AS duration_ms
-            FROM ids WHERE i % 3 = 1
-        ),
-        avi_rows AS (
-            SELECT i AS item_id, 'video' AS modality, 'avi' AS container,
-                   NULL AS sample_rate,
-                   24 + (i * 3) % 240 AS n_frames,
-                   NULL AS bitrate_kbps,
-                   160 + (i * 11) % 480 AS width,
-                   120 + (i * 13) % 360 AS height,
-                   (24 + (i * 3) % 240) *
-                   (1000000 // CASE i % 5 WHEN 0 THEN 10 WHEN 1 THEN 15
-                                          WHEN 2 THEN 24 WHEN 3 THEN 25
-                                          ELSE 30 END) // 1000 AS duration_ms
-            FROM ids WHERE i % 3 = 2
-        ),
-        unioned AS (
-            SELECT * FROM wav_rows
-            UNION ALL SELECT * FROM mp3_rows
-            UNION ALL SELECT * FROM avi_rows
-        )
-        SELECT CAST(item_id AS BIGINT) AS item_id, modality, container,
-               CAST(sample_rate AS INT) AS sample_rate,
-               CAST(n_frames AS INT) AS n_frames,
-               CAST(bitrate_kbps AS INT) AS bitrate_kbps,
-               CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-               CAST(duration_ms AS BIGINT) AS duration_ms,
-               CAST(NULL AS VARCHAR) AS error
-        FROM unioned
-    """
-
-
 def q_extract_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Genuine %PDF byte streams (xref/objects/FlateDecode/text operators,
     written byte-level by the fixture generator) through the standard
@@ -1811,8 +1579,6 @@ _RAW_QUERIES = {
     "ocr_table_markdown": q_ocr_table_markdown,
     "image_meta": q_image_meta,
     "image_resize": q_image_resize,
-    "audio_features": q_audio_features,
-    "media_meta_av": q_media_meta_av,
     "sectioning": q_sectioning,
     "sectioning_holistic": q_sectioning_holistic,
     "section_attributes": q_section_attributes,
@@ -1852,8 +1618,6 @@ def oracles() -> dict[str, str]:
         "ocr_table_markdown": _sql_ocr_table_markdown(),
         "image_meta": _sql_image_meta(),
         "image_resize": _sql_image_resize(),
-        "audio_features": _sql_audio_features(),
-        "media_meta_av": _sql_media_meta_av(),
         "sectioning": _sql_sectioning(),
         "sectioning_holistic": _sql_sectioning_holistic(),
         "section_attributes": _sql_section_attributes(),

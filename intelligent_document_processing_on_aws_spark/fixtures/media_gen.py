@@ -3,8 +3,7 @@
 The six ``*_bytes`` builders write spec-conformant headers (image_meta
 parses them like any real file's) around deterministic filler that is
 not a decodable image. ``gradient_png`` writes real pixels that the PNG
-decoder reads back. The WAV / MP3 / AVI builders write real containers
-that kernels/audio_codec.py parses.
+decoder reads back.
 """
 
 from __future__ import annotations
@@ -127,98 +126,3 @@ def gradient_png(i: int) -> bytes:
         return data[:30]
     return data
 
-
-# --- audio / video fixtures (r5) ----------------------------------------
-#
-# Every parameter below is a closed-form integer function of the item id
-# so a SQL oracle can re-derive both the construction parameters AND the
-# decoded sample values without parsing a byte. The WAV sample stream is
-# generated INTERLEAVED directly: sample k of item i is
-#   16-bit: ((i*2654435761 + k*40503) % 65536) - 32768
-#    8-bit: ((i*97 + k*31) % 256) - 128        (stored as unsigned v+128)
-
-WAV_SAMPLE_RATES = (8000, 11025, 16000, 22050, 32000, 44100)
-
-
-def wav_params(i: int) -> dict:
-    """Closed-form WAV fixture parameters for item i (mirrored in the
-    audio_features oracle SQL)."""
-    return {
-        "bits": 8 if i % 3 == 1 else 16,
-        "channels": 1 + (i % 2),
-        "sample_rate": WAV_SAMPLE_RATES[i % 6],
-        "n_frames": 300 + (i * 37) % 700,
-    }
-
-
-def wav_sample(i: int, k: int, bits: int) -> int:
-    if bits == 16:
-        return ((i * 2654435761 + k * 40503) % 65536) - 32768
-    return ((i * 97 + k * 31) % 256) - 128
-
-
-def wav_fixture_bytes(i: int, malformed: bool = True) -> bytes:
-    """Deterministic PCM WAV for item i. Malformed variants (only when
-    ``malformed`` is True):
-    i%16==9  -> truncated mid-header (AudioError: chunk overrun)
-    i%16==13 -> fmt claims MPEG_LAYER3 (AudioError: unsupported codec).
-    An extra LIST chunk before fmt exercises real chunk walking."""
-    from ..kernels.audio_codec import encode_wav
-
-    p = wav_params(i)
-    m = p["n_frames"] * p["channels"]
-    samples = [wav_sample(i, k, p["bits"]) for k in range(m)]
-    extra = b"LIST" + struct.pack("<I", 11) + b"INFOfixture"
-    data = encode_wav(samples, p["sample_rate"], p["channels"], p["bits"],
-                      extra_chunk=extra)
-    if malformed and i % 16 == 9:
-        return data[:30]
-    if malformed and i % 16 == 13:
-        # overwrite the fmt audio_format field (fmt follows the 23-byte
-        # padded LIST chunk at offset 12): format tag is 8 bytes into
-        # the fmt chunk header
-        fmt_off = 12 + 8 + 11 + 1 + 8
-        return data[:fmt_off] + struct.pack("<H", 0x0055) + data[fmt_off + 2:]
-    return data
-
-
-def mp3_params(i: int) -> dict:
-    """Closed-form MP3 fixture parameters (mirrored in oracle SQL)."""
-    return {
-        "n_frames": 40 + (i * 7) % 160,
-        "bitrate_idx": 1 + (i // 3) % 14,
-        "sr_idx": (i // 3) % 3,
-    }
-
-
-def mp3_fixture_bytes(i: int) -> bytes:
-    """MPEG-1 Layer III frame stream with alternating padding bits and
-    deterministic filler; preceded by i%5 junk bytes so the parser's
-    sync-scan is exercised."""
-    from ..kernels.audio_codec import encode_mp3_stream
-
-    p = mp3_params(i)
-    junk = bytes((0x20 + j) for j in range(i % 5))
-    return junk + encode_mp3_stream(
-        p["n_frames"], p["bitrate_idx"], p["sr_idx"])
-
-
-AVI_FPS = (10, 15, 24, 25, 30)
-
-
-def avi_params(i: int) -> dict:
-    """Closed-form AVI fixture parameters (mirrored in oracle SQL)."""
-    return {
-        "width": 160 + (i * 11) % 480,
-        "height": 120 + (i * 13) % 360,
-        "n_frames": 24 + (i * 3) % 240,
-        "us_per_frame": 1000000 // AVI_FPS[i % 5],
-    }
-
-
-def avi_fixture_bytes(i: int) -> bytes:
-    from ..kernels.audio_codec import encode_avi_header
-
-    p = avi_params(i)
-    return encode_avi_header(
-        p["width"], p["height"], p["n_frames"], p["us_per_frame"])

@@ -119,8 +119,8 @@ def _audio_video_magic(content: bytes) -> str | None:
     control char no prose starts with) and a structurally valid MPEG-1
     Layer III frame header (0xFF lead byte cannot open UTF-8 text).
     Checked BEFORE the decode attempt, like the unambiguous image
-    magics; routed to the audio/video multimodal path
-    (operators/multimodal.py probe_av_meta / audio_signal_stats)."""
+    magics, so such a payload is typed audio/video (kernels/extract.py
+    then returns empty text) instead of landing on the text path."""
     if content[:4] == b"RIFF":
         if content[8:12] == b"WAVE":
             return AUDIO

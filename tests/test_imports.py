@@ -6,13 +6,16 @@ the package — including the function-level lazy ones that only run on
 some branch — to an existing module and to a name that module defines at
 top level. A lazy import of a deleted module or helper then fails here,
 not on the first production run that takes that branch. The same walk,
-from the entry points, finds the package modules nothing runs.
+from the entry points, finds the package modules nothing runs, and a
+walk over the names the program uses finds the top-level definitions
+nothing names.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+from collections import Counter
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "intelligent_document_processing_on_aws_spark"
@@ -123,12 +126,12 @@ def test_every_package_import_resolves():
     assert not problems, "\n".join(problems)
 
 
-def test_every_module_is_reached_or_listed():
-    """Walks the package imports, lazy ones included, from the entry
-    points: the root ``*.py``, ``jobs/``, ``scripts/`` and the fixture
-    builder. Importing a module also runs its parent packages. A module
-    that none of them reaches fails: delete it or give it a job path."""
-    trees, modules = _parse_program()
+def _reached_modules(trees: dict[str, ast.Module],
+                     modules: dict[str, str]) -> set[str]:
+    """Package modules that the entry points reach through package
+    imports, lazy ones included: the root ``*.py``, ``jobs/``,
+    ``scripts/`` and the fixture builder. Importing a module also runs
+    its parent packages."""
     reached: set[str] = set()
     todo = [p for p in trees if not _module_name(p).startswith(PKG)]
 
@@ -146,5 +149,95 @@ def test_every_module_is_reached_or_listed():
         for _, module, name in _package_imports(path, trees[path]):
             sub = f"{module}.{name}"
             reach(sub if sub in modules else module)
+    return reached
+
+
+def test_every_module_is_reached_or_listed():
+    """A package module that no entry point reaches fails: delete it or
+    give it a job path."""
+    trees, modules = _parse_program()
+    reached = _reached_modules(trees, modules)
     unreached = sorted(m[len(PKG) + 1:] for m in modules if m not in reached)
     assert not unreached, unreached
+
+
+# Top-level definitions that no program code names today, each with the
+# reason it stays for now. The list may only shrink: a name here that
+# program code reaches, or that is deleted, fails the test too.
+UNNAMED_DEFINITIONS = {
+    "config.resolve_classes":
+        "merged class config; the jobs read DOC_CLASSES directly",
+    "kernels.compare.count_classifications":
+        "pure twin of evaluate_attributes' counts (direction 4)",
+    "kernels.compare.calculate_metrics":
+        "pure twin of metrics_rollup (direction 4)",
+    "kernels.filetype.detect_content_type":
+        "type-only wrapper of detect_content_type_and_text for tests",
+    "kernels.html_dom.parse_blocks_stdlib":
+        "differential reference for the fast block parser",
+    "kernels.image_ops.adaptive_binarize_array":
+        "goes with PNG and image_ops, the last decoder batch (direction 7)",
+    "kernels.textnorm.normalize_attr_pattern":
+        "list-pattern config lookup no stage calls (direction 8)",
+    "kernels.textnorm.flatten_for_reporting":
+        "reporting flatten no job writes (direction 8)",
+    "operators.criteria.chunk_text_with_overlap":
+        "pure twin of the Catalyst chunker in validate_criteria",
+    "operators.metering.explode_metering":
+        "metering explode no job feeds (direction 8)",
+    "plans.lineage.assert_no_duplicates":
+        "resume-contract check only tests run (direction 8)",
+    "plans.manifest.validate_manifest":
+        "no-raise wrapper of parse_manifest no job calls (direction 8)",
+    "sources.snapshots.snapshot_history":
+        "operator tool no job runs (direction 8)",
+    "sources.snapshots.rollback_to":
+        "operator tool no job runs (direction 8)",
+    "sources.warc.parse_cdxj":
+        "CDXJ index reader, kept for the streaming reader (direction 6)",
+    "sources.warc.cdx_select":
+        "CDXJ selection, kept for the streaming reader (direction 6)",
+    "sources.warc.fetch_records":
+        "byte-range reader, kept for the streaming reader (direction 6)",
+}
+
+
+def _names_used(node: ast.AST):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.split(".")[-1]
+
+
+def test_every_definition_is_named_or_listed():
+    """Every top-level ``def`` or ``class`` of a package module must be
+    named by program code outside its own body: the entry points and
+    the modules they reach (tests do not count). The walk matches every
+    bare name, attribute and imported name by its text alone, so it
+    errs toward "reached": a common name used anywhere in the program
+    hides a dead definition, and a name that only another dead
+    definition uses counts as named. A miss fails unless ``UNNAMED_DEFINITIONS`` lists
+    it; delete the definition or give it a caller that a job runs."""
+    trees, modules = _parse_program()
+    reached = _reached_modules(trees, modules)
+    program = [p for p in trees
+               if not _module_name(p).startswith(PKG) or _module_name(p) in reached]
+    uses: Counter[str] = Counter()
+    for path in program:
+        uses.update(_names_used(trees[path]))
+    unnamed = set()
+    n_defs = 0
+    for module in sorted(reached):
+        for st in trees[modules[module]].body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                n_defs += 1
+                inside = Counter(_names_used(st))[st.name]
+                if uses[st.name] <= inside:
+                    unnamed.add(f"{module[len(PKG) + 1:]}.{st.name}")
+    assert n_defs > 300, n_defs  # the walk really saw the program
+    assert sorted(unnamed - set(UNNAMED_DEFINITIONS)) == [], "named by no program code"
+    assert sorted(set(UNNAMED_DEFINITIONS) - unnamed) == [], \
+        "named or deleted now: drop it from UNNAMED_DEFINITIONS"

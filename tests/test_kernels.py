@@ -64,6 +64,30 @@ def test_filetype_detection():
     assert filetype.detect_content_type(b"\xff\xfe\x00binary") == "unknown"
 
 
+def test_filetype_routes_audio_video():
+    # container tags and frame headers alone, as the sniffer sees them
+    wav = b"RIFF" + (36).to_bytes(4, "little") + b"WAVE"
+    mp3 = b"\xff\xfb\x90\x00"  # MPEG-1 Layer III, 128 kbit/s, 44.1 kHz
+    avi = b"RIFF" + (4096).to_bytes(4, "little") + b"AVI "
+    assert filetype.detect_content_type(wav) == filetype.AUDIO
+    # offset-0 frame header routes; a junk-prefixed stream is not the
+    # magic sniffer's job — detection stays conservative to avoid false
+    # audio positives
+    assert filetype.detect_content_type(mp3) == filetype.AUDIO
+    assert filetype.detect_content_type(avi) == filetype.VIDEO
+    # an ID3v2 header (binary version byte) routes to audio
+    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x00rest"
+    assert filetype.detect_content_type(id3) == filetype.AUDIO
+    # prose that merely starts with "ID3" stays text
+    assert filetype.detect_content_type(b"ID3 tags explained") == filetype.TEXT
+    # RIFF/WEBP still routes to image, not audio
+    from intelligent_document_processing_on_aws_spark.fixtures.media_gen import (
+        webp_bytes,
+    )
+
+    assert filetype.detect_content_type(webp_bytes(10, 10)) == filetype.IMAGE
+
+
 def test_pipe_table_format():
     rows = [["Item", "Qty"], ["a", "1"], ["longer item", "12,345"]]
     md = format_pipe_table(rows)

@@ -1,4 +1,4 @@
-"""Resume-from-checkpoint, document status, manifests, multimodal plumbing."""
+"""Resume-from-checkpoint, document status, manifests."""
 
 from __future__ import annotations
 
@@ -7,9 +7,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from intelligent_document_processing_on_aws_spark.operators.multimodal import (
-    frame_sample,
-)
 from intelligent_document_processing_on_aws_spark.plans.lineage import (
     assert_no_duplicates,
     run_with_resume_snapshots,
@@ -42,23 +39,6 @@ def test_resume_no_duplicates(spark, tmp_path, synthetic_pages):
     lin = read_table(spark, lineage)
     assert lin.agg(F.sum("n_rows")).first()[0] == 120
     assert lin.agg(F.sum("n_errors")).first()[0] == 0
-
-
-def test_multimodal_features(spark):
-    rows = [
-        (1, "image", b"\x89PNG fake bytes", (640, 480, None, None)),
-        (2, "audio", b"RIFF fake wav", (None, None, 16000, None)),
-        (3, "video", b"\x00\x00ftyp fake", (1920, 1080, None, 95)),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "item_id long, modality string, payload binary, "
-        "meta struct<width:int,height:int,sample_rate:int,n_frames:int>",
-    )
-    # frame sampling fan-out: n_frames=95 every 10 -> 10 rows
-    fs = frame_sample(df, every_n=10).collect()
-    assert len(fs) == 10
-    assert [r.frame_idx for r in fs] == list(range(0, 95, 10))
 
 
 def test_document_status_lifecycle(spark, tmp_path):

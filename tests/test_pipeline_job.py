@@ -4,7 +4,8 @@ Runs the job's ``main`` against the session fixture (its ``spark.stop``
 patched out) inside a Spark job group, then checks the warehouse it
 leaves: the ten tables, the summary counts, every golden section in
 its class table with its golden values, every document's latest status,
-and the number of Spark jobs the run took.
+and the number of Spark jobs the run took. It also checks the names that
+perfbench's traced cycle wraps on the job modules.
 """
 
 from __future__ import annotations
@@ -24,6 +25,15 @@ from intelligent_document_processing_on_aws_spark.session import cds_archive
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures_data")
+
+# perfbench/workloads.py, read only: the stage functions its traced cycle
+# wraps on jobs/pipeline.py, and each workload's trace targets
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+try:
+    from workloads import IDP_STAGES, IdpWorkload, PagesWorkload
+finally:
+    sys.path.remove(os.path.join(REPO, "perfbench"))
+TRACED_FUNCTIONS = [fn for _, fn, _ in IDP_STAGES] + ["write_document_sections"]
 
 CLASSES = ("bank_statement", "invoice", "tax_form", "webpage")
 WAREHOUSE_TABLES = sorted(
@@ -45,9 +55,22 @@ def _load_job():
     return mod
 
 
-def _run(spark, warehouse: str, expected: bool) -> tuple[dict, int]:
-    """(the job's JSON summary, Spark jobs it ran) for one in-process run."""
+def _run(spark, warehouse: str, expected: bool) -> tuple[dict, int, list[str]]:
+    """(the job's JSON summary, Spark jobs it ran, the traced functions
+    in call order) for one in-process run. The traced functions are
+    wrapped on the job module's globals, as perfbench's traced cycle
+    wraps them."""
     job = _load_job()
+    calls: list[str] = []
+
+    def traced(name, fn):
+        def call(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+        return call
+
+    for name in TRACED_FUNCTIONS:
+        setattr(job, name, traced(name, getattr(job, name)))
     argv = ["--pages", os.path.join(FIXTURES, "packet_pages.parquet"),
             "--warehouse", warehouse, "--master", "local[4]"]
     if expected:
@@ -66,7 +89,7 @@ def _run(spark, warehouse: str, expected: bool) -> tuple[dict, int]:
         del spark.stop
         sys.argv = saved_argv
     summary = json.loads(out.getvalue().strip().splitlines()[-1])
-    return summary, len(sc.statusTracker().getJobIdsForGroup(group))
+    return summary, len(sc.statusTracker().getJobIdsForGroup(group)), calls
 
 
 def _rows(warehouse: str, table: str) -> list[dict]:
@@ -77,12 +100,11 @@ def _rows(warehouse: str, table: str) -> list[dict]:
 @pytest.fixture(scope="module")
 def evaluated(spark, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("pipeline") / "wh_eval")
-    summary, jobs = _run(spark, wh, expected=True)
-    return wh, summary, jobs
+    return (wh, *_run(spark, wh, expected=True))
 
 
 def test_pipeline_writes_every_table_and_summary(spark, evaluated):
-    wh, summary, _ = evaluated
+    wh, summary = evaluated[:2]
     assert summary["warehouse_tables"] == WAREHOUSE_TABLES
     assert sorted(os.listdir(wh)) == WAREHOUSE_TABLES
     assert summary["counts"] == {
@@ -151,9 +173,29 @@ def test_pipeline_spark_job_budget(evaluated):
     assert 0 < evaluated[2] <= MAX_SPARK_JOBS
 
 
+def test_pipeline_calls_the_traced_stages_in_order(evaluated):
+    """perfbench's traced cycle times each IDP stage from the first call
+    of its function through the job module's globals, and reads its rows
+    out from the summary counts. A job that renames, fuses away or stops
+    calling one of them through those globals breaks the traced run."""
+    _, summary, _, calls = evaluated
+    stages = [fn for _, fn, _ in IDP_STAGES]
+    assert [c for c in dict.fromkeys(calls) if c in stages] == stages
+    assert "write_document_sections" in calls
+    assert {count for _, _, count in IDP_STAGES} <= set(summary["counts"])
+
+
+@pytest.mark.parametrize("workload", [PagesWorkload, IdpWorkload])
+def test_perfbench_trace_targets_resolve(workload):
+    """Every (module, attribute) that perfbench's traced cycle wraps
+    exists and is callable."""
+    for module, attr, _ in workload(REPO, FIXTURES, 1).trace_targets():
+        assert callable(getattr(module, attr, None)), (module.__name__, attr)
+
+
 def test_pipeline_without_expected(spark, tmp_path):
     wh = str(tmp_path / "wh_plain")
-    summary, _ = _run(spark, wh, expected=False)
+    summary = _run(spark, wh, expected=False)[0]
     tables = [t for t in WAREHOUSE_TABLES if not t.startswith("evaluation_")]
     assert summary["warehouse_tables"] == tables
     assert summary["counts"] == {

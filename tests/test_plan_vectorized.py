@@ -202,20 +202,3 @@ def test_warc_ingestion_plan_map_only(spark):
     assert "Exchange" not in plan
     assert plan.count("MapInPandas") == 1
 
-
-def test_round5_audio_plans_map_only(spark):
-    """Audio decode/probe stages are one Arrow MapInPandas over the
-    payload scan — zero Exchange; at 100 TB they scale exactly like the
-    binary-column scan."""
-    from intelligent_document_processing_on_aws_spark.operators.multimodal import (
-        audio_signal_stats,
-        probe_av_meta,
-    )
-
-    items = spark.createDataFrame(
-        [(1, bytearray(b"RIFF"))], "item_id long, payload binary")
-    for op in (audio_signal_stats, probe_av_meta):
-        plan = _plan(op(items))
-        assert "BatchEvalPython" not in plan, op.__name__
-        assert plan.count("MapInPandas") == 1, op.__name__
-        assert "Exchange" not in plan, op.__name__

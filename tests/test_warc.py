@@ -390,185 +390,3 @@ def test_build_cdx_digest_and_urlkey_shape(spark):
         assert _re.fullmatch(r"\d{14}", r["ts"])
         assert r["length"] > 0 and r["offset"] >= 0
 
-
-# ---------------------------------------------------------------------------
-# WET writer (write_wet) — conversion records, deterministic bytes
-# ---------------------------------------------------------------------------
-
-
-def test_write_wet_roundtrips_through_read_warc(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        read_warc,
-        write_wet,
-    )
-
-    rows = [(f"https://x{i % 4}.com/p/{i}", f"text body {i} café",
-             "2024-03-01T00:00:00Z") for i in range(37)]
-    df = spark.createDataFrame(rows, "url string, text string, warc_date string")
-    out = tmp_path / "wet"
-    n = write_wet(df, str(out), date_col="warc_date", num_files=3)
-    assert n == 37
-
-    back = read_warc(spark, str(out), record_types=("conversion",))
-    got = {r["url"]: r for r in back.collect()}
-    assert set(got) == {u for u, *_ in rows}
-    for u, t, d in rows:
-        assert got[u]["text"] == t
-        assert got[u]["warc_date"] == d
-        assert got[u]["error"] is None
-
-
-def test_write_wet_bytes_are_deterministic(spark, tmp_path):
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        write_wet,
-    )
-
-    rows = [(f"https://d.com/{i}", f"body {i}") for i in range(20)]
-    df = spark.createDataFrame(rows, "url string, text string")
-    a, b = tmp_path / "a", tmp_path / "b"
-    write_wet(df, str(a), num_files=2)
-    write_wet(df.repartition(7), str(b), num_files=2)  # input partitioning irrelevant
-    fa = sorted(p.name for p in a.iterdir())
-    fb = sorted(p.name for p in b.iterdir())
-    assert fa == fb
-    for name in fa:
-        assert (a / name).read_bytes() == (b / name).read_bytes()
-
-
-def test_write_wet_output_is_cdx_indexable(spark, tmp_path):
-    """WET output is a first-class archive: build_cdx must NOT index it
-    as responses (conversion records are not fetchable captures), but
-    iter_warc_members must span it cleanly."""
-    from intelligent_document_processing_on_aws_spark.kernels.warc import (
-        iter_warc_members,
-    )
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        write_wet,
-    )
-
-    df = spark.createDataFrame(
-        [("https://w.com/1", "alpha"), ("https://w.com/2", "beta")],
-        "url string, text string",
-    )
-    out = tmp_path / "wet"
-    write_wet(df, str(out), num_files=1)
-    data = next(out.iterdir()).read_bytes()
-    members = list(iter_warc_members(data))
-    assert len(members) == 2 and all(e is None for *_, e in members)
-    assert sum(ln for _, ln, *_ in members) == len(data)
-
-
-# ---------------------------------------------------------------------------
-# WAT writer (write_wat) — metadata records, JSON envelope, deterministic
-# ---------------------------------------------------------------------------
-
-
-def test_write_wat_envelope_roundtrip(spark, tmp_path):
-    """WAT output parses back as WARC metadata records whose JSON envelope
-    carries the title and ALL links (relative included) in page order."""
-    import json
-
-    from intelligent_document_processing_on_aws_spark.kernels.warc import (
-        iter_warc_records,
-    )
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        write_wat,
-    )
-
-    rows = [(
-        f"https://s{i % 3}.com/{i}",
-        f'<html><head><title>Page {i}</title></head><body>'
-        f'<a href="https://t.com/{i}">go {i}</a>'
-        f'<a href="/rel/{i}">rel {i}</a></body></html>',
-        "2024-03-01T00:00:00Z",
-    ) for i in range(11)]
-    df = spark.createDataFrame(rows, "url string, html string, warc_date string")
-    out = tmp_path / "wat"
-    n = write_wat(df, str(out), date_col="warc_date", num_files=2)
-    assert n == 11
-
-    got = {}
-    for p in sorted(out.iterdir()):
-        for headers, payload in iter_warc_records(p.read_bytes()):
-            assert headers["warc-type"] == "metadata"
-            assert headers["content-type"] == "application/json"
-            env = json.loads(payload)["Envelope"]
-            url = env["WARC-Header-Metadata"]["WARC-Target-URI"]
-            got[url] = env["Payload-Metadata"]["HTTP-Response-Metadata"][
-                "HTML-Metadata"]
-    assert set(got) == {u for u, *_ in rows}
-    for u, _h, _d in rows:
-        i = int(u.rsplit("/", 1)[1])
-        meta = got[u]
-        assert meta["Head"]["Title"] == f"Page {i}"
-        assert meta["Links"] == [
-            {"url": f"https://t.com/{i}", "text": f"go {i}"},
-            {"url": f"/rel/{i}", "text": f"rel {i}"},
-        ]
-
-
-def test_write_wat_bytes_are_deterministic(spark, tmp_path):
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        write_wat,
-    )
-
-    rows = [(f"https://d.com/{i}",
-             f'<a href="https://e.com/{i}">x {i}</a>') for i in range(20)]
-    df = spark.createDataFrame(rows, "url string, html string")
-    a, b = tmp_path / "a", tmp_path / "b"
-    write_wat(df, str(a), num_files=2)
-    write_wat(df.repartition(7), str(b), num_files=2)
-    fa = sorted(p.name for p in a.iterdir())
-    fb = sorted(p.name for p in b.iterdir())
-    assert fa == fb
-    for name in fa:
-        assert (a / name).read_bytes() == (b / name).read_bytes()
-
-
-def test_wat_metadata_plan_is_map_only(spark):
-    """The html -> (title, links) parse is pure Catalyst: no Python, no
-    Exchange — a map-only projection that scales exactly like the scan."""
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        wat_metadata,
-    )
-
-    df = spark.createDataFrame(
-        [("https://a.com/1", "<title>t</title>")], "url string, html string")
-    plan = spark._sc._jvm.PythonSQLUtils.explainString(
-        wat_metadata(df)._jdf.queryExecution(), "formatted")
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
-    assert "Exchange" not in plan
-
-
-def test_read_wat_roundtrips_wat_metadata(spark, tmp_path):
-    """read_wat is the exact inverse of write_wat: url/date/title/links
-    survive the archive round trip; a damaged member degrades to an
-    error row that read_wat filters (never a crash)."""
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        read_wat,
-        wat_metadata,
-        write_wat,
-    )
-
-    rows = [(
-        f"https://s{i % 3}.com/{i}",
-        f'<html><head><title>T {i}</title></head><body>'
-        f'<a href="https://t.com/{i}">go {i}</a></body></html>',
-        "2024-05-01T00:00:00Z",
-    ) for i in range(9)]
-    df = spark.createDataFrame(rows, "url string, html string, warc_date string")
-    out = tmp_path / "wat"
-    write_wat(df, str(out), date_col="warc_date", num_files=1)
-
-    back = {r.url: r for r in read_wat(spark, str(out)).collect()}
-    orig = {r.url: r for r in
-            wat_metadata(df, date_col="warc_date").collect()}
-    assert set(back) == set(orig)
-    for u, o in orig.items():
-        b = back[u]
-        assert b.title == o.title and b.date == o.date
-        assert [(l["url"], l["text"]) for l in b.links] == \
-               [(l["url"], l["text"]) for l in o.links]
