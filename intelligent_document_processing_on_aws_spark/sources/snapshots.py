@@ -49,6 +49,7 @@ import os
 import tempfile
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -204,11 +205,15 @@ def added_file_stats(table_dir: str, snapshot_id: int) -> list[dict]:
 
 
 def commit_snapshot(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     table_dir: str,
     operation: str = "append",
 ) -> int:
     """Write ``df`` as a new committed snapshot; returns the snapshot id.
+
+    A Spark DataFrame is written by a Spark job; a ``pyarrow.Table`` (a
+    few driver-side rows) is written by the driver as one
+    ``part-00000.parquet``, with no Spark job.
 
     operation: 'append' (new snapshot reads parent files + these) or
     'overwrite' (new snapshot reads only these). The version-marker claim
@@ -239,7 +244,11 @@ def commit_snapshot(
         except FileExistsError:
             continue
     data_dir = os.path.join(snap, "data")
-    df.write.mode("overwrite").parquet(data_dir)
+    if isinstance(df, pa.Table):
+        os.mkdir(data_dir)
+        pq.write_table(df, os.path.join(data_dir, "part-00000.parquet"))
+    else:
+        df.write.mode("overwrite").parquet(data_dir)
 
     new_files = sorted(
         os.path.join(f"snap-{snap_id:08d}", "data", f)

@@ -47,23 +47,18 @@ WARC_SCHEMA = T.StructType(
 )
 
 
-def read_warc(spark: SparkSession, path: str,
-              record_types: tuple[str, ...] = ("response",),
-              emit_text: bool = True) -> DataFrame:
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Read `.warc.gz` (or plain `.warc`) files under `path` into one row
-    per record of the requested types. Responses get their HTTP envelope
-    parsed (status, de-chunk, content-decode) and, when emit_text=True,
-    their payload charset-decoded to `text`. Error rows (malformed
-    records) always pass the type filter — dropping them silently would
-    hide corruption from the audit."""
+    per response record: its HTTP envelope parsed (status, de-chunk,
+    content-decode) and its payload charset-decoded to `text`. Other
+    record types are skipped; error rows (malformed records) are always
+    kept — dropping them silently would hide corruption from the audit."""
     from ..kernels.warc import (
         WarcError,
         decode_charset,
         iter_warc_records_lenient,
         parse_http_response,
     )
-
-    wanted = set(record_types)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -81,7 +76,7 @@ def read_warc(spark: SparkSession, path: str,
                         emit(warc_file=base, error=err)
                         continue
                     rtype = headers.get("warc-type", "")
-                    if rtype not in wanted:
+                    if rtype != "response":
                         continue
                     common = {
                         "warc_file": base,
@@ -90,27 +85,11 @@ def read_warc(spark: SparkSession, path: str,
                         "url": headers.get("warc-target-uri"),
                         "warc_date": headers.get("warc-date"),
                     }
-                    if rtype in ("conversion", "metadata"):
-                        # WET/WAT records: the body IS the payload (text
-                        # or the JSON envelope — no HTTP envelope);
-                        # Content-Type is a WARC header
-                        ct = headers.get("content-type")
-                        text = charset = None
-                        if emit_text:
-                            text, charset = decode_charset(body, ct)
-                        emit(content_type=ct, charset=charset, text=text,
-                             **common)
-                        continue
-                    if rtype != "response":
-                        emit(**common)
-                        continue
                     try:
                         status, http_headers, payload = \
                             parse_http_response(body)
                         ct = http_headers.get("content-type")
-                        text = charset = None
-                        if emit_text:
-                            text, charset = decode_charset(payload, ct)
+                        text, charset = decode_charset(payload, ct)
                         emit(status=status, content_type=ct,
                              charset=charset, text=text, **common)
                     except WarcError as e:

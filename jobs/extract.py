@@ -19,10 +19,14 @@ local task slots.
 
 With --snapshots the output lands as an atomic snapshot commit
 (sources/snapshots.py) under {output}/table, and its per-file lineage,
-read from that commit's parquet footer stats, under {output}/lineage:
-re-running the same command resumes from the last committed snapshot,
-processing only not-yet-committed urls — the kill mid-run / re-run path.
-"rows" is then the committed snapshot's record count, from its manifest.
+read from that commit's parquet footer stats and written by the driver
+with pyarrow, under {output}/lineage: re-running the same command
+resumes from the last committed snapshot, processing only
+not-yet-committed urls — the kill mid-run / re-run path. A first run
+into an empty output counts nothing and runs three Spark jobs: the
+input's schema inference, the salt's shuffle map and the write.
+"rows" is then the committed snapshot's record count, from its manifest,
+and "processed" the record count of this run's snapshot.
 """
 
 from __future__ import annotations

@@ -185,8 +185,6 @@ UNNAMED_DEFINITIONS = {
         "pure twin of the Catalyst chunker in validate_criteria",
     "operators.metering.explode_metering":
         "metering explode no job feeds (direction 8)",
-    "plans.lineage.assert_no_duplicates":
-        "resume-contract check only tests run (direction 8)",
     "plans.manifest.validate_manifest":
         "no-raise wrapper of parse_manifest no job calls (direction 8)",
     "sources.snapshots.snapshot_history":

@@ -8,10 +8,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.plans.lineage import (
-    assert_no_duplicates,
     run_with_resume_snapshots,
 )
 from intelligent_document_processing_on_aws_spark.sources.snapshots import read_table
+
+
+def assert_no_duplicates(spark, output_table: str) -> int:
+    """Rows in the committed output snapshot; raises if a url repeats."""
+    out = read_table(spark, output_table)
+    n = out.count()
+    d = out.select("url").distinct().count()
+    if n != d:
+        raise AssertionError(f"duplicate urls in output: {n} rows, {d} distinct")
+    return n
 
 
 def test_resume_no_duplicates(spark, tmp_path, synthetic_pages):

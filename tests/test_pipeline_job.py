@@ -5,7 +5,8 @@ patched out) inside a Spark job group, then checks the warehouse it
 leaves: the ten tables, the summary counts, every golden section in
 its class table with its golden values, every document's latest status,
 and the number of Spark jobs the run took. It also checks the names that
-perfbench's traced cycle wraps on the job modules.
+perfbench's traced cycle wraps on the job modules, and runs
+jobs/extract.py --snapshots under perfbench's own trace.
 """
 
 from __future__ import annotations
@@ -26,10 +27,12 @@ from intelligent_document_processing_on_aws_spark.session import cds_archive
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures_data")
 
-# perfbench/workloads.py, read only: the stage functions its traced cycle
-# wraps on jobs/pipeline.py, and each workload's trace targets
+# perfbench/workloads.py and probes.py, read only: the stage functions its
+# traced cycle wraps on jobs/pipeline.py, each workload's trace targets,
+# and the span recorder that wraps them
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
 try:
+    from probes import Spans, patched
     from workloads import IDP_STAGES, IdpWorkload, PagesWorkload
 finally:
     sys.path.remove(os.path.join(REPO, "perfbench"))
@@ -191,6 +194,48 @@ def test_perfbench_trace_targets_resolve(workload):
     exists and is callable."""
     for module, attr, _ in workload(REPO, FIXTURES, 1).trace_targets():
         assert callable(getattr(module, attr, None)), (module.__name__, attr)
+
+
+def test_pages_extract_traced_contract(spark, tmp_path):
+    """perfbench's traced pages_extract cycle on t1_pages: the job runs
+    under the workload's own wrappers, calls each traced function, and
+    the traced metrics, which read each commit's table_dir from its
+    second positional argument, come out; the committed lineage adds up
+    to the committed output."""
+    from pyspark.sql import functions as F
+
+    from intelligent_document_processing_on_aws_spark.sources.snapshots import (
+        read_table,
+        total_records,
+    )
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    os.symlink(os.path.join(FIXTURES, "t1_pages.parquet"), corpus / "input")
+    os.symlink(os.path.join(FIXTURES, "t1_golden.parquet"), corpus / "golden.parquet")
+    workload = PagesWorkload(REPO, str(corpus), 4)
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    sc.setJobGroup("pages-traced", "jobs/extract.py --snapshots, traced")
+    try:
+        with patched(Spans(), workload.trace_targets()) as spans:
+            summary = workload.run(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary["rows"] == summary["processed"] == 200
+    assert spans.count("lineage.run") == spans.count("extraction.call") == 1
+    commits = [c for c in spans.calls if c[0] == "snapshots.commit"]
+    assert sorted(c[3][1] for c in commits) == [
+        os.path.join(out, "lineage"), os.path.join(out, "table")]
+    metrics = workload.traced_metrics(spark, spans, None, out, summary, None)
+    assert metrics["operators.extraction.rows_out"] == 200
+    # into an empty table nothing is counted before the extraction starts
+    assert metrics["plans.lineage.resume_check_s"] < 0.05
+    # schema inference of the input, the salt's shuffle map, the write
+    assert len(sc.statusTracker().getJobIdsForGroup("pages-traced")) <= 3
+    lineage = read_table(spark, os.path.join(out, "lineage"))
+    assert lineage.agg(F.sum("n_rows")).first()[0] == total_records(os.path.join(out, "table"))
+    assert workload.check(spark, out) == (200, 0)
 
 
 def test_pipeline_without_expected(spark, tmp_path):

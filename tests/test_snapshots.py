@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
@@ -293,6 +294,58 @@ def test_manifest_records_footer_stats(spark, tmp_path):
     assert total_records(t) == 60
 
 
+def test_arrow_table_commit_records_footer_stats(tmp_path):
+    """A pyarrow.Table commits as one driver-written part-00000.parquet;
+    its manifest stats equal what pyarrow reads from that file."""
+    t = str(tmp_path / "tbl")
+    tbl = pa.table({
+        "url": [f"https://h{i % 7}.example/{i:03d}" for i in range(40)],
+        "error": [None if i % 3 else f"err {i}" for i in range(40)],
+        "n": pa.array(range(40), pa.int64()),
+    })
+    sid = commit_snapshot(tbl, t)
+    [st] = added_file_stats(t, sid)
+    assert st["path"] == os.path.join(f"snap-{sid:08d}", "data", "part-00000.parquet")
+    got = pq.read_table(os.path.join(t, st["path"]))
+    assert got.equals(tbl)
+    assert st["record_count"] == got.num_rows
+    for name in tbl.column_names:
+        col = st["columns"][name]
+        assert col["null_count"] == got.column(name).null_count
+        assert col["lower_bound"] == pc.min(got.column(name)).as_py()
+        assert col["upper_bound"] == pc.max(got.column(name)).as_py()
+    assert total_records(t) == 40
+
+
+def test_lineage_from_spark_then_arrow_reads_as_one_table(spark, tmp_path):
+    """A lineage table whose first snapshot Spark wrote (as earlier
+    versions did) and whose second the driver wrote with pyarrow reads
+    as one frame with the same Spark types."""
+    from pyspark.sql import functions as F
+
+    from intelligent_document_processing_on_aws_spark.plans.lineage import lineage_rows
+
+    def stats(part, n, errors, lo, hi):
+        return {"path": f"snap-00000001/data/part-{part:05d}-x.snappy.parquet",
+                "record_count": n,
+                "columns": {"url": {"null_count": 0, "lower_bound": lo, "upper_bound": hi},
+                            "error": {"null_count": n - errors,
+                                      "lower_bound": None, "upper_bound": None}}}
+
+    t = str(tmp_path / "lineage")
+    ddl = ("partition_id int, n_rows bigint, n_errors bigint, min_url string, "
+           "max_url string, run_rows bigint, output_snapshot_id int")
+    old = lineage_rows([stats(0, 3, 1, "a", "c"), stats(1, 2, 0, "d", "e")], 5, 1)
+    commit_snapshot(spark.createDataFrame(old.to_pylist(), ddl).coalesce(1), t)
+    commit_snapshot(lineage_rows([stats(2, 4, 2, "f", "i")], 4, 2), t)
+    lineage = read_table(spark, t)
+    assert lineage.dtypes == [tuple(c.split()) for c in ddl.split(", ")]
+    arrow_file = os.path.join(t, added_file_stats(t, 2)[0]["path"])
+    assert spark.read.parquet(arrow_file).dtypes == lineage.dtypes
+    assert lineage.agg(F.sum("n_rows"), F.sum("n_errors")).first() == (9, 3)
+    assert sorted(r.partition_id for r in lineage.collect()) == [0, 1, 2]
+
+
 def test_total_records_adds_up_and_resets_on_overwrite(spark, tmp_path):
     t = str(tmp_path / "tbl")
     assert total_records(t) == 0
@@ -327,9 +380,10 @@ def test_manifest_without_stats_still_reads(spark, tmp_path):
 
 
 def test_fresh_resume_runs_at_most_five_jobs(spark, tmp_path, fixtures_dir):
-    """One Python pass: input count, the extraction write (its shuffle
-    map stage and the write) and the lineage write — no resume anti-join
-    on an empty table and no second pass over the result."""
+    """A run into an empty table is one Python pass and nothing else: the
+    extraction write's shuffle map stage and the write. No input count,
+    no resume anti-join, and the lineage commit is a driver-side pyarrow
+    write."""
     from intelligent_document_processing_on_aws_spark.plans.lineage import (
         run_with_resume_snapshots,
     )
@@ -343,5 +397,22 @@ def test_fresh_resume_runs_at_most_five_jobs(spark, tmp_path, fixtures_dir):
             salt_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert r["processed"] == 200
-    assert len(sc.statusTracker().getJobIdsForGroup("fresh-resume")) <= 5
+    assert r == {"processed": 200, "skipped": 0, "snapshot_id": 1}
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-resume")) <= 2
+
+
+def test_fresh_run_over_empty_input(spark, tmp_path, fixtures_dir):
+    """An empty input into an empty table is not counted either: it
+    commits one empty output snapshot, and a re-run commits nothing."""
+    from intelligent_document_processing_on_aws_spark.plans.lineage import (
+        run_with_resume_snapshots,
+    )
+
+    pages = spark.read.parquet(os.path.join(fixtures_dir, "t1_pages.parquet")).limit(0)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    r1 = run_with_resume_snapshots(spark, pages, out, lin, salt_partitions=4)
+    assert r1 == {"processed": 0, "skipped": 0, "snapshot_id": 1}
+    assert total_records(out) == 0
+    r2 = run_with_resume_snapshots(spark, pages, out, lin, salt_partitions=4)
+    assert r2 == {"processed": 0, "skipped": 0, "snapshot_id": None}
+    assert [len(snapshot_history(t)) for t in (out, lin)] == [1, 1]
