@@ -19,6 +19,10 @@ module does:
   non-blocking lock makes one starter build while concurrent ones start
   without the archive, and a failed build leaves a marker so later starts
   do not pay for it again;
+- the build records the archive's byte size next to it. A JVM given a
+  truncated archive crashes (SIGBUS) instead of falling back, so a start
+  that finds an archive of another size, or with no record, deletes it
+  and builds it again. One ``stat`` checks it: no hash of the file;
 - CDS refuses a non-empty directory on the classpath, and Spark's
   launcher puts the conf directory there. A conf directory without a real
   file (none, or only ``*.template`` files) is swapped for an empty
@@ -113,6 +117,15 @@ def _train(cmd: list[str], env: dict, log: str, timeout_s: float) -> str | None:
     return None if code == 0 else f"exit status {code}"
 
 
+def _whole(archive: str, size_file: str) -> bool:
+    """Whether the archive has the byte size its build recorded."""
+    try:
+        with open(size_file) as fh:
+            return os.stat(archive).st_size == int(fh.read())
+    except (OSError, ValueError):
+        return False
+
+
 def shared_archive(key: str, cmd: list[str], env: dict,
                    timeout_s: float = BUILD_TIMEOUT_S) -> str | None:
     """The archive for key, built first if need be by running cmd with a
@@ -120,8 +133,9 @@ def shared_archive(key: str, cmd: list[str], env: dict,
     build failed."""
     root = cache_dir()
     archive = os.path.join(root, f"{key}.jsa")
+    size_file = os.path.join(root, f"{key}.size")
     failed = os.path.join(root, f"{key}.failed")
-    if os.path.exists(archive):
+    if _whole(archive, size_file):
         return archive
     if os.path.exists(failed):
         return None
@@ -131,16 +145,20 @@ def shared_archive(key: str, cmd: list[str], env: dict,
             fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
         except BlockingIOError:
             return None
-        if os.path.exists(archive):
+        if _whole(archive, size_file):
             return archive
         if os.path.exists(failed):
             return None
-        # what a build killed with its parent left behind
-        for stale in glob.glob(os.path.join(root, f"{key}.*.tmp")):
-            os.unlink(stale)
+        # what a build killed with its parent left behind, and an archive
+        # that is not the size its build recorded
+        for stale in [*glob.glob(os.path.join(root, f"{key}.*.tmp")), archive]:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(stale)
         tmp = os.path.join(root, f"{key}.{os.getpid()}.tmp")
         error = _train([*cmd, tmp], env, os.path.join(root, f"{key}.log"), timeout_s)
         if error is None and os.path.isfile(tmp):
+            with open(size_file, "w") as fh:
+                fh.write(str(os.path.getsize(tmp)))
             os.rename(tmp, archive)
             return archive
         with contextlib.suppress(FileNotFoundError):

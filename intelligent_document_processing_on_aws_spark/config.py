@@ -139,35 +139,3 @@ def eval_config_rows(classes: dict | None = None) -> list[dict]:
                                  "method": method,
                                  "threshold": float(thr or 0.8)})
     return rows
-
-
-def deep_merge_config(default: dict, custom: dict) -> dict:
-    """Recursive Default+Custom configuration merge, custom winning
-    (reference config/__init__.py:50-71 ``ConfigurationReader.deep_merge``):
-    nested dicts merge key-wise, anything else (including a custom non-dict
-    over a default dict) replaces; inputs are never mutated. Key order
-    matches the reference (default order, new custom keys appended), and
-    each leaf is copied exactly once (the reference re-deepcopies every
-    subtree per recursion level)."""
-    from copy import deepcopy
-
-    result: dict = {}
-    for key, dval in default.items():
-        if key in custom:
-            cval = custom[key]
-            if isinstance(dval, dict) and isinstance(cval, dict):
-                result[key] = deep_merge_config(dval, cval)
-            else:
-                result[key] = deepcopy(cval)
-        else:
-            result[key] = deepcopy(dval)
-    for key, cval in custom.items():
-        if key not in default:
-            result[key] = deepcopy(cval)
-    return result
-
-
-def resolve_classes(custom: dict | None = None) -> dict:
-    """The get_merged_configuration analog for the class/attribute schema:
-    library DOC_CLASSES as Default, user overrides as Custom."""
-    return deep_merge_config(DOC_CLASSES, custom or {})

@@ -25,10 +25,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import DOC_CLASSES, eval_config_rows
+from .config import eval_config_rows
 from .operators.attributes import extract_section_attributes
-from .operators.classify import classify_and_section, classify_pages, majority_vote_class
-from .operators.evaluation import evaluate_attributes, evaluate_lists_hungarian, metrics_rollup
+from .operators.classify import classify_and_section
+from .operators.evaluation import evaluate_attributes, metrics_rollup
 from .operators.extraction import extract_pages
 from .pyfiles import build
 
@@ -605,7 +605,6 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql import types as T
 
     from .fixtures.media_gen import (
         bmp_bytes,
@@ -615,24 +614,7 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiff_bytes,
         webp_bytes,
     )
-    from .operators.multimodal import probe_image_meta
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("modality", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType([
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("n_frames", T.IntegerType()),
-                ]),
-            ),
-        ]
-    )
+    from .operators.multimodal import MULTIMODAL_SCHEMA, probe_image_meta
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         builders = (png_bytes, jpeg_bytes, gif_bytes,
@@ -648,7 +630,7 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["meta"].append(None)
             yield pd.DataFrame(rows)
 
-    items = spark.range(0, 200, numPartitions=8).mapInPandas(gen, schema)
+    items = spark.range(0, 200, numPartitions=8).mapInPandas(gen, MULTIMODAL_SCHEMA)
     probed = probe_image_meta(items)
     return probed.select(
         "item_id",
@@ -933,60 +915,6 @@ def _sql_sectioning() -> str:
     )
 
 
-def q_sectioning_holistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holistic packet segmentation: segment ranges -> sections
-    (classification/service.py:2070-2150 semantics: invalid segments
-    skipped but id-consuming, nonexistent pages dropped). The oracle is an
-    INDEPENDENT SQL range-explode over the same fixture inputs, not a
-    golden table."""
-    from .operators.classify import holistic_sections
-
-    pages = spark.read.parquet(_fx("packet_pages.parquet"))
-    segments = spark.read.parquet(_fx("packet_segments.parquet"))
-    return holistic_sections(pages, segments).select(
-        "doc_id", "section_id", "classification",
-        F.to_json("page_nums").alias("page_nums_json"), "section_text",
-    )
-
-
-def _sql_sectioning_holistic() -> str:
-    from .operators.classify import MAX_SEGMENT_PAGES  # single definition
-
-    return f"""
-        WITH segs AS (
-            SELECT * FROM read_parquet('{_fx('packet_segments.parquet')}')
-            WHERE type IS NOT NULL
-              AND ordinal_start_page IS NOT NULL
-              AND ordinal_end_page IS NOT NULL
-              AND ordinal_start_page <= ordinal_end_page
-        ),
-        exploded AS (
-            SELECT s.doc_id, s.seg_idx, s.type, gs.page_num
-            FROM segs s, LATERAL (
-                SELECT unnest(generate_series(
-                    s.ordinal_start_page,
-                    greatest(least(s.ordinal_end_page,
-                                   s.ordinal_start_page + {MAX_SEGMENT_PAGES - 1}),
-                             s.ordinal_start_page))) AS page_num
-            ) gs
-        ),
-        joined AS (
-            SELECT e.doc_id, e.seg_idx, e.type, e.page_num, p.text
-            FROM exploded e
-            JOIN read_parquet('{_fx('packet_pages.parquet')}') p
-              ON p.doc_id = e.doc_id AND p.page_num = e.page_num
-        )
-        SELECT doc_id,
-               CAST(seg_idx + 1 AS VARCHAR) AS section_id,
-               type AS classification,
-               '[' || string_agg(page_num, ',' ORDER BY page_num) || ']'
-                   AS page_nums_json,
-               string_agg(text, chr(10) ORDER BY page_num) AS section_text
-        FROM joined
-        GROUP BY doc_id, seg_idx, type
-    """
-
-
 def q_section_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = spark.read.parquet(_fx("packet_pages.parquet"))
     return extract_section_attributes(classify_and_section(pages))
@@ -997,39 +925,6 @@ def _sql_section_attributes() -> str:
         "SELECT doc_id, section_id, classification, attributes_json "
         f"FROM read_parquet('{_fx('golden_attributes.parquet')}')"
     )
-
-
-def q_classify_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pages = spark.read.parquet(_fx("packet_pages.parquet"))
-    return majority_vote_class(classify_pages(pages)).select(
-        "doc_id", "voted_class", F.col("n_pages").cast("long").alias("n_pages")
-    )
-
-
-def _sql_classify_majority_vote() -> str:
-    # independent SQL re-implementation of the classify + majority-vote chain
-    return f"""
-        WITH pages AS (
-            SELECT doc_id,
-                   CASE WHEN regexp_matches(url, 'taxform') THEN 'tax_form'
-                        WHEN regexp_matches(text, 'ACCOUNT NO:') THEN 'bank_statement'
-                        WHEN regexp_matches(text, 'INVOICE NO:') THEN 'invoice'
-                        ELSE 'webpage' END AS classification
-            FROM read_parquet('{_fx('packet_pages.parquet')}')
-        ),
-        counts AS (
-            SELECT doc_id, classification, count(*) AS n_pages
-            FROM pages GROUP BY 1, 2
-        ),
-        ranked AS (
-            SELECT doc_id, classification AS voted_class, n_pages,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY n_pages DESC, classification ASC) AS rk
-            FROM counts
-        )
-        SELECT doc_id, voted_class, CAST(n_pages AS BIGINT) AS n_pages
-        FROM ranked WHERE rk = 1
-    """
 
 
 def _flat(spark: SparkSession, name: str) -> DataFrame:
@@ -1149,51 +1044,6 @@ def _sql_flatten_confidence() -> str:
         "SELECT doc_id, section_id, attr_path, confidence, confidence_threshold "
         f"FROM read_parquet('{_fx('golden_flat_confidence.parquet')}')"
     )
-
-
-def q_assessment_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bbox -> geometry conversion (granular_service.py:1238-1270): 0-1000
-    [x1,y1,x2,y2] reordered + scaled to 0-1 boundingBox structs. Input
-    bboxes are synthesized deterministically from flat_actual (integer
-    arithmetic mirrored exactly in the oracle); coordinates are fed
-    deliberately unordered to exercise the min/max reordering."""
-    from .operators.assessment import bbox_geometry
-
-    flat = _flat(spark, "flat_actual")
-    x1 = (F.col("doc_id") * 37 + F.length("attr_path") * 11) % 900
-    y1 = (F.col("doc_id") * 17 + F.length("attr_path") * 23) % 900
-    w = F.length("attr_path") % 90 + 10
-    h = F.col("doc_id") % 80 + 12
-    bbox = F.array(x1 + w, y1 + h, x1, y1)  # x2,y2 first: must be reordered
-    g = bbox_geometry(bbox, F.col("doc_id") % 5 + 1)
-    return flat.select(
-        "doc_id", "section_id", "attr_path",
-        g["page"].alias("page"),
-        g["boundingBox"]["top"].alias("top"),
-        g["boundingBox"]["left"].alias("left"),
-        g["boundingBox"]["width"].alias("width"),
-        g["boundingBox"]["height"].alias("height"),
-    )
-
-
-def _sql_assessment_geometry() -> str:
-    return f"""
-        WITH src AS (
-            SELECT doc_id, section_id, attr_path,
-                   (doc_id * 37 + length(attr_path) * 11) % 900 AS x1,
-                   (doc_id * 17 + length(attr_path) * 23) % 900 AS y1,
-                   length(attr_path) % 90 + 10 AS w,
-                   doc_id % 80 + 12 AS h
-            FROM read_parquet('{_fx('flat_actual.parquet')}')
-        )
-        SELECT doc_id, section_id, attr_path,
-               CAST(doc_id % 5 + 1 AS BIGINT) AS page,
-               y1 / 1000.0 AS top,
-               x1 / 1000.0 AS "left",
-               ((x1 + w) - x1) / 1000.0 AS width,
-               ((y1 + h) - y1) / 1000.0 AS height
-        FROM src
-    """
 
 
 def q_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1379,10 +1229,7 @@ def q_assessment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_scored_confidences_cte(extra_scored_cols: str = "") -> str:
-    """Shared CTE scaffolding (flat/secs/cfg -> `scored` with confidence +
-    threshold) used by BOTH assessment oracles — one rubric definition, no
-    drift between the plain and granular oracle bodies."""
+def _sql_assessment() -> str:
     cfg_values = ", ".join(
         f"('{r['classification']}', '{r['norm_path']}', {r['threshold']})"
         for r in eval_config_rows()
@@ -1409,70 +1256,12 @@ def _sql_scored_confidences_cte(extra_scored_cols: str = "") -> str:
             SELECT joined.doc_id, joined.section_id,
                    joined.classification AS classification, joined.attr_path,
                    {conf} AS confidence,
-                   COALESCE(cfg.threshold, 0.8) AS confidence_threshold{extra_scored_cols}
+                   COALESCE(cfg.threshold, 0.8) AS confidence_threshold
             FROM joined LEFT JOIN cfg
               ON cfg.classification = joined.classification
              AND cfg.norm_path = regexp_replace(joined.attr_path, '\\[\\d+\\]', '[]', 'g')
         )
-    """
-
-
-def _sql_assessment() -> str:
-    return (
-        _sql_scored_confidences_cte()
-        + "SELECT *, confidence < confidence_threshold AS alert FROM scored"
-    )
-
-
-def q_assessment_granular(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Granular assessment (reference assessment/granular_service.py:525-664
-    task decomposition + :1077-1199 aggregation): per-attribute confidences
-    tagged with the simple_batch_N / group_N / list_{attr}_item_{j} task each
-    attribute is graded under."""
-    from .operators.assessment import granular_assess, granular_task_dim
-
-    cfg = spark.createDataFrame(eval_config_rows())
-    dim = spark.createDataFrame(granular_task_dim(DOC_CLASSES))
-    secs = spark.read.parquet(_fx("golden_sections.parquet"))
-    return granular_assess(_flat(spark, "flat_actual"), secs, cfg, dim).select(
-        "doc_id", "section_id", "classification", "attr_path",
-        "confidence", "confidence_threshold", "alert", "task_id", "task_type",
-    )
-
-
-def _sql_assessment_granular() -> str:
-    # Independent re-derivation of the batching arithmetic (the operator's
-    # dim builder is not reused): walk each class config positionally,
-    # chunk simples by 3, continue the counter into groups.
-    dim_rows = []
-    for cls, cfg in DOC_CLASSES.items():
-        simples = [a["name"] for a in cfg.get("attributes", []) if a["type"] == "simple"]
-        group_names = [a["name"] for a in cfg.get("attributes", []) if a["type"] == "group"]
-        n_batches = (len(simples) + 2) // 3
-        for pos, name in enumerate(simples):
-            dim_rows.append((cls, name, f"simple_batch_{pos // 3}", "simple_batch"))
-        for g_ord, name in enumerate(group_names):
-            dim_rows.append((cls, name, f"group_{n_batches + g_ord}", "group"))
-    dim_values = ", ".join(
-        f"('{c}', '{a}', '{t}', '{ty}')" for c, a, t, ty in dim_rows
-    )
-    extra = (
-        ",\n                   regexp_extract(joined.attr_path, '^([^.\\[]+)', 1) AS attr_name"
-        ",\n                   regexp_extract(joined.attr_path, '^[^.\\[]+\\[(\\d+)\\]', 1) AS item_idx"
-    )
-    return _sql_scored_confidences_cte(extra) + f"""
-        , dim(classification, attr_name, task_id, task_type) AS (VALUES {dim_values})
-        SELECT scored.doc_id, scored.section_id, scored.classification,
-               scored.attr_path, confidence, confidence_threshold,
-               confidence < confidence_threshold AS alert,
-               CASE WHEN item_idx <> ''
-                    THEN 'list_' || scored.attr_name || '_item_' || item_idx
-                    ELSE dim.task_id END AS task_id,
-               CASE WHEN item_idx <> '' THEN 'list_item'
-                    ELSE dim.task_type END AS task_type
-        FROM scored LEFT JOIN dim
-          ON dim.classification = scored.classification
-         AND dim.attr_name = scored.attr_name
+        SELECT *, confidence < confidence_threshold AS alert FROM scored
     """
 
 
@@ -1509,60 +1298,6 @@ def _sql_summary_markdown() -> str:
     )
 
 
-def q_eval_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEMANTIC evaluation method over supplied embedding vectors
-    (comparator.py:406-476 with the remote Bedrock embedding call replaced
-    by the value_embeddings lookup table): native zip_with/aggregate
-    cosine, trim-to-shorter-vector, zero-magnitude -> 0.0, FUZZY fallback
-    for values absent from the table. Golden computed by the pure kernel
-    (compare_semantic) — exact 1/64-quantized components make scores
-    bit-identical across engines."""
-    from .fixtures.semantic_gen import SEM_THRESHOLD, SEMANTIC_PATHS
-
-    cfg = spark.createDataFrame(
-        [{"classification": c, "norm_path": p, "method": "SEMANTIC",
-          "threshold": SEM_THRESHOLD} for c, p in SEMANTIC_PATHS]
-    )
-    emb = spark.read.parquet(_fx("value_embeddings.parquet"))
-    counted = evaluate_attributes(
-        _flat(spark, "flat_expected"), _flat(spark, "flat_actual"), cfg,
-        embeddings=emb,
-    )
-    return counted.where(F.col("method") == "SEMANTIC").select(
-        "doc_id", "section_id", "attr_path", "expected", "actual",
-        "score", "tn", "fp", "fn", "tp", "fp1", "fp2",
-    )
-
-
-def _sql_eval_semantic() -> str:
-    return (
-        "SELECT doc_id, section_id, attr_path, expected, actual, score, "
-        "CAST(tn AS INT) AS tn, CAST(fp AS INT) AS fp, "
-        "CAST(fn AS INT) AS fn, CAST(tp AS INT) AS tp, "
-        "CAST(fp1 AS INT) AS fp1, CAST(fp2 AS INT) AS fp2 "
-        f"FROM read_parquet('{_fx('golden_semantic.parquet')}')"
-    )
-
-
-def q_eval_hungarian(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kuhn-Munkres wholesale list matching (comparator.py:226-287).
-    Oracle: golden_hungarian.parquet, built by EXHAUSTIVE assignment
-    enumeration in the fixture generator (packets_gen._brute_force_hungarian)
-    — the O(n^3) solver is validated against brute-force optimality."""
-    return evaluate_lists_hungarian(
-        _flat(spark, "flat_expected"), _flat(spark, "flat_actual"),
-        "Transactions", "Description", "FUZZY", 0.8,
-    )
-
-
-def _sql_eval_hungarian() -> str:
-    return (
-        "SELECT doc_id, section_id, classification, attr_path, "
-        "CAST(tp AS INTEGER) AS tp, CAST(fp AS INTEGER) AS fp, avg_score "
-        f"FROM read_parquet('{_fx('golden_hungarian.parquet')}')"
-    )
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -1580,18 +1315,12 @@ _RAW_QUERIES = {
     "image_meta": q_image_meta,
     "image_resize": q_image_resize,
     "sectioning": q_sectioning,
-    "sectioning_holistic": q_sectioning_holistic,
     "section_attributes": q_section_attributes,
-    "classify_majority_vote": q_classify_majority_vote,
     "assessment_alerts": q_assessment,
-    "assessment_granular": q_assessment_granular,
-    "assessment_geometry": q_assessment_geometry,
     "section_summaries": q_section_summaries,
     "summary_markdown": q_summary_markdown,
     "eval_metrics": q_eval_metrics,
     "eval_report": q_eval_report,
-    "eval_hungarian": q_eval_hungarian,
-    "eval_semantic": q_eval_semantic,
     "flatten_confidence": q_flatten_confidence,
     "criteria_validation": q_criteria_validation,
     "document_status": q_document_status,
@@ -1619,18 +1348,12 @@ def oracles() -> dict[str, str]:
         "image_meta": _sql_image_meta(),
         "image_resize": _sql_image_resize(),
         "sectioning": _sql_sectioning(),
-        "sectioning_holistic": _sql_sectioning_holistic(),
         "section_attributes": _sql_section_attributes(),
-        "classify_majority_vote": _sql_classify_majority_vote(),
         "assessment_alerts": _sql_assessment(),
-        "assessment_granular": _sql_assessment_granular(),
-        "assessment_geometry": _sql_assessment_geometry(),
         "section_summaries": _sql_section_summaries(),
         "summary_markdown": _sql_summary_markdown(),
         "eval_metrics": _sql_eval_metrics(),
         "eval_report": _sql_eval_report(),
-        "eval_hungarian": _sql_eval_hungarian(),
-        "eval_semantic": _sql_eval_semantic(),
         "flatten_confidence": _sql_flatten_confidence(),
         "criteria_validation": _sql_criteria_validation(),
         "document_status": _sql_document_status(),

@@ -253,17 +253,6 @@ def build_ocrblocks(out_dir: str = FIXTURES_DIR, n: int = N_OCRBLOCKS) -> None:
     print(f"wrote ocrblocks_docs/ocrblocks_golden: {n} rows")
 
 
-def build_semantic(out_dir: str = FIXTURES_DIR, n: int = N_PACKETS) -> None:
-    from .semantic_gen import semantic_tables
-
-    for name, rows in semantic_tables(n).items():
-        cols = list(rows[0].keys())
-        table = pa.Table.from_pydict({c: [r[c] for r in rows] for c in cols})
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"),
-                       compression="zstd")
-        print(f"wrote {name}: {len(rows)} rows")
-
-
 N_SUMMARY = 120
 
 
@@ -362,7 +351,6 @@ def build(out_dir: str = FIXTURES_DIR) -> None:
     build_csv(out_dir)
     build_summaries(out_dir)
     build_ocrblocks(out_dir)
-    build_semantic(out_dir)
     build_warc(out_dir)
     build_charset_fixtures(out_dir)
 

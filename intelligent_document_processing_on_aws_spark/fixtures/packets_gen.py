@@ -19,11 +19,8 @@ from __future__ import annotations
 
 import json
 import random
-import re
-from itertools import permutations
 
 from ..config import BOUNDARY_START_MARKER
-from ..kernels.compare import compare_fuzzy
 from ..kernels.textnorm import flatten_nested_data
 from .pages_gen import WORDS
 
@@ -255,47 +252,6 @@ def _unflatten(flat: dict) -> dict:
     return root
 
 
-def gen_segments(pk: dict) -> list[dict]:
-    """Holistic segment ranges for one packet — the deterministic analog of
-    the reference's LLM-emitted ``segments`` array
-    (classification/service.py:2070-2150). Base ranges come from the
-    template sections; hardening mirrors the reference's validation paths:
-    - an over-long final range (nonexistent pages are silently dropped),
-    - a segment with a missing ``type`` (skipped, but its ordinal still
-      consumes a section_id — reference enumerates before validating),
-    - a fully out-of-range segment (no valid pages -> skipped, id consumed).
-    """
-    rng = random.Random(f"holseg-{pk['doc_id']}-42")
-    segs = [
-        {
-            "type": s["classification"],
-            "start": s["page_nums"][0],
-            "end": s["page_nums"][-1],
-        }
-        for s in pk["sections"]
-    ]
-    npages = len(pk["pages"])
-    if rng.random() < 0.20:
-        segs[-1]["end"] = npages + 2  # overshoot: truncates to real pages
-    if rng.random() < 0.25:
-        pos = rng.randrange(len(segs) + 1)
-        segs.insert(pos, {"type": None, "start": 1, "end": 1})  # missing field
-    if rng.random() < 0.15:
-        segs.append(
-            {"type": rng.choice(CLASSES), "start": npages + 5, "end": npages + 6}
-        )
-    return [
-        {
-            "doc_id": pk["doc_id"],
-            "seg_idx": k,
-            "ordinal_start_page": s["start"],
-            "ordinal_end_page": s["end"],
-            "type": s["type"],
-        }
-        for k, s in enumerate(segs)
-    ]
-
-
 def _conf_leaf(d: int, sid: str, path: str) -> tuple[dict, float, float | None]:
     rng = random.Random(f"conf-{d}-{sid}-{path}")
     conf = round(rng.uniform(0.5, 1.0), 2)
@@ -336,73 +292,6 @@ def build_conf_tree(
     return tree, flat
 
 
-# -- HUNGARIAN list-matching golden (brute force, not Kuhn-Munkres) ----------
-
-_HUNG_PAT = re.compile(r"^Transactions\[\d+\]\.Description$")
-_HUNG_THRESHOLD = 0.8
-
-
-def _brute_force_hungarian(
-    evs: list, avs: list, threshold: float = _HUNG_THRESHOLD
-) -> tuple[int, int, float]:
-    """(tp, fp, avg_score) for the optimal bipartite list matching, found
-    by EXHAUSTIVE assignment enumeration — independent of the kernel's
-    O(n^3) Kuhn-Munkres solver (kernels/compare.py:105). Fixture lists are
-    2-6 items, so P(m, n) enumeration is trivial. The item scorer is the
-    shared FUZZY comparator (its own parity is covered by the eval_metrics
-    oracle family); what this golden independently re-derives is the
-    assignment optimality and the tp/fp/avg aggregation contract
-    (reference: evaluation/comparator.py:226-287). Matched scores are
-    summed in actual-index order, the order the kernel emits, so the avg
-    float is bit-identical when the optimum is unique."""
-
-    def score(e, a) -> float:
-        return compare_fuzzy(e, a, threshold)[1]
-
-    # reference list conversion stringifies items, including None -> "None"
-    # (comparator.py:211 `[str(item) for item in value]`) — replicate it
-    evs = [str(v) for v in evs]
-    avs = [str(v) for v in avs]
-    if len(evs) == 1 and len(avs) == 1:
-        s = score(evs[0], avs[0])
-        return (1, 0, s) if s >= threshold else (0, 1, s)
-    if not evs and not avs:
-        return 0, 0, 1.0
-    if not evs:
-        return 0, len(avs), 0.0
-    if not avs:
-        return 0, 0, 0.0
-    matrix = [[score(e, a) for a in avs] for e in evs]
-    n, m = len(evs), len(avs)
-    best, best_pairs = -1.0, [(0, 0)]
-    if n <= m:
-        for perm in permutations(range(m), n):
-            tot = sum(matrix[i][perm[i]] for i in range(n))
-            if tot > best:
-                best, best_pairs = tot, [(i, perm[i]) for i in range(n)]
-    else:
-        for perm in permutations(range(n), m):
-            tot = sum(matrix[perm[j]][j] for j in range(m))
-            if tot > best:
-                best, best_pairs = tot, [(perm[j], j) for j in range(m)]
-    scores = [matrix[i][j] for i, j in sorted(best_pairs, key=lambda p: p[1])]
-    tp = sum(1 for s in scores if s >= threshold)
-    fp = m - tp
-    return tp, fp, sum(scores) / len(scores)
-
-
-def _hungarian_side(attrs: dict) -> list:
-    """Values of Transactions[].Description in the operator's collection
-    order: sort_array over struct(attr_path, value) — paths are unique per
-    section, so sorting by path alone is identical."""
-    flat = flatten_nested_data(attrs)
-    items = sorted(
-        (p, None if v is None else str(v))
-        for p, v in flat.items() if _HUNG_PAT.match(p)
-    )
-    return [v for _, v in items]
-
-
 def gen_packets(n: int) -> list[dict]:
     return [gen_packet(d) for d in range(n)]
 
@@ -410,11 +299,10 @@ def gen_packets(n: int) -> list[dict]:
 def packet_tables(n: int) -> dict[str, list[dict]]:
     """Materialize all fixture tables for n packets."""
     pages_rows, section_rows, attr_rows, actual_rows = [], [], [], []
-    flat_exp_rows, flat_act_rows, segment_rows = [], [], []
-    payload_rows, flat_conf_rows, hungarian_rows = [], [], []
+    flat_exp_rows, flat_act_rows = [], []
+    payload_rows, flat_conf_rows = [], []
     for pk in gen_packets(n):
         d, url = pk["doc_id"], pk["url"]
-        segment_rows.extend(gen_segments(pk))
         for i, text in enumerate(pk["pages"], start=1):
             pages_rows.append(
                 {"doc_id": d, "page_num": i, "url": url, "text": text}
@@ -462,16 +350,6 @@ def packet_tables(n: int) -> dict[str, list[dict]]:
             # full extraction-result payload: inference_result envelope +
             # explainability_info confidence tree (evaluation/service.py:
             # 276-321 input shape); golden flat rows from the construction
-            e_vals = _hungarian_side(s["attributes"])
-            a_vals = _hungarian_side(actual)
-            if e_vals or a_vals:  # sections the prep filter keeps
-                tp, fp, avg = _brute_force_hungarian(e_vals, a_vals)
-                hungarian_rows.append(
-                    {"doc_id": d, "section_id": s["section_id"],
-                     "classification": s["classification"],
-                     "attr_path": "Transactions[].Description",
-                     "tp": tp, "fp": fp, "avg_score": avg}
-                )
             conf_tree, conf_flat = build_conf_tree(d, s["section_id"], actual)
             payload_rows.append(
                 {"doc_id": d, "section_id": s["section_id"],
@@ -488,7 +366,6 @@ def packet_tables(n: int) -> dict[str, list[dict]]:
                 )
     return {
         "packet_pages": pages_rows,
-        "packet_segments": segment_rows,
         "extraction_payloads": payload_rows,
         "golden_flat_confidence": flat_conf_rows,
         "golden_sections": section_rows,
@@ -496,5 +373,4 @@ def packet_tables(n: int) -> dict[str, list[dict]]:
         "actual_attributes": actual_rows,
         "flat_expected": flat_exp_rows,
         "flat_actual": flat_act_rows,
-        "golden_hungarian": hungarian_rows,
     }

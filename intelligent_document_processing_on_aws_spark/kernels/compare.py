@@ -1,30 +1,24 @@
-"""Evaluation comparators, Hungarian matching, classification counting and
-metric formulas — pure-Python reference parity.
+"""Evaluation comparators, classification counting and metric formulas —
+pure-Python reference parity.
 
 Mirrors:
 - compare_exact / compare_numeric / compare_fuzzy + fuzz_score (full
   Levenshtein DP): evaluation/comparator.py:44-369
-- compare_hungarian (munkres over 1-score costs, tp/fp/avg_score
-  semantics): evaluation/comparator.py:226-287
 - _count_classifications (tn/fp/fn/tp/fp1/fp2 branches):
   evaluation/service.py:323-404
 - metrics (precision/recall/F1/accuracy/false-alarm/false-discovery):
   evaluation/metrics.py:13-145
-
-The Hungarian solver here is a from-scratch O(n^3) Kuhn-Munkres with
-potentials (standard algorithm; no munkres/scipy dependency).
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional
 
-from .textnorm import convert_to_list, normalize_numeric, strip_punctuation_space
+from .textnorm import normalize_numeric, strip_punctuation_space
 
 EXACT = "EXACT"
 NUMERIC_EXACT = "NUMERIC_EXACT"
 FUZZY = "FUZZY"
-HUNGARIAN = "HUNGARIAN"
 
 
 def _is_empty(v: Any) -> bool:
@@ -98,183 +92,11 @@ def compare_fuzzy(expected: Any, actual: Any, threshold: float = 0.8) -> tuple[b
     return score >= threshold, score
 
 
-def cosine_similarity(v1: list[float] | None, v2: list[float] | None) -> float:
-    """Reference cosine (evaluation/comparator.py:372-404): mismatched
-    lengths trim to the shorter vector BEFORE magnitudes; empty or
-    zero-magnitude input -> 0.0; sequential left-to-right sums."""
-    if not v1 or not v2:
-        return 0.0
-    if len(v1) != len(v2):
-        n = min(len(v1), len(v2))
-        v1, v2 = v1[:n], v2[:n]
-    dot = 0.0
-    m1 = 0.0
-    m2 = 0.0
-    for a, b in zip(v1, v2):
-        dot += a * b
-        m1 += a * a
-        m2 += b * b
-    import math
-
-    m1, m2 = math.sqrt(m1), math.sqrt(m2)
-    if m1 == 0 or m2 == 0:
-        return 0.0
-    return dot / (m1 * m2)
-
-
-def compare_semantic(
-    expected: Any,
-    actual: Any,
-    expected_vec: list[float] | None,
-    actual_vec: list[float] | None,
-    threshold: float = 0.8,
-) -> tuple[bool, float]:
-    """SEMANTIC comparison over SUPPLIED embedding vectors — the
-    deterministic core of the reference's compare_semantic
-    (evaluation/comparator.py:406-476) with the remote Bedrock embedding
-    call replaced by caller-provided vectors (a value->embedding lookup
-    table). Missing/empty vectors fall back to FUZZY, exactly the
-    reference's failed-embedding path (:458-462)."""
-    if expected is None and actual is None:
-        return True, 1.0
-    if _is_empty(expected) and _is_empty(actual):
-        return True, 1.0
-    if expected is None or actual is None:
-        return False, 0.0
-    if not expected_vec or not actual_vec:
-        return compare_fuzzy(expected, actual, threshold)
-    similarity = cosine_similarity(expected_vec, actual_vec)
-    return similarity >= threshold, similarity
-
-
-# ---------------------------------------------------------------------------
-# Hungarian (Kuhn-Munkres with potentials, O(n^3)), rectangular via padding.
-# ---------------------------------------------------------------------------
-
-def hungarian_min_cost(cost: list[list[float]]) -> list[tuple[int, int]]:
-    """Optimal assignment minimizing total cost. Returns (row, col) pairs for
-    the original (unpadded) matrix cells that got matched."""
-    n_rows = len(cost)
-    n_cols = len(cost[0]) if n_rows else 0
-    n = max(n_rows, n_cols)
-    if n == 0:
-        return []
-    INF = float("inf")
-    # pad to square with zeros
-    a = [[cost[i][j] if i < n_rows and j < n_cols else 0.0 for j in range(n)]
-         for i in range(n)]
-    u = [0.0] * (n + 1)
-    v = [0.0] * (n + 1)
-    p = [0] * (n + 1)   # p[j] = row matched to column j (1-based)
-    way = [0] * (n + 1)
-    for i in range(1, n + 1):
-        p[0] = i
-        j0 = 0
-        minv = [INF] * (n + 1)
-        used = [False] * (n + 1)
-        while True:
-            used[j0] = True
-            i0 = p[j0]
-            delta = INF
-            j1 = 0
-            for j in range(1, n + 1):
-                if used[j]:
-                    continue
-                cur = a[i0 - 1][j - 1] - u[i0] - v[j]
-                if cur < minv[j]:
-                    minv[j] = cur
-                    way[j] = j0
-                if minv[j] < delta:
-                    delta = minv[j]
-                    j1 = j
-            for j in range(n + 1):
-                if used[j]:
-                    u[p[j]] += delta
-                    v[j] -= delta
-                else:
-                    minv[j] -= delta
-            j0 = j1
-            if p[j0] == 0:
-                break
-        while j0:
-            j1 = way[j0]
-            p[j0] = p[j1]
-            j0 = j1
-    pairs = []
-    for j in range(1, n + 1):
-        i = p[j]
-        if 1 <= i <= n_rows and 1 <= j <= n_cols:
-            pairs.append((i - 1, j - 1))
-    return pairs
-
-
-def compare_hungarian(
-    expected: Any,
-    actual: Any,
-    comparator: str = EXACT,
-    threshold: float = 0.8,
-) -> tuple[int, int, float]:
-    """(tp, fp, avg_score) per comparator.py:226-287 semantics."""
-
-    def item_score(e: Any, a: Any) -> float:
-        if comparator == FUZZY:
-            return compare_fuzzy(e, a, threshold)[1]
-        if comparator == NUMERIC_EXACT or comparator == "NUMERIC":
-            return compare_numeric(e, a)[1]
-        return compare_exact(e, a)[1]
-
-    expected_list = convert_to_list(expected)
-    actual_list = convert_to_list(actual)
-
-    if len(expected_list) == 1 and len(actual_list) == 1:
-        score = item_score(expected_list[0], actual_list[0])
-        return (1, 0, score) if score >= threshold else (0, 1, score)
-    if not expected_list and not actual_list:
-        return 0, 0, 1.0
-    if not expected_list:
-        return 0, len(actual_list), 0.0
-    if not actual_list:
-        return 0, 0, 0.0
-
-    matrix = [[item_score(e, a) for a in actual_list] for e in expected_list]
-    cost = [[1 - s for s in row] for row in matrix]
-    pairs = hungarian_min_cost(cost)
-    matches = [(i, j, matrix[i][j]) for i, j in pairs]
-    tp = sum(1 for _, _, s in matches if s >= threshold)
-    fp = len(actual_list) - tp
-    avg_score = sum(s for _, _, s in matches) / len(matches) if matches else 0.0
-    return tp, fp, avg_score
-
-
-def compare_values(
-    expected: Any,
-    actual: Any,
-    method: str = EXACT,
-    threshold: float = 0.8,
-    comparator_type: str = "EXACT",
-) -> tuple[bool, float]:
-    if _is_empty(expected) and _is_empty(actual):
-        return True, 1.0
-    if method == EXACT:
-        return compare_exact(expected, actual)
-    if method == NUMERIC_EXACT:
-        return compare_numeric(expected, actual)
-    if method == FUZZY:
-        return compare_fuzzy(expected, actual, threshold)
-    if method == HUNGARIAN:
-        tp, fp, avg = compare_hungarian(expected, actual, comparator_type, threshold)
-        if tp + fp == 0:
-            return True, 1.0
-        return (tp > 0 and fp == 0), avg
-    return compare_exact(expected, actual)
-
-
 def count_classifications(
     expected: Any,
     actual: Any,
     method: str = EXACT,
     threshold: float = 0.8,
-    comparator_type: str = "EXACT",
 ) -> tuple[int, int, int, int, int, int, float, Optional[str]]:
     """(tn, fp, fn, tp, fp1, fp2, score, reason) — evaluation/service.py:323-404."""
     tn = fp = fn = tp = fp1 = fp2 = 0
@@ -289,7 +111,12 @@ def count_classifications(
     elif _is_empty(actual):
         fn = 1
     else:
-        matched, score = compare_values(expected, actual, method, threshold, comparator_type)
+        if method == NUMERIC_EXACT:
+            matched, score = compare_numeric(expected, actual)
+        elif method == FUZZY:
+            matched, score = compare_fuzzy(expected, actual, threshold)
+        else:
+            matched, score = compare_exact(expected, actual)
         if matched:
             tp = 1
         else:

@@ -5,13 +5,11 @@ golden tests share one implementation:
 
 - strip_punctuation_space: evaluation/comparator.py:86-101
 - normalize_numeric:       evaluation/comparator.py:104-126
-- convert_to_list:         evaluation/comparator.py:196-223
 - flatten_nested_data:     evaluation/service.py:194-230 (dot / [i] paths)
 """
 
 from __future__ import annotations
 
-import ast
 import json
 import re
 from typing import Any
@@ -39,25 +37,6 @@ def normalize_numeric(value: Any) -> float:
         return float(value)
     except (ValueError, TypeError):
         raise ValueError(f"Cannot convert {value} to numeric value")
-
-
-def convert_to_list(value: Any) -> list[str]:
-    """Exact mirror of evaluation/comparator.py:196-223: list items are
-    stringified, a "[...]"-shaped string is literal_eval'd, and ANY other
-    value — including empty and whitespace-only strings — becomes the
-    single-element [str(value)] (the reference's 1x1 Hungarian path)."""
-    if value is None:
-        return []
-    if isinstance(value, list):
-        return [str(item) for item in value]
-    if isinstance(value, str) and value.startswith("[") and value.endswith("]"):
-        try:
-            parsed = ast.literal_eval(value)
-            if isinstance(parsed, list):
-                return [str(item) for item in parsed]
-        except (ValueError, SyntaxError):
-            pass
-    return [str(value)]
 
 
 def flatten_nested_data(data: dict, parent_key: str = "") -> dict[str, Any]:

@@ -72,145 +72,10 @@ def assess_attributes(
     return out.withColumn("alert", F.col("confidence") < F.col("confidence_threshold"))
 
 
-DEFAULT_SIMPLE_BATCH_SIZE = 3  # reference granular_service.py:118
-
-
-def granular_task_dim(classes: dict, simple_batch_size: int = DEFAULT_SIMPLE_BATCH_SIZE) -> list[dict]:
-    """Static task-decomposition dimension mirroring the reference's granular
-    assessment task creation (assessment/granular_service.py:525-664):
-
-    - simple attributes batch in config order into groups of
-      ``simple_batch_size`` (default 3, granular_service.py:118), task id
-      ``simple_batch_{counter}``;
-    - each group attribute becomes one ``group_{counter}`` task, the counter
-      continuing across task types exactly as the reference's ``task_counter``;
-    - list attributes become one task PER ITEM named
-      ``list_{attr}_item_{j}`` (granular_service.py:640-655) — the item index
-      is data-dependent, so list ids are built as a Spark expression in
-      :func:`granular_assess`, not rows here. ``list_batch_size`` only chunks
-      the reference's creation loop and never changes the emitted tasks, so it
-      has no analog in this dim.
-
-    Because the reference skips only attributes absent from extraction_results
-    (granular_service.py:555-556) and our deterministic extractor always emits
-    every configured attribute, the decomposition is a pure function of the
-    class config — one tiny broadcastable dim, no per-row Python at any scale.
-
-    Returns rows (classification, attr_name, task_id, task_type) covering
-    simple and group attributes.
-    """
-    rows = []
-    for cls, cfg in classes.items():
-        attrs = cfg.get("attributes", [])
-        simple = [a for a in attrs if a["type"] == "simple"]
-        groups = [a for a in attrs if a["type"] == "group"]
-        counter = 0
-        for i in range(0, len(simple), simple_batch_size):
-            for a in simple[i : i + simple_batch_size]:
-                rows.append({"classification": cls, "attr_name": a["name"],
-                             "task_id": f"simple_batch_{counter}",
-                             "task_type": "simple_batch"})
-            counter += 1
-        for a in groups:
-            rows.append({"classification": cls, "attr_name": a["name"],
-                         "task_id": f"group_{counter}",
-                         "task_type": "group"})
-            counter += 1
-    return rows
-
-
-def granular_assess(
-    flat_attrs: DataFrame,
-    sections: DataFrame,
-    eval_config: DataFrame,
-    task_dim: DataFrame,
-) -> DataFrame:
-    """Granular assessment: per-attribute confidences computed task-parallel
-    (reference GranularAssessmentService.process_document_section,
-    granular_service.py:1381-1660) and re-aggregated with per-attribute
-    confidence_threshold attached (``_aggregate_assessment_results``,
-    granular_service.py:1077-1199).
-
-    The reference fans tasks out over a ThreadPool to bound LLM prompt size;
-    here every attribute row is already independent, so "granular" is pure
-    metadata — the task id/type each attribute would be graded under — while
-    confidences stay identical to :func:`assess_attributes` (the reference
-    likewise asserts granular output is shape-compatible with the standard
-    service). Row-parallel, one broadcast dim join — no shuffle added.
-
-    Output: flat_attrs keys + confidence, confidence_threshold, alert,
-    task_id, task_type.
-    """
-    assessed = assess_attributes(flat_attrs, sections, eval_config)
-    top = F.regexp_extract("attr_path", r"^([^.\[]+)", 1)
-    item_idx = F.regexp_extract("attr_path", r"^[^.\[]+\[(\d+)\]", 1)
-    dim = F.broadcast(
-        task_dim.select(
-            F.col("classification").alias("t_cls"),
-            F.col("attr_name").alias("t_attr"),
-            F.col("task_id").alias("t_id"),
-            F.col("task_type").alias("t_type"),
-        )
-    )
-    out = (
-        assessed.withColumn("attr_name", top)
-        .withColumn("item_idx", item_idx)
-        .join(
-            dim,
-            (F.col("classification") == F.col("t_cls"))
-            & (F.col("attr_name") == F.col("t_attr")),
-            "left",
-        )
-    )
-    is_list = F.col("item_idx") != ""
-    return (
-        out.withColumn(
-            "task_id",
-            F.when(
-                is_list,
-                F.concat(F.lit("list_"), F.col("attr_name"),
-                         F.lit("_item_"), F.col("item_idx")),
-            ).otherwise(F.col("t_id")),
-        )
-        .withColumn(
-            "task_type", F.when(is_list, F.lit("list_item")).otherwise(F.col("t_type"))
-        )
-        .drop("t_cls", "t_attr", "t_id", "t_type", "attr_name", "item_idx")
-    )
-
-
 def threshold_alerts(assessed: DataFrame) -> DataFrame:
     """The HITL-trigger side-output (processresults_function/index.py:30-56
     analog): one row per under-threshold attribute."""
     return assessed.where(F.col("alert")).select(
         "doc_id", "section_id", "classification", "attr_path",
         "confidence", "confidence_threshold",
-    )
-
-
-def bbox_geometry(bbox_col, page_col):
-    """[x1,y1,x2,y2] in 0-1000 scale + page -> geometry struct, the
-    reference's bbox conversion (assessment/granular_service.py:1238-1270):
-    coordinates reordered (min/max), scaled to 0-1 as
-    {boundingBox: {top, left, width, height}, page}. Returns NULL when the
-    bbox is not a 4-element array or the page is missing (the reference
-    skips geometry for malformed assessments, :1286-1310).
-
-    Pure Catalyst column expression — usable inside select/withColumn with
-    no UDF."""
-    bbox = bbox_col if not isinstance(bbox_col, str) else F.col(bbox_col)
-    page = page_col if not isinstance(page_col, str) else F.col(page_col)
-    x1 = F.least(bbox[0], bbox[2])
-    x2 = F.greatest(bbox[0], bbox[2])
-    y1 = F.least(bbox[1], bbox[3])
-    y2 = F.greatest(bbox[1], bbox[3])
-    box = F.struct(
-        (y1 / 1000.0).alias("top"),
-        (x1 / 1000.0).alias("left"),
-        ((x2 - x1) / 1000.0).alias("width"),
-        ((y2 - y1) / 1000.0).alias("height"),
-    )
-    return F.when(
-        (F.size(bbox) == 4) & page.isNotNull(),
-        F.struct(box.alias("boundingBox"), page.alias("page")),
     )

@@ -117,95 +117,3 @@ def group_sections(classified: DataFrame, doc_col: str = "doc_id",
 
 def classify_and_section(pages: DataFrame, classes: dict | None = None) -> DataFrame:
     return group_sections(classify_pages(pages, classes))
-
-
-def majority_vote_class(classified: DataFrame, doc_col: str = "doc_id",
-                        limit_pages: int | None = None) -> DataFrame:
-    """Limit-pages + majority vote (classification/service.py:212-323):
-    classify the first N pages; the most frequent class (ties -> class name
-    asc for determinism) is applied to the whole doc, single section."""
-    df = classified
-    if limit_pages:
-        df = df.where(F.col("page_num") <= limit_pages)
-    counts = df.groupBy(doc_col, "classification").agg(
-        F.count("*").alias("n_pages")
-    )
-    w = Window.partitionBy(doc_col).orderBy(
-        F.desc("n_pages"), F.asc("classification")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(doc_col, F.col("classification").alias("voted_class"), "n_pages")
-    )
-
-
-MAX_SEGMENT_PAGES = 10000
-
-
-def holistic_sections(pages: DataFrame, segments: DataFrame) -> DataFrame:
-    """Holistic packet segmentation: segment RANGES -> sections.
-
-    Mirrors the reference's segments->sections conversion
-    (classification/service.py:2070-2150), where an upstream packet-level
-    analyzer emits ``{ordinal_start_page, ordinal_end_page, type}`` ranges
-    (there: parsed LLM JSON; here: a `segments` DataFrame with a 0-based
-    ``seg_idx`` preserving emission order):
-    - segments missing any required field are skipped, but their ordinal
-      still consumes a section_id (the reference enumerates before
-      validating);
-    - range pages that don't exist in the document are silently dropped
-      (inner join against real pages);
-    - segments left with no valid pages are skipped (id consumed);
-    - section_id = str(seg_idx + 1); every covered page adopts the segment
-      type; section_text joins page texts with "\\n" in page order.
-
-    Plan shape: one bounded explode (ranges are document-local), one join
-    on (doc_id, page_num) co-partitioned with the groupBy key prefix, one
-    aggregation — no window, no driver collect; scales with page count.
-    """
-    valid = segments.where(
-        F.col("type").isNotNull()
-        & F.col("ordinal_start_page").isNotNull()
-        & F.col("ordinal_end_page").isNotNull()
-        # inverted ranges are invalid (the reference's range(start, end+1)
-        # yields nothing; Spark's sequence() would count DOWN — guard it)
-        & (F.col("ordinal_start_page") <= F.col("ordinal_end_page"))
-    )
-    # bound the explode: a hostile/garbled segment claiming billions of
-    # pages must not materialize them; MAX_SEGMENT_PAGES caps the range
-    # (real pages beyond the doc are dropped by the join anyway)
-    end_capped = F.greatest(  # greatest() guards start+cap long overflow
-        F.least(
-            F.col("ordinal_end_page"),
-            F.col("ordinal_start_page") + F.lit(MAX_SEGMENT_PAGES - 1),
-        ),
-        F.col("ordinal_start_page"),
-    )
-    exploded = valid.select(
-        "doc_id",
-        "seg_idx",
-        F.col("type").alias("classification"),
-        F.explode(
-            F.sequence(F.col("ordinal_start_page"), end_capped)
-        ).alias("page_num"),
-    )
-    joined = exploded.join(
-        pages.select("doc_id", "page_num", "text"), ["doc_id", "page_num"]
-    )
-    return (
-        joined.groupBy("doc_id", "seg_idx")
-        .agg(
-            F.any_value("classification").alias("classification"),
-            F.sort_array(
-                F.collect_list(F.struct(F.col("page_num").alias("p"), F.col("text").alias("t")))
-            ).alias("ordered"),
-        )
-        .select(
-            "doc_id",
-            (F.col("seg_idx") + 1).cast("string").alias("section_id"),
-            "classification",
-            F.expr("transform(ordered, x -> x.p)").alias("page_nums"),
-            F.array_join(F.expr("transform(ordered, x -> x.t)"), "\n").alias("section_text"),
-        )
-    )

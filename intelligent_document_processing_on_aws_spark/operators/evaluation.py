@@ -15,10 +15,7 @@ service semantics with native columnar expressions wherever possible:
   stage-codegen'd, no Python (comparator.py:44-369 parity);
 - tn/fp/fn/tp/fp1/fp2 counting per _count_classifications
   (service.py:323-404);
-- metric formulas per metrics.py:13-145;
-- HUNGARIAN list matching via applyInPandas on the pure Kuhn-Munkres
-  kernel (comparator.py:226-287 parity) — inherently quadratic per group,
-  small n, row-parallel across sections.
+- metric formulas per metrics.py:13-145.
 
 Scale notes: the config dimension is broadcast (tiny); the outer join
 shuffles on (doc_id, section_id, attr_path) — high cardinality, well
@@ -35,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernels.compare import compare_hungarian
+from ..kernels.compare import EXACT, FUZZY, NUMERIC_EXACT
 from ..kernels.textnorm import flatten_nested_data
 
 FLAT_SCHEMA = T.StructType(
@@ -98,22 +95,12 @@ def evaluate_attributes(
     expected_flat: DataFrame,
     actual_flat: DataFrame,
     eval_config: DataFrame,
-    embeddings: DataFrame | None = None,
 ) -> DataFrame:
     """Aligned + counted per-attribute rows.
 
     eval_config: (classification, norm_path, method, threshold) — broadcast.
     Output adds: method, threshold, score, tn, fp, fn, tp, fp1, fp2.
-
-    embeddings (optional): (text, embedding array<double>) value->vector
-    lookup enabling the SEMANTIC method (comparator.py:406-476) with the
-    reference's remote Bedrock embedding call replaced by this supplied
-    table. Cosine is a pure Catalyst expression (zip_with + aggregate +
-    sqrt — no Python), trimming to the shorter vector and returning 0.0
-    on zero magnitude exactly like the reference; values missing from the
-    table fall back to FUZZY (the reference's failed-embedding path).
-    Without the table, SEMANTIC rows use the FUZZY fallback throughout
-    (the remote embedding service is out of scope)."""
+    Methods other than NUMERIC_EXACT and FUZZY compare as EXACT."""
     e = expected_flat.select(
         "doc_id", "section_id",
         F.col("classification").alias("e_cls"),
@@ -143,7 +130,7 @@ def evaluate_attributes(
         "left",
     ).drop("c_cls", "c_path")
     # unconfigured (set-difference) paths: default EXACT @0.8
-    joined = joined.withColumn("method", F.coalesce("method", F.lit("EXACT")))
+    joined = joined.withColumn("method", F.coalesce("method", F.lit(EXACT)))
     joined = joined.withColumn("threshold", F.coalesce("threshold", F.lit(0.8)))
 
     exp, act = F.col("expected"), F.col("actual")
@@ -161,73 +148,16 @@ def evaluate_attributes(
         (F.length(ne) == 0) | (F.length(na) == 0), F.lit(0.0)
     ).otherwise(1.0 - F.levenshtein(ne, na) / max_len)
 
-    # SEMANTIC without a vector table: FUZZY throughout (no vector columns
-    # in the plan); with one, cosine over the supplied vectors, trimmed to
-    # the shorter one (comparator.py:372-404) — native fold, no Python
-    sem_score = sim
-    if embeddings is not None:
-        # enforce one vector per text, or duplicate rows would fan out
-        # matches and double-count tp/fp/fn (ADVICE r3). The JOIN KEY is
-        # xxhash64(text) — an 8-byte bigint — so the lookup scales past
-        # broadcast size without shuffling long string keys; the residual
-        # text-equality predicate keeps semantics exact under a 64-bit
-        # collision.
-        emb = embeddings.dropDuplicates(["text"])
-        emb_e = emb.select(
-            F.xxhash64("text").alias("__e_key"),
-            F.col("text").alias("__e_text"),
-            F.col("embedding").alias("e_vec"),
-        )
-        emb_a = emb.select(
-            F.xxhash64("text").alias("__a_key"),
-            F.col("text").alias("__a_text"),
-            F.col("embedding").alias("a_vec"),
-        )
-        joined = (
-            joined.join(
-                emb_e,
-                (F.xxhash64("expected") == F.col("__e_key"))
-                & (F.col("expected") == F.col("__e_text")),
-                "left",
-            )
-            .join(
-                emb_a,
-                (F.xxhash64("actual") == F.col("__a_key"))
-                & (F.col("actual") == F.col("__a_text")),
-                "left",
-            )
-            .drop("__e_key", "__e_text", "__a_key", "__a_text")
-        )
-        tv1 = F.expr("slice(e_vec, 1, least(size(e_vec), size(a_vec)))")
-        tv2 = F.expr("slice(a_vec, 1, least(size(e_vec), size(a_vec)))")
-        dot = F.aggregate(
-            F.zip_with(tv1, tv2, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        mag1 = F.sqrt(F.aggregate(tv1, F.lit(0.0), lambda acc, x: acc + x * x))
-        mag2 = F.sqrt(F.aggregate(tv2, F.lit(0.0), lambda acc, x: acc + x * x))
-        cos = F.when((mag1 == 0.0) | (mag2 == 0.0), F.lit(0.0)).otherwise(
-            dot / (mag1 * mag2)
-        )
-        # vectors present and non-empty -> cosine; else FUZZY fallback
-        # (reference's failed-embedding path, comparator.py:458-462)
-        sem_ok = (F.size("e_vec") > 0) & (F.size("a_vec") > 0)
-        sem_score = F.when(sem_ok, cos).otherwise(sim)
-
     method = F.col("method")
     matched = (
-        F.when(method == "NUMERIC_EXACT", numeric_eq)
-        .when(method == "FUZZY", sim >= F.col("threshold"))
-        .when(method == "SEMANTIC", sem_score >= F.col("threshold"))
+        F.when(method == NUMERIC_EXACT, numeric_eq)
+        .when(method == FUZZY, sim >= F.col("threshold"))
         .otherwise(exact_eq)
     )
-    score = (
-        F.when(method == "FUZZY", sim)
-        .when(method == "SEMANTIC", sem_score)
-        .otherwise(F.when(matched, 1.0).otherwise(0.0))
-    )
+    score = F.when(method == FUZZY, sim).otherwise(F.when(matched, 1.0).otherwise(0.0))
 
     e_empty, a_empty = _is_empty(exp), _is_empty(act)
-    counted = joined.select(
+    return joined.select(
         "*",
         F.when(e_empty & a_empty, 1).otherwise(0).alias("tn"),
         F.when(e_empty & ~a_empty, 1)
@@ -243,7 +173,6 @@ def evaluate_attributes(
         .otherwise(score)
         .alias("score"),
     )
-    return counted.drop("e_vec", "a_vec")
 
 
 def _metric_exprs():
@@ -276,77 +205,6 @@ def metrics_rollup(counted: DataFrame, *group_cols: str) -> DataFrame:
         F.when(fp1 + tn > 0, fp1 / (fp1 + tn)).otherwise(0.0).alias("false_alarm_rate"),
         F.when(fp2 + tp > 0, fp2 / (fp2 + tp)).otherwise(0.0).alias("false_discovery_rate"),
     )
-
-
-# -- HUNGARIAN wholesale list comparison -------------------------------------
-
-HUNGARIAN_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("section_id", T.StringType()),
-        T.StructField("classification", T.StringType()),
-        T.StructField("attr_path", T.StringType()),
-        T.StructField("tp", T.IntegerType()),
-        T.StructField("fp", T.IntegerType()),
-        T.StructField("avg_score", T.DoubleType()),
-    ]
-)
-
-
-def evaluate_lists_hungarian(
-    expected_flat: DataFrame,
-    actual_flat: DataFrame,
-    list_attr: str,
-    field: str,
-    comparator: str = "EXACT",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Wholesale bipartite list matching for `list_attr[].field` values per
-    section (comparator.py:226-287). applyInPandas per (doc, section):
-    quadratic in list length, lists are small; sections parallelize."""
-    pat = rf"^{list_attr}\[\d+\]\.{field}$"
-
-    def prep(df: DataFrame, value_alias: str) -> DataFrame:
-        return (
-            df.where(F.col("attr_path").rlike(pat))
-            .groupBy("doc_id", "section_id")
-            .agg(
-                F.any_value("classification").alias("classification"),
-                F.sort_array(F.collect_list(F.struct("attr_path", "value"))).alias(value_alias),
-            )
-        )
-
-    e = prep(expected_flat, "e_vals")
-    a = prep(actual_flat, "a_vals")
-    both = e.join(a, ["doc_id", "section_id"], "full_outer").select(
-        "doc_id", "section_id",
-        F.coalesce(e["classification"], a["classification"]).alias("classification"),
-        "e_vals", "a_vals",
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {k: [] for k in ("doc_id", "section_id", "classification",
-                               "attr_path", "tp", "fp", "avg_score")}
-        # zip over columns, not iterrows — iterrows builds a Series per row
-        # (the slowest pandas idiom; groups here are 1-row, but the operator
-        # contract allows arbitrary group sizes)
-        for doc_id, section_id, cls, e_raw, a_raw in zip(
-            pdf["doc_id"], pdf["section_id"], pdf["classification"],
-            pdf["e_vals"], pdf["a_vals"],
-        ):
-            evs = [x["value"] for x in e_raw] if e_raw is not None and len(e_raw) else []
-            avs = [x["value"] for x in a_raw] if a_raw is not None and len(a_raw) else []
-            tp, fp, avg = compare_hungarian(evs, avs, comparator, threshold)
-            out["doc_id"].append(doc_id)
-            out["section_id"].append(section_id)
-            out["classification"].append(cls)
-            out["attr_path"].append(f"{list_attr}[].{field}")
-            out["tp"].append(tp)
-            out["fp"].append(fp)
-            out["avg_score"].append(avg)
-        return pd.DataFrame(out)
-
-    return both.groupBy("doc_id", "section_id").applyInPandas(run, HUNGARIAN_SCHEMA)
 
 
 def _pct(col):
@@ -392,7 +250,7 @@ def evaluation_report(
     matched = (F.col("tp") + F.col("tn")) == 1
     status = F.when(matched, F.lit("✅")).otherwise(F.lit("❌"))
     method_display = F.when(
-        F.col("method") == "FUZZY",
+        F.col("method") == FUZZY,
         F.concat(F.col("method"), F.lit(" (threshold: "),
                  _pct(F.col("threshold")), F.lit(")")),
     ).otherwise(F.col("method"))

@@ -13,7 +13,7 @@ real pixels. Every other image payload raises NotImplementedError in
 
 Schema contract for a multimodal table:
   (item_id long, modality string, payload binary,
-   meta struct<width:int, height:int, sample_rate:int, n_frames:int>)
+   meta struct<width:int, height:int>)
 """
 
 from __future__ import annotations
@@ -29,8 +29,6 @@ META_SCHEMA = T.StructType(
     [
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
     ]
 )
 
@@ -133,7 +131,6 @@ def probe_image_meta(items: DataFrame) -> DataFrame:
             ):
                 meta = dict(meta) if meta is not None else {
                     "width": None, "height": None,
-                    "sample_rate": None, "n_frames": None,
                 }
                 if modality == "image":
                     size = image_size(bytes(payload) if payload is not None else b"")

@@ -76,33 +76,3 @@ def test_from_json_structured_roundtrip(spark, fixtures_dir):
     assert row.attrs.Transactions[0].Amount is not None
     # count parity: no nulls from parse failures
     assert parsed.where(F.col("attrs").isNull()).count() == 0
-
-
-def test_deep_merge_config_parity():
-    """Reference ConfigurationReader.deep_merge semantics: nested dicts
-    merge, custom scalars/lists replace, a custom non-dict replaces a
-    default dict wholesale, and neither input is mutated."""
-    from intelligent_document_processing_on_aws_spark.config import (
-        deep_merge_config,
-        resolve_classes,
-    )
-
-    default = {"a": {"x": 1, "y": {"deep": True}}, "b": [1, 2], "c": 3}
-    custom = {"a": {"y": {"deep": False}, "z": 9}, "b": [7], "d": {"new": 1}}
-    merged = deep_merge_config(default, custom)
-    assert merged == {"a": {"x": 1, "y": {"deep": False}, "z": 9},
-                      "b": [7], "c": 3, "d": {"new": 1}}
-    # inputs untouched; outputs are copies, not aliases
-    assert default["a"]["y"] == {"deep": True} and custom["b"] == [7]
-    merged["d"]["new"] = 2
-    assert custom["d"]["new"] == 1
-    # custom non-dict replaces a default dict wholesale
-    assert deep_merge_config({"a": {"x": 1}}, {"a": "flat"}) == {"a": "flat"}
-    # class-schema resolution: override one attribute regex, add a class
-    classes = resolve_classes(
-        {"invoice": {"document_page_content_regex": r"INV#"},
-         "receipt": {"attributes": []}}
-    )
-    assert classes["invoice"]["document_page_content_regex"] == r"INV#"
-    assert len(classes["invoice"]["attributes"]) == 4  # untouched
-    assert "receipt" in classes and "tax_form" in classes

@@ -1,5 +1,5 @@
-"""The class-data sharing archive's key, lock, temp-then-rename and
-failure marker, driven by stub training commands (no JVM).
+"""The class-data sharing archive's key, lock, temp-then-rename, size
+record and failure marker, driven by stub training commands (no JVM).
 
 A stub gets the temp path as its last argument, as the real training
 child does, and counts its runs in a file next to the cache."""
@@ -96,7 +96,29 @@ def test_built_once_per_key(tmp_path, monkeypatch):
     assert shared_archive("k2", cmd, dict(os.environ)) == os.path.join(cache, "k2.jsa")
     assert _runs(tmp_path) == 2
     assert sorted(n for n in os.listdir(cache) if not n.endswith((".lock", ".log"))) \
-        == ["k1.jsa", "k2.jsa"]
+        == ["k1.jsa", "k1.size", "k2.jsa", "k2.size"]
+
+
+def test_truncated_archive_is_deleted_and_rebuilt_once(tmp_path, monkeypatch):
+    cache = _cache(tmp_path, monkeypatch)
+    archive = os.path.join(cache, "k.jsa")
+    # the stub also notes whether an archive file exists while it builds
+    cmd = _stub(tmp_path, textwrap.dedent(f"""
+        with open({str(tmp_path / 'seen')!r}, "a") as fh:
+            fh.write(str(os.path.exists({archive!r})) + "\\n")
+    """) + _WRITES)
+    assert shared_archive("k", cmd, dict(os.environ)) == archive
+    with open(archive, "r+") as fh:
+        fh.truncate(3)  # a cut-short copy: the JVM would crash mapping it
+    assert shared_archive("k", cmd, dict(os.environ)) == archive
+    assert open(archive).read() == "archive" and _runs(tmp_path) == 2
+    # the truncated file was gone before the rebuild began
+    assert (tmp_path / "seen").read_text().split() == ["False", "False"]
+    # a whole archive is not built again
+    assert shared_archive("k", cmd, dict(os.environ)) == archive and _runs(tmp_path) == 2
+    # an archive without a size record is not trusted either
+    os.unlink(os.path.join(cache, "k.size"))
+    assert shared_archive("k", cmd, dict(os.environ)) == archive and _runs(tmp_path) == 3
 
 
 def test_concurrent_starters_leave_one_archive(tmp_path, monkeypatch):

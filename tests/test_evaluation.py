@@ -17,16 +17,13 @@ from intelligent_document_processing_on_aws_spark.config import eval_config_rows
 from intelligent_document_processing_on_aws_spark.kernels.compare import (
     calculate_metrics,
     compare_fuzzy,
-    compare_hungarian,
     count_classifications,
-    hungarian_min_cost,
 )
 from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
     normalize_attr_pattern,
 )
 from intelligent_document_processing_on_aws_spark.operators.evaluation import (
     evaluate_attributes,
-    evaluate_lists_hungarian,
     metrics_rollup,
 )
 
@@ -69,122 +66,6 @@ def test_metrics_formulas():
     assert z["precision"] == 0.0 and z["f1_score"] == 0.0
 
 
-def test_hungarian_solver_optimal():
-    # known optimal assignment
-    cost = [[4, 1, 3], [2, 0, 5], [3, 2, 2]]
-    pairs = hungarian_min_cost(cost)
-    total = sum(cost[i][j] for i, j in pairs)
-    assert total == 5  # (0,1)+(1,0)+(2,2) = 1+2+2
-    # brute-force check on random-ish matrices
-    import itertools
-    for seed in range(5):
-        import random
-        rng = random.Random(seed)
-        n = 4
-        c = [[rng.randrange(10) for _ in range(n)] for _ in range(n)]
-        best = min(
-            sum(c[i][p[i]] for i in range(n))
-            for p in itertools.permutations(range(n))
-        )
-        got = sum(c[i][j] for i, j in hungarian_min_cost(c))
-        assert got == best
-
-
-def test_cosine_similarity_reference_semantics():
-    from intelligent_document_processing_on_aws_spark.kernels.compare import (
-        cosine_similarity,
-    )
-
-    assert cosine_similarity([1.0, 0.0], [1.0, 0.0]) == 1.0
-    assert cosine_similarity([1.0, 0.0], [0.0, 1.0]) == 0.0
-    assert cosine_similarity([], [1.0]) == 0.0
-    assert cosine_similarity(None, [1.0]) == 0.0
-    assert cosine_similarity([0.0, 0.0], [1.0, 1.0]) == 0.0  # zero magnitude
-    # mismatched lengths trim to the shorter BEFORE magnitudes
-    assert cosine_similarity([1.0, 0.0, 9.0], [1.0, 0.0]) == 1.0
-
-
-def test_compare_semantic_fallback_and_empty_rules():
-    from intelligent_document_processing_on_aws_spark.kernels.compare import (
-        compare_fuzzy,
-        compare_semantic,
-    )
-
-    assert compare_semantic(None, None, None, None) == (True, 1.0)
-    assert compare_semantic(" ", "", [1.0], [1.0]) == (True, 1.0)
-    assert compare_semantic("a", None, [1.0], None) == (False, 0.0)
-    # missing/empty vector -> FUZZY fallback (comparator.py:458-462)
-    assert compare_semantic("color", "colour", None, [1.0]) == \
-        compare_fuzzy("color", "colour")
-    assert compare_semantic("color", "colour", [], [1.0]) == \
-        compare_fuzzy("color", "colour")
-    # vectors present -> cosine governs
-    ok, score = compare_semantic("x", "y", [1.0, 0.0], [0.5, 0.0], 0.8)
-    assert ok and score == 1.0
-
-
-def test_semantic_spark_matches_kernel_golden(spark, fixtures_dir):
-    """Native zip_with/aggregate cosine == pure-kernel golden, bitwise
-    (1/64-quantized components make the sums exact), and the plan has no
-    row-at-a-time Python."""
-    from intelligent_document_processing_on_aws_spark.entry_queries import (
-        q_eval_semantic,
-    )
-
-    df = q_eval_semantic(spark, "")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    got = {(r.doc_id, r.section_id, r.attr_path):
-           (r.score, r.tn, r.fp, r.fn, r.tp, r.fp1, r.fp2)
-           for r in df.collect()}
-    import pyarrow.parquet as pq_
-
-    gold = pq_.read_table(
-        f"{fixtures_dir}/golden_semantic.parquet"
-    ).to_pylist()
-    assert len(got) == len(gold) > 500
-    for r in gold:
-        assert got[(r["doc_id"], r["section_id"], r["attr_path"])] == (
-            r["score"], r["tn"], r["fp"], r["fn"], r["tp"], r["fp1"], r["fp2"]
-        ), r
-
-
-def test_hungarian_kernel_matches_brute_force_golden():
-    """Every fixture section's (tp, fp, avg) from the O(n^3) kernel equals
-    the fixture builder's exhaustive-enumeration derivation — including
-    the avg float bit pattern (same multiset, same summation order)."""
-    from intelligent_document_processing_on_aws_spark.fixtures.packets_gen import (
-        _brute_force_hungarian,
-        _hungarian_side,
-        gen_packet,
-        perturb_attributes,
-    )
-
-    checked = 0
-    for d in range(60):
-        pk = gen_packet(d)
-        for s in pk["sections"]:
-            actual = perturb_attributes(d, s["section_id"], s["attributes"])
-            evs = _hungarian_side(s["attributes"])
-            avs = _hungarian_side(actual)
-            if not evs and not avs:
-                continue
-            assert compare_hungarian(evs, avs, "FUZZY", 0.8) == \
-                _brute_force_hungarian(evs, avs)
-            checked += 1
-    assert checked >= 20
-
-
-def test_hungarian_compare_semantics():
-    tp, fp, avg = compare_hungarian(["a", "b", "c"], ["c", "a", "b"], "EXACT", 0.8)
-    assert (tp, fp) == (3, 0) and avg == 1.0
-    tp, fp, avg = compare_hungarian(["a", "b"], ["a", "z"], "EXACT", 0.8)
-    assert (tp, fp) == (1, 1)
-    assert compare_hungarian([], [], "EXACT")[2] == 1.0
-    assert compare_hungarian([], ["x"], "EXACT")[:2] == (0, 1)
-    assert compare_hungarian(["x"], [], "EXACT")[:2] == (0, 0)
-
-
 def test_spark_vs_kernel_differential(spark, fixtures_dir):
     """Every aligned pair: Spark native counts == pure-kernel counts."""
     expected = _flat(spark, fixtures_dir, "flat_expected")
@@ -225,35 +106,6 @@ def test_metrics_rollup_consistency(spark, fixtures_dir):
     assert overall.false_discovery_rate == pytest.approx(m["false_discovery_rate"])
     # perturbation design sanity: every branch exercised
     assert all(x > 0 for x in sums)
-
-
-def test_hungarian_spark_vs_kernel(spark, fixtures_dir):
-    expected = _flat(spark, fixtures_dir, "flat_expected")
-    actual = _flat(spark, fixtures_dir, "flat_actual")
-    result = evaluate_lists_hungarian(
-        expected, actual, "Transactions", "Description", "FUZZY", 0.8
-    )
-    rows = {(r.doc_id, r.section_id): r for r in result.collect()}
-    assert rows
-    # recompute a sample purely
-    epd = expected.where(F.col("attr_path").rlike(r"^Transactions\[\d+\]\.Description$")) \
-        .toPandas()
-    apd = actual.where(F.col("attr_path").rlike(r"^Transactions\[\d+\]\.Description$")) \
-        .toPandas()
-    keys = list(rows)[:40]
-    for doc_id, sec in keys:
-        evs = sorted(
-            epd[(epd.doc_id == doc_id) & (epd.section_id == sec)]
-            .itertuples(), key=lambda t: t.attr_path)
-        avs = sorted(
-            apd[(apd.doc_id == doc_id) & (apd.section_id == sec)]
-            .itertuples(), key=lambda t: t.attr_path)
-        tp, fp, avg = compare_hungarian(
-            [t.value for t in evs], [t.value for t in avs], "FUZZY", 0.8
-        )
-        r = rows[(doc_id, sec)]
-        assert (r.tp, r.fp) == (tp, fp), (doc_id, sec)
-        assert r.avg_score == pytest.approx(avg)
 
 
 def test_flatten_confidence_scores_kernel():
@@ -309,52 +161,3 @@ def test_flatten_confidence_payloads_matches_golden(spark, fixtures_dir):
     want = {(r.doc_id, r.section_id, r.attr_path): (r.confidence, r.confidence_threshold)
             for r in golden.collect()}
     assert got == want
-
-
-def test_duplicate_embedding_rows_do_not_fanout(spark, fixtures_dir):
-    """The (text -> vector) lookup is deduplicated before joining on the
-    value columns: a duplicated text row must not multiply aligned rows
-    or double-count tp/fp/fn (ADVICE r3)."""
-    from pyspark.sql import functions as F
-
-    expected = _flat(spark, fixtures_dir, "flat_expected")
-    actual = _flat(spark, fixtures_dir, "flat_actual")
-    emb = spark.read.parquet(f"{fixtures_dir}/value_embeddings.parquet")
-    doubled = emb.unionAll(emb.limit(50))
-    base = evaluate_attributes(expected, actual, _eval_config_df(spark), emb)
-    dup = evaluate_attributes(expected, actual, _eval_config_df(spark), doubled)
-    key = ["doc_id", "section_id", "attr_path"]
-    cols = key + ["score", "tn", "fp", "fn", "tp", "fp1", "fp2"]
-    b = {tuple(r[c] for c in key): tuple(r[c] for c in cols[3:])
-         for r in base.select(cols).collect()}
-    d = {tuple(r[c] for c in key): tuple(r[c] for c in cols[3:])
-         for r in dup.select(cols).collect()}
-    assert b == d and len(b) > 500
-
-
-def test_semantic_without_embeddings_scores_as_fuzzy(spark, fixtures_dir):
-    """With no vector table, SEMANTIC-configured paths take the FUZZY
-    fallback on every row (the reference's failed-embedding path), and
-    the plan carries no vector columns."""
-    expected = _flat(spark, fixtures_dir, "flat_expected")
-    actual = _flat(spark, fixtures_dir, "flat_actual")
-
-    def evaluated(method):
-        cfg = spark.createDataFrame(
-            [{**r, "method": method} for r in eval_config_rows()])
-        return evaluate_attributes(expected, actual, cfg)
-
-    semantic = evaluated("SEMANTIC")
-    assert "e_vec" not in semantic._jdf.queryExecution().analyzed().toString()
-    key = ["doc_id", "section_id", "attr_path"]
-    cols = ["score", "tp", "fp", "fn", "tn", "fp1", "fp2"]
-
-    def by_key(df):
-        return {tuple(r[c] for c in key): tuple(r[c] for c in cols)
-                for r in df.select(key + cols).collect()}
-
-    sem, fuzzy = by_key(semantic), by_key(evaluated("FUZZY"))
-    assert sem == fuzzy and len(sem) > 3000
-    # the fixtures reach partial scores and every count branch
-    assert any(0 < v[0] < 1 for v in sem.values())
-    assert all(sum(v[i] for v in sem.values()) > 0 for i in range(1, 7))

@@ -6,9 +6,10 @@ the package — including the function-level lazy ones that only run on
 some branch — to an existing module and to a name that module defines at
 top level. A lazy import of a deleted module or helper then fails here,
 not on the first production run that takes that branch. The same walk,
-from the entry points, finds the package modules nothing runs, and a
-walk over the names the program uses finds the top-level definitions
-nothing names.
+from the entry points, finds the package modules nothing runs; from the
+jobs alone, it finds those that only the query registry runs. A walk
+over the names the program uses finds the top-level definitions nothing
+names.
 """
 
 from __future__ import annotations
@@ -126,14 +127,17 @@ def test_every_package_import_resolves():
     assert not problems, "\n".join(problems)
 
 
-def _reached_modules(trees: dict[str, ast.Module],
-                     modules: dict[str, str]) -> set[str]:
+def _reached_modules(trees: dict[str, ast.Module], modules: dict[str, str],
+                     entry_points: set[str] | None = None) -> set[str]:
     """Package modules that the entry points reach through package
-    imports, lazy ones included: the root ``*.py``, ``jobs/``,
-    ``scripts/`` and the fixture builder. Importing a module also runs
-    its parent packages."""
+    imports, lazy ones included: the fixture builder and, by default, the
+    root ``*.py``, ``jobs/`` and ``scripts/`` (else the given paths,
+    relative to the repo root). Importing a module also runs its parent
+    packages."""
     reached: set[str] = set()
-    todo = [p for p in trees if not _module_name(p).startswith(PKG)]
+    todo = [p for p in trees if not _module_name(p).startswith(PKG)
+            and (entry_points is None
+                 or os.path.relpath(p, REPO_ROOT) in entry_points)]
 
     def reach(module: str) -> None:
         parts = module.split(".")
@@ -161,12 +165,52 @@ def test_every_module_is_reached_or_listed():
     assert not unreached, unreached
 
 
+# Package modules that no job reaches, only the driver-contract registry
+# (``__spark_entry__.py``, ``entry_queries``, ``scripts/check_oracles.py``)
+# or the tests, each with the reason it stays for now. The list may only
+# shrink: a module here that a job reaches, or that is deleted, fails the
+# test too.
+REGISTRY_ONLY_MODULES = {
+    "entry_queries":
+        "the driver-contract query registry itself",
+    "fixtures.media_gen":
+        "image payloads for the image_meta and image_resize queries",
+    "kernels.image_meta":
+        "header probe behind the image_meta query (direction 7)",
+    "kernels.image_ops":
+        "resize math behind the image_resize query (direction 7)",
+    "kernels.png_codec":
+        "the last pixel decoder, image_resize only (direction 7)",
+    "operators.multimodal":
+        "image probe and resize operators, registry only (direction 7)",
+    "operators.criteria":
+        "criteria validation no job configures (direction 11)",
+    "operators.metering":
+        "metering rollup no job feeds (direction 5)",
+}
+
+
+def test_every_module_is_reached_from_a_job_or_listed():
+    """The module walk from the jobs alone: ``jobs/*.py``,
+    ``scripts/package_pyfiles.py`` and the fixture builder. A module
+    that only the query registry or the tests reach fails unless
+    ``REGISTRY_ONLY_MODULES`` lists it; delete it or give it a job path."""
+    trees, modules = _parse_program()
+    jobs = {os.path.join("jobs", n) for n in os.listdir(os.path.join(REPO_ROOT, "jobs"))
+            if n.endswith(".py")}
+    reached = _reached_modules(
+        trees, modules, jobs | {os.path.join("scripts", "package_pyfiles.py")})
+    assert {f"{PKG}.operators.classify", f"{PKG}.operators.extraction"} <= reached
+    unreached = {m[len(PKG) + 1:] for m in modules if m not in reached}
+    assert sorted(unreached - set(REGISTRY_ONLY_MODULES)) == [], "reached by no job"
+    assert sorted(set(REGISTRY_ONLY_MODULES) - unreached) == [], \
+        "reached by a job or deleted now: drop it from REGISTRY_ONLY_MODULES"
+
+
 # Top-level definitions that no program code names today, each with the
 # reason it stays for now. The list may only shrink: a name here that
 # program code reaches, or that is deleted, fails the test too.
 UNNAMED_DEFINITIONS = {
-    "config.resolve_classes":
-        "merged class config; the jobs read DOC_CLASSES directly",
     "kernels.compare.count_classifications":
         "pure twin of evaluate_attributes' counts (direction 4)",
     "kernels.compare.calculate_metrics":

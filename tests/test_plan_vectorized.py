@@ -87,25 +87,14 @@ def test_filter_pushdown_to_scan(spark, fixtures_dir):
 
 def test_round2_operator_plans_no_python(spark, fixtures_dir):
     """Round-2 operators keep the zero-per-row-Python contract: the
-    evaluation report is pure Catalyst string expressions, holistic
-    sectioning is explode+join+agg, confidence flattening is Arrow-batched
-    MapInPandas — no BatchEvalPython anywhere."""
-    import os
-
+    evaluation report is pure Catalyst string expressions, confidence
+    flattening is Arrow-batched MapInPandas — no BatchEvalPython anywhere."""
     from intelligent_document_processing_on_aws_spark.config import eval_config_rows
-    from intelligent_document_processing_on_aws_spark.operators.classify import (
-        holistic_sections,
-    )
     from intelligent_document_processing_on_aws_spark.operators.evaluation import (
         evaluate_attributes,
         evaluation_report,
         flatten_confidence_payloads,
     )
-
-    pages = spark.read.parquet(os.path.join(fixtures_dir, "packet_pages.parquet"))
-    segs = spark.read.parquet(os.path.join(fixtures_dir, "packet_segments.parquet"))
-    plan = holistic_sections(pages, segs)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan  # fully native
 
     cfg = spark.createDataFrame(eval_config_rows())
     counted = evaluate_attributes(
@@ -123,34 +112,6 @@ def test_round2_operator_plans_no_python(spark, fixtures_dir):
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan
 
 
-def test_granular_assessment_plan_native(spark, fixtures_dir):
-    """granular_assess is pure Catalyst: regexp task-id derivation + one
-    broadcast dim join, zero Python stages of any kind."""
-    from intelligent_document_processing_on_aws_spark.config import DOC_CLASSES
-    from intelligent_document_processing_on_aws_spark.operators.assessment import (
-        granular_assess,
-        granular_task_dim,
-    )
-
-    flat = spark.read.parquet(os.path.join(fixtures_dir, "flat_actual.parquet"))
-    secs = spark.read.parquet(os.path.join(fixtures_dir, "golden_sections.parquet"))
-    cfg = spark.createDataFrame(eval_config_rows())
-    dim = spark.createDataFrame(granular_task_dim(DOC_CLASSES))
-    df = granular_assess(flat, secs, cfg, dim)
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
-    # AQE prints isFinalPlan=false before execution; execute THIS query
-    # (collect, not count — count builds a new QueryExecution), then
-    # confirm the final plan ran inside codegen spans (the `*(n)` stage
-    # markers are AQE's WholeStageCodegen notation)
-    df.collect()
-    final = _plan(df)
-    assert "isFinalPlan=true" in final
-    assert "*(" in final
-
-
 def test_ocr_table_markdown_plan_vectorized(spark):
     """The blocks->markdown query is one Arrow-batched MapInPandas over the
     scan — no shuffle, no row-at-a-time Python."""
@@ -163,28 +124,6 @@ def test_ocr_table_markdown_plan_vectorized(spark):
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
     assert "Exchange" not in plan  # row-parallel: no shuffle at all
-
-
-def test_round5_semantic_lookup_hashed_join_key(spark):
-    """The SEMANTIC embeddings lookup joins on xxhash64(text) — an 8-byte
-    bigint shuffle key — with the raw-string equality kept only as a
-    residual predicate, so a long-string key is never shuffled."""
-    expected = spark.createDataFrame(
-        [(1, "s", "p", "c", "hello world")],
-        "doc_id long, section_id string, attr_path string, "
-        "classification string, value string")
-    actual = spark.createDataFrame(
-        [(1, "s", "p", "c", "hello word")],
-        "doc_id long, section_id string, attr_path string, "
-        "classification string, value string")
-    cfg = spark.createDataFrame(eval_config_rows())
-    emb = spark.createDataFrame(
-        [("hello world", [0.1] * 4), ("hello word", [0.1] * 4)],
-        "text string, embedding array<double>")
-    df = evaluate_attributes(expected, actual, cfg, embeddings=emb)
-    plan = _plan(df)
-    assert "xxhash64" in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_warc_ingestion_plan_map_only(spark):
@@ -201,4 +140,3 @@ def test_warc_ingestion_plan_map_only(spark):
     assert "BatchEvalPython" not in plan
     assert "Exchange" not in plan
     assert plan.count("MapInPandas") == 1
-

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import itertools
 import random
 
 from hypothesis import given, settings
@@ -12,7 +11,6 @@ from intelligent_document_processing_on_aws_spark.fixtures.packets_gen import _u
 from intelligent_document_processing_on_aws_spark.kernels.compare import (
     compare_fuzzy,
     fuzz_score,
-    hungarian_min_cost,
     levenshtein,
 )
 from intelligent_document_processing_on_aws_spark.kernels.pagination import (
@@ -43,30 +41,6 @@ def test_fuzzy_score_bounds(a, b):
     assert 0.0 <= s <= 1.0
     matched, score = compare_fuzzy(a, b, 0.8)
     assert matched == (score >= 0.8) or (not a.strip() and not b.strip())
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(2, 5), st.integers(0, 10**6))
-def test_hungarian_vs_bruteforce(n, seed):
-    rng = random.Random(seed)
-    cost = [[rng.uniform(0, 1) for _ in range(n)] for _ in range(n)]
-    best = min(
-        sum(cost[i][p[i]] for i in range(n))
-        for p in itertools.permutations(range(n))
-    )
-    got = sum(cost[i][j] for i, j in hungarian_min_cost(cost))
-    assert abs(got - best) < 1e-9
-
-
-@settings(max_examples=25, deadline=None)
-@given(st.integers(2, 4), st.integers(2, 5), st.integers(0, 10**6))
-def test_hungarian_rectangular(rows, cols, seed):
-    rng = random.Random(seed)
-    cost = [[rng.uniform(0, 1) for _ in range(cols)] for _ in range(rows)]
-    pairs = hungarian_min_cost(cost)
-    assert len(pairs) == min(rows, cols)
-    assert len({i for i, _ in pairs}) == len(pairs)
-    assert len({j for _, j in pairs}) == len(pairs)
 
 
 @settings(max_examples=40, deadline=None)

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import functions as F
@@ -11,7 +10,6 @@ from intelligent_document_processing_on_aws_spark.operators.classify import (
     classify_and_section,
     classify_pages,
     group_sections,
-    majority_vote_class,
 )
 
 
@@ -103,21 +101,6 @@ def test_default_class(spark):
     assert out[0].classification == "webpage"
 
 
-def test_majority_vote(spark):
-    rows = [
-        (2, 1, "u", "ACCOUNT NO: 1"),
-        (2, 2, "u", "INVOICE NO: 2"),
-        (2, 3, "u", "INVOICE NO: 2"),
-        (2, 4, "u", "plain"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, page_num int, url string, text string")
-    voted = majority_vote_class(classify_pages(df)).collect()
-    assert voted[0].voted_class == "invoice" and voted[0].n_pages == 2
-    # limit to first page -> bank_statement wins
-    voted1 = majority_vote_class(classify_pages(df), limit_pages=1).collect()
-    assert voted1[0].voted_class == "bank_statement"
-
-
 def test_page_order_is_numeric(spark):
     """page 10 must sort after page 9 (reference sorts numerically,
     classification/service.py:1771-1787)."""
@@ -145,86 +128,3 @@ def _pages_df(spark, rows):
     return spark.createDataFrame(
         rows, "doc_id long, page_num long, url string, text string"
     )
-
-
-def test_holistic_overrides_per_page_boundaries(spark):
-    """Segment ranges win over per-page classification: a page whose own
-    content regex says 'invoice' lands in the bank_statement section when
-    the packet-level segmenter drew the boundary there."""
-    from intelligent_document_processing_on_aws_spark.operators.classify import (
-        holistic_sections,
-    )
-
-    pages = _pages_df(spark, [
-        (1, 1, "u", "ACCOUNT NO: 123 intro"),
-        (1, 2, "u", "INVOICE NO: 9 ambiguous continuation"),  # page-level: invoice
-        (1, 3, "u", "INVOICE NO: 9 totals"),
-    ])
-    per_page = {r.page_num: r.classification
-                for r in classify_pages(pages).collect()}
-    assert per_page[2] == "invoice"  # per-page path disagrees...
-    segs = _seg_df(spark, [
-        (1, 0, 1, 2, "bank_statement"),  # ...but the segmenter spans 1-2
-        (1, 1, 3, 3, "invoice"),
-    ])
-    out = {r.section_id: r for r in holistic_sections(pages, segs).collect()}
-    assert out["1"].classification == "bank_statement"
-    assert list(out["1"].page_nums) == [1, 2]
-    assert out["1"].section_text.endswith("ambiguous continuation")
-    assert list(out["2"].page_nums) == [3]
-
-
-def test_holistic_skips_invalid_but_consumes_ids(spark):
-    """Missing-field and pageless segments are dropped, yet their ordinal
-    still consumes a section_id (the reference enumerates segments before
-    validating each one)."""
-    from intelligent_document_processing_on_aws_spark.operators.classify import (
-        holistic_sections,
-    )
-
-    pages = _pages_df(spark, [(1, 1, "u", "p1"), (1, 2, "u", "p2")])
-    segs = _seg_df(spark, [
-        (1, 0, 1, 1, "invoice"),
-        (1, 1, 1, 1, None),        # missing type -> skipped, id consumed
-        (1, 2, 2, 5, "webpage"),   # overshoot -> truncated to page 2
-        (1, 3, 9, 9, "invoice"),   # no valid pages -> skipped
-    ])
-    out = {r.section_id: r for r in holistic_sections(pages, segs).collect()}
-    assert set(out) == {"1", "3"}  # id "2" consumed by the invalid segment
-    assert list(out["3"].page_nums) == [2]
-    assert out["3"].section_text == "p2"
-
-
-def test_holistic_matches_fixture_golden_valid_segments(spark, fixtures_dir):
-    """On fixture packets, holistic sections reproduce the golden sections'
-    page groupings (ids may shift where hardening segments consume them)."""
-    from intelligent_document_processing_on_aws_spark.operators.classify import (
-        holistic_sections,
-    )
-
-    pages = _packet_pages(spark, fixtures_dir)
-    segs = spark.read.parquet(os.path.join(fixtures_dir, "packet_segments.parquet"))
-    golden = _golden_sections(spark, fixtures_dir)
-    got = {(r.doc_id, r.classification, json.dumps(list(r.page_nums)))
-           for r in holistic_sections(pages, segs).collect()}
-    want = {(r.doc_id, r.classification, json.dumps(json.loads(r.page_nums_json)))
-            for r in golden.collect()}
-    assert got == want
-
-
-def test_holistic_inverted_and_huge_ranges_guarded(spark):
-    """start > end is invalid (reference range() yields nothing — Spark
-    sequence() would count DOWN without the guard); absurd ranges are
-    capped instead of materializing billions of rows."""
-    from intelligent_document_processing_on_aws_spark.operators.classify import (
-        holistic_sections,
-    )
-
-    pages = _pages_df(spark, [(1, 1, "u", "p1"), (1, 2, "u", "p2")])
-    segs = _seg_df(spark, [
-        (1, 0, 2, 1, "invoice"),           # inverted -> dropped
-        (1, 1, 1, 2_000_000_000, "webpage"),  # huge -> capped, join trims
-    ])
-    out = {r.section_id: r for r in holistic_sections(pages, segs).collect()}
-    assert set(out) == {"2"}
-    assert list(out["2"].page_nums) == [1, 2]

@@ -1,7 +1,7 @@
-"""Image-header metadata, image preprocessing, list parsing and DOCX runs.
+"""Image-header metadata, image preprocessing and DOCX runs.
 
 Reference roles: image/__init__.py size probing (header fields replace
-the PIL read), resize and binarization; comparator.py list parsing.
+the PIL read), resize and binarization.
 """
 
 from __future__ import annotations
@@ -17,34 +17,6 @@ from intelligent_document_processing_on_aws_spark.kernels.image_meta import (
     jpeg_size,
     png_size,
 )
-from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-    convert_to_list,
-)
-
-# ---------------------------------------------------------------------------
-# convert_to_list reference parity (comparator.py:196-223)
-# ---------------------------------------------------------------------------
-
-
-def test_convert_to_list_reference_parity():
-    assert convert_to_list(None) == []
-    assert convert_to_list([1, "a"]) == ["1", "a"]  # items stringified
-    assert convert_to_list("[1, 'b']") == ["1", "b"]
-    assert convert_to_list("  ") == ["  "]  # whitespace-only: 1x1 path
-    assert convert_to_list("") == [""]
-    assert convert_to_list("plain") == ["plain"]
-    assert convert_to_list(" [1, 2] ") == [" [1, 2] "]  # no strip before [ check
-    assert convert_to_list(42) == ["42"]
-
-
-def test_compare_hungarian_whitespace_only_is_1x1():
-    from intelligent_document_processing_on_aws_spark.kernels.compare import (
-        compare_hungarian,
-    )
-
-    tp, fp, avg = compare_hungarian("  ", "  ", "EXACT", 0.8)
-    assert (tp, fp, avg) == (1, 0, 1.0)
-
 
 # ---------------------------------------------------------------------------
 # image header metadata
@@ -107,23 +79,20 @@ def test_probe_image_meta_operator(spark):
 
     rows = [
         (1, "image", _png(99, 44), None),
-        (2, "image", _jpeg(320, 240), {"width": 1, "height": 1,
-                                       "sample_rate": None, "n_frames": None}),
-        (3, "image", b"corrupt", {"width": 7, "height": 8,
-                                  "sample_rate": None, "n_frames": None}),
-        (4, "video", _png(5, 5), {"width": None, "height": None,
-                                  "sample_rate": 30, "n_frames": 120}),
+        (2, "image", _jpeg(320, 240), {"width": 1, "height": 1}),
+        (3, "image", b"corrupt", {"width": 7, "height": 8}),
+        (4, "video", _png(5, 5), {"width": 3, "height": 2}),
     ]
     df = spark.createDataFrame(
         rows,
         "item_id long, modality string, payload binary, "
-        "meta struct<width:int, height:int, sample_rate:int, n_frames:int>",
+        "meta struct<width:int, height:int>",
     )
     out = {r.item_id: r.meta for r in probe_image_meta(df).collect()}
     assert (out[1].width, out[1].height) == (99, 44)
     assert (out[2].width, out[2].height) == (320, 240)
     assert (out[3].width, out[3].height) == (7, 8)  # unparseable: unchanged
-    assert (out[4].sample_rate, out[4].n_frames) == (30, 120)  # video untouched
+    assert (out[4].width, out[4].height) == (3, 2)  # video untouched
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from intelligent_document_processing_on_aws_spark.config import eval_config_rows
 from intelligent_document_processing_on_aws_spark.kernels.csv_convert import (
@@ -199,30 +198,6 @@ def test_summary_operator_matches_golden(spark, fixtures_dir):
     assert got == golden
 
 
-def test_bbox_geometry_conversion(spark):
-    """granular_service.py:1238-1310 parity: 0-1000 scale -> 0-1, min/max
-    reorder, malformed bbox or missing page -> NULL geometry."""
-    from pyspark.sql import functions as F
-
-    from intelligent_document_processing_on_aws_spark.operators.assessment import (
-        bbox_geometry,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [700, 900, 100, 200], 3),     # unordered: x2,y2 first
-         (2, [100, 200, 700], 1),          # malformed: 3 coords
-         (3, [0, 0, 1000, 1000], None)],   # missing page
-        "id long, bbox array<int>, page int",
-    )
-    out = {r.id: r.g for r in df.select(
-        "id", bbox_geometry(F.col("bbox"), F.col("page")).alias("g")).collect()}
-    g = out[1]
-    assert g.page == 3
-    assert (g.boundingBox.left, g.boundingBox.top) == (0.1, 0.2)
-    assert (g.boundingBox.width, g.boundingBox.height) == (0.6, 0.7)
-    assert out[2] is None and out[3] is None
-
-
 def test_remove_title_leading_newline_quirk():
     """Faithful reference quirk (markdown_formatter.py:176-184): heading
     match tests content.lstrip() but the split runs on the ORIGINAL
@@ -236,83 +211,3 @@ def test_remove_title_leading_newline_quirk():
     # first pass eats the blank line, generic pass eats '## Invoice',
     # '## Other' survives — byte-identical to the reference's behavior
     assert out == "## Other\nbody"
-
-
-def test_granular_task_dim_batching():
-    """Task decomposition mirrors granular_service.py:525-664: simples batch
-    by 3 in config order, the task counter continues into group tasks."""
-    from intelligent_document_processing_on_aws_spark.config import DOC_CLASSES
-    from intelligent_document_processing_on_aws_spark.operators.assessment import (
-        granular_task_dim,
-    )
-
-    dim = {(r["classification"], r["attr_name"]): (r["task_id"], r["task_type"])
-           for r in granular_task_dim(DOC_CLASSES)}
-    # bank_statement: 2 simples -> one batch (id 0); group continues as 1
-    assert dim[("bank_statement", "Account Number")] == ("simple_batch_0", "simple_batch")
-    assert dim[("bank_statement", "Statement Period")] == ("simple_batch_0", "simple_batch")
-    assert dim[("bank_statement", "Account Holder Address")] == ("group_1", "group")
-    # list attrs get no dim row (per-item ids are data-dependent)
-    assert ("bank_statement", "Transactions") not in dim
-    # invoice: 4 simples -> batch 0 (first 3) + batch 1 (vendor_name)
-    assert dim[("invoice", "invoice_number")] == ("simple_batch_0", "simple_batch")
-    assert dim[("invoice", "date")] == ("simple_batch_0", "simple_batch")
-    assert dim[("invoice", "vendor_name")] == ("simple_batch_1", "simple_batch")
-
-
-def test_granular_task_dim_batch_size_and_counter():
-    """With batch size 1 each simple is its own task and groups continue the
-    counter (reference task_counter semantics)."""
-    from intelligent_document_processing_on_aws_spark.operators.assessment import (
-        granular_task_dim,
-    )
-
-    classes = {"c": {"attributes": [
-        {"name": "a", "type": "simple"},
-        {"name": "b", "type": "simple"},
-        {"name": "g", "type": "group", "group": []},
-        {"name": "h", "type": "group", "group": []},
-    ]}}
-    dim = {r["attr_name"]: r["task_id"] for r in granular_task_dim(classes, 1)}
-    assert dim == {"a": "simple_batch_0", "b": "simple_batch_1",
-                   "g": "group_2", "h": "group_3"}
-
-
-def test_granular_assess_spark(spark):
-    """granular_assess tags every attribute with its task; confidences equal
-    the standard assess_attributes output (granular_service aggregation
-    shape-compat, :1077-1199)."""
-    from intelligent_document_processing_on_aws_spark.config import DOC_CLASSES
-    from intelligent_document_processing_on_aws_spark.operators.assessment import (
-        granular_assess,
-        granular_task_dim,
-    )
-
-    flat = spark.createDataFrame(
-        [
-            (1, "1", "bank_statement", "Account Number", "AC-9"),
-            (1, "1", "bank_statement", "Statement Period", "Jan 2024"),
-            (1, "1", "bank_statement", "Account Holder Address.City", "Oslo"),
-            (1, "1", "bank_statement", "Transactions[0].Date", "01-02"),
-            (1, "1", "bank_statement", "Transactions[11].Amount", "4.50"),
-        ],
-        "doc_id long, section_id string, classification string, attr_path string, value string",
-    )
-    secs = spark.createDataFrame(
-        [(1, "1", "ACCOUNT NO: AC-9\nCITY: Oslo\nTXN 01-02 | coffee | 4.50")],
-        "doc_id long, section_id string, section_text string",
-    )
-    cfg = spark.createDataFrame(eval_config_rows())
-    dim = spark.createDataFrame(granular_task_dim(DOC_CLASSES))
-    out = {r.attr_path: r for r in granular_assess(flat, secs, cfg, dim).collect()}
-    assert out["Account Number"].task_id == "simple_batch_0"
-    assert out["Account Number"].task_type == "simple_batch"
-    assert out["Account Holder Address.City"].task_id == "group_1"
-    assert out["Account Holder Address.City"].task_type == "group"
-    assert out["Transactions[0].Date"].task_id == "list_Transactions_item_0"
-    assert out["Transactions[11].Amount"].task_id == "list_Transactions_item_11"
-    assert out["Transactions[0].Date"].task_type == "list_item"
-    # confidence identical to the non-granular path
-    base = {r.attr_path: r.confidence
-            for r in assess_attributes(flat, secs, cfg).collect()}
-    assert {p: r.confidence for p, r in out.items()} == base
