@@ -193,7 +193,10 @@ def detect_content_type_and_text(
     text-family types so the extraction dispatch never decodes twice."""
     if content.startswith(b"%SPDF") or content.startswith(b"%PDF"):
         return PDF, None
-    if content.startswith(b"PK"):
+    if content[:2] == b"PK" and content[2:3] < b" ":
+        # ZIP record signatures are "PK" plus two control bytes (\x03\x04
+        # local header, \x05\x06 empty archive); a text payload that only
+        # begins with "PK" (a CSV header cell "PK,...") stays on the text path
         head = content[:4096]
         if b"xl/" in head:
             return XLSX, None
