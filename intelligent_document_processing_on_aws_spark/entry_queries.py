@@ -73,77 +73,6 @@ def _wrap(fn):
     return wrapped
 
 
-_CRITERIA = (  # (criteria_type, question_id, pass_pattern, fail_pattern)
-    ("content", "q_spark_usage", "spark", "slow"),
-    ("content", "q_customer_query", "customer query", None),
-    ("compliance", "q_forbidden_word", "zzz_absent", "the "),
-)
-
-
-def q_criteria_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Criteria validation (reference criteria_validation/service.py):
-    overlap-chunked text judged per question, per-chunk decisions summarized
-    to Pass / Fail / Information Not Found. Small chunk params so the
-    fixture corpus exercises multi-chunk summarization."""
-    from .operators.criteria import validate_criteria
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    crit = spark.createDataFrame(
-        list(_CRITERIA),
-        "criteria_type string, question_id string, "
-        "pass_pattern string, fail_pattern string",
-    )
-    return validate_criteria(docs, crit, max_chunk_size=25, token_size=4,
-                             overlap_percentage=10)
-
-
-def _sql_criteria_validation() -> str:
-    crit_values = ", ".join(
-        f"('{t}', '{q}', '{p}', "
-        + (f"'{f}'" if f is not None else "CAST(NULL AS VARCHAR)")
-        + ")"
-        for t, q, p, f in _CRITERIA
-    )
-    return f"""
-        WITH crit(criteria_type, question_id, pass_pattern, fail_pattern)
-            AS (VALUES {crit_values}),
-        d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-        ks AS (
-            SELECT doc_id, text, n,
-                   CASE WHEN n // 4 <= 25 THEN 0
-                        ELSE GREATEST(CAST(ceil((n - 100) / 90.0) AS INT), 0)
-                   END AS kmax
-            FROM d
-        ),
-        ch AS (
-            -- single-chunk docs keep the FULL text (the token estimate can
-            -- admit up to token_size-1 chars beyond the 100-char window)
-            SELECT doc_id,
-                   CASE WHEN n // 4 <= 25 THEN text
-                        ELSE substr(text, k * 90 + 1, 100) END AS chunk
-            FROM ks, LATERAL (SELECT unnest(range(0, kmax + 1)) AS k)
-        ),
-        dec AS (
-            SELECT ch.doc_id, crit.criteria_type, crit.question_id,
-                   bool_or(regexp_matches(chunk, pass_pattern)) AS any_pass,
-                   bool_or(CASE WHEN fail_pattern IS NULL THEN FALSE
-                                ELSE regexp_matches(chunk, fail_pattern)
-                           END) AS any_fail,
-                   CAST(count(*) AS BIGINT) AS n_chunks
-            FROM ch CROSS JOIN crit
-            GROUP BY 1, 2, 3
-        )
-        SELECT doc_id, criteria_type, question_id,
-               CASE WHEN any_pass THEN 'Pass'
-                    WHEN any_fail THEN 'Fail'
-                    ELSE 'Information Not Found' END AS decision,
-               n_chunks
-        FROM dec
-    """
-
-
 def q_document_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tracking-service current-status read (reference docs_service +
     models.py Status enum): deterministic transition history per document
@@ -1322,7 +1251,6 @@ _RAW_QUERIES = {
     "eval_metrics": q_eval_metrics,
     "eval_report": q_eval_report,
     "flatten_confidence": q_flatten_confidence,
-    "criteria_validation": q_criteria_validation,
     "document_status": q_document_status,
     "events_metering": q_events_metering,
     "metering_costs": q_metering_costs,
@@ -1355,7 +1283,6 @@ def oracles() -> dict[str, str]:
         "eval_metrics": _sql_eval_metrics(),
         "eval_report": _sql_eval_report(),
         "flatten_confidence": _sql_flatten_confidence(),
-        "criteria_validation": _sql_criteria_validation(),
         "document_status": _sql_document_status(),
         "events_metering": _sql_events_metering(),
         "metering_costs": _sql_metering_costs(),

@@ -10,7 +10,6 @@ golden tests share one implementation:
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Any
 
@@ -107,43 +106,3 @@ def normalize_attr_pattern(path: str) -> str:
     """`Transactions[3].Amount` -> `Transactions[].Amount` for config lookup
     (evaluation/service.py:546-659 list-pattern matching analog)."""
     return _INDEX_RE.sub("[]", path)
-
-
-def convert_value_to_string(value: Any) -> str | None:
-    """Reporting-layer robust stringification (reference
-    reporting/save_reporting_data.py:163-189 ``_convert_value_to_string``):
-    None passes through, bytes decode utf-8 with a hex fallback, lists and
-    dicts serialize as JSON, datetimes as isoformat, everything else str()."""
-    import datetime as _dt
-
-    if value is None:
-        return None
-    if isinstance(value, bytes):
-        try:
-            return value.decode("utf-8")
-        except UnicodeDecodeError:
-            return value.hex()
-    if isinstance(value, (list, dict)):
-        return json.dumps(value)
-    if isinstance(value, _dt.datetime):
-        return value.isoformat()
-    return str(value)
-
-
-def flatten_for_reporting(data: dict, prefix: str = "") -> dict:
-    """Reporting-layer flatten (reference save_reporting_data.py:191-221
-    ``_flatten_json_data``): nested dicts dot-join, lists become JSON
-    strings (None when empty), every scalar stringified via
-    :func:`convert_value_to_string`. Distinct from the evaluation flatten
-    (kernels attr-path flatten), which EXPLODES lists by index — the
-    reporting tables keep lists opaque for Athena type stability."""
-    flattened: dict = {}
-    for key, value in data.items():
-        new_key = f"{prefix}.{key}" if prefix else key
-        if isinstance(value, dict) and value:
-            flattened.update(flatten_for_reporting(value, new_key))
-        elif isinstance(value, list):
-            flattened[new_key] = json.dumps(value) if value else None
-        else:
-            flattened[new_key] = convert_value_to_string(value)
-    return flattened

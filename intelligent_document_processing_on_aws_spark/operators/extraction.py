@@ -1,10 +1,10 @@
 """Spark extraction stage: pages -> main-content rows.
 
-The narrow hot path of the engine: one Arrow-batched ``mapInPandas`` over
+The narrow hot path of the engine: one Arrow-batched ``mapInArrow`` over
 the `pages` table calling the pure per-page kernel
-(kernels/extract.extract_page). No shuffle is introduced by the transform
-itself; optional salted repartitioning by url-hash handles giant-host input
-skew before the map (SURVEY.md §4 "Skew handling").
+(kernels/extract.extract_page). The one shuffle is the salted
+repartitioning by url hash before the map, which handles giant-host input
+skew (SURVEY.md §4 "Skew handling").
 
 Replaces the reference's OCR/classification/extraction Lambda fan-out
 (lib/idp_common_pkg/idp_common/ocr/service.py:316-491) with a single
@@ -93,15 +93,16 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
 def extract_pages(pages: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> extraction result rows.
 
-    salt_partitions: when set, hash-repartition by xxhash64(url) into P
-    partitions first — spreads a giant host's pages evenly (url-hash salt),
-    the skew strategy SURVEY.md §4 calls out for 100 TB inputs. The salt
-    is the full 64-bit url hash: pre-reducing it mod P would leave only P
+    The pages are hash-repartitioned by xxhash64(url) into P partitions
+    first — spreads a giant host's pages evenly (url-hash salt), the skew
+    strategy SURVEY.md §4 calls out for 100 TB inputs. P is
+    salt_partitions, or else the session's spark.sql.shuffle.partitions
+    (a spark-submit --conf value, or the local task slots). The salt is
+    the full 64-bit url hash: pre-reducing it mod P would leave only P
     distinct keys for the partitioner's own hash to place, so some
     partitions collide and others stay empty.
     """
-    cols = ["url", "warc_ts", "html", "lang"]
-    src = pages.select(*cols)
-    if salt_partitions:
-        src = src.repartition(salt_partitions, F.xxhash64("url"))
-    return src.mapInArrow(_extract_batches, RESULT_SCHEMA)
+    n = salt_partitions or int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pages.select("url", "warc_ts", "html", "lang") \
+        .repartition(n, F.xxhash64("url")) \
+        .mapInArrow(_extract_batches, RESULT_SCHEMA)

@@ -71,7 +71,7 @@ def run_with_resume_snapshots(
     pages: DataFrame,
     output_table: str,
     lineage_table: str,
-    salt_partitions: int,
+    salt_partitions: int | None = None,
 ) -> dict:
     """Extract only not-yet-committed pages in one Python pass; commit the
     output, then its per-file lineage, as atomic snapshots
@@ -79,12 +79,13 @@ def run_with_resume_snapshots(
     staging, so the next invocation resumes from the last COMMITTED
     snapshot, never re-reading partial files and never duplicating a url.
 
-    salt_partitions is the url-hash salt's partition count (see
-    :func:`extract_pages`). Into an empty output table every page runs,
-    uncounted: ``processed`` is the committed snapshot's record count
-    (one output row per input page, error rows included). Into a
-    committed table, the input and the anti-join are counted first, and
-    a run with nothing left commits nothing. The lineage rows come from
+    salt_partitions is the url-hash salt's partition count, by default
+    the session's shuffle partitions (see :func:`extract_pages`). Into an
+    empty output table every page runs, uncounted: ``processed`` is the
+    committed snapshot's record count (one output row per input page,
+    error rows included). Into a committed table, the input and the
+    anti-join are counted first, and a run with nothing left commits
+    nothing. The lineage rows come from
     the output snapshot's manifest (parquet footer stats) and the driver
     writes them with pyarrow, so they cost no Spark job.
 

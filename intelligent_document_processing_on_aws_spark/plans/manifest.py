@@ -38,8 +38,8 @@ def _validate_and_normalize_row(row: dict, row_num: int) -> dict:
             f"{type(row).__name__}"
         )
     raw = row.get("document_path") or row.get("path", "") or ""
-    # non-string values (e.g. {"path": 123}) coerce rather than leak an
-    # AttributeError past validate_manifest's no-raise contract
+    # non-string values (e.g. {"path": 123}) coerce, so a bad row raises
+    # the row-numbered ValueError below, never an AttributeError
     document_path = str(raw).strip()
     if not document_path:
         raise ValueError(
@@ -91,12 +91,3 @@ def parse_manifest(manifest_path: str) -> list[dict]:
         for idx, doc in enumerate(documents_list, start=1)
     ]
 
-
-def validate_manifest(manifest_path: str) -> tuple[bool, str | None]:
-    """(ok, error) without raising (reference validate_manifest)."""
-    try:
-        parse_manifest(manifest_path)
-        return True, None
-    except (ValueError, OSError) as e:
-        # JSONDecodeError is a ValueError subclass — no separate clause
-        return False, str(e)

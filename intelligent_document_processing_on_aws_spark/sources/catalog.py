@@ -3,15 +3,16 @@
 Parity with the reference reporting layer (save_reporting_data.py):
 - fixed-schema metric/metering tables written under date partitions
   (`evaluation_metrics/.../date=YYYY-MM-DD`, :541-772, :1004-1125) ->
-  `partitionBy(date_col)` parquet (Iceberg `PARTITIONED BY (days(ts))`
+  `partitionBy("date")` parquet (Iceberg `PARTITIONED BY (days(ts))`
   in production — same layout, atomic snapshots);
 - per-class dynamic-schema `document_sections/{class}` tables
   (:1127-1337): attribute JSON parsed with the per-class StructType
   (the Spark analog of `_infer_pyarrow_type`/`_create_dynamic_schema`)
   and written one table per class.
 
-Locally the warehouse is a parquet directory tree; the same calls target an
-Iceberg catalog by swapping `_write` for `df.writeTo(tbl).append()`.
+Every write overwrites its table. Locally the warehouse is a parquet
+directory tree; the same calls target an Iceberg catalog by swapping the
+parquet writes for `df.writeTo(tbl).createOrReplace()`.
 """
 
 from __future__ import annotations
@@ -24,25 +25,17 @@ from pyspark.sql import functions as F
 from ..operators.attributes import attribute_schema
 
 
-def write_metrics_table(metrics: DataFrame, warehouse: str, name: str,
-                        event_time_col: str | None = None,
-                        mode: str = "append") -> None:
-    """date partition from the event time (ISO parse semantics of
-    save_reporting_data.py:626-656)."""
-    df = metrics
-    if event_time_col:
-        df = df.withColumn("date", F.date_format(F.col(event_time_col), "yyyy-MM-dd"))
-    elif "date" not in df.columns:
-        df = df.withColumn("date", F.lit("1970-01-01"))
-    df.write.mode(mode).partitionBy("date").parquet(os.path.join(warehouse, name))
+def write_metrics_table(metrics: DataFrame, warehouse: str, name: str) -> None:
+    """Overwrite the table, one partition per value of the ``date``
+    column the caller supplies (the report date)."""
+    metrics.write.mode("overwrite").partitionBy("date").parquet(os.path.join(warehouse, name))
 
 
 def write_document_sections(attrs: DataFrame, warehouse: str,
-                            classes: dict | None = None,
-                            mode: str = "append") -> list[str]:
+                            classes: dict | None = None) -> list[str]:
     """One structured table per document class: attributes_json parsed with
     the class schema, flattened one level (group fields -> dotted columns),
-    written to document_sections_{class}. Returns written table names."""
+    overwriting document_sections_{class}. Returns written table names."""
     written = []
     cls_rows = [r.classification for r in
                 attrs.select("classification").distinct().collect()]
@@ -59,7 +52,7 @@ def write_document_sections(attrs: DataFrame, warehouse: str,
             safe = field.name.replace(" ", "_").lower()
             cols.append(F.col(f"a.`{field.name}`").alias(safe))
         name = f"document_sections_{cls}"
-        sub.select(*cols).write.mode(mode).parquet(os.path.join(warehouse, name))
+        sub.select(*cols).write.mode("overwrite").parquet(os.path.join(warehouse, name))
         written.append(name)
     return written
 

@@ -4,29 +4,29 @@ Usage (local or cluster):
   spark-submit --py-files idp_spark.zip jobs/extract.py \
       --input fixtures_data/t2_pages.parquet \
       --output /tmp/extracted \
-      [--salt-partitions 64] [--snapshots]
+      [--salt-partitions 64]
 
-Reads a pages table (url, warc_ts, html, text, lang), runs the vectorized
-extraction stage in one Python pass, writes the result table partitioned
-by content_type, and prints a one-line JSON summary (rows, docs/sec, and
-jvm_jit_s: the seconds the driver JVM's JIT compilers spent in the job).
-With --salt-partitions P the pages are first salted by url hash into P
-partitions; without it this path reads the input's own partitioning.
-
---snapshots always salts, and P then defaults to
-spark.sql.shuffle.partitions: a spark-submit --conf value, or else the
+Reads a pages table (url, warc_ts, html, text, lang), salts it by url
+hash into P partitions, runs the vectorized extraction stage in one
+Python pass and commits the result as an atomic snapshot
+(sources/snapshots.py) under {output}/table. P is --salt-partitions, or
+else spark.sql.shuffle.partitions: a spark-submit --conf value, or the
 local task slots.
 
-With --snapshots the output lands as an atomic snapshot commit
-(sources/snapshots.py) under {output}/table, and its per-file lineage,
-read from that commit's parquet footer stats and written by the driver
-with pyarrow, under {output}/lineage: re-running the same command
-resumes from the last committed snapshot, processing only
-not-yet-committed urls — the kill mid-run / re-run path. A first run
-into an empty output counts nothing and runs three Spark jobs: the
-input's schema inference, the salt's shuffle map and the write.
-"rows" is then the committed snapshot's record count, from its manifest,
-and "processed" the record count of this run's snapshot.
+The per-file lineage of that commit, read from its parquet footer stats
+and written by the driver with pyarrow, lands under {output}/lineage.
+Re-running the same command resumes from the last committed snapshot,
+processing only not-yet-committed urls — the kill mid-run / re-run path.
+A first run into an empty output counts nothing and runs three Spark
+jobs: the input's schema inference, the salt's shuffle map and the
+write.
+
+Prints a one-line JSON summary: "rows", the committed snapshot's record
+count from its manifest; "processed" and "skipped", this run's record
+count and the input urls already committed; docs/sec over this run's
+work; and jvm_jit_s, the seconds the driver JVM's JIT compilers spent in
+the job. --snapshots is accepted and changes nothing: the snapshot
+commit is the only output mode.
 """
 
 from __future__ import annotations
@@ -39,11 +39,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from intelligent_document_processing_on_aws_spark.operators.extraction import extract_pages  # noqa: E402
+from intelligent_document_processing_on_aws_spark.plans import lineage  # noqa: E402
 from intelligent_document_processing_on_aws_spark.session import (  # noqa: E402
     cds_archive,
     get_spark,
     jit_seconds,
+)
+from intelligent_document_processing_on_aws_spark.sources.snapshots import (  # noqa: E402
+    total_records,
 )
 
 
@@ -57,7 +60,8 @@ def main() -> int:
     ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument("--master", default=None)
     ap.add_argument("--snapshots", action="store_true",
-                    help="snapshot-committed output + lineage with resume")
+                    help="no effect: snapshot-committed output with lineage "
+                         "and resume is the only mode")
     args = ap.parse_args()
 
     t_start = time.time()
@@ -78,42 +82,21 @@ def main() -> int:
         if not args.input:
             ap.error("--input or --manifest required")
         pages = spark.read.parquet(args.input)
-    if args.snapshots:
-        from intelligent_document_processing_on_aws_spark.plans.lineage import (
-            run_with_resume_snapshots,
-        )
-        from intelligent_document_processing_on_aws_spark.sources.snapshots import (
-            total_records,
-        )
-
-        salt = args.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        stats = run_with_resume_snapshots(
-            spark, pages,
-            os.path.join(args.output, "table"),
-            os.path.join(args.output, "lineage"),
-            salt_partitions=salt,
-        )
-        n = total_records(os.path.join(args.output, "table"))
-        dt = time.time() - t0
-        # throughput reflects THIS run's work; rows is the committed total
-        print(json.dumps({"rows": n, "sec": round(dt, 2),
-                          "docs_per_sec": round(stats["processed"] / dt, 1),
-                          "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
-                          **session, **stats}))
-        spark.stop()
-        return 0
-    result = extract_pages(pages, salt_partitions=args.salt_partitions)
-    (
-        result.write.mode("overwrite")
-        .partitionBy("content_type")
-        .parquet(args.output)
+    # called through the module, so a wrapper set on it at run time (a
+    # tracer's span) is the one that runs
+    stats = lineage.run_with_resume_snapshots(
+        spark, pages,
+        os.path.join(args.output, "table"),
+        os.path.join(args.output, "lineage"),
+        salt_partitions=args.salt_partitions,
     )
-    n = spark.read.parquet(args.output).count()
+    n = total_records(os.path.join(args.output, "table"))
     dt = time.time() - t0
+    # throughput reflects THIS run's work; rows is the committed total
     print(json.dumps({"rows": n, "sec": round(dt, 2),
-                      "docs_per_sec": round(n / dt, 1),
+                      "docs_per_sec": round(stats["processed"] / dt, 1),
                       "jvm_jit_s": round(jit_seconds(spark) - jit0, 2),
-                      **session}))
+                      **session, **stats}))
     spark.stop()
     return 0
 

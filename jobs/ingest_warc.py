@@ -9,7 +9,9 @@ Usage (local or cluster):
 The full webtext entry path: binaryFile-distributed WARC files ->
 from-scratch record parse / HTTP envelope / charset decode
 (kernels/warc.py via sources/warc.py) -> pages schema -> the vectorized
-main-content extraction stage -> parquet partitioned by content_type.
+main-content extraction stage, salted by url hash into --salt-partitions
+(else spark.sql.shuffle.partitions) partitions -> parquet partitioned by
+content_type.
 With --raw, stops after record parsing and writes the record table
 (incl. error rows) instead — the audit surface for dirty crawls.
 

@@ -108,7 +108,7 @@ def main() -> int:
     sections = persist(sections)
     attrs, n_attrs = _observed(extract_section_attributes(sections))
     attrs = persist(attrs)
-    write_document_sections(attrs, wh, mode="overwrite")
+    write_document_sections(attrs, wh)
     counts["sections"] = n_sections.get["rows"]
     counts["attributed_sections"] = n_attrs.get["rows"]
 
@@ -138,7 +138,7 @@ def main() -> int:
         counted = persist(evaluate_attributes(expected, flat_actual, cfg))
         write_metrics_table(
             metrics_rollup(counted, "classification").withColumn("date", F.lit(REPORT_DATE)),
-            wh, "evaluation_metrics_by_class", mode="overwrite")
+            wh, "evaluation_metrics_by_class")
         # the overall rollup is one row: collect it once for the summary
         # and write the table from that row
         overall_df = metrics_rollup(counted)
@@ -146,7 +146,7 @@ def main() -> int:
         write_metrics_table(
             spark.createDataFrame([overall], overall_df.schema).withColumn(
                 "date", F.lit(REPORT_DATE)),
-            wh, "evaluation_metrics_overall", mode="overwrite")
+            wh, "evaluation_metrics_overall")
         # the report's Confidence columns consume the UPSTREAM assessment
         # (the reference reads explainability_info from the stored result)
         reports, n_reports = _observed(evaluation_report(

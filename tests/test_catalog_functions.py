@@ -40,7 +40,7 @@ def test_scalar_columns_match_kernels(spark):
 def test_write_document_sections_dynamic_tables(spark, fixtures_dir, tmp_path):
     wh = str(tmp_path / "wh")
     attrs = spark.read.parquet(os.path.join(fixtures_dir, "golden_attributes.parquet"))
-    written = write_document_sections(attrs, wh, mode="overwrite")
+    written = write_document_sections(attrs, wh)
     assert "document_sections_bank_statement" in written
     bank = spark.read.parquet(os.path.join(wh, "document_sections_bank_statement"))
     # group flattened to struct column, list to array column
@@ -54,10 +54,10 @@ def test_write_document_sections_dynamic_tables(spark, fixtures_dir, tmp_path):
 def test_write_metrics_table_date_partition(spark, tmp_path):
     wh = str(tmp_path / "wh2")
     df = spark.createDataFrame(
-        [(1, 0.9, "2025-03-04T10:00:00Z"), (2, 0.8, "2025-03-05T11:00:00Z")],
-        "doc_id long, f1 double, event_time string",
-    ).withColumn("event_time", F.to_timestamp("event_time"))
-    write_metrics_table(df, wh, "metrics", event_time_col="event_time", mode="overwrite")
+        [(1, 0.9, "2025-03-04"), (2, 0.8, "2025-03-05")],
+        "doc_id long, f1 double, date string",
+    )
+    write_metrics_table(df, wh, "metrics")
     out = spark.read.parquet(os.path.join(wh, "metrics"))
     # hive partition inference types the dir value as DATE
     assert set(str(r.date) for r in out.select("date").collect()) == {"2025-03-04", "2025-03-05"}

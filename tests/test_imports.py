@@ -183,8 +183,6 @@ REGISTRY_ONLY_MODULES = {
         "the last pixel decoder, image_resize only (direction 7)",
     "operators.multimodal":
         "image probe and resize operators, registry only (direction 7)",
-    "operators.criteria":
-        "criteria validation no job configures (direction 11)",
     "operators.metering":
         "metering rollup no job feeds (direction 5)",
 }
@@ -223,14 +221,8 @@ UNNAMED_DEFINITIONS = {
         "goes with PNG and image_ops, the last decoder batch (direction 7)",
     "kernels.textnorm.normalize_attr_pattern":
         "list-pattern config lookup no stage calls (direction 8)",
-    "kernels.textnorm.flatten_for_reporting":
-        "reporting flatten no job writes (direction 8)",
-    "operators.criteria.chunk_text_with_overlap":
-        "pure twin of the Catalyst chunker in validate_criteria",
     "operators.metering.explode_metering":
         "metering explode no job feeds (direction 8)",
-    "plans.manifest.validate_manifest":
-        "no-raise wrapper of parse_manifest no job calls (direction 8)",
     "sources.snapshots.snapshot_history":
         "operator tool no job runs (direction 8)",
     "sources.snapshots.rollback_to":

@@ -453,45 +453,6 @@ def test_textract_merged_cell_blocks():
     assert md[2] == "| Total 42 |  |"  # combined at anchor, covered blank
 
 
-def test_reporting_flatten_and_stringify():
-    """Reporting flatten parity (save_reporting_data.py:163-221): dot-join
-    dicts, lists as JSON strings (None when empty), bytes utf-8 with hex
-    fallback, datetimes isoformat, scalars str()."""
-    import datetime
-
-    from intelligent_document_processing_on_aws_spark.kernels.textnorm import (
-        convert_value_to_string,
-        flatten_for_reporting,
-    )
-
-    assert convert_value_to_string(None) is None
-    assert convert_value_to_string(b"ok") == "ok"
-    assert convert_value_to_string(b"\xff\xfe") == "fffe"
-    assert convert_value_to_string([1, "a"]) == '[1, "a"]'
-    assert convert_value_to_string(
-        datetime.datetime(2025, 1, 2, 3, 4, 5)
-    ) == "2025-01-02T03:04:05"
-    assert convert_value_to_string(True) == "True"
-    assert convert_value_to_string(2.5) == "2.5"
-
-    nested = {
-        "a": {"b": {"c": 1}, "d": [1, 2]},
-        "e": [],
-        "f": None,
-        "g": "x",
-        "h": {},  # empty dict is NOT recursed — stringified like a scalar
-    }
-    flat = flatten_for_reporting(nested)
-    assert flat == {
-        "a.b.c": "1",
-        "a.d": "[1, 2]",
-        "e": None,
-        "f": None,
-        "g": "x",
-        "h": "{}",
-    }
-
-
 def test_textract_layout_headings():
     """LAYOUT_TITLE/SECTION_HEADER render as #/## headings consuming their
     child LINEs; other LAYOUT_* containers are transparent."""

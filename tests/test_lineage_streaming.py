@@ -139,7 +139,6 @@ def test_manifest_parser_parity(tmp_path, spark, fixtures_dir):
 
     from intelligent_document_processing_on_aws_spark.plans.manifest import (
         parse_manifest,
-        validate_manifest,
     )
 
     t1 = os.path.join(fixtures_dir, "t1_pages.parquet")
@@ -160,17 +159,17 @@ def test_manifest_parser_parity(tmp_path, spark, fixtures_dir):
         j.write_text(json.dumps(payload))
         assert parse_manifest(str(j))[0]["type"] == "local"
 
-    # row-numbered errors; validate_manifest never raises
+    # row-numbered errors
     bad = tmp_path / "bad.csv"
     bad.write_text("document_path,baseline_source\n,orphan-baseline\n")
-    ok, err = validate_manifest(str(bad))
-    assert not ok and "Row 2" in err
+    with pytest.raises(ValueError, match="Row 2"):
+        parse_manifest(str(bad))
     missing = tmp_path / "missing.csv"
     missing.write_text("document_path\n/no/such/file.parquet\n")
-    ok, err = validate_manifest(str(missing))
-    assert not ok and "not found" in err
-    ok, err = validate_manifest(str(tmp_path / "m.yaml"))
-    assert not ok and "Unsupported manifest format" in err
+    with pytest.raises(ValueError, match="not found"):
+        parse_manifest(str(missing))
+    with pytest.raises(ValueError, match="Unsupported manifest format"):
+        parse_manifest(str(tmp_path / "m.yaml"))
 
     # the batch surface: Spark reads every local input the manifest names
     local_paths = [d["path"] for d in parse_manifest(str(csv_m))

@@ -115,40 +115,6 @@ def test_flatten_unflatten_roundtrip(data):
     assert flatten_nested_data(_unflatten(flat)) == flat
 
 
-@settings(max_examples=120, deadline=None)
-@given(
-    st.text(alphabet="abc \n", min_size=0, max_size=2000),
-    st.integers(1, 50),
-    st.integers(1, 8),
-    st.integers(0, 99),
-)
-def test_chunker_properties(text, max_chunk, token_size, overlap_pct):
-    """criteria chunker invariants for ANY params: terminates, covers every
-    char, windows sit at the reference's exact offsets, single-chunk rule
-    honored (criteria_validation/service.py:81-126 semantics)."""
-    from intelligent_document_processing_on_aws_spark.operators.criteria import (
-        chunk_text_with_overlap,
-    )
-
-    chunks = chunk_text_with_overlap(text, max_chunk, token_size, overlap_pct)
-    if len(text) // token_size <= max_chunk:
-        assert chunks == [text]
-        return
-    chunk_chars = max_chunk * token_size
-    overlap = int(chunk_chars * (overlap_pct / 100))
-    # reconstruct the reference walk and demand byte-equality per window
-    start, covered = 0, 0
-    for c in chunks:
-        end = min(start + chunk_chars, len(text))
-        assert c == text[start:end]
-        covered = max(covered, end)
-        start = end - overlap
-    assert covered == len(text)  # full coverage, no tail loss
-    # every boundary except the last overlaps its successor by `overlap`
-    for a, b in zip(chunks, chunks[1:]):
-        assert a[len(a) - overlap:] == b[:overlap] or len(b) < overlap
-
-
 # -- round-3: PDF predictor / CMap / TJ properties ---------------------------
 
 @given(st.binary(min_size=0, max_size=256), st.integers(1, 16),

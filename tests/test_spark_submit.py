@@ -4,8 +4,9 @@ Runs jobs/extract.py through an actual spark-submit process from a
 directory OUTSIDE the repo, with the engine supplied ONLY by the
 packaged archive (scripts/package_pyfiles.py) — the north-star shipping
 contract ("ships via spark-submit --py-files with zero per-row Python").
-Output is verified against the committed golden with DuckDB (no Spark in
-the verification loop).
+Output is read through the committed snapshot's manifest and verified
+against the committed golden with DuckDB (no Spark in the verification
+loop).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import duckdb
 import pyarrow.parquet as pq
 
 from intelligent_document_processing_on_aws_spark.session import driver_memory
+from intelligent_document_processing_on_aws_spark.sources.snapshots import current_snapshot_id
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,6 +51,16 @@ _PRECEDENCE_PROBE = textwrap.dedent("""
                       cds_archive(spark)]))
     spark.stop()
 """)
+
+
+def _committed_files(out_dir: str) -> str:
+    """The data files the job's committed output snapshot lists in its
+    manifest (sources/snapshots.py layout), as a DuckDB list literal."""
+    table = os.path.join(out_dir, "table")
+    manifest = os.path.join(table, f"snap-{current_snapshot_id(table):08d}", "manifest.json")
+    with open(manifest, encoding="utf-8") as fh:
+        files = json.load(fh)["files"]
+    return "[" + ", ".join(f"'{os.path.join(table, f)}'" for f in files) + "]"
 
 
 def _probe_settings(cmd: list[str], env: dict, cwd: str) -> list[str]:
@@ -118,35 +130,42 @@ def test_spark_submit_pyfiles_roundtrip(tmp_path):
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
     env.pop("PYTHONPATH", None)
-    proc = subprocess.run(
-        [_spark_submit(), "--master", "local[4]",
-         "--conf", "spark.sql.shuffle.partitions=4",
-         "--py-files", zip_path, job,
-         "--input", in_path, "--output", out_dir, "--salt-partitions", "4"],
-        capture_output=True, text=True, timeout=420, env=env,
-        cwd=str(tmp_path),
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
-    stats = json.loads(line)
-    assert stats["rows"] == 150 and stats["jvm_jit_s"] >= 0
-    assert stats["cds_archive"] is None
+
+    def submit() -> dict:
+        # P comes from the launcher's shuffle partitions
+        proc = subprocess.run(
+            [_spark_submit(), "--master", "local[4]",
+             "--conf", "spark.sql.shuffle.partitions=4",
+             "--py-files", zip_path, job,
+             "--input", in_path, "--output", out_dir, "--snapshots"],
+            capture_output=True, text=True, timeout=420, env=env,
+            cwd=str(tmp_path),
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+        return json.loads(line)
+
+    stats = submit()
+    assert stats["rows"] == stats["processed"] == 150 and stats["skipped"] == 0
+    assert stats["jvm_jit_s"] >= 0 and stats["cds_archive"] is None
+    # the identical launch resumes: every url is committed, nothing runs
+    again = submit()
+    assert again["rows"] == 150 and again["processed"] == 0 and again["skipped"] == 150
 
     con = duckdb.connect()
+    files = _committed_files(out_dir)
     bad = con.execute(
         f"""
-        SELECT count(*) FROM read_parquet('{out_dir}/*/*.parquet',
-                                          hive_partitioning=1) r
+        SELECT count(*) FROM read_parquet({files}) r
         JOIN read_parquet('{REPO}/fixtures_data/t1_golden.parquet') g
           USING (url)
         WHERE r.extracted_text <> g.extracted_text
         """
     ).fetchone()[0]
-    n_out = con.execute(
-        f"SELECT count(*) FROM read_parquet('{out_dir}/*/*.parquet', "
-        f"hive_partitioning=1)"
-    ).fetchone()[0]
-    assert n_out == 150 and bad == 0
+    n_out, n_urls = con.execute(
+        f"SELECT count(*), count(DISTINCT url) FROM read_parquet({files})"
+    ).fetchone()
+    assert n_out == n_urls == 150 and bad == 0
 
 
 def test_job_runs_outside_repo_root(tmp_path):
@@ -172,7 +191,6 @@ def test_job_runs_outside_repo_root(tmp_path):
     stats = json.loads(line)
     assert stats["rows"] == 150 and stats["jvm_jit_s"] >= 0
     n_out = duckdb.connect().execute(
-        f"SELECT count(*) FROM read_parquet('{out_dir}/*/*.parquet', "
-        f"hive_partitioning=1)"
+        f"SELECT count(*) FROM read_parquet({_committed_files(out_dir)})"
     ).fetchone()[0]
     assert n_out == 150
