@@ -3,7 +3,7 @@
 Each entry implements one operator family of the paper's dataflow
 (SURVEY.md §2: extraction and decoders, images and media, sectioning,
 attributes, assessment, summaries, evaluation, validation and status,
-metering) or of the Common-Crawl ingest path (WARC records and revisits)
+metering) or of the Common-Crawl ingest path (WARC response records)
 as a (spark, sf_dir) -> DataFrame callable, paired with an
 ANSI-SQL oracle DuckDB runs on the same inputs. From sf_dir the queries
 read only the ``documents`` and ``events`` tables. Column names and dtypes
@@ -720,74 +720,6 @@ def _sql_warc_extract() -> str:
     )
 
 
-_REVISIT_DIR = "/tmp/idp_fixture_revisit_warc"
-_N_REVISIT_FILES = 2
-
-
-def _ensure_revisit_fixture() -> str:
-    """Write the later-crawl revisit supplement (byte-deterministic,
-    idempotent) next to nothing — it is derived, not committed."""
-    import os
-
-    from .fixtures.warc_gen import gen_revisit_warc_file
-
-    os.makedirs(_REVISIT_DIR, exist_ok=True)
-    for fi in range(_N_REVISIT_FILES):
-        p = os.path.join(_REVISIT_DIR, f"revisit-{fi:05d}.warc.gz")
-        data = gen_revisit_warc_file(fi)
-        if not (os.path.exists(p) and os.path.getsize(p) == len(data)):
-            with open(p, "wb") as fh:
-                fh.write(data)
-    return _REVISIT_DIR
-
-
-def q_warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-Crawl revisit resolution end-to-end: a later crawl's
-    revisit records (cross-crawl dedup pointers, WARC 1.0 §6.7
-    identical-payload-digest) resolved against the cc-index built from
-    the committed base-crawl fixtures — revisit -> (digest, url) index
-    lookup -> fetchable capture span, earliest-ts min-witness; dangling
-    digests and digest-less server-not-modified revisits come back
-    unresolved. The oracle is the writer's closed-form golden
-    (fixtures/warc_gen.revisit_golden_rows — derived from the record
-    plans, never from the reader or the join)."""
-    from .sources.warc import build_cdx, read_warc_revisits, resolve_revisits
-
-    rdir = _ensure_revisit_fixture()
-    cdx = build_cdx(spark, _fx("warc"))
-    revs = read_warc_revisits(spark, rdir)
-    out = resolve_revisits(revs, cdx)
-    return out.select(
-        "record_id",
-        "url",
-        "warc_date",
-        "payload_digest",
-        "resolved",
-        "capture_ts",
-        F.element_at(F.split("capture_file", "/"), -1).alias("capture_file"),
-    )
-
-
-def _sql_warc_revisits() -> str:
-    from .fixtures.warc_gen import revisit_golden_rows
-
-    def lit(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    cols = ("record_id", "url", "warc_date", "payload_digest",
-            "resolved", "capture_ts", "capture_file")
-    vals = ",\n".join(
-        "(" + ", ".join(lit(r[c]) for c in cols) + ")"
-        for r in revisit_golden_rows(_N_REVISIT_FILES)
-    )
-    return (f"SELECT * FROM (VALUES {vals}) "
-            f"AS t({', '.join(cols)})")
-
-
 def q_extract_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV decode branch: extension-hint routing (even doc_ids carry a
     .csv name; odd rely on the content sniff) -> csv_to_markdown with the
@@ -1256,7 +1188,6 @@ _RAW_QUERIES = {
     "metering_costs": q_metering_costs,
     "events_props": q_events_props,
     "warc_extract": q_warc_extract,
-    "warc_revisits": q_warc_revisits,
 }
 
 QUERIES = {name: _wrap(fn) for name, fn in _RAW_QUERIES.items()}
@@ -1288,5 +1219,4 @@ def oracles() -> dict[str, str]:
         "metering_costs": _sql_metering_costs(),
         "events_props": _sql_events_props(),
         "warc_extract": _sql_warc_extract(),
-        "warc_revisits": _sql_warc_revisits(),
     }

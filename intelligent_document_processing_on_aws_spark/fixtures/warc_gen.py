@@ -202,106 +202,3 @@ def golden_rows(file_idx: int) -> list[dict]:
             "error": None,
         })
     return rows
-
-
-# ---------------------------------------------------------------------------
-# Revisit-crawl supplement: a LATER crawl whose records are revisits of
-# gen_warc_file captures (Common Crawl's cross-crawl dedup pointers).
-# Pure closed form like everything above; NOT part of the committed
-# fixtures_data tree — queries/tests write it to a temp dir on demand.
-# ---------------------------------------------------------------------------
-
-N_REVISITS = 10
-_REVISIT_PROFILE = (
-    "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest")
-
-
-def _payload_digest(plan: dict) -> str:
-    """sha1-b32 of the DECODED payload bytes — the same bytes build_cdx
-    digests after parse_http_response content-decodes the wire form."""
-    import base64
-
-    raw = plan["text"].encode(plan["charset"])
-    return "sha1:" + base64.b32encode(hashlib.sha1(raw).digest()).decode()
-
-
-def _revisit_plan(file_idx: int, r: int) -> dict:
-    """Closed-form plan for revisit r of revisit-file file_idx. The last
-    two entries are negative controls: r == N_REVISITS-2 has a digest
-    that was never captured (dangling), r == N_REVISITS-1 is digest-less
-    (server-not-modified profile) — both must come back unresolved."""
-    tf = (file_idx * 3 + r) % N_FILES
-    tj = (r * 7 + 1) % N_RESP
-    if _record_plan(tf, tj)["corrupt"]:
-        tj = (tj + 1) % N_RESP               # corrupt captures are not indexed
-    target = _record_plan(tf, tj)
-    date = f"2025-02-01T00:{file_idx:02d}:{r:02d}Z"
-    if r == N_REVISITS - 2:
-        return {"url": target["url"], "date": date,
-                "digest": "sha1:" + "A" * 32, "profile": _REVISIT_PROFILE,
-                "refers_to": None, "target": None}
-    if r == N_REVISITS - 1:
-        return {"url": target["url"], "date": date, "digest": None,
-                "profile": ("http://netpreserve.org/warc/1.0/revisit/"
-                            "server-not-modified"),
-                "refers_to": None, "target": None}
-    return {
-        "url": target["url"],
-        "date": date,
-        "digest": _payload_digest(target),
-        "profile": _REVISIT_PROFILE,
-        # half carry the optional WARC-Refers-To header (spec-optional)
-        "refers_to": _record_id(tf, tj) if r % 2 == 0 else None,
-        "target": {"file_idx": tf, "j": tj, "plan": target},
-    }
-
-
-def gen_revisit_warc_file(file_idx: int) -> bytes:
-    """One deterministic later-crawl `.warc.gz` of revisit records."""
-    members = []
-    for r in range(N_REVISITS):
-        plan = _revisit_plan(file_idx, r)
-        headers = [
-            ("WARC-Type", "revisit"),
-            ("WARC-Target-URI", plan["url"]),
-            ("WARC-Date", plan["date"]),
-            ("WARC-Record-ID", _record_id(1000 + file_idx, r)),
-            ("WARC-Profile", plan["profile"]),
-        ]
-        if plan["digest"] is not None:
-            headers.append(("WARC-Payload-Digest", plan["digest"]))
-        if plan["refers_to"] is not None:
-            headers.append(("WARC-Refers-To", plan["refers_to"]))
-        headers.append(
-            ("Content-Type", "application/http; msgtype=response"))
-        members.append(_warc_record(headers, b""))
-    return b"".join(_gzip_member(m) for m in members)
-
-
-def revisit_golden_rows(n_files: int = 2) -> list[dict]:
-    """Expected resolve_revisits output (writer-derived closed form —
-    never calls the reading kernel or the join). capture_ts is the
-    14-digit CDX timestamp of the referred capture; unresolved rows
-    carry NULL capture columns."""
-    rows = []
-    for fi in range(n_files):
-        for r in range(N_REVISITS):
-            plan = _revisit_plan(fi, r)
-            row = {
-                "record_id": _record_id(1000 + fi, r),
-                "url": plan["url"],
-                "warc_date": plan["date"],
-                "payload_digest": plan["digest"],
-                "resolved": plan["target"] is not None,
-                "capture_ts": None,
-                "capture_file": None,
-            }
-            if plan["target"] is not None:
-                t = plan["target"]["plan"]
-                row["capture_ts"] = (t["warc_date"]
-                                     .replace("-", "").replace(":", "")
-                                     .replace("T", "").replace("Z", ""))
-                row["capture_file"] = (
-                    f"cc-{plan['target']['file_idx']:05d}.warc.gz")
-            rows.append(row)
-    return rows

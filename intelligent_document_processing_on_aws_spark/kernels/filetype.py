@@ -245,7 +245,3 @@ def detect_content_type_and_text(
     if looks_like_csv(text):
         return CSV, text
     return TEXT, text
-
-
-def detect_content_type(content: bytes, name_hint: str | None = None) -> str:
-    return detect_content_type_and_text(content, name_hint)[0]

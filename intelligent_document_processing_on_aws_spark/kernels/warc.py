@@ -6,8 +6,9 @@ stream records without decompressing the whole file. This module
 implements the public WARC 1.0/1.1 format directly (no `warcio`
 dependency in the container):
 
-- `iter_warc_records`: record iterator over plain or gzipped bytes
-  (multi-member per-record gzip, or one member for the whole file),
+- `iter_warc_records_lenient`: the one record walk, over plain or
+  gzipped bytes (one gzip member per record, or one member for the
+  whole file); a damaged record becomes one error tuple,
 - `parse_http_response`: status line + headers + body split, with
   `Transfer-Encoding: chunked` de-chunking and `Content-Encoding:
   gzip/deflate` decompression (raw captured responses keep both),
@@ -17,10 +18,11 @@ dependency in the container):
 The module only reads: WET ``conversion`` and WAT ``metadata`` records
 parse like any other, but nothing here writes a record.
 
-Scale note (100 TB): gzip WARCs are NOT byte-range splittable — the
-parallel unit is the FILE (Common Crawl publishes ~1 GB files, ~80k per
-crawl), which is exactly Spark's `binaryFile` partitioning model; see
-sources/warc.py.
+Scale note (100 TB): the parallel unit today is the FILE (Common Crawl
+publishes ~1 GB files, ~80k per crawl), Spark's `binaryFile`
+partitioning model, and each file is walked from memory; see
+sources/warc.py. Splitting a large file at gzip member headers, each
+confirmed by decoding it, is ROADMAP direction 6.
 """
 
 from __future__ import annotations
@@ -36,28 +38,6 @@ class WarcError(ValueError):
 
 _CRLF = b"\r\n"
 _VERSION_RE = re.compile(rb"^WARC/(\d+\.\d+)$")
-
-
-def _split_gzip_members(data: bytes):
-    """Yield decompressed gzip members in order (Common Crawl layout:
-    one member per record). Uses zlib's unused_data to find member
-    boundaries without guessing at magic bytes inside payloads."""
-    pos = 0
-    n = len(data)
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        try:
-            out = d.decompress(data[pos:])
-            out += d.flush()
-        except zlib.error as e:
-            raise WarcError(f"bad gzip member at offset {pos}: {e}") from e
-        if not d.eof:
-            raise WarcError(f"truncated gzip member at offset {pos}")
-        yield out
-        consumed = (n - pos) - len(d.unused_data)
-        if consumed <= 0:
-            raise WarcError("gzip member consumed no input")
-        pos += consumed
 
 
 def _parse_header_block(buf: bytes, start: int) -> tuple[dict[str, str], int]:
@@ -110,20 +90,6 @@ def _iter_plain(buf: bytes):
         yield headers, body
 
 
-def iter_warc_records(data: bytes):
-    """Yield (headers: dict, body: bytes) for each record. Accepts
-    plain WARC bytes, a per-record-member `.warc.gz` (Common Crawl), or
-    a single-member gzip of the whole file."""
-    if data[:2] == b"\x1f\x8b":
-        for member in _split_gzip_members(data):
-            # one member may hold one record (CC) or the whole file
-            yield from _iter_plain(member)
-        return
-    if not data.startswith(b"WARC/"):
-        raise WarcError("not a WARC payload (no gzip magic or WARC/ line)")
-    yield from _iter_plain(data)
-
-
 def iter_warc_records_lenient(data: bytes):
     """Yield (headers | None, body | None, error | None) per record,
     isolating damage: in the per-record-gzip layout a malformed record
@@ -156,8 +122,12 @@ def iter_warc_records_lenient(data: bytes):
             except WarcError as e:
                 yield None, None, f"WarcError: {e}"[:200]
         return
+    if not data.startswith(b"WARC/"):
+        yield None, None, \
+            "WarcError: not a WARC payload (no gzip magic or WARC/ line)"
+        return
     try:
-        for headers, body in iter_warc_records(data):
+        for headers, body in _iter_plain(data):
             yield headers, body, None
     except WarcError as e:
         yield None, None, f"WarcError: {e}"[:200]
@@ -262,114 +232,3 @@ def decode_charset(payload: bytes, content_type: str | None) -> tuple[str, str]:
         return payload.decode(canonical), canonical
     except (UnicodeDecodeError, LookupError):
         return payload.decode("cp1252", errors="replace"), "cp1252"
-
-
-def iter_warc_members(data: bytes):
-    """Yield ``(offset, length, headers | None, body | None, err | None)``
-    per gzip member of a per-record-layout ``.warc.gz`` — the byte spans
-    a CDX index records and a ranged fetch re-reads.
-
-    ``offset``/``length`` delimit the COMPRESSED member inside the file,
-    so ``data[offset:offset + length]`` is a complete standalone gzip
-    stream: exactly the slice an HTTP range request (or a local seek)
-    retrieves, decodable by :func:`parse_member_bytes` with no other
-    context.  A member holding several records (legal, non-CC layout)
-    yields each record with the member's span.  Damage is isolated per
-    member (one error tuple, parsing resyncs on the next member).  Plain
-    non-gzip WARC input is indexed too: each record becomes one
-    pseudo-member spanning its raw bytes in the uncompressed buffer.
-    """
-    if data[:2] == b"\x1f\x8b":
-        pos = 0
-        n = len(data)
-        while pos < n:
-            d = zlib.decompressobj(wbits=31)
-            try:
-                member = d.decompress(data[pos:]) + d.flush()
-                if not d.eof:
-                    raise WarcError(f"truncated gzip member at offset {pos}")
-            except (zlib.error, WarcError) as e:
-                yield pos, n - pos, None, None, f"WarcError: {e}"[:200]
-                return                              # cannot resync past damage
-            consumed = (n - pos) - len(d.unused_data)
-            if consumed <= 0:
-                yield pos, n - pos, None, None, \
-                    "WarcError: gzip member consumed no input"
-                return
-            try:
-                for headers, body in _iter_plain(member):
-                    yield pos, consumed, headers, body, None
-            except WarcError as e:
-                yield pos, consumed, None, None, f"WarcError: {e}"[:200]
-            pos += consumed
-        return
-    if not data.startswith(b"WARC/"):
-        yield 0, len(data), None, None, \
-            "WarcError: not a WARC payload (no gzip magic or WARC/ line)"
-        return
-    # plain layout: spans are record extents in the uncompressed stream
-    pos = 0
-    n = len(data)
-    while pos < n:
-        while pos < n and data[pos:pos + 2] == _CRLF:
-            pos += 2
-        if pos >= n:
-            return
-        start = pos
-        try:
-            headers, body_start = _parse_header_block(data, pos)
-            length = int(headers["content-length"])
-            body = data[body_start:body_start + length]
-            if len(body) != length:
-                raise WarcError(
-                    f"truncated record body: {len(body)} < {length}")
-            pos = body_start + length
-            if data[pos:pos + 4] != _CRLF + _CRLF:
-                raise WarcError("missing record terminator")
-            pos += 4
-            yield start, pos - start, headers, body, None
-        except (WarcError, KeyError, ValueError) as e:
-            yield start, n - start, None, None, f"WarcError: {e}"[:200]
-            return                                  # no boundaries to resync on
-
-
-def parse_member_bytes(chunk: bytes):
-    """Decode ONE ranged-fetched member slice -> (headers, body) records.
-
-    Accepts what iter_warc_members spans denote: a standalone gzip
-    member, or a plain record slice.  Raises WarcError on damage (the
-    fetcher turns that into an error row — a corrupt span must never
-    kill the fetch task)."""
-    if chunk[:2] == b"\x1f\x8b":
-        d = zlib.decompressobj(wbits=31)
-        try:
-            buf = d.decompress(chunk) + d.flush()
-        except zlib.error as e:
-            raise WarcError(f"bad gzip member in fetched range: {e}") from e
-        if not d.eof:
-            raise WarcError("truncated gzip member in fetched range")
-        return list(_iter_plain(buf))
-    return list(_iter_plain(chunk))
-
-
-def surt_urlkey(url: str) -> str:
-    """Canonical SURT-form url key (the CDX sort key Common Crawl's
-    index uses): scheme dropped, host lowercased + dot-reversed with
-    commas, default ports stripped, ')/'-joined path+query lowercased.
-    Simplified relative to full SURT (no session-param stripping) but
-    deterministic and order-compatible for same-host grouping."""
-    u = (url or "").strip()
-    for pfx in ("https://", "http://"):
-        if u.lower().startswith(pfx):
-            u = u[len(pfx):]
-            break
-    host, sep, rest = u.partition("/")
-    host = host.lower()
-    if "@" in host:                                 # userinfo never keys
-        host = host.rpartition("@")[2]
-    for port in (":80", ":443"):
-        if host.endswith(port):
-            host = host[: -len(port)]
-    parts = [p for p in host.split(".") if p]
-    return ",".join(reversed(parts)) + ")/" + (rest.lower() if sep else "")
-

@@ -128,8 +128,8 @@ def test_filetype_routes_legacy_encoded_html():
         b"\xff\xfe" + html.encode("utf-16-le"))
     assert (ctype2, text2) == ("html", html)
     # binary junk stays unknown (the looks-like-text gate)
-    assert filetype.detect_content_type(bytes(range(256)) * 4) == "unknown"
-    assert filetype.detect_content_type(b"\xff\xfe\x00binary") == "unknown"
+    assert filetype.detect_content_type_and_text(bytes(range(256)) * 4)[0] == "unknown"
+    assert filetype.detect_content_type_and_text(b"\xff\xfe\x00binary")[0] == "unknown"
 
 
 def test_extract_page_legacy_encoded_end_to_end():

@@ -213,8 +213,6 @@ UNNAMED_DEFINITIONS = {
         "pure twin of evaluate_attributes' counts (direction 4)",
     "kernels.compare.calculate_metrics":
         "pure twin of metrics_rollup (direction 4)",
-    "kernels.filetype.detect_content_type":
-        "type-only wrapper of detect_content_type_and_text for tests",
     "kernels.html_dom.parse_blocks_stdlib":
         "differential reference for the fast block parser",
     "kernels.image_ops.adaptive_binarize_array":
@@ -227,12 +225,6 @@ UNNAMED_DEFINITIONS = {
         "operator tool no job runs (direction 8)",
     "sources.snapshots.rollback_to":
         "operator tool no job runs (direction 8)",
-    "sources.warc.parse_cdxj":
-        "CDXJ index reader, kept for the streaming reader (direction 6)",
-    "sources.warc.cdx_select":
-        "CDXJ selection, kept for the streaming reader (direction 6)",
-    "sources.warc.fetch_records":
-        "byte-range reader, kept for the streaming reader (direction 6)",
 }
 
 

@@ -55,13 +55,13 @@ def test_link_farm_empty():
 
 
 def test_filetype_detection():
-    assert filetype.detect_content_type(b"%SPDF{}") == "pdf"
-    assert filetype.detect_content_type(b"%PDF-1.7 ...") == "pdf"
-    assert filetype.detect_content_type(b"<html><body>x</body></html>") == "html"
-    assert filetype.detect_content_type(b"plain words only") == "text"
-    assert filetype.detect_content_type(b"PK\x03\x04 xl/workbook") == "xlsx"
-    assert filetype.detect_content_type(b"PK\x03\x04 word/doc") == "docx"
-    assert filetype.detect_content_type(b"\xff\xfe\x00binary") == "unknown"
+    assert filetype.detect_content_type_and_text(b"%SPDF{}")[0] == "pdf"
+    assert filetype.detect_content_type_and_text(b"%PDF-1.7 ...")[0] == "pdf"
+    assert filetype.detect_content_type_and_text(b"<html><body>x</body></html>")[0] == "html"
+    assert filetype.detect_content_type_and_text(b"plain words only")[0] == "text"
+    assert filetype.detect_content_type_and_text(b"PK\x03\x04 xl/workbook")[0] == "xlsx"
+    assert filetype.detect_content_type_and_text(b"PK\x03\x04 word/doc")[0] == "docx"
+    assert filetype.detect_content_type_and_text(b"\xff\xfe\x00binary")[0] == "unknown"
 
 
 def test_filetype_routes_audio_video():
@@ -69,23 +69,23 @@ def test_filetype_routes_audio_video():
     wav = b"RIFF" + (36).to_bytes(4, "little") + b"WAVE"
     mp3 = b"\xff\xfb\x90\x00"  # MPEG-1 Layer III, 128 kbit/s, 44.1 kHz
     avi = b"RIFF" + (4096).to_bytes(4, "little") + b"AVI "
-    assert filetype.detect_content_type(wav) == filetype.AUDIO
+    assert filetype.detect_content_type_and_text(wav)[0] == filetype.AUDIO
     # offset-0 frame header routes; a junk-prefixed stream is not the
     # magic sniffer's job — detection stays conservative to avoid false
     # audio positives
-    assert filetype.detect_content_type(mp3) == filetype.AUDIO
-    assert filetype.detect_content_type(avi) == filetype.VIDEO
+    assert filetype.detect_content_type_and_text(mp3)[0] == filetype.AUDIO
+    assert filetype.detect_content_type_and_text(avi)[0] == filetype.VIDEO
     # an ID3v2 header (binary version byte) routes to audio
     id3 = b"ID3\x04\x00\x00\x00\x00\x00\x00rest"
-    assert filetype.detect_content_type(id3) == filetype.AUDIO
+    assert filetype.detect_content_type_and_text(id3)[0] == filetype.AUDIO
     # prose that merely starts with "ID3" stays text
-    assert filetype.detect_content_type(b"ID3 tags explained") == filetype.TEXT
+    assert filetype.detect_content_type_and_text(b"ID3 tags explained")[0] == filetype.TEXT
     # RIFF/WEBP still routes to image, not audio
     from intelligent_document_processing_on_aws_spark.fixtures.media_gen import (
         webp_bytes,
     )
 
-    assert filetype.detect_content_type(webp_bytes(10, 10)) == filetype.IMAGE
+    assert filetype.detect_content_type_and_text(webp_bytes(10, 10))[0] == filetype.IMAGE
 
 
 def test_pipe_table_format():

@@ -484,20 +484,20 @@ def test_csv_roundtrip_subset():
 
 def test_csv_extension_hint_routes():
     payload = b"single column\njust words here\nno commas at all"
-    assert filetype.detect_content_type(payload, "data.csv") == "csv"
-    assert filetype.detect_content_type(payload, "data.txt") == "text"
-    assert filetype.detect_content_type(payload) == "text"
+    assert filetype.detect_content_type_and_text(payload, "data.csv")[0] == "csv"
+    assert filetype.detect_content_type_and_text(payload, "data.txt")[0] == "text"
+    assert filetype.detect_content_type_and_text(payload)[0] == "text"
 
 
 def test_csv_sniff_consistent_columns_only():
-    assert filetype.detect_content_type(b"a,b,c\n1,2,3\n4,5,6") == "csv"
+    assert filetype.detect_content_type_and_text(b"a,b,c\n1,2,3\n4,5,6")[0] == "csv"
     # prose with commas: inconsistent field counts -> text
     prose = (b"We came, we saw, we left early.\n"
              b"It rained all day.\n"
              b"Coffee, tea.")
-    assert filetype.detect_content_type(prose) == "text"
+    assert filetype.detect_content_type_and_text(prose)[0] == "text"
     # single line -> text
-    assert filetype.detect_content_type(b"a,b,c") == "text"
+    assert filetype.detect_content_type_and_text(b"a,b,c")[0] == "text"
 
 
 def test_csv_quoted_fields_and_empty_cells():
@@ -577,19 +577,19 @@ def test_image_magic_and_extension_detection():
     import struct
 
     png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
-    assert filetype.detect_content_type(png) == "image"
-    assert filetype.detect_content_type(b"\xff\xd8\xff\xe0rest") == "image"
+    assert filetype.detect_content_type_and_text(png)[0] == "image"
+    assert filetype.detect_content_type_and_text(b"\xff\xd8\xff\xe0rest")[0] == "image"
     # ASCII magics (GIF/BM/TIFF/RIFF) only count for UNDECODABLE payloads —
     # real image bodies carry high bytes; see
     # test_ascii_image_magic_does_not_steal_text for the text-side rule
-    assert filetype.detect_content_type(
-        b"GIF89a" + struct.pack("<HH", 2, 2) + b"\x80\xff") == "image"
-    assert filetype.detect_content_type(b"BM" + b"\xff\xfe" * 5) == "image"
-    assert filetype.detect_content_type(b"II*\x00\xff\xfetiff") == "image"
-    assert filetype.detect_content_type(
-        b"RIFF\x00\x00\x00\x00WEBPVP8 \xff\xfe") == "image"
+    assert filetype.detect_content_type_and_text(
+        b"GIF89a" + struct.pack("<HH", 2, 2) + b"\x80\xff")[0] == "image"
+    assert filetype.detect_content_type_and_text(b"BM" + b"\xff\xfe" * 5)[0] == "image"
+    assert filetype.detect_content_type_and_text(b"II*\x00\xff\xfetiff")[0] == "image"
+    assert filetype.detect_content_type_and_text(
+        b"RIFF\x00\x00\x00\x00WEBPVP8 \xff\xfe")[0] == "image"
     # extension hint wins for decodable payloads
-    assert filetype.detect_content_type(b"ascii bytes", "scan.tiff") == "image"
+    assert filetype.detect_content_type_and_text(b"ascii bytes", "scan.tiff")[0] == "image"
     ctype, res, err = extract_page_safe(png, "x.png")
     assert ctype == "image" and res.extracted_text == "" and err is None
 
@@ -598,15 +598,15 @@ def test_ascii_image_magic_does_not_steal_text():
     """'BM'/'GIF89a' are plain ASCII; text or CSV starting with them must
     stay on the text path (image magic applies only to undecodable bytes)."""
     csv_payload = b"BMI,weight,height\n23,70,1.8\n25,80,1.8\n"
-    assert filetype.detect_content_type(csv_payload, "stats.csv") == "csv"
-    assert filetype.detect_content_type(csv_payload) == "csv"  # sniff path
+    assert filetype.detect_content_type_and_text(csv_payload, "stats.csv")[0] == "csv"
+    assert filetype.detect_content_type_and_text(csv_payload)[0] == "csv"  # sniff path
     ctype, res = extract_page(csv_payload, "stats.csv")
     assert ctype == "csv" and "| BMI | weight | height |" in res.extracted_text
-    assert filetype.detect_content_type(b"GIF89a is a file format spec") == "text"
-    assert filetype.detect_content_type(b"BMW makes cars and motorcycles") == "text"
+    assert filetype.detect_content_type_and_text(b"GIF89a is a file format spec")[0] == "text"
+    assert filetype.detect_content_type_and_text(b"BMW makes cars and motorcycles")[0] == "text"
     # real binary payloads (never valid UTF-8 here) still route to image
-    assert filetype.detect_content_type(b"BM\x00\x00\xff\xfe\x80\x81") == "image"
-    assert filetype.detect_content_type(b"GIF89a\x10\x00\x10\x00\x80\xff\x00") == "image"
+    assert filetype.detect_content_type_and_text(b"BM\x00\x00\xff\xfe\x80\x81")[0] == "image"
+    assert filetype.detect_content_type_and_text(b"GIF89a\x10\x00\x10\x00\x80\xff\x00")[0] == "image"
 
 
 def test_pdf_table_layout_reconstruction():

@@ -18,7 +18,6 @@ from intelligent_document_processing_on_aws_spark.fixtures.warc_gen import (
 from intelligent_document_processing_on_aws_spark.kernels.warc import (
     WarcError,
     decode_charset,
-    iter_warc_records,
     iter_warc_records_lenient,
     parse_http_response,
     sniff_charset,
@@ -31,16 +30,22 @@ SIMPLE = (b"WARC/1.0\r\n"
           b"hello\r\n\r\n")
 
 
+def _records(data: bytes) -> list:
+    out = list(iter_warc_records_lenient(data))
+    assert all(err is None for _, _, err in out), out
+    return [(headers, body) for headers, body, _ in out]
+
+
 def test_plain_and_gzip_layouts():
-    recs = list(iter_warc_records(SIMPLE * 3))
+    recs = _records(SIMPLE * 3)
     assert len(recs) == 3
     assert recs[0][0]["warc-type"] == "response"
     assert recs[0][1] == b"hello"
     # single-member gzip of the whole file
-    assert len(list(iter_warc_records(gzip.compress(SIMPLE * 3, mtime=0)))) == 3
+    assert len(_records(gzip.compress(SIMPLE * 3, mtime=0))) == 3
     # per-record members (Common Crawl layout)
     cc = b"".join(gzip.compress(SIMPLE, mtime=0) for _ in range(3))
-    assert len(list(iter_warc_records(cc))) == 3
+    assert len(_records(cc)) == 3
 
 
 def test_header_continuation_and_version():
@@ -49,23 +54,29 @@ def test_header_continuation_and_version():
            b"X-Long: part one\r\n\t and two\r\n"
            b"Content-Length: 0\r\n\r\n"
            b"\r\n\r\n")
-    headers, body = next(iter_warc_records(rec))
+    headers, body = _records(rec)[0]
     assert headers["_version"] == "1.1"
     assert headers["x-long"] == "part one and two"
     assert body == b""
 
 
-@pytest.mark.parametrize("bad", [
-    b"",
-    b"NOTWARC",
-    SIMPLE[:20],                                    # unterminated header
-    SIMPLE.replace(b"Content-Length: 5", b"Content-Length: 99"),
-    SIMPLE[:-4],                                    # missing terminator
-    gzip.compress(SIMPLE, mtime=0)[:-6],            # truncated gzip member
-])
+_NOT_WARC = "not a WARC payload (no gzip magic or WARC/ line)"
+_MALFORMED = {
+    b"": _NOT_WARC,
+    b"NOTWARC": _NOT_WARC,
+    SIMPLE[:20]: "unterminated WARC header block",
+    SIMPLE.replace(b"Content-Length: 5", b"Content-Length: 99"):
+        "truncated record body: 9 < 99",
+    SIMPLE[:-4]: "missing record terminator",
+    gzip.compress(SIMPLE, mtime=0)[:-6]: "truncated gzip member at offset 0",
+}
+
+
+@pytest.mark.parametrize("bad", list(_MALFORMED))
 def test_malformed_raises(bad):
-    with pytest.raises(WarcError):
-        list(iter_warc_records(bad))
+    """Damage ends the walk in one error tuple, never an exception."""
+    assert list(iter_warc_records_lenient(bad)) == \
+        [(None, None, "WarcError: " + _MALFORMED[bad])]
 
 
 def test_lenient_isolates_damage_per_member():
@@ -83,6 +94,13 @@ def test_lenient_isolates_damage_per_member():
         gzip.compress(SIMPLE, mtime=0) + gzip.compress(SIMPLE, mtime=0)[:-6]))
     assert out[0][2] is None
     assert out[1][2] and "truncated gzip member" in out[1][2]
+    # plain layout: damage after a good record ends the walk there (no
+    # member boundaries to resync on)
+    bad_length = SIMPLE.replace(b"Content-Length: 5", b"Content-Length: 99")
+    out = list(iter_warc_records_lenient(SIMPLE + bad_length + SIMPLE))
+    assert len(out) == 2
+    assert out[0][1:] == (b"hello", None)
+    assert out[1] == (None, None, "WarcError: missing record terminator")
 
 
 def test_http_response_wire_forms():
@@ -279,114 +297,3 @@ def test_ingest_warc_job_raw_audits_every_record(spark, tmp_path):
         sorted((tuple(r[c] for c in cols) for r in gold), key=repr)
     assert {os.path.basename(r["warc_file"]) for r in got} == \
         {f"cc-{k:05d}.warc.gz" for k in range(4)}
-
-
-# ---------------------------------------------------------------------------
-# CDX index generation + ranged fetch (build_cdx / fetch_records)
-# ---------------------------------------------------------------------------
-
-
-def test_iter_warc_members_spans_are_standalone_gzip_members():
-    from intelligent_document_processing_on_aws_spark.kernels.warc import (
-        iter_warc_members,
-        parse_member_bytes,
-    )
-
-    data = open("fixtures_data/warc/cc-00000.warc.gz", "rb").read()
-    members = list(iter_warc_members(data))
-    # the fixtures plant corrupt records: those yield error tuples but
-    # never break the walk
-    errs = [e for *_, e in members if e]
-    assert members and len(errs) == 2 and all("WARC version" in e
-                                              for e in errs)
-    # spans tile the file: sorted, non-overlapping, covering every byte
-    spans = sorted(set((o, ln) for o, ln, *_ in members))
-    pos = 0
-    for o, ln in spans:
-        assert o == pos
-        pos += ln
-    assert pos == len(data)
-    # each clean span re-parses standalone to the identical record
-    for off, ln, headers, body, err in members:
-        if err is not None:
-            continue
-        got = parse_member_bytes(data[off:off + ln])
-        assert [h.get("warc-record-id") for h, _ in got] == \
-            [headers.get("warc-record-id")]
-
-
-def test_build_cdx_then_fetch_matches_full_scan(spark):
-    from pyspark.sql import functions as F
-
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        build_cdx,
-        fetch_records,
-        read_warc,
-    )
-
-    idx = build_cdx(spark, "fixtures_data/warc")
-    sel = idx.where(F.col("status") == "200")
-    fetched = {
-        r["url"]: r
-        for r in fetch_records(sel).collect()
-    }
-    full = {
-        r["url"]: r
-        for r in read_warc(spark, "fixtures_data/warc")
-        .where((F.col("status") == 200) & F.col("error").isNull())
-        .collect()
-    }
-    assert set(fetched) == set(full)
-    for url, r in full.items():
-        assert fetched[url]["text"] == r["text"], url
-        assert fetched[url]["charset"] == r["charset"], url
-
-
-def test_fetch_records_reads_only_selected_spans(spark):
-    from pyspark.sql import functions as F
-
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        build_cdx,
-        fetch_records,
-    )
-
-    idx = build_cdx(spark, "fixtures_data/warc")
-    one = idx.where(F.col("status") == "200").orderBy("urlkey").limit(1)
-    want = one.collect()[0]
-    got = fetch_records(one).collect()
-    assert len(got) == 1
-    assert got[0]["url"] == want["url"]
-
-
-def test_fetch_records_damaged_span_degrades_to_error_row(spark, tmp_path):
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        fetch_records,
-    )
-
-    src = open("fixtures_data/warc/cc-00000.warc.gz", "rb").read()
-    p = tmp_path / "x.warc.gz"
-    p.write_bytes(src)
-    sel = spark.createDataFrame(
-        [(str(p), 3, 40)],  # mid-member garbage span
-        "filename string, offset long, length long",
-    )
-    rows = fetch_records(sel).collect()
-    assert len(rows) == 1
-    assert rows[0]["error"] and rows[0]["text"] is None
-
-
-def test_build_cdx_digest_and_urlkey_shape(spark):
-    import re as _re
-
-    from intelligent_document_processing_on_aws_spark.sources.warc import (
-        build_cdx,
-    )
-
-    rows = build_cdx(spark, "fixtures_data/warc").collect()
-    assert rows
-    for r in rows:
-        assert _re.fullmatch(r"sha1:[A-Z2-7]{32}", r["digest"])
-        assert ")/" in r["urlkey"]
-        assert _re.fullmatch(r"\d{14}", r["ts"])
-        assert r["length"] > 0 and r["offset"] >= 0
-
